@@ -52,7 +52,7 @@ def main() -> int:
     from web_crawler_spark.session import get_spark
 
     only = set(sys.argv[1:])
-    spark = get_spark(master="local[16]")
+    spark = get_spark()  # local[$SPARK_GRAFT_CPUS]
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

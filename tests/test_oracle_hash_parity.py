@@ -95,6 +95,13 @@ def test_no_hugeint_oracle_columns():
         "ann_pq_trained_topk", "crawl_budget_epochs",
         "tx_compression_ratio", "tx_sentence_align",
         "gr_outlink_twins_excluded",
+        # the iterative graph operators share private loop kernels in
+        # operators/graph.py; their oracles replay every round's float
+        # arithmetic, so a change to a kernel's operand order or start
+        # vector shows up here as a hash mismatch
+        "gr_host_pagerank", "gr_host_trustrank", "gr_host_hits",
+        "gr_host_salsa", "gr_harmonic_hyperball", "gr_neighborhood_fn",
+        "gr_seed_distance", "gr_seed_attribution", "gr_pagerank_residuals",
     ],
 )
 def test_strict_hash_parity_previous_reds(spark, qname):

@@ -59,6 +59,8 @@ def test_link_rot_classes(spark):
             # duplicate edge collapses
             ("https://s.com/a2", "https://t.com/ok"),
             ("https://other.com/x", "https://t.com/gone"),
+            # refetched target: 200 then 404 counts once, as broken
+            ("https://flap.com/x", "https://t.com/flaky"),
         ],
         "from_url string, resolved_url string",
     )
@@ -68,6 +70,8 @@ def test_link_rot_classes(spark):
             ("https://t.com/moved", 301),
             ("https://t.com/gone", 404),
             ("https://t.com/err", 503),
+            ("https://t.com/flaky", 200),
+            ("https://t.com/flaky", 404),
         ],
         "url string, status long",
     )
@@ -79,4 +83,5 @@ def test_link_rot_classes(spark):
     assert got == {
         "s.com": (5, 2, 2, 1, 400),
         "other.com": (1, 0, 1, 0, 1000),
+        "flap.com": (1, 0, 1, 0, 1000),
     }

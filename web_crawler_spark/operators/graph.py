@@ -3,10 +3,19 @@ planner's prioritization signals (which hosts to budget next epoch).
 
 The reference has no graph ops (its frontier is depth-1, SURVEY §2.2 note);
 these generalize the outlink expansion the north rule adds. Everything is
-DataFrame algebra: edge aggregation is one shuffle; PageRank is the classic
-iterative join-agg loop with ``localCheckpoint`` every few rounds to cut
-lineage (the standard Spark pattern for iteration — without it the plan
-doubles per round and the driver OOMs on plan strings long before data).
+DataFrame algebra: edge aggregation is one shuffle, and the iterative
+operators share private loop kernels, each cutting lineage with
+``localCheckpoint`` (without it the plan doubles per round and the driver
+OOMs on plan strings long before data). ``_power_iterate`` (pagerank,
+trustrank, pagerank_residuals) checkpoints each round's contribs eagerly,
+because the dangling-mass collect and the update both read them, and the
+ranks every third round and on the last (every round for the residuals).
+hits and salsa step through ``_spread``: hits checkpoints each normalized
+half-step, salsa each chain's two-step walk. ``_hll_balls`` (hyperball,
+neighborhood_function) checkpoints the register frame every round.
+``_bfs_layers`` (seed_distance, seed_attribution) checkpoints each fresh
+layer eagerly, since its ``count()`` is the stop test, and the assigned
+set after each union.
 
 At 100 TB the host graph is tiny relative to the corpus (~10^7 hosts), so
 iterations run on an aggregated edge list that fits comfortably in one
@@ -15,9 +24,204 @@ shuffle stage; ranks broadcast back against the frontier for scheduling.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from functools import reduce
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..functions import urltools as U
+
+
+def _weighted_edges(
+    edges: DataFrame, src_col: str, dst_col: str, weight_col: str | None
+) -> DataFrame:
+    """``(src, dst, w)`` with ``w`` the double edge weight (1.0 unweighted)."""
+    w = F.col(weight_col) if weight_col else F.lit(1.0)
+    return edges.select(
+        F.col(src_col).alias("src"), F.col(dst_col).alias("dst"),
+        w.cast("double").alias("w"),
+    )
+
+
+def _node_set(e: DataFrame) -> DataFrame:
+    """Distinct ``src ∪ dst`` of an edge frame as ``(node)``, checkpointed."""
+    return (
+        e.select(F.col("src").alias("node"))
+        .unionByName(e.select(F.col("dst").alias("node")))
+        .distinct()
+        .localCheckpoint()
+    )
+
+
+def _transitions(e: DataFrame, by: str, name: str) -> DataFrame:
+    """``(src, dst, name)`` with ``name = w / Σw`` over the edges that share
+    endpoint ``by``: one random-walk step's probability, checkpointed."""
+    total = e.groupBy(by).agg(F.sum("w").alias("total"))
+    return e.join(total, by).select(
+        "src", "dst", (F.col("w") / F.col("total")).alias(name)
+    ).localCheckpoint()
+
+
+def _power_iterate(
+    e: DataFrame,
+    start: DataFrame,
+    update: Callable[[Column, float], Column],
+    iterations: int,
+    every: int = 3,
+) -> list[DataFrame]:
+    """Weighted power iteration over ``(src, dst, w)``; returns the iterates
+    ``[r_0, …, r_iterations]``, each ``(node, rank)`` (``r_0`` is ``start``).
+
+    ``start`` is the start vector ``(node, rank, …)``; its other columns
+    stay readable by ``update``. Each round the inflow ``Σ p·rank`` over
+    the transitions ``p = w / out_w(src)`` is left-joined onto ``start``
+    and the new rank is ``update(inflow, flowed)``: ``inflow`` is the
+    per-node inflow (0 without in-edges), ``flowed`` the driver-side total
+    that went through edges, so the caller derives the dangling mass.
+    """
+    trans = _transitions(e, "src", "p")
+    base = start.drop("rank")
+    iterates = [start]
+    for i in range(iterations):
+        # materialize contribs once per round: the dangling-mass collect
+        # and the rank update both read it, and would otherwise each
+        # recompute the join-agg
+        contribs = (
+            trans.join(iterates[-1].select(F.col("node").alias("src"), "rank"), "src")
+            .groupBy("dst")
+            .agg(F.sum(F.col("p") * F.col("rank")).alias("inflow"))
+            .localCheckpoint(eager=True)
+        )
+        flowed = contribs.agg(F.sum("inflow").alias("t")).collect()[0]["t"] or 0.0
+        ranks = base.join(
+            contribs.withColumnRenamed("dst", "node"), "node", "left"
+        ).select(
+            "node",
+            update(F.coalesce(F.col("inflow"), F.lit(0.0)), flowed).alias("rank"),
+        )
+        if (i + 1) % every == 0 or i == iterations - 1:
+            ranks = ranks.localCheckpoint()  # cut the iterative lineage
+        iterates.append(ranks)
+    return iterates
+
+
+def _pagerank_iterates(
+    edges: DataFrame,
+    iterations: int,
+    damping: float,
+    src_col: str,
+    dst_col: str,
+    weight_col: str | None,
+    every: int = 3,
+) -> list[DataFrame]:
+    """PageRank iterates ``[r_0, …]`` as ``(node, rank)`` with uniform
+    teleport; an empty edge set yields only an empty ``r_0`` (no nodes, no
+    ranks, no dangling/n_nodes 0-div)."""
+    e = _weighted_edges(edges, src_col, dst_col, weight_col)
+    nodes = _node_set(e)
+    n_nodes = nodes.count()
+    if n_nodes == 0:
+        return [nodes.select("node", F.lit(0.0).alias("rank"))]
+
+    def update(inflow: Column, flowed: float) -> Column:
+        # dangling mass = total rank (n_nodes) minus what flowed through edges
+        dangling = n_nodes - flowed
+        base = (1.0 - damping) + damping * dangling / n_nodes
+        return F.lit(base) + F.lit(damping) * inflow
+
+    return _power_iterate(
+        e, nodes.select("node", F.lit(1.0).alias("rank")), update,
+        iterations, every,
+    )
+
+
+def _spread(
+    t: DataFrame, scores: DataFrame, frm: str, to: str, weight: str
+) -> DataFrame:
+    """One spread step: each ``frm`` endpoint of ``t`` sends ``weight·val``
+    along its edge; returns ``(node, val)`` summed per ``to`` endpoint."""
+    return (
+        t.join(scores.select(F.col("node").alias(frm), "val"), frm)
+        .groupBy(F.col(to).alias("node"))
+        .agg(F.sum(F.col(weight) * F.col("val")).alias("val"))
+    )
+
+
+def _hll_balls(
+    edges: DataFrame, rounds: int, p: int, src_col: str, dst_col: str
+) -> tuple[DataFrame, list[DataFrame]]:
+    """HyperLogLog ball growth along in-edges: returns ``(nodes, [est_0, …,
+    est_rounds])`` where ``est_r`` is ``(node, distinct_est)``, the
+    estimate of ``|B(v, r)|`` over the distinct non-self-loop edges.
+
+    Round r is ``c_v^r = register-max(c_v^{r-1}, c_u^{r-1} for u→v)``:
+    one join of the slim register frame (≤2^p rows per node) with the
+    edge list and one register-max groupBy. Every ``est_r`` reads a
+    checkpointed register frame, so its lineage stays one round deep.
+    """
+    from .sketches import _hll_fields, hll_estimate
+
+    e = (
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull()
+                & (F.col("src") != F.col("dst")))
+        .distinct()
+        .localCheckpoint()
+    )
+    nodes = _node_set(e)
+    bucket, rho = _hll_fields(F.col("node").cast("string"), p)
+    regs = nodes.select("node", bucket, rho).localCheckpoint()
+    ests = [hll_estimate(regs, p=p, group_cols=("node",))]
+    for _ in range(rounds):
+        contribs = (
+            e.join(regs.withColumnRenamed("node", "src"), "src")
+            .select(F.col("dst").alias("node"), "bucket", "rho")
+        )
+        regs = (
+            regs.unionByName(contribs)
+            .groupBy("node", "bucket")
+            .agg(F.max("rho").alias("rho"))
+            .localCheckpoint()
+        )
+        ests.append(hll_estimate(regs, p=p, group_cols=("node",)))
+    return nodes, ests
+
+
+def _bfs_layers(
+    edges: DataFrame,
+    start: DataFrame,
+    expand: Callable[[DataFrame], DataFrame],
+    max_depth: int,
+    src_col: str,
+    dst_col: str,
+) -> DataFrame:
+    """Layered BFS with frontier-only expansion from ``start`` (the depth-0
+    ``(node, depth, …)`` rows); returns every node reached within
+    ``max_depth`` hops at its first-discovery depth.
+
+    Round d joins only the previous layer against the distinct edge list;
+    ``expand`` maps those out-edges ``(src, dst, …frontier labels)`` to the
+    ``(node, …labels)`` rows they reach. Nodes already assigned are
+    anti-joined away, and an empty layer ends the loop early.
+    """
+    e = edges.select(
+        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+    ).distinct().localCheckpoint()
+    done = frontier = start.localCheckpoint()
+    for d in range(1, max_depth + 1):
+        reached = expand(
+            e.join(frontier.drop("depth").withColumnRenamed("node", "src"), "src")
+        )
+        fresh = (
+            reached.join(done.select("node"), "node", "left_anti")
+            .withColumn("depth", F.lit(d))
+            .localCheckpoint(eager=True)
+        )
+        if fresh.count() == 0:
+            break
+        done = done.unionByName(fresh).localCheckpoint()
+        frontier = fresh
+    return done
 
 
 def host_graph(
@@ -54,51 +258,9 @@ def pagerank(
     iteration so the ranks keep summing to n_nodes (the power-iteration
     invariant); returns (node, rank) with rank rounded to 6 decimals.
     """
-    w = F.col(weight_col) if weight_col else F.lit(1.0)
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), w.cast("double").alias("w")
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        # empty edge set: no nodes, no ranks (avoids dangling/n_nodes 0-div)
-        return nodes.select("node", F.lit(0.0).alias("rank"))
-    out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
-    # edge transition probability src→dst
-    trans = e.join(out_w, "src").select(
-        "src", "dst", (F.col("w") / F.col("out_w")).alias("p")
-    ).localCheckpoint()
-
-    ranks = nodes.select("node", F.lit(1.0).alias("rank"))
-    for i in range(iterations):
-        # materialize contribs once per iteration: the dangling-mass scalar
-        # collect below and the rank update both consume it, and without the
-        # checkpoint the join-agg would recompute for each
-        contribs = (
-            trans.join(ranks.withColumnRenamed("node", "src"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("p") * F.col("rank")).alias("inflow"))
-            .localCheckpoint(eager=True)
-        )
-        total_inflow = F.sum("inflow")
-        # dangling mass = total rank (n_nodes) minus what flowed through edges
-        flowed = contribs.agg(total_inflow.alias("t")).collect()[0]["t"] or 0.0
-        dangling = n_nodes - flowed
-        base = (1.0 - damping) + damping * dangling / n_nodes
-        ranks = (
-            nodes.join(contribs.withColumnRenamed("dst", "node"), "node", "left")
-            .select(
-                "node",
-                (F.lit(base) + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))).alias("rank"),
-            )
-        )
-        if (i + 1) % 3 == 0 or i == iterations - 1:
-            ranks = ranks.localCheckpoint()  # cut the iterative lineage
+    ranks = _pagerank_iterates(
+        edges, iterations, damping, src_col, dst_col, weight_col
+    )[-1]
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
@@ -190,45 +352,31 @@ def hits(
 
     Power iteration with L1 normalization after each half-step (sum-to-1:
     avoids the sqrt of the textbook L2 while keeping the same fixpoint
-    direction; declared in the oracle). Per iteration: one join + keyed
-    agg per half-step on the aggregated host edge list (tiny next to the
-    corpus — same scale argument as pagerank), a 1-row total, and a
-    localCheckpoint to cut lineage. Returns (node, hub, authority) rounded
-    to 6 decimals for every node; nodes without in-edges get authority 0,
-    without out-edges hub 0.
+    direction; declared in the oracle). Per half-step: one spread on the
+    aggregated host edge list (tiny next to the corpus — same scale
+    argument as pagerank) and a 1-row total. Returns (node, hub,
+    authority) rounded to 6 decimals for every node; nodes without
+    in-edges get authority 0, without out-edges hub 0.
     """
-    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), w.alias("w")
-    ).localCheckpoint()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _weighted_edges(edges, src_col, dst_col, weight_col).localCheckpoint()
+    nodes = _node_set(e)
     if nodes.count() == 0:
         return nodes.select(
             "node", F.lit(0.0).alias("hub"), F.lit(0.0).alias("authority")
         )
-    h = nodes.select("node", F.lit(1.0).alias("val"))
 
-    def _half(scores: DataFrame, key: str, other: str) -> DataFrame:
-        raw = (
-            e.join(scores.select(F.col("node").alias(other), "val"), other)
-            .groupBy(F.col(key).alias("node"))
-            .agg(F.sum(F.col("w") * F.col("val")).alias("v"))
-        )
-        total = raw.agg(F.sum("v")).collect()[0][0] or 1.0
+    def _half(scores: DataFrame, frm: str, to: str) -> DataFrame:
+        raw = _spread(e, scores, frm, to, "w")
+        total = raw.agg(F.sum("val")).collect()[0][0] or 1.0
         return nodes.join(raw, "node", "left").select(
             "node",
-            (F.coalesce("v", F.lit(0.0)) / F.lit(total)).alias("val"),
+            (F.coalesce("val", F.lit(0.0)) / F.lit(total)).alias("val"),
         ).localCheckpoint()
 
-    a = h
+    a = h = nodes.select("node", F.lit(1.0).alias("val"))
     for _ in range(iterations):
-        a = _half(h, "dst", "src")    # authority from in-link hubs
-        h = _half(a, "src", "dst")    # hub from out-link authorities
+        a = _half(h, "src", "dst")    # authority from in-link hubs
+        h = _half(a, "dst", "src")    # hub from out-link authorities
     return (
         h.select("node", F.round("val", 6).alias("hub"))
         .join(
@@ -259,21 +407,12 @@ def trustrank(
     present in the graph are ignored; an empty effective seed set returns
     zero trust everywhere (nothing to propagate — explicit, not a 0-div).
 
-    Same shuffle shape as ``pagerank``: one weighted-transition build,
-    then per round one slim join + keyed agg, lineage-checkpointed.
-    Returns (node, trust) rounded to 6 decimals.
+    Same power iteration and shuffle shape as ``pagerank``; only the
+    start vector and the update differ. Returns (node, trust) rounded to
+    6 decimals.
     """
-    w = F.col(weight_col) if weight_col else F.lit(1.0)
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst"),
-        w.cast("double").alias("w"),
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _weighted_edges(edges, src_col, dst_col, weight_col)
+    nodes = _node_set(e)
     seed_nodes = (
         seeds.select(F.col(seed_col).alias("node")).distinct()
         .join(nodes, "node")
@@ -286,36 +425,18 @@ def trustrank(
         seed_nodes.withColumn("s", F.lit(1.0 / n_seeds)), "node", "left"
     ).select("node", F.coalesce(F.col("s"), F.lit(0.0)).alias("s")).localCheckpoint()
 
-    out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
-    trans = e.join(out_w, "src").select(
-        "src", "dst", (F.col("w") / F.col("out_w")).alias("p")
-    ).localCheckpoint()
-
-    ranks = s_vec.select("node", F.col("s").alias("trust"))
-    for i in range(iterations):
-        contribs = (
-            trans.join(ranks.withColumnRenamed("node", "src"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("p") * F.col("trust")).alias("inflow"))
-            .localCheckpoint(eager=True)
-        )
-        flowed = contribs.agg(F.sum("inflow").alias("t")).collect()[0]["t"] or 0.0
+    def update(inflow: Column, flowed: float) -> Column:
         dangling = 1.0 - flowed  # total trust is the invariant Σr = 1
-        ranks = (
-            s_vec.join(contribs.withColumnRenamed("dst", "node"), "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(1.0 - damping) * F.col("s")
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("inflow"), F.lit(0.0))
-                       + F.lit(dangling) * F.col("s"))
-                ).alias("trust"),
-            )
+        s = F.col("s")
+        return F.lit(1.0 - damping) * s + F.lit(damping) * (
+            inflow + F.lit(dangling) * s
         )
-        if (i + 1) % 3 == 0 or i == iterations - 1:
-            ranks = ranks.localCheckpoint()
-    return ranks.select("node", F.round("trust", 6).alias("trust"))
+
+    ranks = _power_iterate(
+        e, s_vec.select("node", "s", F.col("s").alias("rank")), update,
+        iterations,
+    )[-1]
+    return ranks.select("node", F.round("rank", 6).alias("trust"))
 
 
 def opic_update(
@@ -411,11 +532,8 @@ def hyperball(
     (balls grow along IN-edges: u→v contributes u into v's ball, the
     in-distance convention harmonic centrality is defined over).
 
-    Spark shape per round: one equi-join of the slim register frame
-    (node, bucket, rho — ≤2^p rows/node) with the aggregated edge list +
-    one register-max groupBy — shuffle volume O(E·2^p register rows),
-    independent of corpus size, lineage cut per round with
-    ``localCheckpoint``. Register addressing is the md5 scheme of
+    Per round the register-max shuffles O(E·2^p) register rows,
+    independent of corpus size. Register addressing is the md5 scheme of
     ``operators/sketches.hll_sketch``, the per-node register sum is
     powers-of-two exact in IEEE doubles, and every round's estimate is
     rounded to 6 decimals BEFORE the harmonic accumulation — so the whole
@@ -431,47 +549,17 @@ def hyperball(
     Shell deltas are clamped at ≥0 (estimator regime switches can wiggle
     a hair negative; the clamp is replayed in the oracle).
     """
-    from .sketches import _hll_fields, hll_estimate
-
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull()
-                & (F.col("src") != F.col("dst")))
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    bucket, rho = _hll_fields(F.col("node").cast("string"), p)
-    regs = nodes.select("node", bucket, rho).localCheckpoint()
-
-    est0 = hll_estimate(regs, p=p, group_cols=("node",))
-    # state is consumed once per round and every est_t reads a CHECKPOINTED
-    # regs_t, so its lineage stays shallow (one join per round) — no
+    nodes, ests = _hll_balls(edges, rounds, p, src_col, dst_col)
+    # state is consumed once per round and every est_r reads a CHECKPOINTED
+    # register frame, so its lineage stays shallow (one join per round) — no
     # per-round state checkpoint; the whole estimate/accumulate chain
     # collapses into the single final action instead of a job per round
-    state = nodes.join(est0, "node").select(
+    state = nodes.join(ests[0], "node").select(
         "node",
         F.col("distinct_est").alias("ball"),
         F.lit(0.0).alias("harmonic"),
     )
-
-    for r in range(1, rounds + 1):
-        contribs = (
-            e.join(regs.withColumnRenamed("node", "src"), "src")
-            .select(F.col("dst").alias("node"), "bucket", "rho")
-        )
-        regs = (
-            regs.unionByName(contribs)
-            .groupBy("node", "bucket")
-            .agg(F.max("rho").alias("rho"))
-            .localCheckpoint()
-        )
-        est = hll_estimate(regs, p=p, group_cols=("node",))
+    for r, est in enumerate(ests[1:], 1):
         state = (
             state.join(est, "node")
             .select(
@@ -851,34 +939,20 @@ def salsa(
     Plan: the two normalized transition tables are built once (two keyed
     aggs + two joins on the aggregated host edge list, tiny next to the
     corpus — same scale argument as :func:`pagerank`); each iteration is
-    two slim join+agg half-steps per chain, lineage-checkpointed. Returns
-    (node, hub, authority) rounded to 6 decimals for every node; nodes
-    without in-edges have authority 0, without out-edges hub 0.
+    two slim spread half-steps per chain. Returns (node, hub, authority)
+    rounded to 6 decimals for every node; nodes without in-edges have
+    authority 0, without out-edges hub 0.
     """
-    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), w.alias("w")
-    ).localCheckpoint()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _weighted_edges(edges, src_col, dst_col, weight_col).localCheckpoint()
+    nodes = _node_set(e)
     if nodes.count() == 0:
         return nodes.select(
             "node", F.lit(0.0).alias("hub"), F.lit(0.0).alias("authority")
         )
-    in_w = e.groupBy("dst").agg(F.sum("w").alias("iw"))
-    out_w = e.groupBy("src").agg(F.sum("w").alias("ow"))
     # backward transition (authority j -> hub i): p_b = w_ij / in_w(j)
-    bt = e.join(in_w, "dst").select(
-        "src", "dst", (F.col("w") / F.col("iw")).alias("pb")
-    ).localCheckpoint()
+    bt = _transitions(e, "dst", "pb")
     # forward transition (hub i -> authority j): p_f = w_ij / out_w(i)
-    ft = e.join(out_w, "src").select(
-        "src", "dst", (F.col("w") / F.col("ow")).alias("pf")
-    ).localCheckpoint()
+    ft = _transitions(e, "src", "pf")
 
     auths = e.select(F.col("dst").alias("node")).distinct().localCheckpoint()
     hubs = e.select(F.col("src").alias("node")).distinct().localCheckpoint()
@@ -887,29 +961,11 @@ def salsa(
     h = hubs.select("node", F.lit(1.0 / n_h).alias("val"))
     for _ in range(iterations):
         # authority chain: backward to hubs, forward to authorities
-        am = (
-            bt.join(a.withColumnRenamed("node", "dst"), "dst")
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum(F.col("pb") * F.col("val")).alias("val"))
-        )
-        a = (
-            ft.join(am.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("pf") * F.col("val")).alias("val"))
-            .localCheckpoint()
-        )
+        am = _spread(bt, a, "dst", "src", "pb")
+        a = _spread(ft, am, "src", "dst", "pf").localCheckpoint()
         # hub chain: forward to authorities, backward to hubs
-        hm = (
-            ft.join(h.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("pf") * F.col("val")).alias("val"))
-        )
-        h = (
-            bt.join(hm.withColumnRenamed("node", "dst"), "dst")
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum(F.col("pb") * F.col("val")).alias("val"))
-            .localCheckpoint()
-        )
+        hm = _spread(ft, h, "src", "dst", "pf")
+        h = _spread(bt, hm, "dst", "src", "pb").localCheckpoint()
     return (
         nodes.join(h.withColumnRenamed("val", "hv"), "node", "left")
         .join(a.withColumnRenamed("val", "av"), "node", "left")
@@ -934,48 +990,27 @@ def seed_distance(
     priority crawl ordering"; every production crawler caps frontier
     admission by depth-from-seed, so the depth table IS the gate).
 
-    Layered BFS with frontier-only expansion: round ``d`` joins ONLY the
-    nodes first discovered at depth ``d-1`` against the edge list, so
-    total work is Σ out-edges of each node exactly once — the textbook
-    BFS invariant, not rounds × |E|. Every shuffled row is a slim
-    ``(node, depth)`` pair; the per-round ``count()`` on fresh discoveries
-    is both the termination test and free telemetry (an empty frontier
-    before ``max_depth`` means the crawl closure is complete). First
-    discovery is minimum depth by the BFS invariant, so no min-agg over
-    rounds is needed.
+    Frontier-only expansion makes total work Σ out-edges of each node
+    exactly once — the textbook BFS invariant, not rounds × |E|. Every
+    shuffled row is a slim ``(node, depth)`` pair; an empty layer before
+    ``max_depth`` means the crawl closure is complete. First discovery is
+    minimum depth by the BFS invariant, so no min-agg over rounds is
+    needed.
 
     Returns (node, depth) for every node reachable within ``max_depth``
     hops (seeds at depth 0). Unreachable nodes are absent by design —
     a crawl gate anti-joins the frontier against this table.
     """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct().localCheckpoint()
-    dist = (
+    start = (
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
         .withColumn("depth", F.lit(0))
-        .localCheckpoint()
     )
-    frontier = dist
-    for d in range(1, max_depth + 1):
-        nxt = (
-            e.join(
-                frontier.select(F.col("node").alias("src")), "src"
-            )
-            .select(F.col("dst").alias("node"))
-            .distinct()
-        )
-        fresh = (
-            nxt.join(dist.select("node"), "node", "left_anti")
-            .withColumn("depth", F.lit(d))
-            .localCheckpoint(eager=True)
-        )
-        if fresh.count() == 0:
-            break
-        dist = dist.unionByName(fresh).localCheckpoint()
-        frontier = fresh
-    return dist
+    return _bfs_layers(
+        edges, start,
+        lambda out: out.select(F.col("dst").alias("node")).distinct(),
+        max_depth, src_col, dst_col,
+    )
 
 
 def related_hosts(
@@ -1899,11 +1934,10 @@ def neighborhood_function(
     = ⌊1000·N(r)/N(R)⌋, is_effective_radius) — ``is_effective_radius``
     marks the single smallest r meeting the quantile.
 
-    Scale shape: identical to hyperball — per round one slim register
-    join + register-max agg, O(E·2^p) shuffle rows independent of corpus
-    size; the output is (rounds+1) rows, and the final quantile windows
-    run over that constant-size frame. ``unit_pow10`` sets the fixed-point
-    precision of the reported sums: micro units (6) keep sub-estimate
+    Scale shape: identical to hyperball — O(E·2^p) shuffle rows per
+    round, independent of corpus size; the output is (rounds+1) rows,
+    and the final quantile windows run over that constant-size frame.
+    ``unit_pow10`` sets the fixed-point precision of the reported sums: micro units (6) keep sub-estimate
     resolution but bound Σ est·10⁶ to a long — N·n ≤ 9.2·10¹⁸, i.e.
     graphs to ~10⁶ nodes; at web scale pass 0 (whole-unit sums, exact to
     ~10¹⁸ pairs — the quantile test loses nothing that survives HLL's
@@ -1911,24 +1945,6 @@ def neighborhood_function(
     products in decimal(38,0), so the stated bound is the binding one —
     the scale-up does not tighten it.
     """
-    from .sketches import _hll_fields, hll_estimate
-
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull()
-                & (F.col("src") != F.col("dst")))
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    bucket, rho = _hll_fields(F.col("node").cast("string"), p)
-    regs = nodes.select("node", bucket, rho).localCheckpoint()
-
     scale = float(10 ** int(unit_pow10))
 
     def _nf(est_frame: DataFrame, r: int) -> DataFrame:
@@ -1941,24 +1957,10 @@ def neighborhood_function(
             .cast("long").alias("nf_micro"),
         )
 
-    per_round = [_nf(hll_estimate(regs, p=p, group_cols=("node",)), 0)]
-    for r in range(1, rounds + 1):
-        contribs = (
-            e.join(regs.withColumnRenamed("node", "src"), "src")
-            .select(F.col("dst").alias("node"), "bucket", "rho")
-        )
-        regs = (
-            regs.unionByName(contribs)
-            .groupBy("node", "bucket")
-            .agg(F.max("rho").alias("rho"))
-            .localCheckpoint()
-        )
-        per_round.append(
-            _nf(hll_estimate(regs, p=p, group_cols=("node",)), r)
-        )
-    curve = per_round[0]
-    for f in per_round[1:]:
-        curve = curve.unionByName(f)
+    _, ests = _hll_balls(edges, rounds, p, src_col, dst_col)
+    curve = reduce(
+        DataFrame.unionByName, [_nf(est, r) for r, est in enumerate(ests)]
+    )
     w_all = Window.orderBy(F.lit(1)).rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
@@ -2096,32 +2098,17 @@ def seed_attribution(
     Returns (node, depth, seed) for nodes reachable within ``max_depth``
     (seeds self-attributed at depth 0); unreachable nodes absent.
     """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct().localCheckpoint()
-    assigned = (
+    start = (
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
         .select("node", F.lit(0).alias("depth"), F.col("node").alias("seed"))
-        .localCheckpoint()
     )
-    frontier = assigned.select("node", "seed")
-    for d in range(1, max_depth + 1):
-        nxt = (
-            e.join(frontier.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("seed").alias("seed"))
-        )
-        fresh = (
-            nxt.join(assigned.select("node"), "node", "left_anti")
-            .select("node", F.lit(d).alias("depth"), "seed")
-            .localCheckpoint(eager=True)
-        )
-        if fresh.count() == 0:
-            break
-        assigned = assigned.unionByName(fresh).localCheckpoint()
-        frontier = fresh.select("node", "seed")
-    return assigned
+    return _bfs_layers(
+        edges, start,
+        lambda out: out.groupBy(F.col("dst").alias("node"))
+        .agg(F.min("seed").alias("seed")),
+        max_depth, src_col, dst_col,
+    )
 
 
 def pagerank_residuals(
@@ -2149,71 +2136,32 @@ def pagerank_residuals(
     dependence this repo bans). Returns (iteration, l1_residual_micro),
     one row per iteration ≥ 1.
 
-    Scale shape: the pagerank loop's own joins plus one slim
-    (node, rank) self-join and a 1-row integer agg per iteration.
+    Scale shape: the pagerank loop's own joins, with the ranks
+    checkpointed every round, plus one slim (node, rank) self-join and a
+    1-row integer agg per iteration.
     """
-    w = F.col(weight_col) if weight_col else F.lit(1.0)
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst"),
-        w.cast("double").alias("w"),
+    iterates = _pagerank_iterates(
+        edges, iterations, damping, src_col, dst_col, weight_col, every=1
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_nodes = nodes.count()
-    spark = edges.sparkSession
-    if n_nodes == 0:
-        return spark.createDataFrame(
+    if len(iterates) < 2:
+        return edges.sparkSession.createDataFrame(
             [], "iteration long, l1_residual_micro long"
         )
-    out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
-    trans = e.join(out_w, "src").select(
-        "src", "dst", (F.col("w") / F.col("out_w")).alias("p")
-    ).localCheckpoint()
-    ranks = nodes.select("node", F.lit(1.0).alias("rank"))
-    res_frames = []
-    for i in range(iterations):
-        contribs = (
-            trans.join(ranks.withColumnRenamed("node", "src"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("p") * F.col("rank")).alias("inflow"))
-            .localCheckpoint(eager=True)
+    return reduce(DataFrame.unionByName, [
+        new.select("node", F.round("rank", 6).alias("a"))
+        .join(old.select("node", F.round("rank", 6).alias("b")), "node")
+        .agg(
+            F.lit(i).cast("long").alias("iteration"),
+            F.coalesce(
+                F.sum(
+                    F.round(F.abs(F.col("a") - F.col("b")) * F.lit(1e6), 0)
+                    .cast("long")
+                ),
+                F.lit(0),
+            ).cast("long").alias("l1_residual_micro"),
         )
-        flowed = contribs.agg(F.sum("inflow").alias("t")).collect()[0]["t"] or 0.0
-        base = (1.0 - damping) + damping * (n_nodes - flowed) / n_nodes
-        new_ranks = (
-            nodes.join(contribs.withColumnRenamed("dst", "node"), "node", "left")
-            .select(
-                "node",
-                (F.lit(base)
-                 + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))
-                 ).alias("rank"),
-            )
-            .localCheckpoint()
-        )
-        diff = (
-            new_ranks.select("node", F.round("rank", 6).alias("a"))
-            .join(ranks.select("node", F.round("rank", 6).alias("b")), "node")
-            .agg(
-                F.lit(i + 1).cast("long").alias("iteration"),
-                F.coalesce(
-                    F.sum(
-                        F.round(F.abs(F.col("a") - F.col("b")) * F.lit(1e6), 0)
-                        .cast("long")
-                    ),
-                    F.lit(0),
-                ).cast("long").alias("l1_residual_micro"),
-            )
-        )
-        res_frames.append(diff)
-        ranks = new_ranks
-    out = res_frames[0]
-    for f in res_frames[1:]:
-        out = out.unionByName(f)
-    return out
+        for i, (old, new) in enumerate(zip(iterates, iterates[1:]), 1)
+    ])
 
 
 def shrinking_diameter(
@@ -2262,10 +2210,7 @@ def shrinking_diameter(
                 F.max("nf_micro").cast("long").alias("nf_final_micro"),
             )
         )
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    return reduce(DataFrame.unionByName, frames)
 
 
 def outlink_twins(
@@ -2431,8 +2376,9 @@ def link_rot(
     host, with the rot share in fixed-point.
 
     Plan: distinct slim (src_host, target) pairs → one target-keyed
-    left join against the slim (url, status) fetch log → ONE host
-    combiner agg. The target join key is the same canonical-URL key
+    left join against the fetch log reduced to one ``max(status)`` per
+    URL (a target fetched 200 then 404 counts once, as broken) → ONE
+    host combiner agg. The target join key is the same canonical-URL key
     the seen-set uses, so at 10^10 edges this rides the existing
     partitioning; only 2-string + 1-long rows shuffle.
 
@@ -2450,10 +2396,9 @@ def link_rot(
         .filter(F.col("host").isNotNull() & F.col("target").isNotNull())
         .distinct()
     )
-    st = fetch_status.select(
-        F.col(url_col).alias("target"),
-        F.col(status_col).cast("long").alias("status"),
-    ).distinct()
+    st = fetch_status.groupBy(F.col(url_col).alias("target")).agg(
+        F.max(F.col(status_col).cast("long")).alias("status")
+    )
     j = e.join(st, "target", "left")
     ok = (F.col("status") >= 200) & (F.col("status") < 400)
     broken = F.col("status") >= 400
