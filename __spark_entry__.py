@@ -18662,8 +18662,11 @@ def _q_scheme_consolidation(spark, sf_dir):
     scheme_consolidation): per-host scheme mass, both-scheme path
     overlap, migration-state classification. 30 hosts from events in
     four regimes (http-only / https-only / migrating with paired
-    paths via the block construction / mixed-disjoint); the oracle
-    replays the construction and both aggregations in SQL."""
+    paths via the block construction / mixed-disjoint); every 7th
+    scheme and every 11th host is upper-cased (folded back), and host
+    h2.net serves its https copies under ``/P/`` (kept apart: paths are
+    case-sensitive). The oracle replays the construction and both
+    aggregations in SQL."""
     from web_crawler_spark.operators import urlfilter as UF
 
     e = _t(spark, sf_dir, "events")
@@ -18676,30 +18679,47 @@ def _q_scheme_consolidation(spark, sf_dir):
         .when(c == 1, F.lit("https"))
         .otherwise(alt)
     )
+    top = F.when((hn == 2) & (scheme == "https"), F.lit("/P/")).otherwise(F.lit("/p/"))
     path = F.when(
         c == 2,
-        F.concat(F.lit("/p/"),
+        F.concat(top,
                  F.floor(F.col("event_id") / 60).cast("long").cast("string")),
     ).otherwise(F.concat(F.lit("/p/"), F.col("event_id").cast("string")))
+    host = F.concat(F.lit("h"), hn.cast("string"), F.lit(".net"))
     urls = e.select(
-        F.concat(scheme, F.lit("://h"), hn.cast("string"), F.lit(".net"), path)
-        .alias("url")
+        F.concat(
+            F.when(F.col("event_id") % 7 == 0, F.upper(scheme)).otherwise(scheme),
+            F.lit("://"),
+            F.when(F.col("event_id") % 11 == 0, F.upper(host)).otherwise(host),
+            path,
+        ).alias("url")
     )
     return UF.scheme_consolidation(urls).orderBy("host")
 
 
 _SQL_SCHEME_CONSOLIDATION = """
-WITH u AS (
-  SELECT DISTINCT
+WITH s AS (
+  SELECT event_id,
     CASE CAST((event_id % 30) % 4 AS INT)
       WHEN 0 THEN 'http' WHEN 1 THEN 'https'
       ELSE CASE WHEN (event_id // 30) % 2 = 0 THEN 'http' ELSE 'https' END
     END AS scheme,
-    concat('h', CAST(event_id % 30 AS VARCHAR), '.net') AS host,
-    CASE WHEN CAST((event_id % 30) % 4 AS INT) = 2
-         THEN concat('/p/', CAST(event_id // 60 AS VARCHAR))
-         ELSE concat('/p/', CAST(event_id AS VARCHAR)) END AS path
+    concat('h', CAST(event_id % 30 AS VARCHAR), '.net') AS host
   FROM events
+),
+raw AS (
+  SELECT
+    CASE WHEN event_id % 7 = 0 THEN upper(scheme) ELSE scheme END AS scheme,
+    CASE WHEN event_id % 11 = 0 THEN upper(host) ELSE host END AS host,
+    CASE WHEN CAST((event_id % 30) % 4 AS INT) = 2
+         THEN concat(CASE WHEN event_id % 30 = 2 AND scheme = 'https'
+                          THEN '/P/' ELSE '/p/' END,
+                     CAST(event_id // 60 AS VARCHAR))
+         ELSE concat('/p/', CAST(event_id AS VARCHAR)) END AS path
+  FROM s
+),
+u AS (
+  SELECT DISTINCT lower(scheme) AS scheme, lower(host) AS host, path FROM raw
 ),
 pp AS (
   SELECT host, path,

@@ -28,7 +28,9 @@ def test_scheme_consolidation_states(spark):
         # single-scheme hosts
         "http://old.com/1", "https://new.com/1",
         # duplicates + case-fold + non-http scheme ignored
-        "HTTP://m.com/a", "ftp://f.com/z",
+        "HTTP://m.com/a", "HTTP://M.COM/a", "ftp://f.com/z",
+        # paths keep their case: /A and /a on opposite schemes are two paths
+        "http://c.com/A", "https://c.com/a",
     ]
     df = spark.createDataFrame([(u,) for u in urls], "url string")
     got = {
@@ -40,4 +42,5 @@ def test_scheme_consolidation_states(spark):
         "d.com": (1, 1, 0, "mixed_disjoint"),
         "old.com": (1, 0, 0, "http_only"),
         "new.com": (0, 1, 0, "https_only"),
+        "c.com": (1, 1, 0, "mixed_disjoint"),
     }

@@ -776,9 +776,9 @@ def scheme_consolidation(
     BOTH (the true duplicate set a canonicalizer would collapse),
     classifying each host's migration state.
 
-    Plan: one distinct over the slim url column → regexp scheme/host/
-    path split (codegen) → a (host, path)-keyed combiner agg marking
-    both-scheme paths → one host-keyed agg. Two slim shuffles on keys
+    Plan: regexp scheme/host/rest split (codegen) → one distinct over
+    the case-folded URL → path cut → a (host, path)-keyed combiner agg
+    marking both-scheme paths → one host-keyed agg. Two slim shuffles on keys
     a canonicalization pipeline already partitions by; no joins at
     all. Non-http(s) schemes are ignored.
 
@@ -786,13 +786,21 @@ def scheme_consolidation(
     state ∈ https_only | http_only | migrating (both schemes, shared
     paths) | mixed_disjoint (both schemes, zero path overlap).
     """
-    scheme = F.regexp_extract(F.col("u"), r"^([a-z][a-z0-9+.-]*)://", 1)
-    host = F.regexp_extract(F.col("u"), r"^[a-z][a-z0-9+.-]*://([^/?#]+)", 1)
-    path = F.regexp_extract(F.col("u"), r"^[a-z][a-z0-9+.-]*://[^/?#]+([^?#]*)", 1)
+    # scheme and host are case-insensitive (RFC 3986 §6.2.2.1) and fold to
+    # lower case; the path and everything after it keep their case
+    url = F.col(url_col).cast("string")
+    parts = r"(?s)^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]+)(.*)$"
     u = (
-        pages.select(F.lower(F.col(url_col).cast("string")).alias("u"))
+        pages.select(
+            F.lower(F.regexp_extract(url, parts, 1)).alias("scheme"),
+            F.lower(F.regexp_extract(url, parts, 2)).alias("host"),
+            F.regexp_extract(url, parts, 3).alias("rest"),
+        )
         .distinct()
-        .select(scheme.alias("scheme"), host.alias("host"), path.alias("path"))
+        .select(
+            "scheme", "host",
+            F.regexp_extract(F.col("rest"), r"^([^?#]*)", 1).alias("path"),
+        )
         .filter(F.col("scheme").isin("http", "https") & (F.col("host") != ""))
     )
     per_path = u.groupBy("host", "path").agg(

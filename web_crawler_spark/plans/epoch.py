@@ -4,9 +4,12 @@ One epoch = one BFS wave:
 
     frontier(epoch)
       → canonicalize + hash                      (native exprs)
-      → ANTI-JOIN vs seen (+ bloom pre-filter)   [shuffle 1: by url_hash]
-      → repartition by salted host               [shuffle 2: by host-salt]
+      → ANTI-JOIN vs seen (+ bloom pre-filter)   [shuffle: by url_hash]
+      → robots decision                          (broadcast rules)
+      → repartition by salted host               [shuffle: by host-salt]
       → per-host crawl order + politeness window (row_number / closed form)
+      → per-host budget (water-fill / cap), overflow deferred
+      → repartition by url_hash                  [shuffle: by url_hash]
       → "fetch" = equi-join against the pages corpus on canonical_url
         (the offline corpus replaces live HTTP — SURVEY §2.1 S1)
       → extract (mapInPandas: tables / links / text)
@@ -15,8 +18,23 @@ One epoch = one BFS wave:
 
 Explicit repartitioning between expand and dedup is mandated by the
 north_rule — expand explodes by fan-out (skewed by page), dedup needs
-url_hash co-location, scheduling needs host co-location. Two shuffles,
-both visible in the plan, nothing else shuffles.
+url_hash co-location, scheduling needs host co-location, and the fetch
+join and extraction need the rows spread back over every core.
+
+At crawl sizes an epoch is bound by its Spark job barriers, not by its
+data, and a lazy frame with several consumers re-runs its whole plan
+(every upstream shuffle) once per consumer. So an epoch materialises
+the four frames that have more than one consumer, each once:
+
+* the robots decision — ``allowed`` and ``denied`` are two filters on it;
+* the budgeted schedule — the fetch side and ``deferred`` are two filters
+  on it, so they always come from one evaluation of the plan;
+* ``fetched`` — read by extraction, the outlinks depth join, metrics and
+  the fetched and seen commits;
+* ``combined`` (the one-pass extraction) — read by ``extracted`` and
+  ``outlinks``.
+
+The epoch counters are observed on the fetched commit's own write job.
 
 A killed run resumes exactly: every table commit is manifest-gated and
 keyed by epoch, so re-running epoch K is idempotent (the catalog skips
@@ -26,9 +44,10 @@ committed epoch-K outlinks table.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import urltools as U
@@ -39,6 +58,14 @@ from ..sources.catalog import EpochCatalog
 from . import extract as X
 
 EPOCH_CLOCK0 = datetime(2025, 7, 22, 9, 0, 0, tzinfo=timezone.utc)
+
+
+def _counters():
+    """The epoch counters over ``fetched``: rows and status=ok rows."""
+    return (
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok"),
+    )
 
 
 class CrawlEngine:
@@ -199,30 +226,12 @@ class CrawlEngine:
         ).drop("__neg_pri")
 
     # ------------------------------------------------------------------
-    def run_epoch(self, seeds: DataFrame, epoch: int) -> dict:
-        """Run one epoch; returns counters. Idempotent per epoch.
-
-        The skip guard checks ``seen`` — the LAST table committed — not
-        ``fetched``: a crash between the fetched and seen commits must
-        re-run the epoch (each per-table commit is itself idempotent, so
-        already-committed tables are kept and only the missing ones are
-        written)."""
-        if epoch in self.catalog.committed_epochs("seen"):
-            return {"epoch": epoch, "skipped": True}
-
-        import os as _os
-        import sys as _sys
-        import time as _time
-        _trace = _os.environ.get("SPARK_CRAWL_TRACE") == "1"
-        _tmark = [_time.time()]
-
-        def _phase(label):
-            if _trace:
-                now = _time.time()
-                print(f"[epoch {epoch}] {label}: {now - _tmark[0]:.1f}s",
-                      file=_sys.stderr)
-                _tmark[0] = now
-
+    def _admit(self, seeds: DataFrame, epoch: int):
+        """Admission: frontier → seen anti-join → robots gate → politeness
+        schedule → per-host budget. Returns ``(scheduled, denied,
+        deferred_out)``; the last two are None when no robots rules or no
+        budget apply. Materialises the robots decision and the budgeted
+        schedule (see the module docstring)."""
         frontier = self._frontier_for(seeds, epoch)
 
         # dedup vs seen  [shuffle: url_hash]
@@ -251,14 +260,15 @@ class CrawlEngine:
 
         # robots gate (north_rule): denied URLs are still committed to
         # `seen` via a fetched row with status=robots_denied — admitted
-        # exactly once, never fetched
+        # exactly once, never fetched. One decision pass, materialised:
+        # allowed and denied are two filters on it
         denied = None
         if self.robots_rules is not None:
-            allowed = RB.apply_robots(frontier, self.robots_rules, self.agent)
-            denied = frontier.join(
-                allowed.select("url_hash"), "url_hash", "left_anti"
-            )
-            frontier = allowed
+            decided = RB.robots_decisions(
+                frontier, self.robots_rules, self.agent
+            ).drop("matched_rule", "matched_prefix").localCheckpoint()
+            denied = decided.filter(~F.col("robots_allowed")).drop("robots_allowed")
+            frontier = decided.filter(F.col("robots_allowed")).drop("robots_allowed")
 
         # schedule  [shuffle: salted host]
         frontier = frontier.withColumn(
@@ -276,7 +286,7 @@ class CrawlEngine:
         # per-host epoch budget: overflow (seq > budget) is deferred to the
         # next epoch's frontier with its priority intact — bounded state
         # per host per epoch, nothing lost
-        deferred_out = None
+        budget = None
         if self.epoch_fetch_capacity is not None:
             from ..operators.aggregate import host_budget_waterfill
 
@@ -296,20 +306,34 @@ class CrawlEngine:
                 )
             # per-host table: slim; AQE broadcasts the small side itself
             scheduled = scheduled.join(budgets, "host", "left")
-            deferred_out = scheduled.filter(
-                F.col("seq") > F.coalesce(F.col("budget"), F.lit(0))
-            ).select(
-                "url", "priority", "host", "canonical_url", "url_hash", "depth"
-            )
-            scheduled = scheduled.filter(
-                F.col("seq") <= F.coalesce(F.col("budget"), F.lit(0))
-            ).drop("budget")
+            budget = F.coalesce(F.col("budget"), F.lit(0))
         elif self.max_per_host_per_epoch is not None:
-            budget = self.max_per_host_per_epoch
+            budget = F.lit(self.max_per_host_per_epoch)
+
+        deferred_out = None
+        if budget is not None:
+            # one budgeted schedule, materialised: the fetch side and the
+            # deferred table are two filters on the same rows
+            scheduled = scheduled.localCheckpoint()
             deferred_out = scheduled.filter(F.col("seq") > budget).select(
                 "url", "priority", "host", "canonical_url", "url_hash", "depth"
             )
-            scheduled = scheduled.filter(F.col("seq") <= budget)
+            scheduled = scheduled.filter(F.col("seq") <= budget).drop("budget")
+        return scheduled, denied, deferred_out
+
+    # ------------------------------------------------------------------
+    def run_epoch(self, seeds: DataFrame, epoch: int) -> dict:
+        """Run one epoch; returns counters. Idempotent per epoch.
+
+        The skip guard checks ``seen`` — the LAST table committed — not
+        ``fetched``: a crash between the fetched and seen commits must
+        re-run the epoch (each per-table commit is itself idempotent, so
+        already-committed tables are kept and only the missing ones are
+        written)."""
+        if epoch in self.catalog.committed_epochs("seen"):
+            return {"epoch": epoch, "skipped": True}
+
+        scheduled, denied, deferred_out = self._admit(seeds, epoch)
 
         # rebalance BEFORE the fetch join: politeness legitimately skews
         # partitioning by (host, salt) — a hot host is one partition — but
@@ -350,8 +374,9 @@ class CrawlEngine:
                     F.lit(epoch).alias("epoch"),
                 )
             )
-        fetched = fetched.localCheckpoint()  # cut lineage; reused 4× below
-        _phase("materialize fetched")
+        # materialised: extraction, outlinks' depth join, metrics, the
+        # fetched commit and the seen commit all read it
+        fetched = fetched.localCheckpoint()
 
         ok = fetched.filter(F.col("status") == "ok")
 
@@ -362,7 +387,6 @@ class CrawlEngine:
         combined = X.combined_extract_stage(
             ok.select(F.col("canonical_url").alias("url"), "html")
         ).localCheckpoint()
-        _phase("extract (one-pass)")
 
         links = combined.filter(F.col("link").isNotNull()).select("url", "link")
         outlinks = X.resolve_links(links).select(
@@ -378,37 +402,40 @@ class CrawlEngine:
             "url", "name", "price", "change"
         ).withColumn("epoch", F.lit(epoch))
 
+        # the epoch counters ride on the fetched commit's own write job.
+        # A resumed epoch whose fetched table is already committed skips
+        # that write (commit_epoch runs no action then), so the
+        # observation would never fire: count with an agg on that path
+        fetched_rows = fetched.drop("html")
+        counted = None
+        if epoch not in self.catalog.committed_epochs("fetched"):
+            counted = Observation()
+            fetched_rows = fetched_rows.observe(counted, *_counters())
+
         # commit epoch snapshots (order matters: data first, seen last so a
         # crash can never mark a URL seen without its fetched row committed).
-        # The four data commits touch independent table dirs/manifests and
-        # all derive from the checkpointed `fetched` — submit them as
-        # concurrent Spark jobs; only `seen` waits behind the barrier.
-        import os as _os
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _counts():
-            return fetched.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok"),
-            ).collect()[0]
-
-        commit_lanes = int(_os.environ.get("SPARK_CRAWL_COMMIT_LANES", "6"))
-        with ThreadPoolExecutor(max_workers=commit_lanes) as ex:
+        # The data commits touch independent table dirs/manifests and all
+        # derive from materialised frames — submit them as concurrent
+        # Spark jobs, one lane each; only `seen` waits behind the barrier.
+        commits = [
+            ("fetched", fetched_rows),
+            ("extracted", extracted),
+            ("outlinks", outlinks.drop("epoch")),
+            ("metrics", P.epoch_metrics(fetched)),
+        ]
+        if deferred_out is not None:
+            commits.append(("deferred", deferred_out))
+        with ThreadPoolExecutor(max_workers=len(commits)) as ex:
             futures = [
-                ex.submit(self.catalog.commit_epoch, "fetched", epoch, fetched.drop("html")),
-                ex.submit(self.catalog.commit_epoch, "extracted", epoch, extracted),
-                ex.submit(self.catalog.commit_epoch, "outlinks", epoch, outlinks.drop("epoch")),
-                ex.submit(self.catalog.commit_epoch, "metrics", epoch, P.epoch_metrics(fetched)),
+                ex.submit(self.catalog.commit_epoch, table, epoch, df)
+                for table, df in commits
             ]
-            if deferred_out is not None:
-                futures.append(
-                    ex.submit(self.catalog.commit_epoch, "deferred", epoch, deferred_out)
-                )
-            counts_future = ex.submit(_counts)
             for fut in futures:
                 fut.result()  # barrier: all data tables committed before seen
-            counts = counts_future.result()
-        _phase("data commits")
+        if counted is not None:
+            counts = counted.get
+        else:
+            counts = fetched.agg(*_counters()).collect()[0]
         n_fetched, n_ok = counts["n"], int(counts["ok"] or 0)
         self.catalog.commit_epoch(
             "seen", epoch,
@@ -417,7 +444,6 @@ class CrawlEngine:
             ),
             lineage={"fetched": n_fetched, "ok": n_ok},
         )
-        _phase("seen commit")
         return {"epoch": epoch, "fetched": n_fetched, "ok": n_ok}
 
     def run(self, seeds: DataFrame, n_epochs: int = 3) -> list[dict]:
