@@ -1532,8 +1532,8 @@ def _q_host_budget_waterfill(spark, sf_dir):
     capacity 3000 < total demand, so the waterfill both fully serves the
     small hosts and splits the remainder over the big ones — exact
     integer semantics, remainder to the lowest-ranked unsatisfied
-    hosts. Running totals come from the grouped two-level scan, never a
-    single-partition row window."""
+    hosts. The budgets are water-filled on the driver over the collected
+    per-host demand table."""
     from web_crawler_spark.operators.aggregate import host_budget_waterfill
 
     e = _t(spark, sf_dir, "events")
@@ -18967,7 +18967,7 @@ def _q_canonical_cluster_conflicts(spark, sf_dir):
     def u(num):
         return F.concat(
             F.lit("https://"), host, F.lit("/p/"),
-            F.lpad(num.cast("string"), 5, "0"),
+            F.lpad(num.cast("string"), 12, "0"),
         )
 
     tgt_num = F.when((regime == 1) & (v == 2), gid + 1).otherwise(gid)
@@ -18999,7 +18999,7 @@ b AS (
   FROM g
 )
 SELECT concat('https://', host, '/p/',
-              lpad(CAST(gid AS VARCHAR), 5, '0')) AS cluster_id,
+              lpad(CAST(gid AS VARCHAR), 12, '0')) AS cluster_id,
        CAST(3 AS BIGINT) AS n_pages,
        CAST(CASE WHEN regime = 2 THEN 2 ELSE 3 END AS BIGINT)
          AS n_declaring,

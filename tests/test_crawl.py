@@ -4,6 +4,7 @@ no-false-negatives, epoch resume."""
 
 import shutil
 import tempfile
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -298,9 +299,10 @@ _GATED_ROBOTS = {
     "example-commodities.net": "User-agent: sparkcrawl\nDisallow: /simple_table/1\n",
 }
 # Spark jobs each epoch of the gated crawl below may run (measured: the
-# admission pipeline is materialised once per epoch, and the fetched
-# counters ride on the fetched commit's write)
-_GATED_JOB_BUDGET = [39, 43]
+# admission pipeline is materialised once per epoch, the budgets are
+# water-filled on the driver from one collected per-host demand table,
+# and the fetched counters ride on the fetched commit's write)
+_GATED_JOB_BUDGET = [26, 30]
 
 
 def _gated_engine(spark, root, pages):
@@ -1054,6 +1056,53 @@ def test_epoch_fetch_capacity_waterfills(spark, catalog_dir):
     assert len(smalls) >= 2
     deferred = eng.catalog.read(spark, "deferred")
     assert deferred is not None and deferred.filter(F.col("epoch") == 0).count() > 0
+
+
+def test_epoch_fetch_capacity_with_per_host_cap(spark, catalog_dir):
+    """epoch_fetch_capacity and max_per_host_per_epoch together: each
+    host fetches at most the lesser of its water-fill budget and the cap,
+    the epoch at most the capacity, and every scheduled URL is either
+    fetched or deferred."""
+    from test_waterfill import _py_waterfill
+
+    from web_crawler_spark.plans.epoch import CrawlEngine
+    from web_crawler_spark.sources.pages import generate_pages
+    from web_crawler_spark.sources.seeds import seeds_from_pages
+
+    pages = generate_pages(spark, 240, seed=42).cache()
+    # per epoch: one hot host ~30 URLs, four ~6. Epoch 0's water-fill
+    # gives one small host 6 (above the cap) and the rest 5 (below demand)
+    seeds = seeds_from_pages(spark, 240, n_per_host=6, hot_factor=5, n_epochs=2)
+    capacity, cap = 26, 5
+    eng = CrawlEngine(
+        spark, catalog_dir + "/wfcap", pages, max_depth=0, use_bloom=False,
+        epoch_fetch_capacity=capacity, max_per_host_per_epoch=cap,
+    )
+    eng.run(seeds, n_epochs=2)
+
+    fetched = eng.catalog.read(spark, "fetched")
+    deferred = eng.catalog.read(spark, "deferred")
+
+    def per_host(df):
+        return {r["host"]: r["count"] for r in df.groupBy("host").count().collect()}
+
+    for epoch in range(2):
+        # the epoch's admitted frontier, rebuilt from the committed
+        # catalog: seeds + epoch-1 deferrals, minus URLs already fetched
+        frontier = eng._frontier_for(seeds, epoch).join(
+            fetched.filter(F.col("epoch") < epoch).select("url_hash"),
+            "url_hash", "left_anti",
+        )
+        demand = per_host(frontier)
+        got = per_host(fetched.filter(F.col("epoch") == epoch))
+        put_off = per_host(deferred.filter(F.col("epoch") == epoch))
+        budget = _py_waterfill(demand, capacity)
+        if epoch == 0:
+            assert any(b > cap for b in budget.values()), budget
+            assert any(b < demand[h] for h, b in budget.items()), budget
+        assert all(n <= min(budget[h], cap) for h, n in got.items()), (got, budget)
+        assert sum(got.values()) <= capacity, got
+        assert Counter(got) + Counter(put_off) == Counter(demand)
 
 
 def test_change_rate_poisson_estimator(spark):

@@ -102,6 +102,9 @@ def test_no_hugeint_oracle_columns():
         "gr_host_pagerank", "gr_host_trustrank", "gr_host_hits",
         "gr_host_salsa", "gr_harmonic_hyperball", "gr_neighborhood_fn",
         "gr_seed_distance", "gr_seed_attribution", "gr_pagerank_residuals",
+        # the per-host budgets are water-filled on the driver in Python
+        # integers; the oracle is the windowed SQL form
+        "f2_host_budget_waterfill",
     ],
 )
 def test_strict_hash_parity_previous_reds(spark, qname):
@@ -114,6 +117,24 @@ def test_strict_hash_parity_previous_reds(spark, qname):
         f"{qname}: strict (driver-style) hash mismatch — check for "
         "uncast HUGEINT sums or float-format drift in the oracle"
     )
+
+
+def test_canonical_cluster_ids_past_five_digits(spark, tmp_path):
+    """cc_canonical_cluster_conflicts zero-pads ids into its page URLs;
+    ids at or above 100,000 must neither be cut short nor collide. Engine
+    and oracle over a tiny events table whose event_id crosses 100,000."""
+    pd.DataFrame({"event_id": list(range(99_990, 100_020))}).to_parquet(
+        tmp_path / "events.parquet"
+    )
+    qname = "cc_canonical_cluster_conflicts"
+    sdf = E.queries()[qname](spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')"
+    )
+    odf = con.sql(E.oracle_sql()[qname]).df()
+    assert len(odf) == 10 and odf["cluster_id"].is_unique
+    assert _strict_hash(sdf) == _strict_hash(odf)
 
 
 def test_strict_hasher_catches_uncast_hugeint(spark):

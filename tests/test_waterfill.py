@@ -2,7 +2,13 @@
 capacity allocation — integer water-filling with deterministic remainder
 spread, verified against a plain-Python reference."""
 
-from web_crawler_spark.operators.aggregate import host_budget_waterfill
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
+
+from web_crawler_spark.operators.aggregate import (
+    host_budget_waterfill,
+    waterfill_budgets,
+)
 
 
 def _py_waterfill(demands, capacity):
@@ -22,6 +28,53 @@ def _py_waterfill(demands, capacity):
         else:
             out[h] = base + (1 if k - K <= extra else 0)
     return out
+
+
+# few host names and small demands, so ties in demand are common
+_DEMANDS = st.dictionaries(
+    st.text(alphabet="abcd", min_size=1, max_size=2),
+    st.integers(min_value=1, max_value=12),
+    min_size=1, max_size=10,
+)
+
+
+@settings(max_examples=400, deadline=None)
+@given(_DEMANDS, st.integers(min_value=0, max_value=150))
+@example({"a": 4, "b": 4, "c": 4}, 10)       # ties: remainder to "a"
+@example({"a": 5, "b": 3}, 0)                 # capacity 0
+@example({"a": 5, "b": 3}, 8)                 # capacity == total demand
+@example({"a": 5, "b": 3}, 100)               # capacity > total demand
+@example({"solo": 9}, 4)                      # a single host
+def test_waterfill_budgets_match_reference(demands, capacity):
+    got = waterfill_budgets(demands, capacity)
+    budgets = {h: b for h, (b, _sat) in got.items()}
+    assert budgets == _py_waterfill(demands, capacity)
+    assert sum(budgets.values()) == min(capacity, sum(demands.values()))
+    assert all(budgets[h] <= d for h, d in demands.items())
+    assert all(budgets[h] == demands[h] for h, (_b, sat) in got.items() if sat)
+
+
+def test_over_budget_predicate_row_for_row(spark):
+    """The literal deferral predicate equals ``seq > budget[host]`` on
+    every row, with the per-host cap applied and a null host (no budget:
+    every row deferred) taking its share of the water-fill."""
+    from pyspark.sql import functions as F
+
+    from web_crawler_spark.plans.epoch import over_budget
+
+    demand = {"a": 7, "b": 2, "c": 5, "d": 5, None: 3}
+    rows = [(h, s) for h, n in demand.items() for s in range(1, n + 1)]
+    sched = spark.createDataFrame(rows, "host string, seq int")
+    for capacity, cap in ((14, None), (14, 3), (0, None), (100, 4)):
+        budget = {h: b for h, (b, _s) in waterfill_budgets(demand, capacity).items()}
+        got = sched.select(
+            "host", "seq", over_budget(sched, capacity, cap).alias("over")
+        ).collect()
+        assert len(got) == len(rows)
+        for r in got:
+            b = 0 if r["host"] is None else budget[r["host"]]
+            b = b if cap is None else min(b, cap)
+            assert r["over"] is (r["seq"] > b), (capacity, cap, r)
 
 
 def test_matches_python_reference(spark):

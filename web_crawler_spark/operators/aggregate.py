@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
 
 def market_summary(df: DataFrame, value_col: str = "change_percent") -> DataFrame:
@@ -200,76 +201,69 @@ def frontier_gini(
     )
 
 
-def host_budget_waterfill(
-    demands: DataFrame,
-    capacity: int,
-    host_col: str = "host",
-    demand_col: str = "demand",
-) -> DataFrame:
+def waterfill_budgets(demands: dict, capacity: int) -> dict:
     """Max-min fair per-host crawl budgets by water-filling: split a
     global per-epoch fetch capacity across hosts so small hosts are fully
     served and the remainder is divided evenly among the big ones — the
     allocation that maximizes the minimum service (the fairness objective
     behind per-host budgets; without it one mega-host starves the tail).
 
-    Integer semantics (engine-portable, no floats until the final div):
-    rank hosts ascending by (demand, host); host k is *satisfied* when
-    granting every host from rank k on its full demand still fits:
+    ``{host: demand}`` and the capacity → ``{host: (budget, satisfied)}``,
+    pure Python on the driver. Integer semantics: rank hosts ascending by
+    (demand, host), a None host first among equal demands (Spark's
+    ascending null order); host k is *satisfied* when granting every host
+    from rank k on its full demand still fits:
     ``demand_k * (n - k + 1) + prefix_{k-1} <= capacity``. With K = the
     last satisfied rank, the R = capacity - prefix_K leftover spreads
     over the m = n - K unsatisfied hosts as floor(R/m), the R mod m
     lowest-ranked of them getting one extra. sum(budget) = min(capacity,
-    sum(demand)) exactly.
-
-    Scale shape: both running totals (rank and demand prefix) come from
-    ONE grouped two-level scan (``operators/prefixsum.py``) over the
-    per-host table — no single-partition row window; the K/R/m summary
-    is a 1-row agg cross-joined back (broadcast).
+    sum(demand)) exactly, and no budget exceeds its demand.
     """
-    from .prefixsum import prefix_sum
+    ranked = sorted(
+        demands.items(), key=lambda hd: (hd[1], hd[0] is not None, hd[0])
+    )
+    n = len(ranked)
+    K = PK = prefix = 0
+    for k, (_h, d) in enumerate(ranked, 1):
+        if d * (n - k + 1) + prefix <= capacity:
+            K, PK = k, prefix + d
+        prefix += d
+    m = n - K
+    base, extra = divmod(capacity - PK, m) if m else (0, 0)
+    return {
+        h: (d, True) if k <= K else (base + (1 if k - K <= extra else 0), False)
+        for k, (h, d) in enumerate(ranked, 1)
+    }
 
+
+def host_budget_waterfill(
+    demands: DataFrame,
+    capacity: int,
+    host_col: str = "host",
+    demand_col: str = "demand",
+) -> DataFrame:
+    """:func:`waterfill_budgets` over a per-host demand frame: returns
+    (host, demand, budget, satisfied), one row per host.
+
+    Scale shape: one driver-resident row per host — the per-host table
+    is collected once (its only Spark work) and the budgets are computed
+    on the driver; the result is a local frame.
+    """
     d = demands.select(
         F.col(host_col).alias("host"),
         F.col(demand_col).cast("bigint").alias("demand"),
-    ).withColumn("__one", F.lit(1).cast("bigint"))
-    p = prefix_sum(
-        d, ["demand", "host"], ["__one", "demand"], out_col=["k", "p"]
-    ).drop("__one")
-    # consumed by three plans (summary, K/R agg, final projection):
-    # compute the scan once
-    p = p.localCheckpoint(eager=False)
-    cap = F.lit(int(capacity)).cast("bigint")
-    summary = p.agg(F.count(F.lit(1)).alias("__n"))
-    joined = p.crossJoin(F.broadcast(summary))
-    satisfied = (
-        F.col("demand") * (F.col("__n") - F.col("k") + 1)
-        + (F.col("p") - F.col("demand"))
-        <= cap
     )
-    flagged = joined.withColumn("__is_sat", satisfied)
-    lvl = flagged.agg(
-        F.max(F.when(F.col("__is_sat"), F.col("k"))).alias("__K"),
-        F.max(F.when(F.col("__is_sat"), F.col("p"))).alias("__PK"),
-        F.max("__n").alias("__n2"),
-    ).select(
-        F.coalesce("__K", F.lit(0)).alias("__K"),
-        F.coalesce("__PK", F.lit(0)).alias("__PK"),
-        "__n2",
-    )
-    out = flagged.crossJoin(F.broadcast(lvl))
-    R = cap - F.col("__PK")
-    m = F.col("__n2") - F.col("__K")
-    base = F.floor(R / m).cast("bigint")
-    extra = R % m
-    idx = F.col("k") - F.col("__K")
-    budget = F.when(F.col("__is_sat"), F.col("demand")).otherwise(
-        base + F.when(idx <= extra, 1).otherwise(0)
-    )
-    return out.select(
-        "host",
-        "demand",
-        budget.cast("bigint").alias("budget"),
-        F.col("__is_sat").alias("satisfied"),
+    wanted = {r["host"]: r["demand"] for r in d.collect()}
+    schema = StructType([
+        d.schema["host"],
+        StructField("demand", LongType()),
+        StructField("budget", LongType()),
+        StructField("satisfied", BooleanType()),
+    ])
+    return demands.sparkSession.createDataFrame(
+        [(h, wanted[h], b, sat)
+         for h, (b, sat) in waterfill_budgets(wanted, capacity).items()],
+        schema,
     )
 
 

@@ -8,7 +8,7 @@ One epoch = one BFS wave:
       → robots decision                          (broadcast rules)
       → repartition by salted host               [shuffle: by host-salt]
       → per-host crawl order + politeness window (row_number / closed form)
-      → per-host budget (water-fill / cap), overflow deferred
+      → per-host budget (water-fill on the driver / cap), overflow deferred
       → repartition by url_hash                  [shuffle: by url_hash]
       → "fetch" = equi-join against the pages corpus on canonical_url
         (the offline corpus replaces live HTTP — SURVEY §2.1 S1)
@@ -27,8 +27,9 @@ data, and a lazy frame with several consumers re-runs its whole plan
 the four frames that have more than one consumer, each once:
 
 * the robots decision — ``allowed`` and ``denied`` are two filters on it;
-* the budgeted schedule — the fetch side and ``deferred`` are two filters
-  on it, so they always come from one evaluation of the plan;
+* the politeness schedule — the per-host demand collect, the fetch side
+  and ``deferred`` read it; the last two are complementary filters on it,
+  so they always come from one evaluation of the plan;
 * ``fetched`` — read by extraction, the outlinks depth join, metrics and
   the fetched and seen commits;
 * ``combined`` (the one-pass extraction) — read by ``extracted`` and
@@ -44,13 +45,15 @@ committed epoch-K outlinks table.
 
 from __future__ import annotations
 
+from collections import defaultdict
 from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import urltools as U
+from ..operators import aggregate as A
 from ..operators import dedup as D
 from ..operators import politeness as P
 from ..operators import robots as RB
@@ -230,8 +233,8 @@ class CrawlEngine:
         """Admission: frontier → seen anti-join → robots gate → politeness
         schedule → per-host budget. Returns ``(scheduled, denied,
         deferred_out)``; the last two are None when no robots rules or no
-        budget apply. Materialises the robots decision and the budgeted
-        schedule (see the module docstring)."""
+        budget apply. Materialises the robots decision and, when a budget
+        applies, the politeness schedule (see the module docstring)."""
         frontier = self._frontier_for(seeds, epoch)
 
         # dedup vs seen  [shuffle: url_hash]
@@ -286,40 +289,21 @@ class CrawlEngine:
         # per-host epoch budget: overflow (seq > budget) is deferred to the
         # next epoch's frontier with its priority intact — bounded state
         # per host per epoch, nothing lost
-        budget = None
-        if self.epoch_fetch_capacity is not None:
-            from ..operators.aggregate import host_budget_waterfill
-
-            demands = scheduled.groupBy("host").agg(
-                F.count(F.lit(1)).alias("demand")
+        if self.epoch_fetch_capacity is None and self.max_per_host_per_epoch is None:
+            return scheduled, denied, None
+        # one schedule, materialised: the demand collect, the fetch side
+        # and the deferred table all read the same rows
+        scheduled = scheduled.localCheckpoint()
+        if self.epoch_fetch_capacity is None:
+            over = F.col("seq") > self.max_per_host_per_epoch
+        else:
+            over = over_budget(
+                scheduled, self.epoch_fetch_capacity, self.max_per_host_per_epoch
             )
-            budgets = host_budget_waterfill(
-                demands, self.epoch_fetch_capacity
-            ).select("host", "budget")
-            if self.max_per_host_per_epoch is not None:
-                budgets = budgets.select(
-                    "host",
-                    F.least(
-                        F.col("budget"),
-                        F.lit(int(self.max_per_host_per_epoch)).cast("bigint"),
-                    ).alias("budget"),
-                )
-            # per-host table: slim; AQE broadcasts the small side itself
-            scheduled = scheduled.join(budgets, "host", "left")
-            budget = F.coalesce(F.col("budget"), F.lit(0))
-        elif self.max_per_host_per_epoch is not None:
-            budget = F.lit(self.max_per_host_per_epoch)
-
-        deferred_out = None
-        if budget is not None:
-            # one budgeted schedule, materialised: the fetch side and the
-            # deferred table are two filters on the same rows
-            scheduled = scheduled.localCheckpoint()
-            deferred_out = scheduled.filter(F.col("seq") > budget).select(
-                "url", "priority", "host", "canonical_url", "url_hash", "depth"
-            )
-            scheduled = scheduled.filter(F.col("seq") <= budget).drop("budget")
-        return scheduled, denied, deferred_out
+        deferred_out = scheduled.filter(over).select(
+            "url", "priority", "host", "canonical_url", "url_hash", "depth"
+        )
+        return scheduled.filter(~over), denied, deferred_out
 
     # ------------------------------------------------------------------
     def run_epoch(self, seeds: DataFrame, epoch: int) -> dict:
@@ -462,6 +446,33 @@ class CrawlEngine:
                         self.catalog.compact(self.spark, table)
                         self.catalog.vacuum(table)
         return results
+
+
+def over_budget(
+    scheduled: DataFrame, capacity: int, max_per_host: int | None
+) -> Column:
+    """The predicate "this row is past its host's budget" over a
+    politeness schedule (``host``, ``seq``), for an epoch fetch capacity:
+    per-host demand is collected (one row per host), the budgets are
+    water-filled on the driver (``aggregate.waterfill_budgets``, capped
+    by ``max_per_host``), and only hosts whose budget is below their
+    demand appear in it, grouped by budget as literal host sets — no
+    budgets join or broadcast. A null host has no budget, so all its rows
+    are over."""
+    demand = {
+        r["host"]: r["count"]
+        for r in scheduled.groupBy("host").count().collect()
+    }
+    hosts_at = defaultdict(list)
+    for host, (budget, _satisfied) in A.waterfill_budgets(demand, capacity).items():
+        if max_per_host is not None:
+            budget = min(budget, max_per_host)
+        if host is not None and budget < demand[host]:
+            hosts_at[budget].append(host)
+    over = F.col("host").isNull()
+    for budget, hosts in sorted(hosts_at.items()):
+        over = over | (F.col("host").isin(sorted(hosts)) & (F.col("seq") > budget))
+    return over
 
 
 def frontier_select(
