@@ -8,9 +8,11 @@ value hash). Column names/types are aligned on both sides; every computed
 float is rounded identically so double-accumulation order can't flip the
 hash.
 
-Queries with no SQL-expressible oracle (xxhash64-based LSH internals, the
-mapInPandas HTML extraction, the epoch loop) are listed in ``queries()``
-only → the driver records the weaker rows-only check for exactly those.
+Every query is registered once, by name, with its builder and its oracle
+(``_register``). Queries with no SQL-expressible oracle (xxhash64-based LSH
+internals, the mapInPandas HTML extraction, the epoch loop) are registered
+with oracle ``None``: they are in ``queries()`` but not in ``oracle_sql()``,
+so the driver records the weaker rows-only check for exactly those.
 """
 
 from __future__ import annotations
@@ -13094,548 +13096,315 @@ FROM per GROUP BY lang ORDER BY lang
 # registry
 # ---------------------------------------------------------------------------
 
-_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # --- tier 1: queries not yet driver-certified (the driver snapshots the
-    # first 50 registration-order entries into CORRECTNESS_r{N}.json; r1/r2
-    # certified the relational/crawl/scalar core, so this round fronts the
-    # corpus/similarity/sitemap/graph/tpch layer for certification) ---
-    "tpch_q3_shipping_priority": _q_tpch_q3,
-    "tpch_q5_local_supplier": _q_tpch_q5,
-    "tpch_q6_forecast_revenue": _q_tpch_q6,
-    "tpch_q12_priority_shipping": _q_tpch_q12,
-    "tpch_q14_promo_revenue": _q_tpch_q14,
-    "tpch_q18_large_volume": _q_tpch_q18,
-    "t2_topk_losers": _q_topk_losers,
-    "t4_t5_top_categories": _q_top_categories,
-    "p2_p3_required_fields": _q_required_fields,
-    "p5_p7_report_projection": _q_report_projection,
-    "x11_field_cleaners": _q_field_cleaners,
-    "x14_timestamp_coercion": _q_timestamp_coercion,
-    "s7_json_api_parse": _q_json_api_parse,
-    "f5_f7_error_isolation": _q_error_isolation,
-    "v6_v7_business_rules": _q_business_rules,
-    "x5b_categorize_bi": _q_categorize_bi,
-    "mm_binary_metadata": _q_binary_metadata,
-    "mm_image_dims": _q_image_dims,
-    "mm_audio_meta": _q_audio_meta,
-    "mm_audio_features": _q_audio_features,
-    "mm_image_features": _q_image_features,
-    "mm_image_dhash": _q_image_dhash,
-    "mm_image_neardup": _q_image_neardup,
-    "mm_video_meta": _q_video_meta,
-    "st_stateful_politeness": _q_stateful_politeness,
-    "st_stateful_seen": _q_stateful_seen,
-    "st_stream_join": _q_stream_stream_join,
-    "a8_frontier_telemetry": _q_frontier_telemetry,
-    "a8_frontier_gini": _q_frontier_gini,
-    "f2_host_budget_waterfill": _q_host_budget_waterfill,
-    "url_soft_404": _q_soft_404,
-    "a10_exact_quantiles": _q_exact_quantiles,
-    "url_meta_robots": _q_meta_robots,
-    "f3_politeness_by_ip": _q_politeness_by_ip,
-    "x17_markdown_tables": _q_markdown_tables,
-    "ann_int8_topk": _q_ann_int8,
-    "crawl_change_magnitude": _q_change_magnitude,
-    "a12_fetch_sessions": _q_fetch_sessions,
-    "tx_curriculum_shards": _q_curriculum_shards,
-    "tx_invisible_hygiene": _q_invisible_hygiene,
-    "tx_gopher_stopwords": _q_gopher_stopwords,
-    "gr_nofollow_links": _q_nofollow_links,
-    "tx_dataset_split": _q_dataset_split,
-    "tx_pii_scrub": _q_pii_scrub,
-    "dd_contamination_check": _q_contamination,
-    "tx_gopher_quality": _q_gopher_quality,
-    "tx_repetition": _q_repetition,
-    "tx_term_stats": _q_term_stats,
-    "tx_bm25_topk": _q_bm25_topk,
-    "tx_ql_dirichlet_topk": _q_ql_dirichlet,
-    "tx_pmi_collocations": _q_pmi_collocations,
-    "tx_char_entropy": _q_char_entropy,
-    "tx_slice_kl_terms": _q_slice_kl,
-    "tx_bm25_batch": _q_bm25_batch,
-    "sk_salted_join": _q_salted_join,
-    "tx_corpus_pipeline": _q_corpus_pipeline,
-    "dd_chunk_dedup": _q_chunk_dedup,
-    "dd_chunk_dedup_rewrite": _q_chunk_dedup_rewrite,
-    "dd_span_dedup_rewrite": _q_span_dedup_rewrite,
-    "tx_shard_pack": _q_shard_pack,
-    "url_registrable_domain": _q_registrable_domain,
-    "f3_politeness_by_site": _q_politeness_by_site,
-    "tx_domain_quota": _q_domain_quota,
-    "gr_domain_graph": _q_domain_graph,
-    "gr_domain_pagerank": _q_domain_pagerank,
-    "tx_weighted_sample": _q_weighted_sample,
-    "tx_corpus_mix": _q_corpus_mix,
-    "crawl_snapshot_asof": _q_snapshot_asof,
-    "crawl_change_detection": _q_change_detection,
-    "crawl_recrawl_priority": _q_recrawl_priority,
-    "s_sitemap_scan": _q_sitemap_scan,
-    "s_feed_scan": _q_feed_scan,
-    "s6_header_sniff": _q_header_sniff,
-    "s6_xlsx_scan": _q_xlsx_scan,
-    "gr_host_graph": _q_host_graph,
-    "gr_host_pagerank": _q_host_pagerank,
-    "gr_host_hits": _q_host_hits,
-    "gr_host_salsa": _q_host_salsa,
-    "gr_seed_distance": _q_seed_distance,
-    "f2_host_fetcher_assign": _q_host_fetcher_assign,
-    "dd_dedup_clusters": _q_dedup_clusters,
-    "dd_keep_canonical": _q_keep_canonical,
-    "dd_simhash_pairs_md5": _q_simhash_pairs_md5,
-    "tx_url_language_twins": _q_url_language_twins,
-    "tx_bm25_rm3": _q_bm25_rm3,
-    "url_mirror_hosts": _q_url_mirror_hosts,
-    "tx_retrieval_eval": _q_retrieval_eval,
-    "tx_bm25f_topk": _q_bm25f_topk,
-    "f9_learned_priority": _q_learned_priority,
-    "dd_lsh_plan": _q_lsh_plan,
-    "gr_cocitation_hosts": _q_cocitation_hosts,
-    "gr_coupling_hosts": _q_coupling_hosts,
-    "tx_tfidf_keywords": _q_tfidf_keywords,
-    "crawl_epoch_novelty": _q_epoch_novelty,
-    "tx_host_templates": _q_host_templates,
-    "tx_template_burden": _q_template_burden,
-    "url_host_lookalikes": _q_host_lookalikes,
-    "gr_graph_summary": _q_graph_summary,
-    "f7_host_error_wilson": _q_host_error_wilson,
-    "gr_anchor_entropy": _q_anchor_entropy,
-    "tx_source_concentration": _q_source_concentration,
-    "tx_host_lang_outliers": _q_host_lang_outliers,
-    "tx_tokenizer_fertility": _q_tokenizer_fertility,
-    "s_warc_scan": _q_warc_scan,
-    "ann_lsh_topk_md5": _q_ann_lsh_md5,
-    "ann_knn_join": _q_knn_join,
-    "ann_bitext_margin": _q_bitext_margin,
-    "ann_bitext_margin_fast": _q_bitext_margin_fast,
-    "ann_knn_join_lsh_md5": _q_knn_join_lsh_md5,
-    "ann_ivf_topk_md5": _q_ann_ivf_md5,
-    "ann_pq_topk_md5": _q_ann_pq_md5,
-    "dd_semdedup_md5": _q_semdedup_md5,
-    "dd_embedding_lsh_pairs_md5": _q_embedding_lsh_pairs_md5,
-    # --- tier 2: new this round (position >50 keeps the tier-1 snapshot
-    # intact; certify in the next round's rotation) + driver-certified
-    # green in CORRECTNESS_r01/r02.json ---
-    "ann_cosine_topk": _q_ann_cosine,
-    "ann_rocchio_topk": _q_rocchio,
-    "dd_embedding_dedup_pairs": _q_embedding_dedup,
-    "cc_surt_key": _q_surt_key,
-    "cc_cdx_index": _q_cdx_index,
-    "gr_anchor_text": _q_anchor_text,
-    "cc_redirect_resolve": _q_redirect_resolve,
-    "cc_alias_resolution": _q_alias_resolution,
-    "tx_lm_perplexity": _q_lm_perplexity,
-    "tx_ccnet_perplexity": _q_ccnet_perplexity,
-    "dd_dedup_clusters_star": _q_dedup_clusters_star,
-    "url_crawl_traps": _q_crawl_traps,
-    "f8_anti_join_seen_cuckoo": _q_anti_join_seen_cuckoo,
-    "tx_boilerplate": _q_boilerplate,
-    "tx_c4_filter": _q_c4_filter,
-    "s_content_sniff": _q_content_sniff,
-    "cc_wat_export": _q_wat_export,
-    "cc_canonical_dedup": _q_canonical_dedup,
-    "f3_politeness_per_host_delay": _q_politeness_per_host_delay,
-    "gr_host_trustrank": _q_host_trustrank,
-    "gr_spam_mass": _q_spam_mass,
-    "tx_phrase_match": _q_phrase_match,
-    "url_dust_params": _q_dust_params,
-    "dd_mirror_hosts": _q_mirror_hosts,
-    "tx_merge_postings": _q_merge_postings,
-    "a9_host_report": _q_host_report,
-    "tx_proximity_match": _q_proximity_match,
-    "gr_opic_update": _q_opic_update,
-    "gr_harmonic_hyperball": _q_harmonic_hyperball,
-    "gr_kcore": _q_kcore,
-    "gr_triangles": _q_triangles,
-    "gr_label_propagation": _q_label_propagation,
-    "tx_mojibake_repair": _q_mojibake_repair,
-    "tx_bpe_train": _q_bpe_train,
-    "tx_article_assembly": _q_article_assembly,
-    "url_hreflang_clusters": _q_hreflang_clusters,
-    "tx_passage_windows": _q_passage_windows,
-    "dd_allpairs_jaccard": _q_allpairs_jaccard,
-    "dd_containment_pairs": _q_containment_pairs,
-    "dd_winnow_fingerprints": _q_winnow_fingerprints,
-    "dd_winnow_pairs": _q_winnow_pairs,
-    "dd_winnow_spans": _q_winnow_spans,
-    "x_jsonld_extract": _q_jsonld_extract,
-    "x_opengraph_tags": _q_opengraph_tags,
-    "url_dust_rules": _q_dust_rules,
-    "tx_readability": _q_readability,
-    "tx_vocab_growth": _q_vocab_growth,
-    "tx_zipf_fit": _q_zipf_fit,
-    "tx_hybrid_rrf": _q_hybrid_rrf,
-    "tx_passage_retrieval": _q_passage_retrieval,
-    "f9_frontier_ucb": _q_frontier_ucb,
-    "f9_focused_priority": _q_focused_priority,
-    "tx_sentence_align": _q_sentence_align,
-    "tx_nfc_normalize": _q_nfc_normalize,
-    "tx_snippets": _q_snippets,
-    "robots_wildcards": _q_robots_wildcards,
-    "crawl_revalidation_plan": _q_revalidation_plan,
-    "f7_circuit_breaker": _q_circuit_breaker,
-    "crawl_sitemap_refresh": _q_sitemap_refresh,
-    "f2_frontier_select": _q_frontier_select,
-    "url_idn_hosts": _q_idn_hosts,
-    "cc_warc_revisit": _q_warc_revisit,
-    "crawl_incremental_fetch": _q_incremental_fetch,
-    "crawl_refresh_pipeline": _q_refresh_pipeline,
-    "f3_aimd_delay": _q_aimd_delay,
-    "robots_cache_policy": _q_robots_cache,
-    "tx_quality_model": _q_quality_model,
-    "tx_ngram_repetition": _q_ngram_repetition,
-    "tx_dup_lines": _q_dup_lines,
-    "tx_pack_sequences": _q_pack_sequences,
-    "tx_corpus_datasheet": _q_corpus_datasheet,
-    "tx_dsir_weights": _q_dsir_weights,
-    "tx_dsir_resample": _q_dsir_resample,
-    "tx_hash_embed": _q_hash_embed,
-    "dd_hash_embed_knn": _q_hash_embed_knn,
-    "a13_heavy_hitters_mg": _q_heavy_hitters_mg,
-    "tx_zorder_key": _q_zorder_key,
-    "dd_text_semdedup_md5": _q_text_semdedup_md5,
-    "tx_logreg_train": _q_logreg_train,
-    "st_heavy_hitters": _q_stateful_heavy_hitters,
-    "a14_cms_frequencies": _q_cms_frequencies,
-    "crawl_poisson_rate": _q_poisson_rate,
-    "st_stateful_seen_ttl": _q_stateful_seen_ttl,
-    "a15_hll_distinct": _q_hll_distinct,
-    "dd_incremental_dedup": _q_incremental_dedup,
-    "crawl_refresh_allocation": _q_refresh_allocation,
-    "a16_dds_quantiles": _q_dds_quantiles,
-    "a17_kmv_epoch_overlap": _q_kmv_epoch_overlap,
-    "tpch_q1_pricing_summary": _q_tpch_q1,
-    "t1_topk_orders": _q_topk_orders,
-    "j1_broadcast_join": _q_broadcast_join,
-    "j3_anti_join": _q_anti_join,
-    "f8_keep_latest_dedup": _q_keep_latest,
-    "t3_window_rank": _q_window_rank,
-    "a1_market_summary": _q_market_summary,
-    "a2_category_stats": _q_category_stats,
-    "a3_category_histogram": _q_category_histogram,
-    "a4_minmax_avg": _q_minmax_avg,
-    "p1_junk_filter": _q_junk_filter,
-    "p4_range_filter": _q_range_filter,
-    "p8_last_non_null": _q_last_non_null,
-    "u2_union_distinct_sources": _q_union_distinct_sources,
-    "f8_merge_duplicates": _q_merge_duplicates,
-    "url_canonicalize": _q_canonicalize,
-    "f2_crawl_order": _q_crawl_order,
-    "f3_politeness_schedule": _q_politeness_schedule,
-    "f3_politeness_lanes": _q_politeness_lanes,
-    "f8_anti_join_seen": _q_anti_join_seen,
-    "f6_retry_backoff": _q_retry_backoff,
-    "a7_success_rate": _q_success_rate,
-    "robots_filter": _q_robots_filter,
-    "url_domain_blocklist": _q_domain_blocklist,
-    "x1_clean_price": _q_clean_price,
-    "x2_clean_percentage": _q_clean_percentage,
-    "x3_extract_symbol": _q_extract_symbol,
-    "x5_categorize": _q_categorize,
-    "x6_hq_parse": _q_hq_parse,
-    "x8_percent_extract": _q_percent_extract,
-    "x13_forex_derived": _q_forex_derived,
-    "x4_standardize_name": _q_standardize_name,
-    "x12_derive_change": _q_derive_change,
-    "x15_x16_format_checks": _q_format_checks,
-    "x9_transform_dsl": _q_transform_dsl,
-    "x9_css_selector": _q_css_selector,
-    "x10_regex_parser": _q_regex_parser,
-    "s8_json_field_mapping": _q_json_field_mapping,
-    "u1_union_all": _q_union_all,
-    "a5_spread_avg": _q_spread_avg,
-    "f1_seed_expansion": _q_seed_expansion,
-    "v_validation_split": _q_validation_split,
-    "a6_validation_summary": _q_validation_summary,
-    "dd_doc_fingerprint": _q_doc_fingerprint,
-    "dd_exact_dedup": _q_exact_dedup,
-    "tx_token_count": _q_token_count,
-    "tx_langid": _q_langid,
-    "tx_quality_score": _q_quality_score,
-    "tx_lang_quality_summary": _q_lang_quality_summary,
-    "dd_ngram_jaccard_pairs": _q_ngram_jaccard,
-    "dd_minhash_lsh_pairs": _q_minhash_lsh,
-    "dd_lsh_dedup_eval": _q_lsh_eval,
-    "dd_cdc_chunks": _q_cdc_chunks,
-    "dd_cdc_dedup_stats": _q_cdc_dedup_stats,
-    # --- rows-only (non-SQL-expressible: xxhash64 internals / mapInPandas / epochs) ---
-    "tx_corpus_mix_bpe": _q_corpus_mix_bpe,
-    "tx_compression_ratio": _q_compression_ratio,
-    "a11_host_distinct_hll": _q_host_distinct_hll,
-    "dd_simhash_pairs": _q_simhash_pairs,
-    "ann_lsh_topk": _q_ann_lsh,
-    "ann_pq_topk": _q_ann_pq,
-    "ann_ivf_trained_topk": _q_ann_ivf_trained,
-    "ann_pq_trained_topk": _q_ann_pq_trained,
-    "dd_embedding_lsh_pairs": _q_embedding_lsh_pairs,
-    "ann_ivf_topk": _q_ann_ivf,
-    "crawl_extract_pipeline": _q_extract_pipeline,
-    "crawl_epochs_e2e": _q_crawl_epochs,
-    "crawl_budget_epochs": _q_crawl_budget_epochs,
-}
+_Builder = Callable[[SparkSession, str], DataFrame]
 
-_ORACLES: dict[str, str] = {
-    "tpch_q1_pricing_summary": _SQL_TPCH_Q1,
-    "t1_topk_orders": _SQL_TOPK_ORDERS,
-    "j1_broadcast_join": _SQL_BROADCAST_JOIN,
-    "j3_anti_join": _SQL_ANTI_JOIN,
-    "f8_keep_latest_dedup": _SQL_KEEP_LATEST,
-    "t3_window_rank": _SQL_WINDOW_RANK,
-    "a1_market_summary": _SQL_MARKET_SUMMARY,
-    "a2_category_stats": _SQL_CATEGORY_STATS,
-    "a3_category_histogram": _SQL_CATEGORY_HISTOGRAM,
-    "a4_minmax_avg": _SQL_MINMAX_AVG,
-    "p1_junk_filter": _SQL_JUNK_FILTER,
-    "p4_range_filter": _SQL_RANGE_FILTER,
-    "p8_last_non_null": _SQL_LAST_NON_NULL,
-    "u2_union_distinct_sources": _SQL_UNION_DISTINCT_SOURCES,
-    "f8_merge_duplicates": _SQL_MERGE_DUPLICATES,
-    "url_canonicalize": _SQL_CANONICALIZE,
-    "f2_crawl_order": _SQL_CRAWL_ORDER,
-    "f3_politeness_schedule": _SQL_POLITENESS,
-    "f3_politeness_lanes": _SQL_POLITENESS_LANES,
-    "f8_anti_join_seen": _SQL_ANTI_JOIN_SEEN,
-    "f8_anti_join_seen_cuckoo": _SQL_ANTI_JOIN_SEEN,
-    "f6_retry_backoff": _SQL_RETRY_BACKOFF,
-    "a7_success_rate": _SQL_SUCCESS_RATE,
-    "robots_filter": _SQL_ROBOTS_FILTER,
-    "url_domain_blocklist": _SQL_DOMAIN_BLOCKLIST,
-    "url_registrable_domain": _SQL_REGISTRABLE_DOMAIN,
-    "f3_politeness_by_site": _SQL_POLITENESS_BY_SITE,
-    "tx_domain_quota": _SQL_DOMAIN_QUOTA,
-    "x1_clean_price": _SQL_CLEAN_PRICE,
-    "x2_clean_percentage": _SQL_CLEAN_PERCENTAGE,
-    "x3_extract_symbol": _SQL_EXTRACT_SYMBOL,
-    "x5_categorize": _SQL_CATEGORIZE,
-    "x6_hq_parse": _SQL_HQ_PARSE,
-    "x8_percent_extract": _SQL_PERCENT_EXTRACT,
-    "x13_forex_derived": _SQL_FOREX_DERIVED,
-    "x4_standardize_name": _SQL_STANDARDIZE_NAME,
-    "x12_derive_change": _SQL_DERIVE_CHANGE,
-    "x15_x16_format_checks": _SQL_FORMAT_CHECKS,
-    "x9_transform_dsl": _SQL_TRANSFORM_DSL,
-    "x9_css_selector": _SQL_CSS_SELECTOR,
-    "x10_regex_parser": _SQL_REGEX_PARSER,
-    "s8_json_field_mapping": _SQL_JSON_FIELD_MAPPING,
-    "u1_union_all": _SQL_UNION_ALL,
-    "a5_spread_avg": _SQL_SPREAD_AVG,
-    "f1_seed_expansion": _SQL_SEED_EXPANSION,
-    "v_validation_split": _SQL_VALIDATION_SPLIT,
-    "a6_validation_summary": _SQL_VALIDATION_SUMMARY,
-    "dd_doc_fingerprint": _SQL_DOC_FINGERPRINT,
-    "dd_exact_dedup": _SQL_EXACT_DEDUP,
-    "tx_token_count": _SQL_TOKEN_COUNT,
-    "tx_langid": _langid_sql(),
-    "tx_quality_score": _SQL_QUALITY_SCORE,
-    "tx_lang_quality_summary": _SQL_LANG_QUALITY_SUMMARY,
-    "dd_ngram_jaccard_pairs": _SQL_NGRAM_JACCARD,
-    "dd_minhash_lsh_pairs": _minhash_sql(),
-    "dd_lsh_dedup_eval": _lsh_eval_sql(),
-    "dd_cdc_chunks": _cdc_sql(),
-    "dd_cdc_dedup_stats": _cdc_stats_sql(),
-    "dd_dedup_clusters": _sql_dedup_clusters(),
-    "dd_keep_canonical": _sql_keep_canonical(),
-    "ann_cosine_topk": _SQL_ANN_COSINE,
-    "ann_rocchio_topk": _rocchio_sql(),
-    "dd_embedding_dedup_pairs": _SQL_EMBEDDING_DEDUP,
-    "t2_topk_losers": _SQL_TOPK_LOSERS,
-    "t4_t5_top_categories": _SQL_TOP_CATEGORIES,
-    "p2_p3_required_fields": _SQL_REQUIRED_FIELDS,
-    "p5_p7_report_projection": _SQL_REPORT_PROJECTION,
-    "x11_field_cleaners": _SQL_FIELD_CLEANERS,
-    "x14_timestamp_coercion": _SQL_TIMESTAMP_COERCION,
-    "s7_json_api_parse": _SQL_JSON_API_PARSE,
-    "f5_f7_error_isolation": _SQL_ERROR_ISOLATION,
-    "v6_v7_business_rules": _SQL_BUSINESS_RULES,
-    "x5b_categorize_bi": _SQL_CATEGORIZE_BI,
-    "mm_binary_metadata": _SQL_BINARY_METADATA,
-    "mm_image_dims": _SQL_IMAGE_DIMS,
-    "mm_audio_meta": _SQL_AUDIO_META,
-    "mm_audio_features": _SQL_AUDIO_FEATURES,
-    "mm_image_features": _SQL_IMAGE_FEATURES,
-    "mm_image_dhash": _SQL_IMAGE_DHASH,
-    "mm_image_neardup": _SQL_IMAGE_NEARDUP,
-    "mm_video_meta": _SQL_VIDEO_META,
-    "st_stateful_politeness": _SQL_STATEFUL_POLITENESS,
-    "st_stateful_seen": _SQL_STATEFUL_SEEN,
-    "st_stream_join": _SQL_STREAM_STREAM_JOIN,
-    "a8_frontier_telemetry": _SQL_FRONTIER_TELEMETRY,
-    "a8_frontier_gini": _SQL_FRONTIER_GINI,
-    "f2_host_budget_waterfill": _SQL_HOST_BUDGET_WATERFILL,
-    "url_soft_404": _SQL_SOFT_404,
-    "a10_exact_quantiles": _SQL_EXACT_QUANTILES,
-    "url_meta_robots": _SQL_META_ROBOTS,
-    "f3_politeness_by_ip": _SQL_POLITENESS_BY_IP,
-    "x17_markdown_tables": _SQL_MARKDOWN_TABLES,
-    "ann_int8_topk": _SQL_ANN_INT8,
-    "crawl_change_magnitude": _SQL_CHANGE_MAGNITUDE,
-    "a12_fetch_sessions": _SQL_FETCH_SESSIONS,
-    "tx_curriculum_shards": _SQL_CURRICULUM_SHARDS,
-    "tx_invisible_hygiene": _SQL_INVISIBLE_HYGIENE,
-    "tx_gopher_stopwords": _SQL_GOPHER_STOPWORDS,
-    "gr_nofollow_links": _SQL_NOFOLLOW_LINKS,
-    "tpch_q3_shipping_priority": _SQL_TPCH_Q3,
-    "tpch_q5_local_supplier": _SQL_TPCH_Q5,
-    "tpch_q6_forecast_revenue": _SQL_TPCH_Q6,
-    "tpch_q12_priority_shipping": _SQL_TPCH_Q12,
-    "tpch_q14_promo_revenue": _SQL_TPCH_Q14,
-    "tpch_q18_large_volume": _SQL_TPCH_Q18,
-    "tx_dataset_split": _SQL_DATASET_SPLIT,
-    "tx_pii_scrub": _SQL_PII_SCRUB,
-    "dd_contamination_check": _SQL_CONTAMINATION,
-    "tx_gopher_quality": _SQL_GOPHER_QUALITY,
-    "tx_boilerplate": _SQL_BOILERPLATE,
-    "tx_c4_filter": _SQL_C4_FILTER,
-    "s_content_sniff": _SQL_CONTENT_SNIFF,
-    "cc_wat_export": _SQL_WAT_EXPORT,
-    "cc_canonical_dedup": _SQL_CANONICAL_DEDUP,
-    "f3_politeness_per_host_delay": _SQL_POLITENESS_PER_HOST,
-    "tx_repetition": _SQL_REPETITION,
-    "tx_term_stats": _SQL_TERM_STATS,
-    "tx_bm25_topk": _sql_bm25_topk(),
-    "tx_ql_dirichlet_topk": _sql_ql_dirichlet(),
-    "tx_pmi_collocations": _SQL_PMI_COLLOCATIONS,
-    "tx_char_entropy": _SQL_CHAR_ENTROPY,
-    "tx_slice_kl_terms": _SQL_SLICE_KL,
-    "tx_bm25_batch": _sql_bm25_batch(),
-    "sk_salted_join": _SQL_SALTED_JOIN,
-    "tx_corpus_pipeline": _sql_corpus_pipeline(),
-    "dd_chunk_dedup": _SQL_CHUNK_DEDUP,
-    "dd_chunk_dedup_rewrite": _SQL_CHUNK_DEDUP_REWRITE,
-    "dd_span_dedup_rewrite": _SQL_SPAN_DEDUP_REWRITE,
-    "tx_shard_pack": _SQL_SHARD_PACK,
-    "tx_weighted_sample": _SQL_WEIGHTED_SAMPLE,
-    "tx_corpus_mix": _SQL_CORPUS_MIX,
-    "crawl_snapshot_asof": _SQL_SNAPSHOT_ASOF,
-    "crawl_change_detection": _SQL_CHANGE_DETECTION,
-    "crawl_recrawl_priority": _SQL_RECRAWL_PRIORITY,
-    "s_feed_scan": _SQL_FEED_SCAN,
-    "s_sitemap_scan": _SQL_SITEMAP_SCAN,
-    "s_warc_scan": _SQL_WARC_SCAN,
-    "cc_surt_key": _SQL_SURT_KEY,
-    "cc_cdx_index": _SQL_CDX_INDEX,
-    "gr_anchor_text": _SQL_ANCHOR_TEXT,
-    "cc_redirect_resolve": _SQL_REDIRECT_RESOLVE,
-    "cc_alias_resolution": _SQL_ALIAS_RESOLUTION,
-    "tx_lm_perplexity": _SQL_LM_PERPLEXITY,
-    "tx_ccnet_perplexity": _SQL_CCNET_PERPLEXITY,
-    "dd_dedup_clusters_star": _sql_dedup_clusters(),
-    "url_crawl_traps": _SQL_CRAWL_TRAPS,
-    "gr_host_pagerank": _pagerank_sql(),
-    "gr_domain_graph": _SQL_DOMAIN_GRAPH,
-    "gr_domain_pagerank": _pagerank_sql(edges_with=_SQL_DOMAIN_PAGERANK_EDGES),
-    "gr_host_hits": _hits_sql(),
-    "gr_host_salsa": _salsa_sql(),
-    "gr_seed_distance": _SQL_SEED_DISTANCE,
-    "f2_host_fetcher_assign": _SQL_HOST_FETCHER_ASSIGN,
-    "gr_host_trustrank": _trustrank_sql(),
-    "gr_spam_mass": _spam_mass_sql(),
-    "tx_phrase_match": _SQL_PHRASE_MATCH,
-    "url_dust_params": _SQL_DUST_PARAMS,
-    "dd_mirror_hosts": _SQL_MIRROR_HOSTS,
-    "tx_merge_postings": _SQL_MERGE_POSTINGS,
-    "a9_host_report": _host_report_sql(),
-    "tx_proximity_match": _SQL_PROXIMITY_MATCH,
-    "gr_opic_update": _SQL_OPIC_UPDATE,
-    "gr_harmonic_hyperball": _hyperball_sql(),
-    "gr_kcore": _kcore_sql(),
-    "gr_triangles": _SQL_TRIANGLES,
-    "gr_label_propagation": _lpa_sql(),
-    "tx_mojibake_repair": _mojibake_sql(),
-    "tx_bpe_train": _bpe_train_sql(),
-    "tx_article_assembly": _SQL_ARTICLE_ASSEMBLY,
-    "url_hreflang_clusters": _SQL_HREFLANG_CLUSTERS,
-    "tx_passage_windows": _SQL_PASSAGE_WINDOWS,
-    "dd_allpairs_jaccard": _SQL_ALLPAIRS_JACCARD,
-    "dd_containment_pairs": _SQL_CONTAINMENT_PAIRS,
-    "dd_winnow_fingerprints": _sql_winnow_fingerprints(),
-    "dd_winnow_pairs": _sql_winnow_pairs(),
-    "dd_winnow_spans": _sql_winnow_spans(),
-    "x_jsonld_extract": _sql_jsonld_extract(),
-    "x_opengraph_tags": _sql_opengraph_tags(),
-    "url_dust_rules": _SQL_DUST_RULES,
-    "tx_readability": _SQL_READABILITY,
-    "tx_vocab_growth": _SQL_VOCAB_GROWTH,
-    "tx_zipf_fit": _SQL_ZIPF_FIT,
-    "tx_hybrid_rrf": _sql_hybrid_rrf(),
-    "tx_passage_retrieval": _sql_passage_retrieval(),
-    "f9_frontier_ucb": _SQL_FRONTIER_UCB,
-    "f9_focused_priority": _SQL_FOCUSED_PRIORITY,
-    "tx_nfc_normalize": _SQL_NFC_NORMALIZE,
-    "tx_snippets": _SQL_SNIPPETS,
-    "robots_wildcards": _SQL_ROBOTS_WILDCARDS,
-    "crawl_revalidation_plan": _SQL_REVALIDATION_PLAN,
-    "f7_circuit_breaker": _SQL_CIRCUIT_BREAKER,
-    "crawl_sitemap_refresh": _SQL_SITEMAP_REFRESH,
-    "f2_frontier_select": _SQL_FRONTIER_SELECT,
-    "url_idn_hosts": _SQL_IDN_HOSTS,
-    "cc_warc_revisit": _SQL_WARC_REVISIT,
-    "crawl_incremental_fetch": _SQL_INCREMENTAL_FETCH,
-    "crawl_refresh_pipeline": _SQL_REFRESH_PIPELINE,
-    "f3_aimd_delay": _SQL_AIMD_DELAY,
-    "robots_cache_policy": _SQL_ROBOTS_CACHE,
-    "tx_quality_model": _sql_quality_model(),
-    "tx_ngram_repetition": _SQL_NGRAM_REPETITION,
-    "tx_dup_lines": _SQL_DUP_LINES,
-    "tx_pack_sequences": _SQL_PACK_SEQUENCES,
-    "tx_corpus_datasheet": _SQL_CORPUS_DATASHEET,
-    "tx_dsir_weights": _SQL_DSIR_WEIGHTS,
-    "tx_dsir_resample": _SQL_DSIR_RESAMPLE,
-    "tx_hash_embed": _sql_hash_embed(),
-    "dd_hash_embed_knn": _sql_hash_embed_knn(),
-    "a13_heavy_hitters_mg": _SQL_HEAVY_HITTERS_MG,
-    "tx_zorder_key": _sql_zorder_key(),
-    "dd_text_semdedup_md5": _sql_text_semdedup_md5(),
-    "tx_logreg_train": _sql_logreg_train(),
-    "st_heavy_hitters": _SQL_STATEFUL_HEAVY_HITTERS,
-    "a14_cms_frequencies": _SQL_CMS_FREQUENCIES,
-    "crawl_poisson_rate": _SQL_POISSON_RATE,
-    "st_stateful_seen_ttl": _SQL_STATEFUL_SEEN,
-    "a15_hll_distinct": _sql_hll_distinct(),
-    "dd_incremental_dedup": _sql_incremental_dedup(),
-    "crawl_refresh_allocation": _sql_refresh_allocation(),
-    "a16_dds_quantiles": _sql_dds_quantiles(),
-    "a17_kmv_epoch_overlap": _sql_kmv_epoch_overlap(),
-    "s6_header_sniff": _SQL_HEADER_SNIFF,
-    "s6_xlsx_scan": _SQL_XLSX_SCAN,
-    "gr_host_graph": _SQL_HOST_GRAPH,
-    "ann_lsh_topk_md5": _sql_ann_lsh_md5(),
-    "ann_knn_join": _SQL_KNN_JOIN,
-    "ann_bitext_margin": _sql_bitext_margin(),
-    "ann_knn_join_lsh_md5": _sql_knn_join_lsh_md5(),
-    "ann_ivf_topk_md5": _sql_ann_ivf_md5(),
-    "ann_pq_topk_md5": _sql_ann_pq_md5(),
-    "dd_semdedup_md5": _sql_semdedup_md5(),
-    "dd_embedding_lsh_pairs_md5": _sql_embedding_lsh_pairs_md5(),
-    "dd_simhash_pairs_md5": _sql_simhash_pairs_md5(),
-    "tx_url_language_twins": _sql_url_language_twins(),
-    "tx_bm25_rm3": _sql_bm25_rm3(),
-    "url_mirror_hosts": _SQL_URL_MIRROR_HOSTS,
-    "tx_retrieval_eval": _SQL_RETRIEVAL_EVAL,
-    "tx_bm25f_topk": _sql_bm25f_topk(),
-    "f9_learned_priority": _sql_learned_priority(),
-    "dd_lsh_plan": _SQL_LSH_PLAN,
-    "gr_cocitation_hosts": _SQL_COCITATION_HOSTS,
-    "gr_coupling_hosts": _SQL_COUPLING_HOSTS,
-    "tx_tfidf_keywords": _SQL_TFIDF_KEYWORDS,
-    "crawl_epoch_novelty": _SQL_EPOCH_NOVELTY,
-    "tx_host_templates": _SQL_HOST_TEMPLATES,
-    "tx_template_burden": _SQL_TEMPLATE_BURDEN,
-    "url_host_lookalikes": _SQL_HOST_LOOKALIKES,
-    "gr_graph_summary": _SQL_GRAPH_SUMMARY,
-    "f7_host_error_wilson": _SQL_HOST_ERROR_WILSON,
-    "gr_anchor_entropy": _SQL_ANCHOR_ENTROPY,
-    "tx_source_concentration": _SQL_SOURCE_CONCENTRATION,
-    "tx_host_lang_outliers": _lang_outliers_sql(),
-    "tx_tokenizer_fertility": _SQL_TOKENIZER_FERTILITY,
-}
+# name -> (builder, DuckDB oracle SQL); an oracle of None marks a rows-only
+# query. Filled only through _register, in registration order.
+_REGISTRY: dict[str, tuple[_Builder, str | None]] = {}
+
+
+def _register(entries: dict[str, tuple[_Builder, str | None]]) -> None:
+    """Add ``entries`` to the registry; a name registered twice is an error."""
+    dup = sorted(entries.keys() & _REGISTRY.keys())
+    if dup:
+        raise ValueError(f"query names already registered: {dup}")
+    _REGISTRY.update(entries)
+
+
+def queries() -> dict[str, _Builder]:
+    return {name: builder for name, (builder, _) in _REGISTRY.items()}
+
+
+def oracle_sql() -> dict[str, str]:
+    return {name: sql for name, (_, sql) in _REGISTRY.items() if sql is not None}
+
+
+_register(
+    {
+        "tpch_q3_shipping_priority": (_q_tpch_q3, _SQL_TPCH_Q3),
+        "tpch_q5_local_supplier": (_q_tpch_q5, _SQL_TPCH_Q5),
+        "tpch_q6_forecast_revenue": (_q_tpch_q6, _SQL_TPCH_Q6),
+        "tpch_q12_priority_shipping": (_q_tpch_q12, _SQL_TPCH_Q12),
+        "tpch_q14_promo_revenue": (_q_tpch_q14, _SQL_TPCH_Q14),
+        "tpch_q18_large_volume": (_q_tpch_q18, _SQL_TPCH_Q18),
+        "t2_topk_losers": (_q_topk_losers, _SQL_TOPK_LOSERS),
+        "t4_t5_top_categories": (_q_top_categories, _SQL_TOP_CATEGORIES),
+        "p2_p3_required_fields": (_q_required_fields, _SQL_REQUIRED_FIELDS),
+        "p5_p7_report_projection": (_q_report_projection, _SQL_REPORT_PROJECTION),
+        "x11_field_cleaners": (_q_field_cleaners, _SQL_FIELD_CLEANERS),
+        "x14_timestamp_coercion": (_q_timestamp_coercion, _SQL_TIMESTAMP_COERCION),
+        "s7_json_api_parse": (_q_json_api_parse, _SQL_JSON_API_PARSE),
+        "f5_f7_error_isolation": (_q_error_isolation, _SQL_ERROR_ISOLATION),
+        "v6_v7_business_rules": (_q_business_rules, _SQL_BUSINESS_RULES),
+        "x5b_categorize_bi": (_q_categorize_bi, _SQL_CATEGORIZE_BI),
+        "mm_binary_metadata": (_q_binary_metadata, _SQL_BINARY_METADATA),
+        "mm_image_dims": (_q_image_dims, _SQL_IMAGE_DIMS),
+        "mm_audio_meta": (_q_audio_meta, _SQL_AUDIO_META),
+        "mm_audio_features": (_q_audio_features, _SQL_AUDIO_FEATURES),
+        "mm_image_features": (_q_image_features, _SQL_IMAGE_FEATURES),
+        "mm_image_dhash": (_q_image_dhash, _SQL_IMAGE_DHASH),
+        "mm_image_neardup": (_q_image_neardup, _SQL_IMAGE_NEARDUP),
+        "mm_video_meta": (_q_video_meta, _SQL_VIDEO_META),
+        "st_stateful_politeness": (_q_stateful_politeness, _SQL_STATEFUL_POLITENESS),
+        "st_stateful_seen": (_q_stateful_seen, _SQL_STATEFUL_SEEN),
+        "st_stream_join": (_q_stream_stream_join, _SQL_STREAM_STREAM_JOIN),
+        "a8_frontier_telemetry": (_q_frontier_telemetry, _SQL_FRONTIER_TELEMETRY),
+        "a8_frontier_gini": (_q_frontier_gini, _SQL_FRONTIER_GINI),
+        "f2_host_budget_waterfill": (_q_host_budget_waterfill, _SQL_HOST_BUDGET_WATERFILL),
+        "url_soft_404": (_q_soft_404, _SQL_SOFT_404),
+        "a10_exact_quantiles": (_q_exact_quantiles, _SQL_EXACT_QUANTILES),
+        "url_meta_robots": (_q_meta_robots, _SQL_META_ROBOTS),
+        "f3_politeness_by_ip": (_q_politeness_by_ip, _SQL_POLITENESS_BY_IP),
+        "x17_markdown_tables": (_q_markdown_tables, _SQL_MARKDOWN_TABLES),
+        "ann_int8_topk": (_q_ann_int8, _SQL_ANN_INT8),
+        "crawl_change_magnitude": (_q_change_magnitude, _SQL_CHANGE_MAGNITUDE),
+        "a12_fetch_sessions": (_q_fetch_sessions, _SQL_FETCH_SESSIONS),
+        "tx_curriculum_shards": (_q_curriculum_shards, _SQL_CURRICULUM_SHARDS),
+        "tx_invisible_hygiene": (_q_invisible_hygiene, _SQL_INVISIBLE_HYGIENE),
+        "tx_gopher_stopwords": (_q_gopher_stopwords, _SQL_GOPHER_STOPWORDS),
+        "gr_nofollow_links": (_q_nofollow_links, _SQL_NOFOLLOW_LINKS),
+        "tx_dataset_split": (_q_dataset_split, _SQL_DATASET_SPLIT),
+        "tx_pii_scrub": (_q_pii_scrub, _SQL_PII_SCRUB),
+        "dd_contamination_check": (_q_contamination, _SQL_CONTAMINATION),
+        "tx_gopher_quality": (_q_gopher_quality, _SQL_GOPHER_QUALITY),
+        "tx_repetition": (_q_repetition, _SQL_REPETITION),
+        "tx_term_stats": (_q_term_stats, _SQL_TERM_STATS),
+        "tx_bm25_topk": (_q_bm25_topk, _sql_bm25_topk()),
+        "tx_ql_dirichlet_topk": (_q_ql_dirichlet, _sql_ql_dirichlet()),
+        "tx_pmi_collocations": (_q_pmi_collocations, _SQL_PMI_COLLOCATIONS),
+        "tx_char_entropy": (_q_char_entropy, _SQL_CHAR_ENTROPY),
+        "tx_slice_kl_terms": (_q_slice_kl, _SQL_SLICE_KL),
+        "tx_bm25_batch": (_q_bm25_batch, _sql_bm25_batch()),
+        "sk_salted_join": (_q_salted_join, _SQL_SALTED_JOIN),
+        "tx_corpus_pipeline": (_q_corpus_pipeline, _sql_corpus_pipeline()),
+        "dd_chunk_dedup": (_q_chunk_dedup, _SQL_CHUNK_DEDUP),
+        "dd_chunk_dedup_rewrite": (_q_chunk_dedup_rewrite, _SQL_CHUNK_DEDUP_REWRITE),
+        "dd_span_dedup_rewrite": (_q_span_dedup_rewrite, _SQL_SPAN_DEDUP_REWRITE),
+        "tx_shard_pack": (_q_shard_pack, _SQL_SHARD_PACK),
+        "url_registrable_domain": (_q_registrable_domain, _SQL_REGISTRABLE_DOMAIN),
+        "f3_politeness_by_site": (_q_politeness_by_site, _SQL_POLITENESS_BY_SITE),
+        "tx_domain_quota": (_q_domain_quota, _SQL_DOMAIN_QUOTA),
+        "gr_domain_graph": (_q_domain_graph, _SQL_DOMAIN_GRAPH),
+        "gr_domain_pagerank": (
+            _q_domain_pagerank,
+            _pagerank_sql(edges_with=_SQL_DOMAIN_PAGERANK_EDGES),
+        ),
+        "tx_weighted_sample": (_q_weighted_sample, _SQL_WEIGHTED_SAMPLE),
+        "tx_corpus_mix": (_q_corpus_mix, _SQL_CORPUS_MIX),
+        "crawl_snapshot_asof": (_q_snapshot_asof, _SQL_SNAPSHOT_ASOF),
+        "crawl_change_detection": (_q_change_detection, _SQL_CHANGE_DETECTION),
+        "crawl_recrawl_priority": (_q_recrawl_priority, _SQL_RECRAWL_PRIORITY),
+        "s_sitemap_scan": (_q_sitemap_scan, _SQL_SITEMAP_SCAN),
+        "s_feed_scan": (_q_feed_scan, _SQL_FEED_SCAN),
+        "s6_header_sniff": (_q_header_sniff, _SQL_HEADER_SNIFF),
+        "s6_xlsx_scan": (_q_xlsx_scan, _SQL_XLSX_SCAN),
+        "gr_host_graph": (_q_host_graph, _SQL_HOST_GRAPH),
+        "gr_host_pagerank": (_q_host_pagerank, _pagerank_sql()),
+        "gr_host_hits": (_q_host_hits, _hits_sql()),
+        "gr_host_salsa": (_q_host_salsa, _salsa_sql()),
+        "gr_seed_distance": (_q_seed_distance, _SQL_SEED_DISTANCE),
+        "f2_host_fetcher_assign": (_q_host_fetcher_assign, _SQL_HOST_FETCHER_ASSIGN),
+        "dd_dedup_clusters": (_q_dedup_clusters, _sql_dedup_clusters()),
+        "dd_keep_canonical": (_q_keep_canonical, _sql_keep_canonical()),
+        "dd_simhash_pairs_md5": (_q_simhash_pairs_md5, _sql_simhash_pairs_md5()),
+        "tx_url_language_twins": (_q_url_language_twins, _sql_url_language_twins()),
+        "tx_bm25_rm3": (_q_bm25_rm3, _sql_bm25_rm3()),
+        "url_mirror_hosts": (_q_url_mirror_hosts, _SQL_URL_MIRROR_HOSTS),
+        "tx_retrieval_eval": (_q_retrieval_eval, _SQL_RETRIEVAL_EVAL),
+        "tx_bm25f_topk": (_q_bm25f_topk, _sql_bm25f_topk()),
+        "f9_learned_priority": (_q_learned_priority, _sql_learned_priority()),
+        "dd_lsh_plan": (_q_lsh_plan, _SQL_LSH_PLAN),
+        "gr_cocitation_hosts": (_q_cocitation_hosts, _SQL_COCITATION_HOSTS),
+        "gr_coupling_hosts": (_q_coupling_hosts, _SQL_COUPLING_HOSTS),
+        "tx_tfidf_keywords": (_q_tfidf_keywords, _SQL_TFIDF_KEYWORDS),
+        "crawl_epoch_novelty": (_q_epoch_novelty, _SQL_EPOCH_NOVELTY),
+        "tx_host_templates": (_q_host_templates, _SQL_HOST_TEMPLATES),
+        "tx_template_burden": (_q_template_burden, _SQL_TEMPLATE_BURDEN),
+        "url_host_lookalikes": (_q_host_lookalikes, _SQL_HOST_LOOKALIKES),
+        "gr_graph_summary": (_q_graph_summary, _SQL_GRAPH_SUMMARY),
+        "f7_host_error_wilson": (_q_host_error_wilson, _SQL_HOST_ERROR_WILSON),
+        "gr_anchor_entropy": (_q_anchor_entropy, _SQL_ANCHOR_ENTROPY),
+        "tx_source_concentration": (_q_source_concentration, _SQL_SOURCE_CONCENTRATION),
+        "tx_host_lang_outliers": (_q_host_lang_outliers, _lang_outliers_sql()),
+        "tx_tokenizer_fertility": (_q_tokenizer_fertility, _SQL_TOKENIZER_FERTILITY),
+        "s_warc_scan": (_q_warc_scan, _SQL_WARC_SCAN),
+        "ann_lsh_topk_md5": (_q_ann_lsh_md5, _sql_ann_lsh_md5()),
+        "ann_knn_join": (_q_knn_join, _SQL_KNN_JOIN),
+        "ann_bitext_margin": (_q_bitext_margin, _sql_bitext_margin()),
+        "ann_knn_join_lsh_md5": (_q_knn_join_lsh_md5, _sql_knn_join_lsh_md5()),
+        "ann_ivf_topk_md5": (_q_ann_ivf_md5, _sql_ann_ivf_md5()),
+        "ann_pq_topk_md5": (_q_ann_pq_md5, _sql_ann_pq_md5()),
+        "dd_semdedup_md5": (_q_semdedup_md5, _sql_semdedup_md5()),
+        "dd_embedding_lsh_pairs_md5": (_q_embedding_lsh_pairs_md5, _sql_embedding_lsh_pairs_md5()),
+        "ann_cosine_topk": (_q_ann_cosine, _SQL_ANN_COSINE),
+        "ann_rocchio_topk": (_q_rocchio, _rocchio_sql()),
+        "dd_embedding_dedup_pairs": (_q_embedding_dedup, _SQL_EMBEDDING_DEDUP),
+        "cc_surt_key": (_q_surt_key, _SQL_SURT_KEY),
+        "cc_cdx_index": (_q_cdx_index, _SQL_CDX_INDEX),
+        "gr_anchor_text": (_q_anchor_text, _SQL_ANCHOR_TEXT),
+        "cc_redirect_resolve": (_q_redirect_resolve, _SQL_REDIRECT_RESOLVE),
+        "cc_alias_resolution": (_q_alias_resolution, _SQL_ALIAS_RESOLUTION),
+        "tx_lm_perplexity": (_q_lm_perplexity, _SQL_LM_PERPLEXITY),
+        "tx_ccnet_perplexity": (_q_ccnet_perplexity, _SQL_CCNET_PERPLEXITY),
+        "dd_dedup_clusters_star": (_q_dedup_clusters_star, _sql_dedup_clusters()),
+        "url_crawl_traps": (_q_crawl_traps, _SQL_CRAWL_TRAPS),
+        "f8_anti_join_seen_cuckoo": (_q_anti_join_seen_cuckoo, _SQL_ANTI_JOIN_SEEN),
+        "tx_boilerplate": (_q_boilerplate, _SQL_BOILERPLATE),
+        "tx_c4_filter": (_q_c4_filter, _SQL_C4_FILTER),
+        "s_content_sniff": (_q_content_sniff, _SQL_CONTENT_SNIFF),
+        "cc_wat_export": (_q_wat_export, _SQL_WAT_EXPORT),
+        "cc_canonical_dedup": (_q_canonical_dedup, _SQL_CANONICAL_DEDUP),
+        "f3_politeness_per_host_delay": (_q_politeness_per_host_delay, _SQL_POLITENESS_PER_HOST),
+        "gr_host_trustrank": (_q_host_trustrank, _trustrank_sql()),
+        "gr_spam_mass": (_q_spam_mass, _spam_mass_sql()),
+        "tx_phrase_match": (_q_phrase_match, _SQL_PHRASE_MATCH),
+        "url_dust_params": (_q_dust_params, _SQL_DUST_PARAMS),
+        "dd_mirror_hosts": (_q_mirror_hosts, _SQL_MIRROR_HOSTS),
+        "tx_merge_postings": (_q_merge_postings, _SQL_MERGE_POSTINGS),
+        "a9_host_report": (_q_host_report, _host_report_sql()),
+        "tx_proximity_match": (_q_proximity_match, _SQL_PROXIMITY_MATCH),
+        "gr_opic_update": (_q_opic_update, _SQL_OPIC_UPDATE),
+        "gr_harmonic_hyperball": (_q_harmonic_hyperball, _hyperball_sql()),
+        "gr_kcore": (_q_kcore, _kcore_sql()),
+        "gr_triangles": (_q_triangles, _SQL_TRIANGLES),
+        "gr_label_propagation": (_q_label_propagation, _lpa_sql()),
+        "tx_mojibake_repair": (_q_mojibake_repair, _mojibake_sql()),
+        "tx_bpe_train": (_q_bpe_train, _bpe_train_sql()),
+        "tx_article_assembly": (_q_article_assembly, _SQL_ARTICLE_ASSEMBLY),
+        "url_hreflang_clusters": (_q_hreflang_clusters, _SQL_HREFLANG_CLUSTERS),
+        "tx_passage_windows": (_q_passage_windows, _SQL_PASSAGE_WINDOWS),
+        "dd_allpairs_jaccard": (_q_allpairs_jaccard, _SQL_ALLPAIRS_JACCARD),
+        "dd_containment_pairs": (_q_containment_pairs, _SQL_CONTAINMENT_PAIRS),
+        "dd_winnow_fingerprints": (_q_winnow_fingerprints, _sql_winnow_fingerprints()),
+        "dd_winnow_pairs": (_q_winnow_pairs, _sql_winnow_pairs()),
+        "dd_winnow_spans": (_q_winnow_spans, _sql_winnow_spans()),
+        "x_jsonld_extract": (_q_jsonld_extract, _sql_jsonld_extract()),
+        "x_opengraph_tags": (_q_opengraph_tags, _sql_opengraph_tags()),
+        "url_dust_rules": (_q_dust_rules, _SQL_DUST_RULES),
+        "tx_readability": (_q_readability, _SQL_READABILITY),
+        "tx_vocab_growth": (_q_vocab_growth, _SQL_VOCAB_GROWTH),
+        "tx_zipf_fit": (_q_zipf_fit, _SQL_ZIPF_FIT),
+        "tx_hybrid_rrf": (_q_hybrid_rrf, _sql_hybrid_rrf()),
+        "tx_passage_retrieval": (_q_passage_retrieval, _sql_passage_retrieval()),
+        "f9_frontier_ucb": (_q_frontier_ucb, _SQL_FRONTIER_UCB),
+        "f9_focused_priority": (_q_focused_priority, _SQL_FOCUSED_PRIORITY),
+        "tx_sentence_align": (_q_sentence_align, _SQL_SENTENCE_ALIGN),
+        "tx_nfc_normalize": (_q_nfc_normalize, _SQL_NFC_NORMALIZE),
+        "tx_snippets": (_q_snippets, _SQL_SNIPPETS),
+        "robots_wildcards": (_q_robots_wildcards, _SQL_ROBOTS_WILDCARDS),
+        "crawl_revalidation_plan": (_q_revalidation_plan, _SQL_REVALIDATION_PLAN),
+        "f7_circuit_breaker": (_q_circuit_breaker, _SQL_CIRCUIT_BREAKER),
+        "crawl_sitemap_refresh": (_q_sitemap_refresh, _SQL_SITEMAP_REFRESH),
+        "f2_frontier_select": (_q_frontier_select, _SQL_FRONTIER_SELECT),
+        "url_idn_hosts": (_q_idn_hosts, _SQL_IDN_HOSTS),
+        "cc_warc_revisit": (_q_warc_revisit, _SQL_WARC_REVISIT),
+        "crawl_incremental_fetch": (_q_incremental_fetch, _SQL_INCREMENTAL_FETCH),
+        "crawl_refresh_pipeline": (_q_refresh_pipeline, _SQL_REFRESH_PIPELINE),
+        "f3_aimd_delay": (_q_aimd_delay, _SQL_AIMD_DELAY),
+        "robots_cache_policy": (_q_robots_cache, _SQL_ROBOTS_CACHE),
+        "tx_quality_model": (_q_quality_model, _sql_quality_model()),
+        "tx_ngram_repetition": (_q_ngram_repetition, _SQL_NGRAM_REPETITION),
+        "tx_dup_lines": (_q_dup_lines, _SQL_DUP_LINES),
+        "tx_pack_sequences": (_q_pack_sequences, _SQL_PACK_SEQUENCES),
+        "tx_corpus_datasheet": (_q_corpus_datasheet, _SQL_CORPUS_DATASHEET),
+        "tx_dsir_weights": (_q_dsir_weights, _SQL_DSIR_WEIGHTS),
+        "tx_dsir_resample": (_q_dsir_resample, _SQL_DSIR_RESAMPLE),
+        "tx_hash_embed": (_q_hash_embed, _sql_hash_embed()),
+        "dd_hash_embed_knn": (_q_hash_embed_knn, _sql_hash_embed_knn()),
+        "a13_heavy_hitters_mg": (_q_heavy_hitters_mg, _SQL_HEAVY_HITTERS_MG),
+        "tx_zorder_key": (_q_zorder_key, _sql_zorder_key()),
+        "dd_text_semdedup_md5": (_q_text_semdedup_md5, _sql_text_semdedup_md5()),
+        "tx_logreg_train": (_q_logreg_train, _sql_logreg_train()),
+        "st_heavy_hitters": (_q_stateful_heavy_hitters, _SQL_STATEFUL_HEAVY_HITTERS),
+        "a14_cms_frequencies": (_q_cms_frequencies, _SQL_CMS_FREQUENCIES),
+        "crawl_poisson_rate": (_q_poisson_rate, _SQL_POISSON_RATE),
+        "st_stateful_seen_ttl": (_q_stateful_seen_ttl, _SQL_STATEFUL_SEEN),
+        "a15_hll_distinct": (_q_hll_distinct, _sql_hll_distinct()),
+        "dd_incremental_dedup": (_q_incremental_dedup, _sql_incremental_dedup()),
+        "crawl_refresh_allocation": (_q_refresh_allocation, _sql_refresh_allocation()),
+        "a16_dds_quantiles": (_q_dds_quantiles, _sql_dds_quantiles()),
+        "a17_kmv_epoch_overlap": (_q_kmv_epoch_overlap, _sql_kmv_epoch_overlap()),
+        "tpch_q1_pricing_summary": (_q_tpch_q1, _SQL_TPCH_Q1),
+        "t1_topk_orders": (_q_topk_orders, _SQL_TOPK_ORDERS),
+        "j1_broadcast_join": (_q_broadcast_join, _SQL_BROADCAST_JOIN),
+        "j3_anti_join": (_q_anti_join, _SQL_ANTI_JOIN),
+        "f8_keep_latest_dedup": (_q_keep_latest, _SQL_KEEP_LATEST),
+        "t3_window_rank": (_q_window_rank, _SQL_WINDOW_RANK),
+        "a1_market_summary": (_q_market_summary, _SQL_MARKET_SUMMARY),
+        "a2_category_stats": (_q_category_stats, _SQL_CATEGORY_STATS),
+        "a3_category_histogram": (_q_category_histogram, _SQL_CATEGORY_HISTOGRAM),
+        "a4_minmax_avg": (_q_minmax_avg, _SQL_MINMAX_AVG),
+        "p1_junk_filter": (_q_junk_filter, _SQL_JUNK_FILTER),
+        "p4_range_filter": (_q_range_filter, _SQL_RANGE_FILTER),
+        "p8_last_non_null": (_q_last_non_null, _SQL_LAST_NON_NULL),
+        "u2_union_distinct_sources": (_q_union_distinct_sources, _SQL_UNION_DISTINCT_SOURCES),
+        "f8_merge_duplicates": (_q_merge_duplicates, _SQL_MERGE_DUPLICATES),
+        "url_canonicalize": (_q_canonicalize, _SQL_CANONICALIZE),
+        "f2_crawl_order": (_q_crawl_order, _SQL_CRAWL_ORDER),
+        "f3_politeness_schedule": (_q_politeness_schedule, _SQL_POLITENESS),
+        "f3_politeness_lanes": (_q_politeness_lanes, _SQL_POLITENESS_LANES),
+        "f8_anti_join_seen": (_q_anti_join_seen, _SQL_ANTI_JOIN_SEEN),
+        "f6_retry_backoff": (_q_retry_backoff, _SQL_RETRY_BACKOFF),
+        "a7_success_rate": (_q_success_rate, _SQL_SUCCESS_RATE),
+        "robots_filter": (_q_robots_filter, _SQL_ROBOTS_FILTER),
+        "url_domain_blocklist": (_q_domain_blocklist, _SQL_DOMAIN_BLOCKLIST),
+        "x1_clean_price": (_q_clean_price, _SQL_CLEAN_PRICE),
+        "x2_clean_percentage": (_q_clean_percentage, _SQL_CLEAN_PERCENTAGE),
+        "x3_extract_symbol": (_q_extract_symbol, _SQL_EXTRACT_SYMBOL),
+        "x5_categorize": (_q_categorize, _SQL_CATEGORIZE),
+        "x6_hq_parse": (_q_hq_parse, _SQL_HQ_PARSE),
+        "x8_percent_extract": (_q_percent_extract, _SQL_PERCENT_EXTRACT),
+        "x13_forex_derived": (_q_forex_derived, _SQL_FOREX_DERIVED),
+        "x4_standardize_name": (_q_standardize_name, _SQL_STANDARDIZE_NAME),
+        "x12_derive_change": (_q_derive_change, _SQL_DERIVE_CHANGE),
+        "x15_x16_format_checks": (_q_format_checks, _SQL_FORMAT_CHECKS),
+        "x9_transform_dsl": (_q_transform_dsl, _SQL_TRANSFORM_DSL),
+        "x9_css_selector": (_q_css_selector, _SQL_CSS_SELECTOR),
+        "x10_regex_parser": (_q_regex_parser, _SQL_REGEX_PARSER),
+        "s8_json_field_mapping": (_q_json_field_mapping, _SQL_JSON_FIELD_MAPPING),
+        "u1_union_all": (_q_union_all, _SQL_UNION_ALL),
+        "a5_spread_avg": (_q_spread_avg, _SQL_SPREAD_AVG),
+        "f1_seed_expansion": (_q_seed_expansion, _SQL_SEED_EXPANSION),
+        "v_validation_split": (_q_validation_split, _SQL_VALIDATION_SPLIT),
+        "a6_validation_summary": (_q_validation_summary, _SQL_VALIDATION_SUMMARY),
+        "dd_doc_fingerprint": (_q_doc_fingerprint, _SQL_DOC_FINGERPRINT),
+        "dd_exact_dedup": (_q_exact_dedup, _SQL_EXACT_DEDUP),
+        "tx_token_count": (_q_token_count, _SQL_TOKEN_COUNT),
+        "tx_langid": (_q_langid, _langid_sql()),
+        "tx_quality_score": (_q_quality_score, _SQL_QUALITY_SCORE),
+        "tx_lang_quality_summary": (_q_lang_quality_summary, _SQL_LANG_QUALITY_SUMMARY),
+        "dd_ngram_jaccard_pairs": (_q_ngram_jaccard, _SQL_NGRAM_JACCARD),
+        "dd_minhash_lsh_pairs": (_q_minhash_lsh, _minhash_sql()),
+        "dd_lsh_dedup_eval": (_q_lsh_eval, _lsh_eval_sql()),
+        "dd_cdc_chunks": (_q_cdc_chunks, _cdc_sql()),
+        "dd_cdc_dedup_stats": (_q_cdc_dedup_stats, _cdc_stats_sql()),
+        # indirect oracles: an HLL error-bound twin (a11), full-probe IVF
+        # equals brute-force cosine top-k, a PQ property summary, and golden
+        # fixtures over deterministic inputs (budget epochs, zlib ratios)
+        "tx_compression_ratio": (_q_compression_ratio, _SQL_COMPRESSION_RATIO),
+        "a11_host_distinct_hll": (_q_host_distinct_hll, _SQL_HOST_DISTINCT_HLL),
+        "ann_ivf_trained_topk": (_q_ann_ivf_trained, _SQL_ANN_COSINE),
+        "ann_pq_trained_topk": (_q_ann_pq_trained, _SQL_ANN_PQ_TRAINED),
+        "crawl_budget_epochs": (_q_crawl_budget_epochs, _SQL_CRAWL_BUDGET_EPOCHS),
+        # rows-only: no SQL-expressible oracle (xxhash64 LSH internals, the
+        # mapInPandas HTML extraction, the epoch loop)
+        "ann_bitext_margin_fast": (_q_bitext_margin_fast, None),
+        "tx_corpus_mix_bpe": (_q_corpus_mix_bpe, None),
+        "dd_simhash_pairs": (_q_simhash_pairs, None),
+        "ann_lsh_topk": (_q_ann_lsh, None),
+        "ann_pq_topk": (_q_ann_pq, None),
+        "dd_embedding_lsh_pairs": (_q_embedding_lsh_pairs, None),
+        "ann_ivf_topk": (_q_ann_ivf, None),
+        "crawl_extract_pipeline": (_q_extract_pipeline, None),
+        "crawl_epochs_e2e": (_q_crawl_epochs, None),
+    }
+)
 
 # The remaining TPC-H patterns (Q2/4/7/8/9/10/11/13/15/16/17/19/20/21/22)
-# live in plans/tpch.py; appended after the tier-1 block so the driver's
-# 50-entry certification snapshot is unchanged.
+# live in plans/tpch.py.
 from web_crawler_spark.plans import tpch as _tpch  # noqa: E402
 
-_QUERIES.update(_tpch.QUERIES)
-_ORACLES.update(_tpch.ORACLES)
+_register(_tpch.REGISTRY)
 
 
 # --- strongly connected components + bow-tie decomposition ------------------
@@ -17102,124 +16871,64 @@ FROM p GROUP BY apex ORDER BY apex
 """
 
 
-_QUERIES.update(
+_register(
     {
-        "url_www_consolidation": _q_www_consolidation,
-        "tx_corpus_funnel": _q_corpus_funnel,
-        "url_tld_census": _q_tld_census,
-        "gr_depth_histogram": _q_depth_histogram,
-        "gr_scc_histogram": _q_scc_histogram,
-        "gr_bowtie_summary": _q_bowtie_summary,
-        "gr_clustering_histogram": _q_clustering_histogram,
-        "url_query_key_stats": _q_query_key_stats,
-        "tx_langid_confidence": _q_langid_confidence,
-        "tx_numeric_entities": _q_numeric_entities,
-        "gr_knn_degree_curve": _q_knn_degree_curve,
-        "gr_rich_club": _q_rich_club,
-        "tx_entity_decode": _q_entity_decode,
-        "gr_pagerank_degree_corr": _q_pagerank_degree_corr,
-        "crawl_sitemap_coverage": _q_sitemap_coverage,
-        "s_robots_scan": _q_robots_scan,
-        "tx_ct_langid": _q_ct_langid,
-        "url_dust_rewrite": _q_dust_rewrite,
-        "x_page_meta": _q_page_meta,
-        "dd_cluster_size_histogram": _q_cluster_size_histogram,
-        "f3_politeness_audit": _q_politeness_audit,
-        "a19_crawl_roi": _q_crawl_roi,
-        "x_heading_sections": _q_heading_sections,
-        "tx_license_detect": _q_license_detect,
-        "gr_shrinking_diameter": _q_shrinking_diameter,
-        "x_heading_outline": _q_heading_outline,
-        "a18_jain_fairness": _q_jain_fairness,
-        "gr_degree_histogram": _q_degree_histogram,
-        "tx_source_dup_rates": _q_source_dup_rates,
-        "gr_host_wcc": _q_host_wcc,
-        "gr_pagerank_residuals": _q_pagerank_residuals,
-        "url_mime_mismatch": _q_mime_mismatch,
-        "gr_seed_attribution": _q_seed_attribution,
-        "tx_code_detect": _q_code_detect,
-        "cc_timemap": _q_timemap,
-        "s_arc_scan": _q_arc_scan,
-        "tx_langid_eval": _q_langid_eval,
-        "x_microdata_extract": _q_microdata,
-        "cc_cdx_shard_plan": _q_cdx_shard_plan,
-        "gr_lpa_conductance": _q_lpa_conductance,
-        "tx_kn_perplexity": _q_kn_perplexity,
-        "gr_neighborhood_fn": _q_neighborhood_fn,
-        "f8_bloom_plan": _q_bloom_plan,
-        "gr_densification": _q_densification,
-        "tx_temperature_mix": _q_temperature_mix,
-        "tx_postings_vbyte": _q_postings_vbyte,
-        "tx_cluster_sample": _q_cluster_sample,
-        "gr_degree_powerlaw": _q_degree_powerlaw,
-        "gr_scc": _q_gr_scc,
-        "gr_bowtie": _q_gr_bowtie,
-        "cc_wet_export": _q_wet_export,
-        "gr_trawl_cores": _q_trawl_cores,
-        "gr_lpa_modularity": _q_lpa_modularity,
-        "tx_script_mix": _q_script_mix,
-        "x_dom_template_families": _q_dom_template_families,
-        "url_cloaking_flags": _q_cloaking_flags,
-    }
-)
-_ORACLES.update(
-    {
-        "url_www_consolidation": _SQL_WWW_CONSOLIDATION,
-        "tx_corpus_funnel": _SQL_CORPUS_FUNNEL,
-        "url_tld_census": _SQL_TLD_CENSUS,
-        "gr_depth_histogram": _SQL_DEPTH_HISTOGRAM,
-        "gr_scc_histogram": _SQL_SCC_HISTOGRAM,
-        "gr_bowtie_summary": _SQL_BOWTIE_SUMMARY,
-        "gr_clustering_histogram": _SQL_CLUSTERING_HISTOGRAM,
-        "url_query_key_stats": _SQL_QUERY_KEY_STATS,
-        "tx_langid_confidence": _langid_confidence_sql(),
-        "tx_numeric_entities": _SQL_NUMERIC_ENTITIES,
-        "gr_knn_degree_curve": _SQL_KNN_DEGREE_CURVE,
-        "gr_rich_club": _SQL_RICH_CLUB,
-        "tx_entity_decode": _entity_decode_sql(),
-        "gr_pagerank_degree_corr": _pagerank_sql(10, spearman_tail=True),
-        "crawl_sitemap_coverage": _SQL_SITEMAP_COVERAGE,
-        "s_robots_scan": _SQL_ROBOTS_SCAN,
-        "tx_ct_langid": _SQL_CT_LANGID,
-        "url_dust_rewrite": _SQL_DUST_REWRITE,
-        "x_page_meta": _SQL_PAGE_META,
-        "dd_cluster_size_histogram": _SQL_CLUSTER_SIZE_HISTOGRAM,
-        "f3_politeness_audit": _SQL_POLITENESS_AUDIT,
-        "a19_crawl_roi": _SQL_CRAWL_ROI,
-        "x_heading_sections": _SQL_HEADING_SECTIONS,
-        "tx_license_detect": _license_detect_sql(),
-        "gr_shrinking_diameter": _shrinking_diameter_sql(),
-        "x_heading_outline": _SQL_HEADING_OUTLINE,
-        "a18_jain_fairness": _SQL_JAIN_FAIRNESS,
-        "gr_degree_histogram": _SQL_DEGREE_HISTOGRAM,
-        "tx_source_dup_rates": _SQL_SOURCE_DUP_RATES,
-        "gr_host_wcc": _SQL_HOST_WCC,
-        "gr_pagerank_residuals": _pagerank_sql(10, residual_tail=True),
-        "url_mime_mismatch": _SQL_MIME_MISMATCH,
-        "gr_seed_attribution": _SQL_SEED_ATTRIBUTION,
-        "tx_code_detect": _code_detect_sql(),
-        "cc_timemap": _SQL_TIMEMAP,
-        "s_arc_scan": _SQL_ARC_SCAN,
-        "tx_langid_eval": _langid_eval_sql(),
-        "x_microdata_extract": _SQL_MICRODATA,
-        "cc_cdx_shard_plan": _SQL_CDX_SHARD_PLAN,
-        "gr_lpa_conductance": _lpa_sql(4, tail=_SQL_LPA_CONDUCTANCE_TAIL),
-        "tx_kn_perplexity": _SQL_KN_PERPLEXITY,
-        "gr_neighborhood_fn": _hyperball_sql(5, nf_tail=True),
-        "f8_bloom_plan": _SQL_BLOOM_PLAN,
-        "gr_densification": _SQL_DENSIFICATION,
-        "tx_temperature_mix": _SQL_TEMPERATURE_MIX,
-        "tx_postings_vbyte": _SQL_POSTINGS_VBYTE,
-        "tx_cluster_sample": _sql_cluster_sample(),
-        "gr_degree_powerlaw": _SQL_DEGREE_POWERLAW,
-        "gr_scc": _SQL_GR_SCC,
-        "gr_bowtie": _SQL_GR_BOWTIE,
-        "cc_wet_export": _SQL_WET_EXPORT,
-        "gr_trawl_cores": _SQL_TRAWL_CORES,
-        "gr_lpa_modularity": _lpa_sql(4, tail=_SQL_LPA_MODULARITY_TAIL),
-        "tx_script_mix": _script_mix_sql(),
-        "x_dom_template_families": _dom_template_sql(),
-        "url_cloaking_flags": _SQL_CLOAKING,
+        "url_www_consolidation": (_q_www_consolidation, _SQL_WWW_CONSOLIDATION),
+        "tx_corpus_funnel": (_q_corpus_funnel, _SQL_CORPUS_FUNNEL),
+        "url_tld_census": (_q_tld_census, _SQL_TLD_CENSUS),
+        "gr_depth_histogram": (_q_depth_histogram, _SQL_DEPTH_HISTOGRAM),
+        "gr_scc_histogram": (_q_scc_histogram, _SQL_SCC_HISTOGRAM),
+        "gr_bowtie_summary": (_q_bowtie_summary, _SQL_BOWTIE_SUMMARY),
+        "gr_clustering_histogram": (_q_clustering_histogram, _SQL_CLUSTERING_HISTOGRAM),
+        "url_query_key_stats": (_q_query_key_stats, _SQL_QUERY_KEY_STATS),
+        "tx_langid_confidence": (_q_langid_confidence, _langid_confidence_sql()),
+        "tx_numeric_entities": (_q_numeric_entities, _SQL_NUMERIC_ENTITIES),
+        "gr_knn_degree_curve": (_q_knn_degree_curve, _SQL_KNN_DEGREE_CURVE),
+        "gr_rich_club": (_q_rich_club, _SQL_RICH_CLUB),
+        "tx_entity_decode": (_q_entity_decode, _entity_decode_sql()),
+        "gr_pagerank_degree_corr": (_q_pagerank_degree_corr, _pagerank_sql(10, spearman_tail=True)),
+        "crawl_sitemap_coverage": (_q_sitemap_coverage, _SQL_SITEMAP_COVERAGE),
+        "s_robots_scan": (_q_robots_scan, _SQL_ROBOTS_SCAN),
+        "tx_ct_langid": (_q_ct_langid, _SQL_CT_LANGID),
+        "url_dust_rewrite": (_q_dust_rewrite, _SQL_DUST_REWRITE),
+        "x_page_meta": (_q_page_meta, _SQL_PAGE_META),
+        "dd_cluster_size_histogram": (_q_cluster_size_histogram, _SQL_CLUSTER_SIZE_HISTOGRAM),
+        "f3_politeness_audit": (_q_politeness_audit, _SQL_POLITENESS_AUDIT),
+        "a19_crawl_roi": (_q_crawl_roi, _SQL_CRAWL_ROI),
+        "x_heading_sections": (_q_heading_sections, _SQL_HEADING_SECTIONS),
+        "tx_license_detect": (_q_license_detect, _license_detect_sql()),
+        "gr_shrinking_diameter": (_q_shrinking_diameter, _shrinking_diameter_sql()),
+        "x_heading_outline": (_q_heading_outline, _SQL_HEADING_OUTLINE),
+        "a18_jain_fairness": (_q_jain_fairness, _SQL_JAIN_FAIRNESS),
+        "gr_degree_histogram": (_q_degree_histogram, _SQL_DEGREE_HISTOGRAM),
+        "tx_source_dup_rates": (_q_source_dup_rates, _SQL_SOURCE_DUP_RATES),
+        "gr_host_wcc": (_q_host_wcc, _SQL_HOST_WCC),
+        "gr_pagerank_residuals": (_q_pagerank_residuals, _pagerank_sql(10, residual_tail=True)),
+        "url_mime_mismatch": (_q_mime_mismatch, _SQL_MIME_MISMATCH),
+        "gr_seed_attribution": (_q_seed_attribution, _SQL_SEED_ATTRIBUTION),
+        "tx_code_detect": (_q_code_detect, _code_detect_sql()),
+        "cc_timemap": (_q_timemap, _SQL_TIMEMAP),
+        "s_arc_scan": (_q_arc_scan, _SQL_ARC_SCAN),
+        "tx_langid_eval": (_q_langid_eval, _langid_eval_sql()),
+        "x_microdata_extract": (_q_microdata, _SQL_MICRODATA),
+        "cc_cdx_shard_plan": (_q_cdx_shard_plan, _SQL_CDX_SHARD_PLAN),
+        "gr_lpa_conductance": (_q_lpa_conductance, _lpa_sql(4, tail=_SQL_LPA_CONDUCTANCE_TAIL)),
+        "tx_kn_perplexity": (_q_kn_perplexity, _SQL_KN_PERPLEXITY),
+        "gr_neighborhood_fn": (_q_neighborhood_fn, _hyperball_sql(5, nf_tail=True)),
+        "f8_bloom_plan": (_q_bloom_plan, _SQL_BLOOM_PLAN),
+        "gr_densification": (_q_densification, _SQL_DENSIFICATION),
+        "tx_temperature_mix": (_q_temperature_mix, _SQL_TEMPERATURE_MIX),
+        "tx_postings_vbyte": (_q_postings_vbyte, _SQL_POSTINGS_VBYTE),
+        "tx_cluster_sample": (_q_cluster_sample, _sql_cluster_sample()),
+        "gr_degree_powerlaw": (_q_degree_powerlaw, _SQL_DEGREE_POWERLAW),
+        "gr_scc": (_q_gr_scc, _SQL_GR_SCC),
+        "gr_bowtie": (_q_gr_bowtie, _SQL_GR_BOWTIE),
+        "cc_wet_export": (_q_wet_export, _SQL_WET_EXPORT),
+        "gr_trawl_cores": (_q_trawl_cores, _SQL_TRAWL_CORES),
+        "gr_lpa_modularity": (_q_lpa_modularity, _lpa_sql(4, tail=_SQL_LPA_MODULARITY_TAIL)),
+        "tx_script_mix": (_q_script_mix, _script_mix_sql()),
+        "x_dom_template_families": (_q_dom_template_families, _dom_template_sql()),
+        "url_cloaking_flags": (_q_cloaking_flags, _SQL_CLOAKING),
     }
 )
 
@@ -17936,38 +17645,21 @@ FROM folded ORDER BY q
 """
 
 
-_QUERIES.update(
+_register(
     {
-        "tx_fineweb_quality": _q_fineweb_quality,
-        "tx_pack_efficiency": _q_pack_efficiency,
-        "tx_vocab_coverage": _q_vocab_coverage,
-        "f2_epoch_makespan": _q_epoch_makespan,
-        "crawl_version_intervals": _q_version_intervals,
-        "crawl_asof_lookup": _q_asof_lookup,
-        "tx_rbo_overlap": _q_rbo_overlap,
-        "f2_rebalance_audit": _q_rebalance_audit,
-        "url_path_rollup": _q_path_rollup,
-        "tx_host_quality_wilson": _q_host_quality_wilson,
-        "gr_outlink_twins": _q_outlink_twins,
-        "gr_outlink_twins_excluded": _q_outlink_twins_excluded,
-        "ann_prototype_confusion": _q_prototype_confusion,
-    }
-)
-_ORACLES.update(
-    {
-        "tx_fineweb_quality": _SQL_FINEWEB_QUALITY,
-        "tx_pack_efficiency": _SQL_PACK_EFFICIENCY,
-        "tx_vocab_coverage": _SQL_VOCAB_COVERAGE,
-        "f2_epoch_makespan": _SQL_EPOCH_MAKESPAN,
-        "crawl_version_intervals": _SQL_VERSION_INTERVALS,
-        "crawl_asof_lookup": _SQL_ASOF_LOOKUP,
-        "tx_rbo_overlap": _SQL_RBO_OVERLAP,
-        "f2_rebalance_audit": _SQL_REBALANCE_AUDIT,
-        "url_path_rollup": _SQL_PATH_ROLLUP,
-        "tx_host_quality_wilson": _SQL_HOST_QUALITY_WILSON,
-        "gr_outlink_twins": _SQL_OUTLINK_TWINS,
-        "gr_outlink_twins_excluded": _SQL_OUTLINK_TWINS_EXCLUDED,
-        "ann_prototype_confusion": _SQL_PROTOTYPE_CONFUSION,
+        "tx_fineweb_quality": (_q_fineweb_quality, _SQL_FINEWEB_QUALITY),
+        "tx_pack_efficiency": (_q_pack_efficiency, _SQL_PACK_EFFICIENCY),
+        "tx_vocab_coverage": (_q_vocab_coverage, _SQL_VOCAB_COVERAGE),
+        "f2_epoch_makespan": (_q_epoch_makespan, _SQL_EPOCH_MAKESPAN),
+        "crawl_version_intervals": (_q_version_intervals, _SQL_VERSION_INTERVALS),
+        "crawl_asof_lookup": (_q_asof_lookup, _SQL_ASOF_LOOKUP),
+        "tx_rbo_overlap": (_q_rbo_overlap, _SQL_RBO_OVERLAP),
+        "f2_rebalance_audit": (_q_rebalance_audit, _SQL_REBALANCE_AUDIT),
+        "url_path_rollup": (_q_path_rollup, _SQL_PATH_ROLLUP),
+        "tx_host_quality_wilson": (_q_host_quality_wilson, _SQL_HOST_QUALITY_WILSON),
+        "gr_outlink_twins": (_q_outlink_twins, _SQL_OUTLINK_TWINS),
+        "gr_outlink_twins_excluded": (_q_outlink_twins_excluded, _SQL_OUTLINK_TWINS_EXCLUDED),
+        "ann_prototype_confusion": (_q_prototype_confusion, _SQL_PROTOTYPE_CONFUSION),
     }
 )
 
@@ -18310,22 +18002,13 @@ ORDER BY url
 """
 
 
-_QUERIES.update(
+_register(
     {
-        "crawl_recrawl_sitemap_plan": _q_recrawl_sitemap_plan,
-        "f2_quality_budget": _q_quality_budget,
-        "ann_dim_budget_eval": _q_dim_budget_eval,
-        "robots_sitemap_conflict": _q_sitemap_robots_conflict,
-        "robots_canonical_conflict": _q_canonical_robots_conflict,
-    }
-)
-_ORACLES.update(
-    {
-        "crawl_recrawl_sitemap_plan": _SQL_RECRAWL_SITEMAP_PLAN,
-        "f2_quality_budget": _SQL_QUALITY_BUDGET,
-        "ann_dim_budget_eval": _sql_dim_budget_eval(),
-        "robots_sitemap_conflict": _SQL_SITEMAP_ROBOTS_CONFLICT,
-        "robots_canonical_conflict": _SQL_CANONICAL_ROBOTS_CONFLICT,
+        "crawl_recrawl_sitemap_plan": (_q_recrawl_sitemap_plan, _SQL_RECRAWL_SITEMAP_PLAN),
+        "f2_quality_budget": (_q_quality_budget, _SQL_QUALITY_BUDGET),
+        "ann_dim_budget_eval": (_q_dim_budget_eval, _sql_dim_budget_eval()),
+        "robots_sitemap_conflict": (_q_sitemap_robots_conflict, _SQL_SITEMAP_ROBOTS_CONFLICT),
+        "robots_canonical_conflict": (_q_canonical_robots_conflict, _SQL_CANONICAL_ROBOTS_CONFLICT),
     }
 )
 
@@ -18360,8 +18043,7 @@ ORDER BY host
 """
 
 
-_QUERIES.update({"gr_link_reciprocity": _q_link_reciprocity})
-_ORACLES.update({"gr_link_reciprocity": _SQL_LINK_RECIPROCITY})
+_register({"gr_link_reciprocity": (_q_link_reciprocity, _SQL_LINK_RECIPROCITY)})
 
 
 def _q_robots_rule_churn(spark, sf_dir):
@@ -18415,8 +18097,7 @@ FROM c ORDER BY host
 """
 
 
-_QUERIES.update({"robots_rule_churn": _q_robots_rule_churn})
-_ORACLES.update({"robots_rule_churn": _SQL_ROBOTS_RULE_CHURN})
+_register({"robots_rule_churn": (_q_robots_rule_churn, _SQL_ROBOTS_RULE_CHURN)})
 
 
 def _q_frontier_starvation(spark, sf_dir):
@@ -18467,8 +18148,7 @@ FROM c ORDER BY host
 """
 
 
-_QUERIES.update({"f2_starvation_audit": _q_frontier_starvation})
-_ORACLES.update({"f2_starvation_audit": _SQL_FRONTIER_STARVATION})
+_register({"f2_starvation_audit": (_q_frontier_starvation, _SQL_FRONTIER_STARVATION)})
 
 
 def _q_hreflang_reciprocity(spark, sf_dir):
@@ -18550,8 +18230,7 @@ FROM b ORDER BY url
 """
 
 
-_QUERIES.update({"url_hreflang_reciprocity": _q_hreflang_reciprocity})
-_ORACLES.update({"url_hreflang_reciprocity": _SQL_HREFLANG_RECIPROCITY})
+_register({"url_hreflang_reciprocity": (_q_hreflang_reciprocity, _SQL_HREFLANG_RECIPROCITY)})
 
 
 def _q_effective_tokens(spark, sf_dir):
@@ -18605,8 +18284,7 @@ FROM tok GROUP BY source ORDER BY source
 """
 
 
-_QUERIES.update({"tx_effective_tokens": _q_effective_tokens})
-_ORACLES.update({"tx_effective_tokens": _SQL_EFFECTIVE_TOKENS})
+_register({"tx_effective_tokens": (_q_effective_tokens, _SQL_EFFECTIVE_TOKENS)})
 
 
 def _q_split_leakage(spark, sf_dir):
@@ -18653,8 +18331,7 @@ FROM lab WHERE sa <> sb GROUP BY split_a, split_b ORDER BY split_a, split_b
 """
 
 
-_QUERIES.update({"dd_split_leakage": _q_split_leakage})
-_ORACLES.update({"dd_split_leakage": _SQL_SPLIT_LEAKAGE})
+_register({"dd_split_leakage": (_q_split_leakage, _SQL_SPLIT_LEAKAGE)})
 
 
 def _q_scheme_consolidation(spark, sf_dir):
@@ -18744,8 +18421,7 @@ FROM ph ORDER BY host
 """
 
 
-_QUERIES.update({"url_scheme_consolidation": _q_scheme_consolidation})
-_ORACLES.update({"url_scheme_consolidation": _SQL_SCHEME_CONSOLIDATION})
+_register({"url_scheme_consolidation": (_q_scheme_consolidation, _SQL_SCHEME_CONSOLIDATION)})
 
 
 _CHANGEFREQ_NAMES = [
@@ -18816,8 +18492,9 @@ FROM agg ORDER BY changefreq
 """
 
 
-_QUERIES.update({"crawl_changefreq_calibration": _q_changefreq_calibration})
-_ORACLES.update({"crawl_changefreq_calibration": _SQL_CHANGEFREQ_CALIBRATION})
+_register(
+    {"crawl_changefreq_calibration": (_q_changefreq_calibration, _SQL_CHANGEFREQ_CALIBRATION)}
+)
 
 
 def _q_ngram_novelty(spark, sf_dir):
@@ -18882,8 +18559,7 @@ FROM documents d LEFT JOIN per p USING (doc_id) ORDER BY d.doc_id
 """
 
 
-_QUERIES.update({"tx_ngram_novelty": _q_ngram_novelty})
-_ORACLES.update({"tx_ngram_novelty": _SQL_NGRAM_NOVELTY})
+_register({"tx_ngram_novelty": (_q_ngram_novelty, _SQL_NGRAM_NOVELTY)})
 
 
 def _q_host_quality_trend(spark, sf_dir):
@@ -18937,8 +18613,7 @@ FROM a ORDER BY host
 """
 
 
-_QUERIES.update({"tx_host_quality_trend": _q_host_quality_trend})
-_ORACLES.update({"tx_host_quality_trend": _SQL_HOST_QUALITY_TREND})
+_register({"tx_host_quality_trend": (_q_host_quality_trend, _SQL_HOST_QUALITY_TREND)})
 
 
 def _q_canonical_cluster_conflicts(spark, sf_dir):
@@ -19010,11 +18685,13 @@ FROM b ORDER BY cluster_id
 """
 
 
-_QUERIES.update(
-    {"cc_canonical_cluster_conflicts": _q_canonical_cluster_conflicts}
-)
-_ORACLES.update(
-    {"cc_canonical_cluster_conflicts": _SQL_CANONICAL_CLUSTER_CONFLICTS}
+_register(
+    {
+        "cc_canonical_cluster_conflicts": (
+            _q_canonical_cluster_conflicts,
+            _SQL_CANONICAL_CLUSTER_CONFLICTS,
+        ),
+    }
 )
 
 
@@ -19059,8 +18736,7 @@ FROM fl ORDER BY url
 """
 
 
-_QUERIES.update({"crawl_content_flapping": _q_content_flapping})
-_ORACLES.update({"crawl_content_flapping": _SQL_CONTENT_FLAPPING})
+_register({"crawl_content_flapping": (_q_content_flapping, _SQL_CONTENT_FLAPPING)})
 
 
 def _q_frontier_funnel(spark, sf_dir):
@@ -19136,8 +18812,7 @@ FROM s ORDER BY stage_id
 """
 
 
-_QUERIES.update({"f8_frontier_funnel": _q_frontier_funnel})
-_ORACLES.update({"f8_frontier_funnel": _SQL_FRONTIER_FUNNEL})
+_register({"f8_frontier_funnel": (_q_frontier_funnel, _SQL_FRONTIER_FUNNEL)})
 
 
 def _q_link_rot(spark, sf_dir):
@@ -19188,8 +18863,7 @@ FROM e GROUP BY host ORDER BY host
 """
 
 
-_QUERIES.update({"gr_link_rot": _q_link_rot})
-_ORACLES.update({"gr_link_rot": _SQL_LINK_ROT})
+_register({"gr_link_rot": (_q_link_rot, _SQL_LINK_ROT)})
 
 
 def _q_robots_complexity(spark, sf_dir):
@@ -19237,8 +18911,7 @@ FROM c ORDER BY host
 """
 
 
-_QUERIES.update({"robots_complexity": _q_robots_complexity})
-_ORACLES.update({"robots_complexity": _SQL_ROBOTS_COMPLEXITY})
+_register({"robots_complexity": (_q_robots_complexity, _SQL_ROBOTS_COMPLEXITY)})
 
 
 def _q_host_latency_slo(spark, sf_dir):
@@ -19329,160 +19002,9 @@ FROM p ORDER BY partition_key
 """
 
 
-_QUERIES.update(
+_register(
     {
-        "f7_host_latency_slo": _q_host_latency_slo,
-        "tx_write_layout_plan": _q_write_layout_plan,
+        "f7_host_latency_slo": (_q_host_latency_slo, _SQL_HOST_LATENCY_SLO),
+        "tx_write_layout_plan": (_q_write_layout_plan, _SQL_WRITE_LAYOUT_PLAN),
     }
 )
-_ORACLES.update(
-    {
-        "f7_host_latency_slo": _SQL_HOST_LATENCY_SLO,
-        "tx_write_layout_plan": _SQL_WRITE_LAYOUT_PLAN,
-    }
-)
-
-
-# Round-5 rows-only conversions: six formerly rows-only queries now carry
-# oracles — error-bound twin (a11), full-probe equivalence invariant
-# (ivf_trained = brute force), property summary (pq_trained), golden
-# fixtures over deterministic fixtures (budget epochs, zlib ratios), and
-# a derived arithmetic oracle (sentence-align bead rollup).
-_ORACLES.update(
-    {
-        "a11_host_distinct_hll": _SQL_HOST_DISTINCT_HLL,
-        "ann_ivf_trained_topk": _SQL_ANN_COSINE,
-        "ann_pq_trained_topk": _SQL_ANN_PQ_TRAINED,
-        "crawl_budget_epochs": _SQL_CRAWL_BUDGET_EPOCHS,
-        "tx_compression_ratio": _SQL_COMPRESSION_RATIO,
-        "tx_sentence_align": _SQL_SENTENCE_ALIGN,
-    }
-)
-
-
-# ---------------------------------------------------------------------------
-# Driver certification-window rotation (round 4). The grading driver
-# snapshots the FIRST 50 entries of queries() each round; 102 distinct
-# queries were certified across r1-r3, so this round fronts a curated
-# window of 47 never-certified queries + 3 canaries. Canaries: the three
-# rows that were hash-red in CORRECTNESS_r03 (oracle HUGEINT typing, fixed
-# this round — they MUST re-certify green; they double as driver/local
-# hash-divergence sentinels). The 47 prioritize (a) every oracle touched by this
-# round's BIGINT-cast sweep, (b) the r2-era dd_/gr_/url_/a9-a17 block,
-# (c) remaining TPC-H legs. Ordering affects only the certification
-# snapshot — the registered query set is unchanged.
-# ---------------------------------------------------------------------------
-_R4_WINDOW = [
-    # -- canaries (previously certified) --
-    "tpch_q12_priority_shipping",   # r3 hash-red -> BIGINT cast fix
-    "tx_gopher_quality",            # r3 hash-red -> BIGINT cast fix
-    "tx_repetition",                # r3 hash-red -> BIGINT cast fix
-    # -- cast-sweep-touched, never certified --
-    "tx_char_entropy", "tx_slice_kl_terms", "dd_chunk_dedup",
-    "dd_chunk_dedup_rewrite", "tx_shard_pack", "tx_corpus_mix",
-    "gr_anchor_text", "tx_lm_perplexity", "f9_focused_priority",
-    "tx_pack_sequences", "tx_dsir_weights", "tx_dsir_resample",
-    "tx_kn_perplexity", "dd_cdc_dedup_stats", "gr_neighborhood_fn",
-    # -- ADVICE-fix-touched, never certified --
-    "url_dust_rewrite", "a18_jain_fairness", "tx_license_detect",
-    "url_www_consolidation",
-    # -- dd_ block --
-    "dd_dedup_clusters", "dd_keep_canonical", "dd_simhash_pairs_md5",
-    "dd_allpairs_jaccard", "dd_winnow_pairs", "dd_incremental_dedup",
-    "dd_lsh_dedup_eval", "dd_cdc_chunks",
-    # -- gr_ block --
-    "gr_host_pagerank", "gr_host_hits", "gr_kcore", "gr_triangles",
-    "gr_label_propagation", "gr_scc", "gr_bowtie", "gr_graph_summary",
-    # -- url_ block --
-    "url_registrable_domain", "url_dust_params", "url_crawl_traps",
-    "url_tld_census",
-    # -- a9-a17 sketch/report block --
-    "a9_host_report", "a13_heavy_hitters_mg", "a14_cms_frequencies",
-    "a15_hll_distinct", "a16_dds_quantiles", "a17_kmv_epoch_overlap",
-    # -- TPC-H remainder (classic relational sentinels, never certified) --
-    "tpch_q4_order_priority", "tpch_q10_returned_items",
-]
-
-
-# ---------------------------------------------------------------------------
-# Round-5 certification window. The grading driver snapshots the FIRST 50
-# entries of queries() each round; 149 distinct queries were certified
-# across r1-r4, so this round fronts 47 never-certified queries + 3 green
-# canaries. Canaries guard code touched THIS round: tx_corpus_mix (the
-# adaptive mix plan), dd_winnow_pairs (default-on auto max_df, now with
-# the score-deflation contract documented), gr_neighborhood_fn (the ANF
-# decimal comparison region). The 47 front (a) the 12 operators added
-# late in r4 that never saw a driver window, (b) every query added or
-# semantically touched in r5 (rows-only conversions, the two planner
-# operators, the degree-cap audit, the codegen-fixed assembly leg,
-# gr_harmonic_hyperball), (c) the 13 remaining TPC-H relational
-# sentinels, (d) a breadth set across the frontier/robots/cc/streaming/
-# ann/dedup families.
-#
-# Ordering transparency (round-4 advisory): the rotation is visible API —
-# certification_window() returns the fronted list for this round, and
-# queries_in_registration_order() returns the registry in stable
-# registration order for consumers that need it. The fronting reorders
-# ONLY the dict iteration order; the registered query set is identical.
-# ---------------------------------------------------------------------------
-_R5_WINDOW = [
-    # -- canaries (previously certified, guarding r5-touched code) --
-    "tx_corpus_mix", "dd_winnow_pairs", "gr_neighborhood_fn",
-    # -- the 12 late-r4 operators, never driver-certified --
-    "tx_fineweb_quality", "tx_pack_efficiency", "tx_vocab_coverage",
-    "f2_epoch_makespan", "crawl_version_intervals", "crawl_asof_lookup",
-    "tx_rbo_overlap", "f2_rebalance_audit", "url_path_rollup",
-    "tx_host_quality_wilson", "gr_outlink_twins", "ann_prototype_confusion",
-    # -- r5 new / semantically changed --
-    "gr_outlink_twins_excluded", "crawl_recrawl_sitemap_plan",
-    "f2_quality_budget", "a11_host_distinct_hll", "ann_ivf_trained_topk",
-    "ann_pq_trained_topk", "crawl_budget_epochs", "tx_compression_ratio",
-    "tx_sentence_align", "tx_article_assembly", "gr_harmonic_hyperball",
-    # -- TPC-H remainder (classic relational sentinels) --
-    "tpch_q2_min_cost_supplier", "tpch_q7_volume_shipping",
-    "tpch_q8_market_share", "tpch_q9_product_profit",
-    "tpch_q11_part_value", "tpch_q13_customer_distribution",
-    "tpch_q15_top_supplier", "tpch_q16_supplier_count",
-    "tpch_q17_small_quantity", "tpch_q19_disjunctive_revenue",
-    "tpch_q20_part_promotion", "tpch_q21_waiting_supplier",
-    "tpch_q22_sales_opportunity",
-    # -- late-r5 operators (landed after the first rotation; the judge's
-    #    directive is new operators go straight into the round window) --
-    "ann_dim_budget_eval", "robots_sitemap_conflict",
-    "robots_canonical_conflict", "gr_link_reciprocity",
-    "robots_rule_churn", "f2_starvation_audit", "url_hreflang_reciprocity",
-    "tx_effective_tokens", "dd_split_leakage", "url_scheme_consolidation",
-    "crawl_changefreq_calibration",
-]
-
-
-def _front_window(d: dict) -> dict:
-    out = {k: d[k] for k in _R5_WINDOW if k in d}
-    for k, v in d.items():
-        if k not in out:
-            out[k] = v
-    return out
-
-
-def certification_window() -> list[str]:
-    """The query names fronted for this round's driver certification
-    snapshot, in order — the explicit manifest of what queries()
-    prioritizes this round (round-4 advisory: make the rotation an
-    inspectable API instead of an implicit ordering side effect)."""
-    return list(_R5_WINDOW)
-
-
-def queries_in_registration_order() -> dict[
-    str, Callable[[SparkSession, str], DataFrame]
-]:
-    """The full registry in stable registration order (no certification
-    fronting) — for consumers that want order-independent iteration."""
-    return dict(_QUERIES)
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _front_window(dict(_QUERIES))
-
-
-def oracle_sql() -> dict[str, str]:
-    return _front_window(dict(_ORACLES))

@@ -3,7 +3,10 @@
 __spark_entry__.queries() entry on Spark and its oracle_sql() on DuckDB at
 sf=0.01, compare row count + column names + order-insensitive value hash
 (columns sorted by name, rows sorted, values stringified with float
-normalization)."""
+normalization).
+
+Usage: ``check_correctness.py [NAME ...]`` checks only the named queries;
+an unregistered name exits 2 before Spark starts."""
 
 from __future__ import annotations
 
@@ -51,7 +54,12 @@ def main() -> int:
     import __spark_entry__ as E
     from web_crawler_spark.session import get_spark
 
+    qs, oracles = E.queries(), E.oracle_sql()
     only = set(sys.argv[1:])
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        print(f"unknown query names: {unknown}", file=sys.stderr)
+        return 2
     spark = get_spark()  # local[$SPARK_GRAFT_CPUS]
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -61,7 +69,6 @@ def main() -> int:
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
-    qs, oracles = E.queries(), E.oracle_sql()
     failures = []
     for name, fn in qs.items():
         if only and name not in only:

@@ -260,7 +260,8 @@ def _uncommit_seen_and_extracted(root, epoch):
 def test_resume_after_mid_epoch_crash(spark, catalog_dir):
     """Crash BETWEEN the fetched commit and the seen commit of an epoch:
     `seen` commits last, so resume must RE-RUN that epoch (per-table commits
-    are idempotent) and end with every table complete — not skip it."""
+    are idempotent) and end with every table complete and identical to
+    an uninterrupted run — not skip it."""
     from web_crawler_spark.plans.epoch import CrawlEngine
     from web_crawler_spark.sources.pages import generate_pages
     from web_crawler_spark.sources.seeds import generate_seeds
@@ -287,6 +288,9 @@ def test_resume_after_mid_epoch_crash(spark, catalog_dir):
         b = eng3.catalog.read(spark, table)
         assert b is not None and a.count() == b.count(), table
         assert sorted(eng3.catalog.committed_epochs(table)) == [0, 1], table
+        assert (
+            a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+        ), f"{table} differs after resume"
 
 
 # -- robots-gated, capacity-limited crawl: job budget and resume --------------

@@ -7,15 +7,16 @@ BIGINT (``7973``) even when values are identical.  Root cause: DuckDB
 ``SUM`` / ``list_sum`` / windowed ``SUM`` over integer inputs widens to
 HUGEINT unless explicitly ``CAST(... AS BIGINT)``.
 
-Two layers of defense:
+Three layers of defense:
 
 1. ``test_no_hugeint_oracle_columns`` — plan every registered oracle
    through DuckDB and assert no output column has a type pandas would
    render as float (HUGEINT / UHUGEINT / UBIGINT).  This catches the whole
-   class before a query ever enters the driver's certification window.
-2. ``test_strict_hash_parity_previous_reds`` — re-hash the three frames
-   that were red in CORRECTNESS_r03 with a STRICT hasher (no int
-   normalization, emulating the driver) and assert Spark == DuckDB now.
+   class for every oracle at once.
+2. ``test_strict_hash_parity_previous_reds`` — re-hash a list of frames
+   (the three that were red in CORRECTNESS_r03, then queries whose code
+   or oracle changed since) with a STRICT hasher (no int normalization,
+   emulating the driver) and assert Spark == DuckDB.
 3. ``test_strict_hasher_catches_uncast_hugeint`` — prove the strict hasher
    is actually stricter: an intentionally uncast SUM must mismatch.
 """
@@ -35,7 +36,7 @@ import __spark_entry__ as E
 
 # sf0.01, matching the driver's gate exactly — golden-fixture oracles
 # (tx_compression_ratio) pin sf0.01 literals, and strict-hash parity at
-# the certification scale is the property this guard exists for.
+# the gate's scale is the property this guard exists for.
 SF_DIR = "/root/testdata/sf0.01"
 
 # DuckDB types pandas renders as float64/object instead of int64.
@@ -89,8 +90,8 @@ def test_no_hugeint_oracle_columns():
     "qname",
     [
         "tpch_q12_priority_shipping", "tx_gopher_quality", "tx_repetition",
-        # round-5 rows-only conversions + the degree-cap audit — strict
-        # driver-style hash before they enter a certification window
+        # formerly rows-only queries with indirect oracles + the degree-cap
+        # audit, under the strict driver-style hash
         "a11_host_distinct_hll", "ann_ivf_trained_topk",
         "ann_pq_trained_topk", "crawl_budget_epochs",
         "tx_compression_ratio", "tx_sentence_align",

@@ -706,38 +706,21 @@ GROUP BY n_name ORDER BY n_name
 """
 
 
-QUERIES = {
-    "tpch_q2_min_cost_supplier": q2_min_cost_supplier,
-    "tpch_q4_order_priority": q4_order_priority,
-    "tpch_q7_volume_shipping": q7_volume_shipping,
-    "tpch_q8_market_share": q8_market_share,
-    "tpch_q9_product_profit": q9_product_profit,
-    "tpch_q10_returned_items": q10_returned_items,
-    "tpch_q11_part_value": q11_part_value,
-    "tpch_q13_customer_distribution": q13_customer_distribution,
-    "tpch_q15_top_supplier": q15_top_supplier,
-    "tpch_q16_supplier_count": q16_supplier_count,
-    "tpch_q17_small_quantity": q17_small_quantity,
-    "tpch_q19_disjunctive_revenue": q19_disjunctive_revenue,
-    "tpch_q20_part_promotion": q20_part_promotion,
-    "tpch_q21_waiting_supplier": q21_waiting_supplier,
-    "tpch_q22_sales_opportunity": q22_sales_opportunity,
-}
-
-ORACLES = {
-    "tpch_q2_min_cost_supplier": SQL_Q2,
-    "tpch_q4_order_priority": SQL_Q4,
-    "tpch_q7_volume_shipping": SQL_Q7,
-    "tpch_q8_market_share": SQL_Q8,
-    "tpch_q9_product_profit": SQL_Q9,
-    "tpch_q10_returned_items": SQL_Q10,
-    "tpch_q11_part_value": SQL_Q11,
-    "tpch_q13_customer_distribution": SQL_Q13,
-    "tpch_q15_top_supplier": SQL_Q15,
-    "tpch_q16_supplier_count": SQL_Q16,
-    "tpch_q17_small_quantity": SQL_Q17,
-    "tpch_q19_disjunctive_revenue": SQL_Q19,
-    "tpch_q20_part_promotion": SQL_Q20,
-    "tpch_q21_waiting_supplier": SQL_Q21,
-    "tpch_q22_sales_opportunity": SQL_Q22,
+# name -> (Spark builder, DuckDB oracle SQL)
+REGISTRY = {
+    "tpch_q2_min_cost_supplier": (q2_min_cost_supplier, SQL_Q2),
+    "tpch_q4_order_priority": (q4_order_priority, SQL_Q4),
+    "tpch_q7_volume_shipping": (q7_volume_shipping, SQL_Q7),
+    "tpch_q8_market_share": (q8_market_share, SQL_Q8),
+    "tpch_q9_product_profit": (q9_product_profit, SQL_Q9),
+    "tpch_q10_returned_items": (q10_returned_items, SQL_Q10),
+    "tpch_q11_part_value": (q11_part_value, SQL_Q11),
+    "tpch_q13_customer_distribution": (q13_customer_distribution, SQL_Q13),
+    "tpch_q15_top_supplier": (q15_top_supplier, SQL_Q15),
+    "tpch_q16_supplier_count": (q16_supplier_count, SQL_Q16),
+    "tpch_q17_small_quantity": (q17_small_quantity, SQL_Q17),
+    "tpch_q19_disjunctive_revenue": (q19_disjunctive_revenue, SQL_Q19),
+    "tpch_q20_part_promotion": (q20_part_promotion, SQL_Q20),
+    "tpch_q21_waiting_supplier": (q21_waiting_supplier, SQL_Q21),
+    "tpch_q22_sales_opportunity": (q22_sales_opportunity, SQL_Q22),
 }
