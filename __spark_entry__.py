@@ -10308,7 +10308,8 @@ def _q_spam_mass(spark, sf_dir):
 def _spam_mass_sql(iterations: int = 10, damping: float = 0.85) -> str:
     """PageRank and TrustRank chains unrolled in parallel (pr*/tr* CTE
     prefixes), then the spam-mass algebra of operators/graph.py::spam_mass
-    on the rounded fixpoints (k = 2 effective seeds, n from the graph)."""
+    on the rounded fixpoints (k = 2 effective seeds, n from the graph), in
+    integer micro-units rounded to a whole micro-unit."""
     d = repr(damping)
     head = f"""
 WITH {_SQL_HOST_EDGES_E},
@@ -10357,12 +10358,19 @@ tr{i} AS MATERIALIZED (
 fin AS (
   SELECT p.node, ROUND(p.rank, 6) AS rank, ROUND(t.trust, 6) AS trust
   FROM pr{iterations} p JOIN tr{iterations} t ON p.node = t.node
+),
+fu AS (
+  SELECT node, rank, trust, CAST(ROUND(rank * 1e6) AS BIGINT) AS rank_u,
+         CAST(ROUND(rank * 1e6) AS BIGINT)
+           - CAST(ROUND(trust * 1e6) AS BIGINT) * 2 AS untrusted_u
+  FROM fin
 )
 SELECT node, rank, trust,
-       ROUND((rank - trust * 2.0) / nn.n, 6) AS mass,
-       CASE WHEN rank > 0
-            THEN ROUND(1.0 - trust * 2.0 / rank, 6) END AS rel_mass
-FROM fin CROSS JOIN nn
+       CAST(ROUND(untrusted_u / nn.n) AS BIGINT) / 1e6 AS mass,
+       CASE WHEN rank_u > 0
+            THEN CAST(ROUND(untrusted_u * 1e6 / rank_u) AS BIGINT) / 1e6
+       END AS rel_mass
+FROM fu CROSS JOIN nn
 ORDER BY rel_mass DESC, node""")
     return "".join(parts)
 

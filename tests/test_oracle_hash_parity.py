@@ -16,7 +16,9 @@ Three layers of defense:
 2. ``test_strict_hash_parity_previous_reds`` — re-hash a list of frames
    (the three that were red in CORRECTNESS_r03, then queries whose code
    or oracle changed since) with a STRICT hasher (no int normalization,
-   emulating the driver) and assert Spark == DuckDB.
+   emulating the driver) and assert Spark == DuckDB;
+   ``test_strict_hash_parity_scale_factors`` does the same for three
+   power-iteration queries at sf0.001 and sf0.1.
 3. ``test_strict_hasher_catches_uncast_hugeint`` — prove the strict hasher
    is actually stricter: an intentionally uncast SUM must mismatch.
 """
@@ -43,9 +45,9 @@ SF_DIR = "/root/testdata/sf0.01"
 _FLOATY_INT_TYPES = {"HUGEINT", "UHUGEINT", "UBIGINT"}
 
 
-def _duck():
+def _duck(sf_dir: str = SF_DIR):
     con = duckdb.connect()
-    for p in glob.glob(os.path.join(SF_DIR, "*.parquet")):
+    for p in glob.glob(os.path.join(sf_dir, "*.parquet")):
         t = os.path.basename(p).replace(".parquet", "")
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     return con
@@ -103,14 +105,31 @@ def test_no_hugeint_oracle_columns():
         "gr_host_pagerank", "gr_host_trustrank", "gr_host_hits",
         "gr_host_salsa", "gr_harmonic_hyperball", "gr_neighborhood_fn",
         "gr_seed_distance", "gr_seed_attribution", "gr_pagerank_residuals",
+        # mass and rel_mass are rounded in integer micro-units on both sides
+        "gr_spam_mass",
         # the per-host budgets are water-filled on the driver in Python
         # integers; the oracle is the windowed SQL form
         "f2_host_budget_waterfill",
     ],
 )
 def test_strict_hash_parity_previous_reds(spark, qname):
-    con = _duck()
-    sdf = E.queries()[qname](spark, SF_DIR).toPandas()
+    _assert_strict_parity(spark, qname, SF_DIR)
+
+
+# the oracles must hold at every scale factor, not only the gate's: the
+# power iterations' 6-dp outputs land on different rounding boundaries
+# at each size (gr_spam_mass's mass sat on a half-micro at sf0.001)
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
+@pytest.mark.parametrize(
+    "qname", ["gr_host_pagerank", "gr_host_hits", "gr_spam_mass"]
+)
+def test_strict_hash_parity_scale_factors(spark, qname, sf):
+    _assert_strict_parity(spark, qname, os.path.join(os.path.dirname(SF_DIR), sf))
+
+
+def _assert_strict_parity(spark, qname, sf_dir):
+    con = _duck(sf_dir)
+    sdf = E.queries()[qname](spark, sf_dir).toPandas()
     odf = con.sql(E.oracle_sql()[qname]).df()
     assert sorted(sdf.columns) == sorted(odf.columns)
     assert len(sdf) == len(odf)

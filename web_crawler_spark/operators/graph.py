@@ -6,16 +6,18 @@ these generalize the outlink expansion the north rule adds. Everything is
 DataFrame algebra: edge aggregation is one shuffle, and the iterative
 operators share private loop kernels, each cutting lineage with
 ``localCheckpoint`` (without it the plan doubles per round and the driver
-OOMs on plan strings long before data). ``_power_iterate`` (pagerank,
-trustrank, pagerank_residuals) checkpoints each round's contribs eagerly,
-because the dangling-mass collect and the update both read them, and the
-ranks every third round and on the last (every round for the residuals).
-hits and salsa step through ``_spread``: hits checkpoints each normalized
-half-step, salsa each chain's two-step walk. ``_hll_balls`` (hyperball,
-neighborhood_function) checkpoints the register frame every round.
-``_bfs_layers`` (seed_distance, seed_attribution) checkpoints each fresh
-layer eagerly, since its ``count()`` is the stop test, and the assigned
-set after each union.
+OOMs on plan strings long before data). No round loop returns to the
+driver: ``_power_iterate`` (pagerank, trustrank, pagerank_residuals) and
+hits take each round's 1-row total (the flowed mass, the L1 normaliser)
+as a broadcast cross join of an aggregate of that round's per-node frame,
+and every node enters that frame through a ``0.0`` row, so no join back
+onto the node set is needed. ``_power_iterate`` checkpoints the ranks
+every third round and on the last (every round for the residuals); hits
+checkpoints each normalized half-step, salsa each chain's two-step walk.
+``_hll_balls`` (hyperball, neighborhood_function) checkpoints the
+register frame every round. ``_bfs_layers`` (seed_distance,
+seed_attribution) checkpoints each fresh layer eagerly, since its
+``count()`` is the stop test, and the assigned set after each union.
 
 At 100 TB the host graph is tiny relative to the corpus (~10^7 hosts), so
 iterations run on an aggregated edge list that fits comfortably in one
@@ -27,7 +29,7 @@ from __future__ import annotations
 from functools import reduce
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Observation, Window, functions as F
 
 from ..functions import urltools as U
 
@@ -43,13 +45,26 @@ def _weighted_edges(
     )
 
 
-def _node_set(e: DataFrame) -> DataFrame:
-    """Distinct ``src ∪ dst`` of an edge frame as ``(node)``, checkpointed."""
-    return (
+def _node_set(e: DataFrame) -> tuple[DataFrame, int]:
+    """Distinct ``src ∪ dst`` of an edge frame as ``(node)``, checkpointed,
+    and its row count, observed on the checkpoint's own job."""
+    counted = Observation()
+    nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
+        .observe(counted, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
+    )
+    return nodes, counted.get["n"]
+
+
+def _with_total(per_node: DataFrame, col: str, total: str) -> DataFrame:
+    """``per_node`` with one more column ``total = Σ col``: a 1-row
+    aggregate broadcast back by a cross join, so the total never leaves
+    the plan (a driver collect would cost a job per round)."""
+    return per_node.crossJoin(
+        F.broadcast(per_node.agg(F.sum(col).alias(total)))
     )
 
 
@@ -65,39 +80,39 @@ def _transitions(e: DataFrame, by: str, name: str) -> DataFrame:
 def _power_iterate(
     e: DataFrame,
     start: DataFrame,
-    update: Callable[[Column, float], Column],
+    update: Callable[[Column, Column], Column],
     iterations: int,
     every: int = 3,
 ) -> list[DataFrame]:
     """Weighted power iteration over ``(src, dst, w)``; returns the iterates
     ``[r_0, …, r_iterations]``, each ``(node, rank)`` (``r_0`` is ``start``).
 
-    ``start`` is the start vector ``(node, rank, …)``; its other columns
-    stay readable by ``update``. Each round the inflow ``Σ p·rank`` over
-    the transitions ``p = w / out_w(src)`` is left-joined onto ``start``
-    and the new rank is ``update(inflow, flowed)``: ``inflow`` is the
-    per-node inflow (0 without in-edges), ``flowed`` the driver-side total
-    that went through edges, so the caller derives the dangling mass.
+    ``start`` is the start vector ``(node, rank, …)`` over every node; its
+    other columns stay readable by ``update``. Each round every node enters
+    one per-node ``groupBy`` with a ``0.0`` row that carries those columns,
+    next to the edge rows ``p·rank`` over the transitions ``p = w /
+    out_w(src)``, so ``inflow`` is the per-node inflow (0 without in-edges)
+    with no join back onto the node set. The new rank is ``update(inflow,
+    flowed)``, where ``flowed`` is the column holding the round's total
+    inflow, i.e. what went through edges, so the caller derives the
+    dangling mass. No round runs a job of its own: the ranks are
+    checkpointed every ``every`` rounds and on the last.
     """
     trans = _transitions(e, "src", "p")
-    base = start.drop("rank")
+    extra = [c for c in start.columns if c not in ("node", "rank")]
+    zeros = start.select("node", F.lit(0.0).alias("c"), *extra)
     iterates = [start]
     for i in range(iterations):
-        # materialize contribs once per round: the dangling-mass collect
-        # and the rank update both read it, and would otherwise each
-        # recompute the join-agg
-        contribs = (
-            trans.join(iterates[-1].select(F.col("node").alias("src"), "rank"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("p") * F.col("rank")).alias("inflow"))
-            .localCheckpoint(eager=True)
+        flows = trans.join(
+            iterates[-1].select(F.col("node").alias("src"), "rank"), "src"
+        ).select(F.col("dst").alias("node"), (F.col("p") * F.col("rank")).alias("c"))
+        inflow = (
+            zeros.unionByName(flows, allowMissingColumns=True)
+            .groupBy("node")
+            .agg(F.sum("c").alias("inflow"), *(F.max(c).alias(c) for c in extra))
         )
-        flowed = contribs.agg(F.sum("inflow").alias("t")).collect()[0]["t"] or 0.0
-        ranks = base.join(
-            contribs.withColumnRenamed("dst", "node"), "node", "left"
-        ).select(
-            "node",
-            update(F.coalesce(F.col("inflow"), F.lit(0.0)), flowed).alias("rank"),
+        ranks = _with_total(inflow, "inflow", "flowed").select(
+            "node", update(F.col("inflow"), F.col("flowed")).alias("rank")
         )
         if (i + 1) % every == 0 or i == iterations - 1:
             ranks = ranks.localCheckpoint()  # cut the iterative lineage
@@ -118,16 +133,16 @@ def _pagerank_iterates(
     teleport; an empty edge set yields only an empty ``r_0`` (no nodes, no
     ranks, no dangling/n_nodes 0-div)."""
     e = _weighted_edges(edges, src_col, dst_col, weight_col)
-    nodes = _node_set(e)
-    n_nodes = nodes.count()
+    nodes, n_nodes = _node_set(e)
     if n_nodes == 0:
         return [nodes.select("node", F.lit(0.0).alias("rank"))]
+    n = F.lit(float(n_nodes))
 
-    def update(inflow: Column, flowed: float) -> Column:
+    def update(inflow: Column, flowed: Column) -> Column:
         # dangling mass = total rank (n_nodes) minus what flowed through edges
-        dangling = n_nodes - flowed
-        base = (1.0 - damping) + damping * dangling / n_nodes
-        return F.lit(base) + F.lit(damping) * inflow
+        dangling = n - flowed
+        base = F.lit(1.0 - damping) + F.lit(damping) * dangling / n
+        return base + F.lit(damping) * inflow
 
     return _power_iterate(
         e, nodes.select("node", F.lit(1.0).alias("rank")), update,
@@ -136,15 +151,23 @@ def _pagerank_iterates(
 
 
 def _spread(
-    t: DataFrame, scores: DataFrame, frm: str, to: str, weight: str
+    t: DataFrame,
+    scores: DataFrame,
+    frm: str,
+    to: str,
+    weight: str,
+    nodes: DataFrame | None = None,
 ) -> DataFrame:
     """One spread step: each ``frm`` endpoint of ``t`` sends ``weight·val``
-    along its edge; returns ``(node, val)`` summed per ``to`` endpoint."""
-    return (
-        t.join(scores.select(F.col("node").alias(frm), "val"), frm)
-        .groupBy(F.col(to).alias("node"))
-        .agg(F.sum(F.col(weight) * F.col("val")).alias("val"))
+    along its edge; returns ``(node, val)`` summed per ``to`` endpoint.
+    With ``nodes``, every node also sends itself ``0.0``, so each of them
+    gets a row (``val`` 0 when nothing reaches it)."""
+    flows = t.join(scores.select(F.col("node").alias(frm), "val"), frm).select(
+        F.col(to).alias("node"), (F.col(weight) * F.col("val")).alias("val")
     )
+    if nodes is not None:
+        flows = nodes.select("node", F.lit(0.0).alias("val")).unionByName(flows)
+    return flows.groupBy("node").agg(F.sum("val").alias("val"))
 
 
 def _hll_balls(
@@ -168,7 +191,7 @@ def _hll_balls(
         .distinct()
         .localCheckpoint()
     )
-    nodes = _node_set(e)
+    nodes, _ = _node_set(e)
     bucket, rho = _hll_fields(F.col("node").cast("string"), p)
     regs = nodes.select("node", bucket, rho).localCheckpoint()
     ests = [hll_estimate(regs, p=p, group_cols=("node",))]
@@ -354,23 +377,27 @@ def hits(
     avoids the sqrt of the textbook L2 while keeping the same fixpoint
     direction; declared in the oracle). Per half-step: one spread on the
     aggregated host edge list (tiny next to the corpus — same scale
-    argument as pagerank) and a 1-row total. Returns (node, hub,
-    authority) rounded to 6 decimals for every node; nodes without
+    argument as pagerank) in which every node also sends itself ``0.0``,
+    and the 1-row total of that frame broadcast back as the divisor, so a
+    half-step is one checkpoint and no driver round-trip. Returns (node,
+    hub, authority) rounded to 6 decimals for every node; nodes without
     in-edges get authority 0, without out-edges hub 0.
     """
     e = _weighted_edges(edges, src_col, dst_col, weight_col).localCheckpoint()
-    nodes = _node_set(e)
-    if nodes.count() == 0:
+    nodes, n_nodes = _node_set(e)
+    if n_nodes == 0:
         return nodes.select(
             "node", F.lit(0.0).alias("hub"), F.lit(0.0).alias("authority")
         )
 
     def _half(scores: DataFrame, frm: str, to: str) -> DataFrame:
-        raw = _spread(e, scores, frm, to, "w")
-        total = raw.agg(F.sum("val")).collect()[0][0] or 1.0
-        return nodes.join(raw, "node", "left").select(
+        raw = _spread(e, scores, frm, to, "w", nodes)
+        total = F.col("total")
+        return _with_total(raw, "val", "total").select(
             "node",
-            (F.coalesce("val", F.lit(0.0)) / F.lit(total)).alias("val"),
+            # a zero total divides by 1 (no mass anywhere stays 0)
+            (F.col("val") / F.when(total != 0.0, total).otherwise(F.lit(1.0)))
+            .alias("val"),
         ).localCheckpoint()
 
     a = h = nodes.select("node", F.lit(1.0).alias("val"))
@@ -412,7 +439,7 @@ def trustrank(
     6 decimals.
     """
     e = _weighted_edges(edges, src_col, dst_col, weight_col)
-    nodes = _node_set(e)
+    nodes, _ = _node_set(e)
     seed_nodes = (
         seeds.select(F.col(seed_col).alias("node")).distinct()
         .join(nodes, "node")
@@ -425,11 +452,11 @@ def trustrank(
         seed_nodes.withColumn("s", F.lit(1.0 / n_seeds)), "node", "left"
     ).select("node", F.coalesce(F.col("s"), F.lit(0.0)).alias("s")).localCheckpoint()
 
-    def update(inflow: Column, flowed: float) -> Column:
-        dangling = 1.0 - flowed  # total trust is the invariant Σr = 1
+    def update(inflow: Column, flowed: Column) -> Column:
+        dangling = F.lit(1.0) - flowed  # total trust is the invariant Σr = 1
         s = F.col("s")
         return F.lit(1.0 - damping) * s + F.lit(damping) * (
-            inflow + F.lit(dangling) * s
+            inflow + dangling * s
         )
 
     ranks = _power_iterate(
@@ -879,8 +906,13 @@ def spam_mass(
     Composition of the two certified power iterations — both already
     lineage-checkpointed, slim-keyed, and rounded; this adds one id-keyed
     join and pure column algebra on their (node, double) outputs, so the
-    scale story is exactly pagerank's + trustrank's. Returns
-    (node, rank, trust, mass, rel_mass) rounded to 6.
+    scale story is exactly pagerank's + trustrank's. Both ratios are
+    taken in integer micro-units of the 6-dp inputs, ``rank_u − k·trust_u``
+    over ``n`` (or over ``rank_u``, scaled by 10⁶), and rounded to a whole
+    micro-unit: an exact integer over an integer sits on a half-micro
+    boundary only when it is exactly representable, so every engine rounds
+    it the same way (a float ``round(x, 6)`` of a raw quotient does not).
+    Returns (node, rank, trust, mass, rel_mass), the last two at 6 dp.
     """
     pr = pagerank(edges, iterations, damping, src_col, dst_col, weight_col)
     tr = trustrank(
@@ -899,16 +931,22 @@ def spam_mass(
         .join(pr.select("node"), "node")
         .count()
     )
+
+    def micro(c: Column) -> Column:
+        return F.round(c * 1e6).cast("long")
+
+    def to_6dp(ratio: Column) -> Column:
+        return F.round(ratio).cast("long") / 1e6
+
+    rank_u = micro(F.col("rank"))
+    untrusted_u = rank_u - micro(F.col("trust")) * k
     return pr.join(tr, "node").select(
         "node",
         "rank",
         "trust",
-        F.round(
-            (F.col("rank") - F.col("trust") * float(k)) / float(n), 6
-        ).alias("mass"),
+        to_6dp(untrusted_u / float(n)).alias("mass"),
         F.when(
-            F.col("rank") > 0,
-            F.round(1.0 - F.col("trust") * float(k) / F.col("rank"), 6),
+            rank_u > 0, to_6dp(untrusted_u * 1e6 / rank_u)
         ).alias("rel_mass"),
     )
 
@@ -932,9 +970,9 @@ def salsa(
     with probability ``w_ij / in_w(j)``, then FORWARD to an authority
     ``j'`` with probability ``w_ij' / out_w(i)``. The hub chain is the
     mirror image. Both steps are stochastic, so chain mass is conserved
-    every round — no renormalization (and no 1-row total fetch per
-    half-step like HITS needs): the whole iteration is pure join+agg
-    algebra, which keeps the oracle unroll exact.
+    every round — no renormalization (and no 1-row total per half-step
+    like HITS needs): the whole iteration is pure join+agg algebra, which
+    keeps the oracle unroll exact.
 
     Plan: the two normalized transition tables are built once (two keyed
     aggs + two joins on the aggregated host edge list, tiny next to the
@@ -944,8 +982,8 @@ def salsa(
     authority 0, without out-edges hub 0.
     """
     e = _weighted_edges(edges, src_col, dst_col, weight_col).localCheckpoint()
-    nodes = _node_set(e)
-    if nodes.count() == 0:
+    nodes, n_nodes = _node_set(e)
+    if n_nodes == 0:
         return nodes.select(
             "node", F.lit(0.0).alias("hub"), F.lit(0.0).alias("authority")
         )
