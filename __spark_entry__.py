@@ -3515,40 +3515,13 @@ def _q_simhash_pairs(spark, sf_dir):
     )
 
 
-def _q_ann_lsh(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
-    return SIM.lsh_topk(emb, _query_vector(spark, sf_dir), k=10)
-
-
-def _q_embedding_lsh_pairs(spark, sf_dir):
-    """The SCALE path for embedding near-dup: LSH-bucketed candidates +
-    exact cosine verify (no all-pairs join; auto_n_planes bucket sizing).
-    Every 7th embedding is re-inserted under a shifted id — identical
-    vectors always share a bucket, so the expected (i, i+10^6) pairs are
-    deterministic. Rows-only check; brute-force dd_embedding_dedup_pairs
-    is the exact-baseline oracle this approximates."""
-    emb = _t(spark, sf_dir, "embeddings")
-    dup = emb.filter(F.col("vec_id") % 7 == 0).withColumn(
-        "vec_id", F.col("vec_id") + F.lit(1_000_000)
-    )
-    corpus = emb.unionByName(dup)
-    return SIM.pairwise_cosine_dedup(corpus, threshold=0.999).orderBy("id_a", "id_b")
-
-
-def _q_ann_ivf(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
-    return SIM.ivf_topk(emb, _query_vector(spark, sf_dir), k=10)
-
-
 # ---------------------------------------------------------------------------
-# Oracle-checked portable twins of the approximate-similarity family.
+# Oracle-checked approximate-similarity queries.
 #
-# The production paths hash with xxhash64 (JVM-only), so round 1 could only
-# rows-check them. These twins run the IDENTICAL plan shapes — LSH bucket
-# filter + multiprobe, IVF argmin assignment + probe, pigeonhole-blocked
-# SimHash — with every hash derived from md5 (computable verbatim by the
-# DuckDB oracle), so the exact bucket/probe/pair sets are driver-certified,
-# not just "ran clean". Fast paths stay registered for bench.
+# LSH planes, centroid picks and codebook picks in operators/similarity.py
+# all derive from md5 (computable verbatim by the DuckDB oracle), so the
+# exact bucket/probe/pair sets of the one execution path are certified,
+# not just "ran clean". The `_md5` suffix names this property.
 # ---------------------------------------------------------------------------
 
 _ANN_N_PLANES = 6  # auto_n_planes(500 vectors at sf0.01) — pinned so the
@@ -3557,11 +3530,10 @@ _ANN_N_PLANES = 6  # auto_n_planes(500 vectors at sf0.01) — pinned so the
 
 def _q_ann_lsh_md5(spark, sf_dir):
     """lsh_topk with md5-parity planes: probe = query bucket + rank-1
-    multiprobe (hamming<=1 on bucket bits) — same plan as ann_lsh_topk."""
+    multiprobe (hamming<=1 on bucket bits)."""
     emb = _t(spark, sf_dir, "embeddings")
     return SIM.lsh_topk(
-        emb, _query_vector(spark, sf_dir), k=10,
-        n_planes=_ANN_N_PLANES, portable=True,
+        emb, _query_vector(spark, sf_dir), k=10, n_planes=_ANN_N_PLANES
     )
 
 
@@ -3589,16 +3561,18 @@ ORDER BY cosine DESC, vec_id LIMIT 10
 
 
 def _q_embedding_lsh_pairs_md5(spark, sf_dir):
-    """pairwise_cosine_dedup with portable planes over the dup-injected
-    corpus (every 7th embedding re-inserted under id+10^6) — the exact
-    LSH-bucketed candidate set is oracle-reproduced."""
+    """The SCALE path for embedding near-dup: LSH-bucketed candidates +
+    exact cosine verify (no all-pairs join) over the dup-injected corpus
+    (every 7th embedding re-inserted under id+10^6; identical vectors
+    always share a bucket) — the exact LSH-bucketed candidate set is
+    oracle-reproduced."""
     emb = _t(spark, sf_dir, "embeddings")
     dup = emb.filter(F.col("vec_id") % 7 == 0).withColumn(
         "vec_id", F.col("vec_id") + F.lit(1_000_000)
     )
     corpus = emb.unionByName(dup)
     return SIM.pairwise_cosine_dedup(
-        corpus, threshold=0.999, n_planes=_ANN_N_PLANES, portable=True
+        corpus, threshold=0.999, n_planes=_ANN_N_PLANES
     ).orderBy("id_a", "id_b")
 
 
@@ -3624,7 +3598,7 @@ def _q_ann_ivf_md5(spark, sf_dir):
     argmin assignment (zero-join array expression) and probe set are
     reproduced exactly by the SQL oracle's correlated argmin."""
     emb = _t(spark, sf_dir, "embeddings")
-    return SIM.ivf_topk(emb, _query_vector(spark, sf_dir), k=10, portable=True)
+    return SIM.ivf_topk(emb, _query_vector(spark, sf_dir), k=10)
 
 
 def _sql_ann_ivf_md5(n_centroids: int = 16, n_probe: int = 4, seed: int = 42) -> str:
@@ -3674,17 +3648,6 @@ def _q_ann_pq_md5(spark, sf_dir):
     """Product-quantization ADC top-k (Jégou et al. 2011) with md5-picked
     codebooks: per-subspace argmin codes, codeword reconstruction, and
     the round-6 ADC distance are all reproduced exactly by the oracle."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return SIM.pq_topk(
-        emb, _query_vector(spark, sf_dir), k=10, m=8, n_codes=16,
-        portable=True,
-    )
-
-
-def _q_ann_pq(spark, sf_dir):
-    """Arrow-kernel twin of ann_pq_topk_md5 (same codebooks, same HALF_UP
-    round-6) — the 100 TB scan path; parity with the portable variant is
-    pytest-asserted, the driver records rows."""
     emb = _t(spark, sf_dir, "embeddings")
     return SIM.pq_topk(emb, _query_vector(spark, sf_dir), k=10, m=8, n_codes=16)
 
@@ -3743,9 +3706,7 @@ def _q_semdedup_md5(spark, sf_dir):
     assignment, within-cluster cosine pruning at 0.35, and every row's
     (cid, is_dup) verdict are reproduced exactly by the oracle."""
     emb = _t(spark, sf_dir, "embeddings")
-    return SIM.semdedup(
-        emb, n_clusters=12, threshold=0.35, portable=True
-    ).orderBy("vec_id")
+    return SIM.semdedup(emb, n_clusters=12, threshold=0.35).orderBy("vec_id")
 
 
 def _sql_semdedup_md5(n_clusters: int = 12, threshold: float = 0.35,
@@ -3816,7 +3777,7 @@ def _q_knn_join_lsh_md5(spark, sf_dir):
     are oracle-reproduced."""
     emb = _t(spark, sf_dir, "embeddings")
     return SIM.knn_join_lsh(
-        emb, k=3, n_planes=_ANN_N_PLANES, multiprobe=1, portable=True
+        emb, k=3, n_planes=_ANN_N_PLANES, multiprobe=1
     ).orderBy("vec_id", F.desc("cosine"), "nb_id")
 
 
@@ -11654,7 +11615,6 @@ def _q_text_semdedup_md5(spark, sf_dir):
         threshold=0.9,
         vec_col="embedding",
         id_col="doc_id",
-        portable=True,
     ).orderBy("vec_id")
 
 
@@ -13394,15 +13354,12 @@ _register(
         "ann_ivf_trained_topk": (_q_ann_ivf_trained, _SQL_ANN_COSINE),
         "ann_pq_trained_topk": (_q_ann_pq_trained, _SQL_ANN_PQ_TRAINED),
         "crawl_budget_epochs": (_q_crawl_budget_epochs, _SQL_CRAWL_BUDGET_EPOCHS),
-        # rows-only: no SQL-expressible oracle (xxhash64 LSH internals, the
-        # mapInPandas HTML extraction, the epoch loop)
+        # rows-only: no SQL-expressible oracle (auto-sized cross-set LSH
+        # neighbor sets, xxhash64 simhash, BPE merges, the mapInPandas HTML
+        # extraction, the epoch loop)
         "ann_bitext_margin_fast": (_q_bitext_margin_fast, None),
         "tx_corpus_mix_bpe": (_q_corpus_mix_bpe, None),
         "dd_simhash_pairs": (_q_simhash_pairs, None),
-        "ann_lsh_topk": (_q_ann_lsh, None),
-        "ann_pq_topk": (_q_ann_pq, None),
-        "dd_embedding_lsh_pairs": (_q_embedding_lsh_pairs, None),
-        "ann_ivf_topk": (_q_ann_ivf, None),
         "crawl_extract_pipeline": (_q_extract_pipeline, None),
         "crawl_epochs_e2e": (_q_crawl_epochs, None),
     }
@@ -14050,15 +14007,15 @@ FROM s
 def _q_cluster_sample(spark, sf_dir):
     """Cluster-balanced corpus subsample (operators/similarity.
     cluster_quota_sample; SemDeDup/DataComp curation stage): md5-picked
-    portable centroids, zero-join argmin assignment, near-equal
+    centroids, zero-join argmin assignment, near-equal
     per-cluster quotas (100 over 8 clusters -> 13/13/13/13/12/12/12/12),
     deterministic lowest-md5-draw selection within each cluster. The
     oracle replays centroid pick order, round-6 assignment distances,
     quota arithmetic, and the md5 draw exactly."""
     emb = _t(spark, sf_dir, "embeddings")
-    return SIM.cluster_quota_sample(
-        emb, n_keep=100, n_clusters=8, portable=True
-    ).orderBy("cid", "rk")
+    return SIM.cluster_quota_sample(emb, n_keep=100, n_clusters=8).orderBy(
+        "cid", "rk"
+    )
 
 
 def _sql_cluster_sample(n_keep: int = 100, k: int = 8, seed: int = 77,

@@ -42,8 +42,8 @@ HEADLINE = [
     # round 2: the formerly-unbenched similarity/simhash paths, so the
     # scale-audited fixes (argmin IVF, bucketed LSH, one-pass simhash) are
     # measured every round, not just plan-audited
-    "ann_lsh_topk",
-    "ann_ivf_topk",
+    "ann_lsh_topk_md5",
+    "ann_ivf_topk_md5",
     "dd_simhash_pairs",
     "x9_css_selector",
     # round-2 additions: batch k-NN join (Arrow bucket+score kernels),
@@ -74,7 +74,7 @@ HEADLINE = [
     "tx_c4_filter",
     "tx_quality_model",
     "tx_ngram_repetition",
-    "ann_pq_topk",
+    "ann_pq_topk_md5",
     "tx_pack_sequences",
     # round-3 close: exact substring dedup over overlapping windows
     # (Lee et al. ExactSubstr — the heaviest honest dedup gate: per-token

@@ -65,16 +65,6 @@ def test_empty_inputs(spark):
     assert SIM.cluster_quota_sample(empty, 5, n_clusters=4).count() == 0
 
 
-def test_portable_matches_fast_on_separated_clusters(spark):
-    a = SIM.cluster_quota_sample(
-        _df(spark), n_keep=6, centroids=CENTS, portable=True
-    ).collect()
-    b = SIM.cluster_quota_sample(
-        _df(spark), n_keep=6, centroids=CENTS, portable=False
-    ).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
 def test_plan_is_join_free_and_slim(spark):
     plan = SIM.cluster_quota_sample(
         _df(spark), n_keep=5, centroids=CENTS

@@ -18,7 +18,8 @@ Three layers of defense:
    or oracle changed since) with a STRICT hasher (no int normalization,
    emulating the driver) and assert Spark == DuckDB;
    ``test_strict_hash_parity_scale_factors`` does the same for three
-   power-iteration queries at sf0.001 and sf0.1.
+   power-iteration queries and seven similarity queries at sf0.001 and
+   sf0.1.
 3. ``test_strict_hasher_catches_uncast_hugeint`` — prove the strict hasher
    is actually stricter: an intentionally uncast SUM must mismatch.
 """
@@ -118,10 +119,18 @@ def test_strict_hash_parity_previous_reds(spark, qname):
 
 # the oracles must hold at every scale factor, not only the gate's: the
 # power iterations' 6-dp outputs land on different rounding boundaries
-# at each size (gr_spam_mass's mass sat on a half-micro at sf0.001)
+# at each size (gr_spam_mass's mass sat on a half-micro at sf0.001), and
+# the similarity operators' Arrow kernels round and sum in numpy while
+# their oracles fold in SQL
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
 @pytest.mark.parametrize(
-    "qname", ["gr_host_pagerank", "gr_host_hits", "gr_spam_mass"]
+    "qname",
+    [
+        "gr_host_pagerank", "gr_host_hits", "gr_spam_mass",
+        "ann_lsh_topk_md5", "ann_knn_join_lsh_md5", "ann_pq_topk_md5",
+        "ann_ivf_topk_md5", "dd_embedding_lsh_pairs_md5", "dd_semdedup_md5",
+        "tx_cluster_sample",
+    ],
 )
 def test_strict_hash_parity_scale_factors(spark, qname, sf):
     _assert_strict_parity(spark, qname, os.path.join(os.path.dirname(SF_DIR), sf))

@@ -1,7 +1,7 @@
-"""Cross-implementation checks for the md5-portable similarity twins.
+"""Cross-implementation checks for the md5-portable similarity paths.
 
-Each portable variant (lsh_bucket_portable, portable simhash_stage,
-portable ivf centroid pick) is verified against an independent pure-Python
+The Arrow LSH bucket kernel, the portable simhash_stage and the md5
+centroid pick are each verified against an independent pure-Python
 hashlib/md5 reference — the same computation a third engine would run — so
 the oracle-checked queries rest on two independent implementations plus
 the DuckDB oracle, not on Spark agreeing with itself.
@@ -13,7 +13,6 @@ import hashlib
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from web_crawler_spark.functions import vectors as V
 from web_crawler_spark.operators import dedup as D
@@ -55,27 +54,24 @@ VECS = [
 ]
 
 
-def test_lsh_bucket_portable_matches_python(spark):
+def _arrow_buckets(spark, n_planes):
     df = spark.createDataFrame(VECS, ["vec_id", "embedding"])
-    got = {
-        r["vec_id"]: r["bucket"]
-        for r in df.select(
-            "vec_id", V.lsh_bucket_portable(F.col("embedding"), 5).alias("bucket")
-        ).collect()
+    return {
+        r["id"]: r["bucket"]
+        for r in SIM._arrow_bucket_stage(df, n_planes, "vec_id", "embedding").collect()
     }
+
+
+def test_arrow_lsh_bucket_matches_python(spark):
+    got = _arrow_buckets(spark, 5)
     want = {vid: _py_lsh_bucket(vec, 5) for vid, vec in VECS}
     assert got == want
+    assert {vid: SIM._py_lsh_bucket(vec, 5) for vid, vec in VECS} == want
 
 
-def test_lsh_bucket_portable_matches_duckdb(spark):
+def test_arrow_lsh_bucket_matches_duckdb(spark):
     duckdb = pytest.importorskip("duckdb")
-    df = spark.createDataFrame(VECS, ["vec_id", "embedding"])
-    got = {
-        r["vec_id"]: r["bucket"]
-        for r in df.select(
-            "vec_id", V.lsh_bucket_portable(F.col("embedding"), 5).alias("bucket")
-        ).collect()
-    }
+    got = _arrow_buckets(spark, 5)
     con = duckdb.connect()
     con.execute("CREATE TABLE v (vec_id INT, embedding DOUBLE[])")
     for vid, vec in VECS:
@@ -132,25 +128,44 @@ def test_portable_ivf_centroid_pick_matches_python(spark):
     want_order = sorted(
         (hashlib.md5(f"ivf42:{vid}".encode()).hexdigest(), vid) for vid, _ in VECS
     )
-    want_cids = {vid for _, vid in want_order[:2]}
     out = SIM.ivf_topk(
-        df, [0.5, -1.25, 3.0, 0.125], k=4, n_centroids=2, n_probe=2, portable=True
+        df, [0.5, -1.25, 3.0, 0.125], k=4, n_centroids=2, n_probe=2
     ).collect()
     # every returned vector is assigned to one of the two chosen centroids'
     # probe set; the query vector itself (vec_id 0, distance 0) must hit
     ids = [r["vec_id"] for r in out]
     assert 0 in ids
-    assert len(want_cids) == 2
+    picked = SIM._md5_pick(df, "embedding", "vec_id", "ivf42:", 2)
+    assert [cid for cid, _ in picked] == [vid for _, vid in want_order[:2]]
 
 
 def test_portable_lsh_topk_contains_query_row(spark):
     df = spark.createDataFrame(VECS, ["vec_id", "embedding"])
-    out = SIM.lsh_topk(
-        df, [0.5, -1.25, 3.0, 0.125], k=4, n_planes=4, portable=True
-    ).collect()
+    out = SIM.lsh_topk(df, [0.5, -1.25, 3.0, 0.125], k=4, n_planes=4).collect()
     ids = [r["vec_id"] for r in out]
     assert 0 in ids  # identical vector always lands in the query bucket
     assert out[0]["cosine"] == pytest.approx(1.0)
+
+
+def test_arrow_cosine_rounds_half_away_from_zero(spark):
+    """cos = ±1/128 = ±0.0078125 exactly (|c| = 128): DuckDB's ROUND and
+    Spark's F.round both give ±0.007813; round-half-to-even would give
+    ±0.007812."""
+    duckdb = pytest.importorskip("duckdb")
+    q, c = [1.0, 0.0, 0.0, 0.0, 0.0], [1.0, 127.0, 15.0, 5.0, 2.0]
+    df = spark.createDataFrame(
+        [(0, q), (1, c), (2, [-x for x in q])], ["vec_id", "embedding"]
+    )
+    got = {
+        (r["vec_id"], r["nb_id"]): r["cosine"]
+        for r in SIM.knn_join_lsh(df, k=2, n_planes=1, multiprobe=1).collect()
+    }
+    assert got[(0, 1)] == got[(1, 0)] == 0.007813
+    assert got[(2, 1)] == got[(1, 2)] == -0.007813
+    want = duckdb.sql(
+        "SELECT round(0.0078125::DOUBLE, 6), round(-0.0078125::DOUBLE, 6)"
+    ).fetchone()
+    assert want == (0.007813, -0.007813)
 
 
 def test_knn_join_matches_bruteforce_python(spark):

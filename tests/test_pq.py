@@ -1,6 +1,5 @@
 """Product quantization (Jégou et al. 2011): codebooks, encode, ADC top-k."""
 import pytest
-from pyspark.sql import functions as F
 
 from web_crawler_spark.operators.similarity import (
     pq_codebooks,
@@ -38,22 +37,12 @@ def test_encode_is_shuffle_free_projection(emb):
     assert all(0 <= c < 8 for r in rows for c in r["codes"])
 
 
-def test_portable_and_arrow_paths_agree(emb):
-    q = [float(x) for x in
-         emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]]
-    books = pq_codebooks(emb, m=4, n_codes=8)
-    a = pq_topk(emb, q, k=15, codebooks=books, portable=True).collect()
-    b = pq_topk(emb, q, k=15, codebooks=books, portable=False).collect()
-    assert [(r["vec_id"], r["adc_dist"]) for r in a] == \
-           [(r["vec_id"], r["adc_dist"]) for r in b]
-
-
 def test_adc_ranks_identical_vector_first(spark):
     # vec 0 is the query itself: its reconstruction is the closest possible
     base = [1.0, 0.0, 0.0, 0.0, 0.0, 1.0, 1.0, 0.0]
     rows = [(0, base), (1, [x + 5.0 for x in base]), (2, [x - 5.0 for x in base])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = pq_topk(df, base, k=3, m=4, n_codes=3, portable=True).collect()
+    got = pq_topk(df, base, k=3, m=4, n_codes=3).collect()
     assert got[0]["vec_id"] == 0 and got[0]["adc_dist"] == 0.0
 
 
@@ -109,7 +98,7 @@ def test_semdedup_marks_higher_id_within_cluster(spark):
             (3, [x * 2.0 for x in base])]   # colinear: cosine 1.0
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     got = {r["vec_id"]: r for r in
-           semdedup(df, n_clusters=2, threshold=0.99, portable=True).collect()}
+           semdedup(df, n_clusters=2, threshold=0.99).collect()}
     assert len(got) == 4
     assert got[0]["is_dup"] is False          # lowest id survives
     assert got[2]["is_dup"] is True

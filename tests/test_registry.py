@@ -20,7 +20,6 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # shows up here instead of passing the gate on a row count
 ROWS_ONLY = {
     "ann_bitext_margin_fast", "tx_corpus_mix_bpe", "dd_simhash_pairs",
-    "ann_lsh_topk", "ann_pq_topk", "dd_embedding_lsh_pairs", "ann_ivf_topk",
     "crawl_extract_pipeline", "crawl_epochs_e2e",
 }
 
@@ -35,7 +34,7 @@ def test_register_rejects_a_registered_name():
 
 def test_oracles_are_a_subset_of_queries():
     qs, oracles = E.queries(), E.oracle_sql()
-    assert len(qs) == 374
+    assert len(qs) == 370
     assert len(oracles) == 365
     assert oracles.keys() <= qs.keys()
 
@@ -67,6 +66,33 @@ def test_each_name_in_exactly_one_register_entry():
     ]
     names += [k.value for k in tpch.keys]
     assert len(names) == len(set(names)) == len(E.queries())
+
+
+def test_bench_headline_names_resolve():
+    """Every ``HEADLINE`` leg of bench.py is a registered query or one of
+    the names ``main()`` assigns into the query table; a stale name would
+    otherwise raise ``KeyError`` only when the bench reaches it."""
+    tree = _parse("bench.py")
+    (headline,) = [
+        node.value
+        for node in tree.body
+        if isinstance(node, ast.Assign) and getattr(node.targets[0], "id", None) == "HEADLINE"
+    ]
+    names = [elt.value for elt in headline.elts]
+    (main,) = [
+        node for node in tree.body
+        if isinstance(node, ast.FunctionDef) and node.name == "main"
+    ]
+    assigned = {
+        target.slice.value
+        for node in ast.walk(main)
+        if isinstance(node, ast.Assign)
+        for target in node.targets
+        if isinstance(target, ast.Subscript) and getattr(target.value, "id", None) == "qs"
+    }
+    assert assigned, "bench.py main() no longer assigns into qs"
+    missing = [n for n in names if n not in E.queries() and n not in assigned]
+    assert missing == []
 
 
 def test_check_correctness_rejects_unknown_names(monkeypatch, capsys):

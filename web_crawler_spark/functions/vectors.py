@@ -32,44 +32,13 @@ def l2_distance(a: Column, b: Column) -> Column:
     return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v))
 
 
-def lsh_bucket_portable(a: Column, n_planes: int = 8, seed: int = 7) -> Column:
-    """Engine-portable sign-random-projection bucket: identical semantics to
-    ``lsh_bucket`` but the plane coefficient comes from the parity of the
-    first hex nibble of ``md5('lsh{seed}:{p}:{i}')`` — computable verbatim
-    by any SQL engine with ``md5`` (the DuckDB oracle), so LSH-bucketed ANN
-    results can be oracle-checked exactly, not just rows-only. The md5 per
-    (plane, dim) is ~3× the cost of xxhash64; use ``lsh_bucket`` in
-    production scans and this variant where cross-engine parity matters.
-    Mirrored by :func:`duckdb_lsh_bucket_sql`."""
-    idx = F.sequence(F.lit(0), F.size(a) - 1)
-
-    def signed(p: int):
-        prefix = f"lsh{seed}:{p}:"
-
-        def f(x: Column, i: Column) -> Column:
-            nib = F.conv(
-                F.substring(F.md5(F.concat(F.lit(prefix), i.cast("string"))), 1, 1),
-                16, 10,
-            ).cast("int")
-            return F.when(nib % 2 == 0, x.cast("double")).otherwise(
-                -x.cast("double")
-            )
-
-        return f
-
-    bucket = F.lit(0)
-    for p in range(n_planes):
-        proj = F.aggregate(
-            F.zip_with(a, idx, signed(p)), F.lit(0.0), lambda acc, v: acc + v
-        )
-        bucket = bucket + F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return bucket
-
-
 def duckdb_lsh_bucket_sql(vec_expr: str, n_planes: int = 8, seed: int = 7) -> str:
-    """The DuckDB expression computing exactly ``lsh_bucket_portable`` over
-    a ``DOUBLE[]``-castable list expression (1-based indexing; the hash is
-    fed the 0-based dimension to match the Spark formulation)."""
+    """The DuckDB expression computing the LSH bucket of
+    ``operators.similarity._arrow_bucket_stage`` over a ``DOUBLE[]``-castable
+    list expression: bit p is set when the projection on plane p is
+    positive, the sign of dimension i being the parity of the first hex
+    nibble of ``md5('lsh{seed}:{p}:{i}')`` (1-based indexing; the hash is
+    fed the 0-based dimension, as ``_plane_signs`` does)."""
     terms = []
     for p in range(n_planes):
         proj = (
@@ -81,30 +50,6 @@ def duckdb_lsh_bucket_sql(vec_expr: str, n_planes: int = 8, seed: int = 7) -> st
         )
         terms.append(f"CASE WHEN {proj} > 0 THEN {1 << p} ELSE 0 END")
     return "(" + " + ".join(terms) + ")"
-
-
-def lsh_bucket(a: Column, n_planes: int = 8, seed: int = 7) -> Column:
-    """Sign-random-projection LSH bucket id (0..2^n_planes-1) without real
-    random planes: plane p's coefficient for dimension i is derived from a
-    deterministic hash, so the same bucket function is computable anywhere.
-
-    coeff(p, i) = +1 if xxhash64(p, i) even else -1
-    bucket bit p = sign(sum_i coeff(p,i) * a[i])
-    """
-    idx = F.sequence(F.lit(0), F.size(a) - 1)
-
-    def signed(p: int):
-        return lambda x, i: F.when(
-            F.pmod(F.xxhash64(F.lit(seed + p), i), F.lit(2)) == 0, x.cast("double")
-        ).otherwise(-x.cast("double"))
-
-    bucket = F.lit(0)
-    for p in range(n_planes):
-        proj = F.aggregate(
-            F.zip_with(a, idx, signed(p)), F.lit(0.0), lambda acc, v: acc + v
-        )
-        bucket = bucket + F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return bucket
 
 
 def quantize_int8(a: Column) -> tuple[Column, Column]:

@@ -18,26 +18,31 @@ within-bucket candidate join stays linear-ish as the corpus grows instead
 of quadratic-in-(n/2^6). Callers at scale pass ``corpus_size`` (a known
 manifest count) to avoid the extra count job.
 
-Two execution paths per approximate operator, same plan shape:
+One execution path per operator, and it is the oracle-certified one:
 
-* ``portable=True`` — every float fold and hash is a Column expression a
-  SQL oracle reproduces verbatim (md5-parity planes, HOF left-fold
-  cosine). This is the driver-certified path.
-* default (fast) — the per-row array arithmetic moves into Arrow-batched
-  numpy kernels (``_arrow_bucket_stage``: one (rows×dim)·(dim×planes)
-  matmul per batch; ``_arrow_cosine_stage``: one einsum per candidate
-  batch). Interpreted higher-order-function expressions cost ~10 µs/row
-  of boxing — they never enter whole-stage codegen — so this is the
-  100 TB path. The fast path uses the SAME md5-parity planes, so bucket
-  ids (and therefore candidate sets) agree with the certified variant;
-  only the last-ulp float summation order differs, hidden by round-6.
+* the per-row array arithmetic of the approximate operators runs in
+  Arrow-batched numpy kernels (``_arrow_bucket_stage``: one
+  (rows×dim)·(dim×planes) matmul per batch; ``_arrow_cosine_stage``: one
+  einsum per candidate batch; ``_arrow_pq_stage``: per-subspace distance
+  matrices). Interpreted higher-order-function expressions cost ~10 µs/row
+  of boxing — they never enter whole-stage codegen. The LSH planes are
+  md5-parity signs (``_plane_signs``) that a SQL engine reproduces with
+  ``V.duckdb_lsh_bucket_sql``; kernel outputs are rounded half away from
+  zero to 6 decimals (``_round6``, DuckDB's ``ROUND``), which hides the
+  last-ulp summation-order difference from a left-fold.
+* sampled centroids and codebooks are the first rows in
+  ``md5(salt || id)`` order (``_md5_pick``), and assignment is the argmin
+  of round-6 l2 distances with ties to the lower id (``_nearest_cid``) —
+  both reproducible verbatim by the DuckDB oracle.
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
 
-from pyspark.sql import DataFrame
+import numpy as np
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
@@ -81,62 +86,108 @@ def lsh_topk(
     n_planes: int | None = None,
     multiprobe: int = 1,
     corpus_size: int | None = None,
-    portable: bool = False,
 ) -> DataFrame:
     """Probe the query's LSH bucket plus all buckets within ``multiprobe``
-    bit flips (rank-1 multiprobe = n_planes+1 buckets). ``portable=True``
-    buckets with the md5-parity planes (``V.lsh_bucket_portable``) so a SQL
-    oracle can reproduce the exact probe set; default is the xxhash64 fast
-    path."""
+    bit flips (rank-1 multiprobe = n_planes+1 buckets). The corpus is
+    bucketed by the Arrow md5-parity sign projection; the single query
+    bucket is the same projection computed driver-side (no job), so a SQL
+    oracle reproduces the exact probe set."""
     if n_planes is None:
         n_planes = auto_n_planes(corpus_size if corpus_size is not None else df.count())
-    q = _query_lit(query_vec)
-    if portable:
-        bucketed = df.withColumn(
-            "bucket", V.lsh_bucket_portable(F.col(vec_col), n_planes)
-        )
-        qb = bucketed.sparkSession.range(1).select(
-            V.lsh_bucket_portable(q, n_planes).alias("qbucket")
-        ).collect()[0]["qbucket"]
-    else:
-        # Arrow bucketing for the corpus; the single query bucket is the
-        # same md5-parity projection computed driver-side (no job)
-        bucketed = _arrow_bucket_stage(df, n_planes, id_col, vec_col).select(
-            F.col("id").alias(id_col), F.col("vec").alias(vec_col), "bucket"
-        )
-        qb = _py_lsh_bucket(query_vec, n_planes)
+    bucketed = _arrow_bucket_stage(df, n_planes, id_col, vec_col).select(
+        F.col("id").alias(id_col), F.col("vec").alias(vec_col), "bucket"
+    )
+    qb = _py_lsh_bucket(query_vec, n_planes)
     probes = {qb} | ({qb ^ (1 << p) for p in range(n_planes)} if multiprobe else set())
     return (
         bucketed.filter(F.col("bucket").isin(*probes))
         .select(
             F.col(id_col),
-            F.round(V.cosine(F.col(vec_col), q), 6).alias("cosine"),
+            F.round(V.cosine(F.col(vec_col), _query_lit(query_vec)), 6).alias("cosine"),
         )
         .orderBy(F.desc("cosine"), F.col(id_col))
         .limit(k)
     )
 
 
-def _py_lsh_bucket(vec: list[float], n_planes: int, seed: int = 7) -> int:
-    """Driver-side twin of the md5-parity sign projection (one query
-    vector — no reason to launch a job). Matches ``_arrow_bucket_stage``
-    and ``V.lsh_bucket_portable`` bit for bit on sign decisions up to
-    float summation order: the numpy kernel sums with pairwise order,
-    this and the Column fold sum left-to-right — a near-zero projection
-    could in principle flip, which is exactly the multiprobe's job."""
-    import hashlib
+def _plane_signs(n_planes: int, dim: int, seed: int = 7) -> list[list[float]]:
+    """Sign of dimension i in LSH plane p: +1 when the first hex nibble of
+    md5('lsh{seed}:{p}:{i}') is even, else -1 — computable verbatim by any
+    SQL engine with ``md5`` (``V.duckdb_lsh_bucket_sql``)."""
+    def sign(p: int, i: int) -> float:
+        nib = int(hashlib.md5(f"lsh{seed}:{p}:{i}".encode()).hexdigest()[0], 16)
+        return 1.0 if nib % 2 == 0 else -1.0
 
+    return [[sign(p, i) for i in range(dim)] for p in range(n_planes)]
+
+
+def _py_lsh_bucket(vec: list[float], n_planes: int, seed: int = 7) -> int:
+    """Driver-side bucket of one query vector (no reason to launch a job).
+    Sums left to right like the oracle's fold; ``_arrow_bucket_stage``'s
+    matmul may sum in another order, so a near-zero projection could in
+    principle flip — which is exactly the multiprobe's job."""
     bucket = 0
-    for p in range(n_planes):
+    for p, signs in enumerate(_plane_signs(n_planes, len(vec), seed)):
         acc = 0.0
-        for i, x in enumerate(vec):
-            nib = int(
-                hashlib.md5(f"lsh{seed}:{p}:{i}".encode()).hexdigest()[0], 16
-            )
-            acc += float(x) if nib % 2 == 0 else -float(x)
+        for s, x in zip(signs, vec):
+            acc += s * float(x)
         if acc > 0:
             bucket += 1 << p
     return bucket
+
+
+def _round6(a):
+    """Round half away from zero to 6 decimals on the raw double: DuckDB's
+    ``ROUND(x, 6)`` (``std::round(x·10⁶) / 10⁶``); Spark's ``F.round`` is
+    HALF_UP too. ``np.round`` rounds half to even, so it would print
+    ±1/128 as ±0.007812 where both engines print ±0.007813."""
+    y = np.asarray(a, dtype=np.float64) * 1e6
+    t = np.trunc(y)
+    return (t + np.where(np.abs(y - t) >= 0.5, np.sign(y), 0.0)) / 1e6
+
+
+def _md5_pick(
+    df: DataFrame, vec_col: str, id_col: str, salt: str, n: int
+) -> list[tuple]:
+    """[(id, [float, ...]), ...] of the first ``n`` rows in
+    (md5(salt || id), id) order — the deterministic centroid/codeword
+    sample every SQL engine (the oracle) reproduces."""
+    rows = (
+        df.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
+        .orderBy(
+            F.md5(F.concat(F.lit(salt), F.col("cid").cast("string"))),
+            F.col("cid"),
+        )
+        .limit(n)
+        .collect()
+    )
+    return [(r["cid"], [float(x) for x in r["cvec"]]) for r in rows]
+
+
+def _nearest_cid(vec: Column, cents: list[tuple]) -> Column:
+    """cid of the centroid nearest to ``vec`` among ``cents`` =
+    [(cid, [float, ...]), ...]: ``array_min`` over
+    ``struct(round(l2, 6), cid)`` of a broadcast array-of-centroids
+    literal. Struct ordering breaks distance ties on the lower cid, and
+    rounding first keeps a double-summation-order difference between
+    engines from flipping a near-tie. Zero joins, zero shuffles, no row
+    inflation — the stage stays embarrassingly parallel."""
+    cent_arr = F.array(*[
+        F.struct(
+            F.array(*[F.lit(x) for x in cv]).alias("cvec"),
+            F.lit(cid).alias("cid"),
+        )
+        for cid, cv in cents
+    ])
+    return F.array_min(
+        F.transform(
+            cent_arr,
+            lambda c: F.struct(
+                F.round(V.l2_distance(vec, c["cvec"]), 6).alias("d"),
+                c["cid"].alias("cid"),
+            ),
+        )
+    )["cid"]
 
 
 def ivf_topk(
@@ -148,107 +199,45 @@ def ivf_topk(
     n_centroids: int = 16,
     n_probe: int = 4,
     seed: int = 42,
-    portable: bool = False,
     centroids: list[tuple] | None = None,
 ) -> DataFrame:
-    """IVF with deterministic sampled centroids (ids hashed by seed — a
+    """IVF with deterministic sampled centroids (``_md5_pick`` — a
     stand-in for k-means at small scale), or a pre-trained centroid set via
     ``centroids=[(cid, [float, ...]), ...]`` — feed it
     :func:`kmeans_centroids` output; at 100 TB the trained set is exactly
     this broadcast list.
 
-    Centroid ASSIGNMENT is an argmin over an array-of-centroids literal:
-    ``array_min(transform(centroids, c -> struct(l2(vec, c.cvec), c.cid)))``
-    — struct ordering gives (distance, cid) ties exactly like the former
-    row_number window, but with zero joins, zero shuffles, and no 16× row
-    inflation; the stage stays embarrassingly parallel whole-stage codegen.
+    Every vector is assigned to its ``_nearest_cid`` (zero joins, zero
+    shuffles, no row inflation) and only the vectors of the ``n_probe``
+    centroids nearest to the query are scored.
     """
     if centroids is not None:
-        cent_list = [(cid, [float(x) for x in cv]) for cid, cv in centroids]
-        return _ivf_probe(
-            df, query_vec, k, vec_col, id_col, n_probe, cent_list, portable
-        )
-    cent_sel = df.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
-    if portable:
-        # md5-string ordering is computable by any SQL engine (the oracle);
-        # distances are rounded to 6 decimals before the argmin/probe sort so
-        # double-accumulation-order differences across engines can't flip a
-        # near-tie assignment.
-        cent_sel = cent_sel.orderBy(
-            F.md5(F.concat(F.lit(f"ivf{seed}:"), F.col("cid").cast("string"))),
-            F.col("cid"),
-        )
+        cents = [(cid, [float(x) for x in cv]) for cid, cv in centroids]
     else:
-        cent_sel = cent_sel.orderBy(
-            F.pmod(F.xxhash64(F.col("cid"), F.lit(seed)), F.lit(1_000_003))
-        )
-    cent_rows = cent_sel.limit(n_centroids).collect()
-    if not cent_rows:
-        return df.select(
-            F.col(id_col), F.lit(0.0).alias("cosine")
-        ).limit(0)
-    cent_list = [(r["cid"], [float(x) for x in r["cvec"]]) for r in cent_rows]
-    return _ivf_probe(df, query_vec, k, vec_col, id_col, n_probe, cent_list, portable)
-
-
-def _ivf_probe(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int,
-    vec_col: str,
-    id_col: str,
-    n_probe: int,
-    cent_list: list[tuple],
-    portable: bool,
-) -> DataFrame:
-    """Argmin assignment + probe over a broadcast centroid list (shared by
-    the sampled and the kmeans-trained entry points)."""
-    if not cent_list:
+        cents = _md5_pick(df, vec_col, id_col, f"ivf{seed}:", n_centroids)
+    if not cents:
         return df.select(F.col(id_col), F.lit(0.0).alias("cosine")).limit(0)
-    q = _query_lit(query_vec)
-
-    cent_arr = F.array(*[
-        F.struct(
-            F.array(*[F.lit(x) for x in cv]).alias("cvec"),
-            F.lit(cid).alias("cid"),
-        )
-        for cid, cv in cent_list
-    ])
-    def dist_expr(c):
-        d = V.l2_distance(F.col(vec_col), c["cvec"])
-        return F.round(d, 6) if portable else d
-
-    nearest = F.array_min(
-        F.transform(
-            cent_arr,
-            lambda c: F.struct(
-                dist_expr(c).alias("d"),
-                c["cid"].alias("cid"),
-            ),
-        )
-    )["cid"]
 
     # probe set: driver-side argsort over the same IEEE double fold the JVM
-    # expression uses (element-order sum, then sqrt) — bit-identical
+    # expression uses (element-order sum, then sqrt), rounded like it
     def l2(u) -> float:
         acc = 0.0
         for x, y in zip(u, query_vec):
             acc += (float(x) - float(y)) ** 2
-        d = math.sqrt(acc)
-        return round(d, 6) if portable else d
+        return float(_round6(math.sqrt(acc)))
 
     probe_cids = [
         cid for cid, _ in sorted(
-            ((cid, l2(cv)) for cid, cv in cent_list),
+            ((cid, l2(cv)) for cid, cv in cents),
             key=lambda t: (t[1], t[0]),
         )[:n_probe]
     ]
     return (
-        df.withColumn("cid", nearest)
+        df.withColumn("cid", _nearest_cid(F.col(vec_col), cents))
         .filter(F.col("cid").isin(probe_cids))
         .select(
             F.col(id_col),
-            F.round(V.cosine(F.col(vec_col), q), 6).alias("cosine"),
+            F.round(V.cosine(F.col(vec_col), _query_lit(query_vec)), 6).alias("cosine"),
         )
         .orderBy(F.desc("cosine"), F.col(id_col))
         .limit(k)
@@ -263,7 +252,6 @@ def pairwise_cosine_dedup(
     n_planes: int | None = None,
     corpus_size: int | None = None,
     max_bucket: int | None = None,
-    portable: bool = False,
 ) -> DataFrame:
     """Embedding near-dup pairs: LSH-bucket candidates then exact cosine —
     same verify-after-blocking discipline as MinHash-LSH text dedup.
@@ -277,16 +265,7 @@ def pairwise_cosine_dedup(
     """
     if n_planes is None:
         n_planes = auto_n_planes(corpus_size if corpus_size is not None else df.count())
-    if portable:
-        bucketed = df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("vec"),
-            V.lsh_bucket_portable(F.col(vec_col), n_planes).alias("bucket"),
-        )
-    else:
-        # Arrow sign-projection bucketing (same md5-parity planes as the
-        # portable variant — bucket ids agree; interpreted-HOF cost gone)
-        bucketed = _arrow_bucket_stage(df, n_planes, id_col, vec_col)
+    bucketed = _arrow_bucket_stage(df, n_planes, id_col, vec_col)
     if max_bucket is not None:
         sizes = bucketed.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_bucket"))
         bucketed = (
@@ -301,25 +280,18 @@ def pairwise_cosine_dedup(
             (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id")),
         )
     )
-    if portable:
-        scored = cand.select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.round(V.cosine(F.col("a.vec"), F.col("b.vec")), 6).alias("cosine"),
+    scored = _arrow_cosine_stage(
+        cand.select(
+            F.col("a.id").alias("vec_id"),
+            F.col("b.id").alias("nb_id"),
+            F.col("a.vec").alias("qv"),
+            F.col("b.vec").alias("cv"),
         )
-    else:
-        scored = _arrow_cosine_stage(
-            cand.select(
-                F.col("a.id").alias("vec_id"),
-                F.col("b.id").alias("nb_id"),
-                F.col("a.vec").alias("qv"),
-                F.col("b.vec").alias("cv"),
-            )
-        ).select(
-            F.col("vec_id").alias("id_a"),
-            F.col("nb_id").alias("id_b"),
-            "cosine",
-        )
+    ).select(
+        F.col("vec_id").alias("id_a"),
+        F.col("nb_id").alias("id_b"),
+        "cosine",
+    )
     return scored.filter(F.col("cosine") >= threshold)
 
 
@@ -372,7 +344,6 @@ def knn_join_lsh(
     n_planes: int | None = None,
     multiprobe: int = 1,
     corpus_size: int | None = None,
-    portable: bool = False,
     probe_carry: str = "auto",
     queries: DataFrame | None = None,
 ) -> DataFrame:
@@ -425,26 +396,12 @@ def knn_join_lsh(
     if n_planes is None:
         n_rows = corpus_size if corpus_size is not None else df.count()
         n_planes = auto_n_planes(n_rows)
-    if portable:
-        base = df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("vec"),
-            V.lsh_bucket_portable(F.col(vec_col), n_planes).alias("bucket"),
-        ).localCheckpoint(eager=True)
-        qbase = base if queries is None else queries.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("vec"),
-            V.lsh_bucket_portable(F.col(vec_col), n_planes).alias("bucket"),
-        ).localCheckpoint(eager=True)
-    else:
-        # Arrow sign-projection bucketing — same md5-parity planes as the
-        # portable variant (bucket ids agree), vectorized
-        base = _arrow_bucket_stage(
-            df, n_planes, id_col, vec_col
-        ).localCheckpoint(eager=True)
-        qbase = base if queries is None else _arrow_bucket_stage(
-            queries, n_planes, id_col, vec_col
-        ).localCheckpoint(eager=True)
+    base = _arrow_bucket_stage(
+        df, n_planes, id_col, vec_col
+    ).localCheckpoint(eager=True)
+    qbase = base if queries is None else _arrow_bucket_stage(
+        queries, n_planes, id_col, vec_col
+    ).localCheckpoint(eager=True)
     self_knn = queries is None
     if probe_carry == "auto":
         if n_rows is None:
@@ -499,20 +456,10 @@ def knn_join_lsh(
         if self_knn:
             cand = cand.filter(F.col("vec_id") != F.col("nb_id"))
         cand = cand.select("vec_id", "nb_id", "qv", "cv")
-    if portable:
-        # HOF left-fold cosine: bit-matches the SQL oracle's fold
-        scored = cand.select(
-            "vec_id",
-            "nb_id",
-            F.round(V.cosine(F.col("qv"), F.col("cv")), 6).alias("cosine"),
-        )
-    else:
-        # fast path: candidate scoring is the hot loop (|probes|×bucket
-        # density pairs); interpreted HOF arithmetic costs ~10 µs/pair,
-        # the Arrow-batched numpy kernel ~10 ns/pair. Same round-6 output
-        # (numpy pairwise summation can differ in the last ulp — the
-        # portable variant keeps the fold the oracle reproduces).
-        scored = _arrow_cosine_stage(cand)
+    # candidate scoring is the hot loop (|probes|×bucket density pairs):
+    # interpreted HOF arithmetic costs ~10 µs/pair, the Arrow-batched
+    # numpy kernel ~10 ns/pair
+    scored = _arrow_cosine_stage(cand)
     w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.col("nb_id"))
     return (
         _partial_topk_stage(scored, k)
@@ -559,15 +506,11 @@ def _arrow_bucket_stage(
 ) -> DataFrame:
     """(id, vec, bucket) via one numpy sign-projection per Arrow batch.
 
-    Plane signs are the SAME md5-parity signs as ``V.lsh_bucket_portable``
-    (parity of the first hex nibble of md5('lsh{seed}:{p}:{i}')), built
-    once per (n_planes, dim) inside the kernel — so the fast path and the
-    oracle-portable path agree on every bucket id, and the whole stage is
-    a (rows × dim) · (dim × planes) matrix product instead of
-    n_planes interpreted HOF folds per row."""
-    import hashlib
-
-    import numpy as np
+    Plane signs are the md5-parity ``_plane_signs``, built once per
+    (n_planes, dim) inside the kernel, so the whole stage is a
+    (rows × dim) · (dim × planes) matrix product instead of n_planes
+    interpreted HOF folds per row; ``V.duckdb_lsh_bucket_sql`` is the
+    oracle's copy of the same bucket function."""
     import pandas as pd
 
     from pyspark.sql import types as ST
@@ -586,33 +529,17 @@ def _arrow_bucket_stage(
         def signs(dim: int) -> "np.ndarray":
             s = signs_cache.get(dim)
             if s is None:
-                s = np.array(
-                    [
-                        [
-                            1.0
-                            if int(
-                                hashlib.md5(
-                                    f"lsh{seed}:{p}:{i}".encode()
-                                ).hexdigest()[0],
-                                16,
-                            ) % 2 == 0
-                            else -1.0
-                            for i in range(dim)
-                        ]
-                        for p in range(n_planes)
-                    ]
-                )
-                signs_cache[dim] = s
+                s = signs_cache[dim] = np.array(_plane_signs(n_planes, dim, seed))
             return s
 
         weights = np.array([1 << p for p in range(n_planes)], dtype=np.int64)
         for pdf in batches:
             if not len(pdf):
                 continue
-            # Dirty-input parity with the portable Column path: a NULL
-            # embedding gets bucket NULL (dropped by the bucket equi-join)
-            # instead of raising in np.stack; ragged lengths are grouped by
-            # dim so each row buckets against signs of its own dimension.
+            # A NULL embedding gets bucket NULL (dropped by the bucket
+            # equi-join) instead of raising in np.stack; ragged lengths are
+            # grouped by dim so each row buckets against signs of its own
+            # dimension.
             vecs = pdf[vec_col].to_numpy()
             lens = np.array([-1 if v is None else len(v) for v in vecs])
             bucket = np.full(len(pdf), None, dtype=object)
@@ -634,7 +561,6 @@ def _arrow_cosine_stage(cand: DataFrame) -> DataFrame:
     """(vec_id, nb_id, qv, cv) → (vec_id, nb_id, cosine) via one numpy
     matrix pass per Arrow batch — the vectorized scorer for candidate
     pairs after LSH/IVF pruning."""
-    import numpy as np
     import pandas as pd
 
     from pyspark.sql import types as ST
@@ -665,7 +591,7 @@ def _arrow_cosine_stage(cand: DataFrame) -> DataFrame:
                 num = np.einsum("ij,ij->i", q, c)
                 den = np.linalg.norm(q, axis=1) * np.linalg.norm(c, axis=1)
                 with np.errstate(divide="ignore", invalid="ignore"):
-                    cos[ok] = np.round(np.where(den > 0, num / den, 0.0), 6)
+                    cos[ok] = _round6(np.where(den > 0, num / den, 0.0))
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"],
@@ -686,11 +612,10 @@ def kmeans_centroids(
     seed: int = 42,
 ) -> list[tuple]:
     """Distributed Lloyd's iterations for the IVF coarse quantizer — the
-    trained replacement for :func:`ivf_topk`'s hash-sampled stand-in.
+    trained replacement for :func:`ivf_topk`'s md5-sampled stand-in.
 
-    Per iteration: (1) assignment is the same zero-join argmin over the
-    broadcast array-of-centroids expression ivf_topk uses (embarrassingly
-    parallel, whole-stage codegen); (2) the update is posexplode →
+    Per iteration: (1) assignment is ivf_topk's zero-join
+    ``_nearest_cid`` argmin (embarrassingly parallel); (2) the update is posexplode →
     groupBy(cid, pos).avg — the shuffle carries (cid, pos, val) triples
     (≈ corpus × dim × 12 B with map-side partial aggregation), never whole
     vectors, and is skew-free because pos spreads every cluster over dim
@@ -710,24 +635,11 @@ def kmeans_centroids(
         return []
     vecs = df.select(F.col(vec_col).alias("vec")).localCheckpoint(eager=True)
     for _ in range(iters):
-        cent_arr = F.array(*[
-            F.struct(
-                F.array(*[F.lit(x) for x in cv]).alias("cvec"),
-                F.lit(cid).alias("cid"),
-            )
-            for cid, cv in cents
-        ])
-        nearest = F.array_min(
-            F.transform(
-                cent_arr,
-                lambda c: F.struct(
-                    V.l2_distance(F.col("vec"), c["cvec"]).alias("d"),
-                    c["cid"].alias("cid"),
-                ),
-            )
-        )["cid"]
         means = (
-            vecs.select(nearest.alias("cid"), F.posexplode("vec"))
+            vecs.select(
+                _nearest_cid(F.col("vec"), cents).alias("cid"),
+                F.posexplode("vec"),
+            )
             .groupBy("cid", "pos")
             .agg(F.avg("col").alias("m"))
             .groupBy("cid")
@@ -766,43 +678,29 @@ def pq_codebooks(
     id_col: str = "vec_id",
     seed: int = 77,
 ) -> list[list[list[float]]]:
-    """Deterministic sampled codebooks: ``n_codes`` rows picked in md5
-    order (the ivf_topk portable pick discipline), each sliced into ``m``
-    contiguous subvectors — codebooks[s][c] is code c of subspace s. A
-    SQL oracle reproduces the pick verbatim; :func:`pq_train` refines
-    these with per-subspace Lloyd's iterations."""
-    rows = (
-        df.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
-        .orderBy(
-            F.md5(F.concat(F.lit(f"pq{seed}:"), F.col("cid").cast("string"))),
-            F.col("cid"),
-        )
-        .limit(n_codes)
-        .collect()
-    )
+    """Deterministic sampled codebooks: ``n_codes`` rows picked by
+    ``_md5_pick`` (the ivf_topk pick), each sliced into ``m`` contiguous
+    subvectors — codebooks[s][c] is code c of subspace s. A SQL oracle
+    reproduces the pick verbatim; :func:`pq_train` refines these with
+    per-subspace Lloyd's iterations."""
+    rows = _md5_pick(df, vec_col, id_col, f"pq{seed}:", n_codes)
     if not rows:
         return []
-    dim = len(rows[0]["cvec"])
+    dim = len(rows[0][1])
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     dsub = dim // m
-    return [
-        [[float(x) for x in r["cvec"][s * dsub:(s + 1) * dsub]] for r in rows]
-        for s in range(m)
-    ]
+    return [[cv[s * dsub:(s + 1) * dsub] for _, cv in rows] for s in range(m)]
 
 
-def _pq_nearest(vec, book: list[list[float]], s: int, dsub: int, portable: bool):
-    """Argmin code for subspace s — same zero-join array_min(struct(d, code))
-    expression shape as _ivf_probe's assignment."""
-    sub = F.slice(vec, s * dsub + 1, dsub)
-    entries = []
-    for c, cw in enumerate(book):
-        d = V.l2_distance(sub, F.array(*[F.lit(x) for x in cw]))
-        if portable:
-            d = F.round(d, 6)
-        entries.append(F.struct(d.alias("d"), F.lit(c).alias("code")))
-    return F.array_min(F.array(*entries))["code"]
+def _pq_codes(vec: Column, codebooks: list[list[list[float]]]) -> Column:
+    """array<int> of the nearest code per subspace — ``_nearest_cid`` over
+    each subspace's slice, the codeword index as the cid."""
+    dsub = len(codebooks[0][0])
+    return F.array(*[
+        _nearest_cid(F.slice(vec, s * dsub + 1, dsub), list(enumerate(book)))
+        for s, book in enumerate(codebooks)
+    ])
 
 
 def pq_encode(
@@ -810,17 +708,14 @@ def pq_encode(
     codebooks: list[list[list[float]]],
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    portable: bool = False,
 ) -> DataFrame:
     """(vec_id, codes array<int>) — the m-byte-per-vector index payload.
     Pure projection: m × n_codes subspace distances per row inside one
     select, no joins, no shuffles."""
-    m, dsub = len(codebooks), len(codebooks[0][0])
-    codes = F.array(*[
-        _pq_nearest(F.col(vec_col), codebooks[s], s, dsub, portable)
-        for s in range(m)
-    ])
-    return df.select(F.col(id_col).alias("vec_id"), codes.alias("codes"))
+    return df.select(
+        F.col(id_col).alias("vec_id"),
+        _pq_codes(F.col(vec_col), codebooks).alias("codes"),
+    )
 
 
 def pq_topk(
@@ -833,44 +728,22 @@ def pq_topk(
     seed: int = 77,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    portable: bool = False,
 ) -> DataFrame:
     """ADC top-k: encode each vector (argmin per subspace), reconstruct
     from the chosen codewords, score l2(query, reconstruction) — one
-    shuffle-free projection + TakeOrderedAndProject. ``portable=True``
-    keeps every fold a round-6 Column expression the DuckDB oracle
-    reproduces; the default path runs one Arrow/numpy kernel per batch
-    (same codebooks, same HALF_UP round-6, so codes and distances agree —
-    pytest-asserted twin parity). At 100 TB the scan for this query reads
-    only the codes column once the encode is materialized; here encode +
-    score fuse into a single stage over the raw vectors."""
+    Arrow/numpy kernel per batch (``_arrow_pq_stage``) + one
+    TakeOrderedAndProject, shuffle-free. Codes and distances use the
+    oracle's round-6 argmin. At 100 TB the scan for this query reads only
+    the codes column once the encode is materialized; here encode + score
+    fuse into a single stage over the raw vectors."""
     if codebooks is None:
         codebooks = pq_codebooks(df, m, n_codes, vec_col, id_col, seed)
     if not codebooks:
         return df.select(
             F.col(id_col).alias("vec_id"), F.lit(0.0).alias("adc_dist")
         ).limit(0)
-    m, dsub = len(codebooks), len(codebooks[0][0])
-    if not portable:
-        scored = _arrow_pq_stage(df, codebooks, query_vec, vec_col, id_col)
-        return scored.orderBy("adc_dist", "vec_id").limit(k)
-    recon_parts = []
-    for s in range(m):
-        code_s = _pq_nearest(F.col(vec_col), codebooks[s], s, dsub, True)
-        words = F.array(*[
-            F.array(*[F.lit(x) for x in cw]) for cw in codebooks[s]
-        ])
-        recon_parts.append(F.element_at(words, code_s + 1))
-    recon = F.concat(*recon_parts)
-    q = _query_lit(query_vec)
-    return (
-        df.select(
-            F.col(id_col).alias("vec_id"),
-            F.round(V.l2_distance(q, recon), 6).alias("adc_dist"),
-        )
-        .orderBy("adc_dist", "vec_id")
-        .limit(k)
-    )
+    scored = _arrow_pq_stage(df, codebooks, query_vec, vec_col, id_col)
+    return scored.orderBy("adc_dist", "vec_id").limit(k)
 
 
 def _arrow_pq_stage(
@@ -886,7 +759,6 @@ def _arrow_pq_stage(
     squared-distance to the query. NULL or wrong-dim vectors route to
     adc_dist NULL instead of failing the stage (the ADVICE null-route
     discipline)."""
-    import numpy as np
     import pandas as pd
 
     from pyspark.sql.types import DoubleType, StructField, StructType
@@ -895,9 +767,6 @@ def _arrow_pq_stage(
     mm, dsub = len(books), books[0].shape[1]
     dim = mm * dsub
     q = np.asarray(query_vec, dtype=np.float64)
-
-    def _round6(a):
-        return np.floor(a * 1e6 + 0.5) / 1e6  # HALF_UP, Spark F.round parity
 
     def gen(it):
         for pdf in it:
@@ -947,8 +816,8 @@ def pq_train(
 ) -> list[list[list[float]]]:
     """Per-subspace Lloyd's refinement of :func:`pq_codebooks` — real PQ
     training, all m subspaces fused into ONE job per iteration: the
-    assignment is the same zero-join argmin expression pq_encode uses
-    (computed once per row for every subspace), and the update shuffles
+    assignment is pq_encode's ``_pq_codes`` (computed once per row for
+    every subspace), and the update shuffles
     (s, code, pos, val) quadruples with map-side partial aggregation —
     ≈ corpus × dim × 16 B, never whole vectors, skew-free because pos
     spreads every codeword over dsub keys. The m × n_codes × dsub result
@@ -961,10 +830,7 @@ def pq_train(
     dsub = len(books[0][0])
     vecs = df.select(F.col(vec_col).alias("vec")).localCheckpoint(eager=True)
     for _ in range(iters):
-        codes = F.array(*[
-            _pq_nearest(F.col("vec"), books[s], s, dsub, False)
-            for s in range(m)
-        ])
+        codes = _pq_codes(F.col("vec"), books)
         sub = F.floor(F.col("pos") / dsub).cast("int")
         # codes must resolve in their own select: a posexplode in the same
         # projection sends the struct-min through the Generate rewrite,
@@ -997,12 +863,10 @@ def semdedup(
     id_col: str = "vec_id",
     seed: int = 91,
     centroids: list[list[float]] | None = None,
-    portable: bool = False,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic dedup that buckets by
     k-means cluster instead of LSH plane — assign every vector to its
-    nearest centroid (the same zero-join argmin expression ivf_topk
-    uses), compare pairs only WITHIN a cluster, and mark as duplicate
+    nearest centroid (ivf_topk's zero-join ``_nearest_cid`` argmin), compare pairs only WITHIN a cluster, and mark as duplicate
     any item that has a lower-id neighbor with cosine ≥ ``threshold``
     (the deterministic keep-lowest-id variant of the paper's per-cluster
     pruning; transitive chains are the cluster-formation operator's job).
@@ -1013,50 +877,19 @@ def semdedup(
     ``n_clusters`` like auto_n_planes (≈ corpus/2^8) so per-cluster work
     stays constant as the corpus grows. ``centroids`` accepts a
     kmeans_centroids / externally trained list; by default centroids are
-    md5-picked rows (portable — the oracle reproduces the pick) or
-    xxhash-picked (fast).
+    ``_md5_pick`` rows (the oracle reproduces the pick).
     """
-    cent_sel = df.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
-    if centroids is not None:
-        cent_list = [(i, [float(x) for x in cv]) for i, cv in enumerate(centroids)]
-    else:
-        if portable:
-            cent_sel = cent_sel.orderBy(
-                F.md5(F.concat(F.lit(f"sdd{seed}:"), F.col("cid").cast("string"))),
-                F.col("cid"),
-            )
-        else:
-            cent_sel = cent_sel.orderBy(
-                F.pmod(F.xxhash64(F.col("cid"), F.lit(seed)), F.lit(1_000_003))
-            )
-        rows = cent_sel.limit(n_clusters).collect()
-        cent_list = [
-            (i, [float(x) for x in r["cvec"]]) for i, r in enumerate(rows)
-        ]
+    if centroids is None:
+        picked = _md5_pick(df, vec_col, id_col, f"sdd{seed}:", n_clusters)
+        centroids = [cv for _, cv in picked]
+    cent_list = [(i, [float(x) for x in cv]) for i, cv in enumerate(centroids)]
     if not cent_list:
         return df.select(
             F.col(id_col).alias("vec_id"),
             F.lit(None).cast("int").alias("cid"),
             F.lit(False).alias("is_dup"),
         ).limit(0)
-    cent_arr = F.array(*[
-        F.struct(
-            F.array(*[F.lit(x) for x in cv]).alias("cvec"),
-            F.lit(cid).alias("cid"),
-        )
-        for cid, cv in cent_list
-    ])
-
-    def dist_expr(c):
-        d = V.l2_distance(F.col(vec_col), c["cvec"])
-        return F.round(d, 6) if portable else d
-
-    nearest = F.array_min(
-        F.transform(
-            cent_arr,
-            lambda c: F.struct(dist_expr(c).alias("d"), c["cid"].alias("cid")),
-        )
-    )["cid"]
+    nearest = _nearest_cid(F.col(vec_col), cent_list)
     assigned = df.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec"),
         nearest.alias("cid"),
@@ -1361,7 +1194,6 @@ def cluster_quota_sample(
     id_col: str = "vec_id",
     seed: int = 77,
     centroids: list[list[float]] | None = None,
-    portable: bool = False,
     salt: str = "cqs",
 ) -> DataFrame:
     """Cluster-balanced corpus subsampling — the diversity-preserving
@@ -1379,9 +1211,12 @@ def cluster_quota_sample(
 
     Returns (vec_id, cid, rk) — rk is the within-cluster selection rank.
 
-    Scale shape: assignment is the zero-join argmin over the broadcast
-    centroid literal (ivf_topk's discipline — no row inflation, stays in
-    whole-stage codegen). Selection is two-level: each scan partition
+    Centroids are ``centroids`` (e.g. kmeans_centroids output) or
+    ``_md5_pick`` rows.
+
+    Scale shape: assignment is the zero-join ``_nearest_cid`` argmin over
+    the broadcast centroid literal (ivf_topk's discipline — no row
+    inflation). Selection is two-level: each scan partition
     keeps only its LOCAL per-cluster top-(quota) by the md5 draw, so the
     per-cid global rank window orders ≤ partitions × quota survivors —
     a hot mega-cluster never serializes through one window task (the
@@ -1391,23 +1226,10 @@ def cluster_quota_sample(
     """
     from pyspark.sql import Window
 
-    cent_sel = df.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
-    if centroids is not None:
-        cent_list = [(i, [float(x) for x in cv]) for i, cv in enumerate(centroids)]
-    else:
-        if portable:
-            cent_sel = cent_sel.orderBy(
-                F.md5(F.concat(F.lit(f"cqs{seed}:"), F.col("cid").cast("string"))),
-                F.col("cid"),
-            )
-        else:
-            cent_sel = cent_sel.orderBy(
-                F.pmod(F.xxhash64(F.col("cid"), F.lit(seed)), F.lit(1_000_003))
-            )
-        rows = cent_sel.limit(n_clusters).collect()
-        cent_list = [
-            (i, [float(x) for x in r["cvec"]]) for i, r in enumerate(rows)
-        ]
+    if centroids is None:
+        picked = _md5_pick(df, vec_col, id_col, f"cqs{seed}:", n_clusters)
+        centroids = [cv for _, cv in picked]
+    cent_list = [(i, [float(x) for x in cv]) for i, cv in enumerate(centroids)]
     empty = df.select(
         F.col(id_col).alias("vec_id"),
         F.lit(None).cast("int").alias("cid"),
@@ -1415,24 +1237,7 @@ def cluster_quota_sample(
     ).limit(0)
     if not cent_list or n_keep <= 0:
         return empty
-    cent_arr = F.array(*[
-        F.struct(
-            F.array(*[F.lit(x) for x in cv]).alias("cvec"),
-            F.lit(cid).alias("cid"),
-        )
-        for cid, cv in cent_list
-    ])
-
-    def dist_expr(c):
-        d = V.l2_distance(F.col(vec_col), c["cvec"])
-        return F.round(d, 6) if portable else d
-
-    nearest = F.array_min(
-        F.transform(
-            cent_arr,
-            lambda c: F.struct(dist_expr(c).alias("d"), c["cid"].alias("cid")),
-        )
-    )["cid"]
+    nearest = _nearest_cid(F.col(vec_col), cent_list)
 
     k = len(cent_list)
     base, rem = divmod(int(n_keep), k)

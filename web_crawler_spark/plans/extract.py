@@ -359,21 +359,6 @@ COMMODITY_SCHEMA = T.StructType(
     ]
 )
 
-SIMPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("name", T.StringType()),
-        T.StructField("current_price", T.DoubleType()),
-    ]
-)
-
-LINKS_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("link", T.StringType()),
-    ]
-)
-
 TEXT_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType()),
@@ -419,18 +404,6 @@ def commodity_table_stage(pages: DataFrame) -> DataFrame:
     return _has_table(pages.select("url", "html")).mapInPandas(gen, COMMODITY_SCHEMA)
 
 
-def simple_table_stage(pages: DataFrame) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                for r in extract_simple_rows(_decode(html)):
-                    rows.append((url, r["name"], r["current_price"]))
-            yield pd.DataFrame(rows, columns=["url", "name", "current_price"])
-
-    return _has_table(pages.select("url", "html")).mapInPandas(gen, SIMPLE_SCHEMA)
-
-
 COMBINED_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType()),
@@ -445,11 +418,12 @@ COMBINED_SCHEMA = T.StructType(
 def combined_extract_stage(pages: DataFrame) -> DataFrame:
     """ONE HTML parse per page emitting BOTH commodity-table rows (link
     NULL) and outlink rows (name/price NULL) — the streaming parser
-    collects tables and hrefs in the same pass, so the separate
-    link_stage + commodity_table_stage plans were paying the parse twice.
-    Callers split the result by null-ness of `link`; materialize it
-    (localCheckpoint) before splitting or each branch re-runs the stage.
-    Row semantics are byte-identical to the two dedicated stages."""
+    collects tables and hrefs in the same pass, so separate link and
+    commodity-table stages would pay the parse twice. Callers split the
+    result by null-ness of `link`; materialize it (localCheckpoint) before
+    splitting or each branch re-runs the stage. Rows are byte-identical to
+    :func:`commodity_table_stage` plus one row per :func:`extract_links`
+    href."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -467,21 +441,6 @@ def combined_extract_stage(pages: DataFrame) -> DataFrame:
     return pages.select("url", "html").mapInPandas(gen, COMBINED_SCHEMA)
 
 
-def link_stage(pages: DataFrame) -> DataFrame:
-    """The 'expand' stage input: href extraction (outlink explosion).
-    Relative→absolute resolution happens downstream with native exprs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                for link in extract_links(_decode(html)):
-                    rows.append((url, link))
-            yield pd.DataFrame(rows, columns=["url", "link"])
-
-    return pages.select("url", "html").mapInPandas(gen, LINKS_SCHEMA)
-
-
 ANCHORS_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType()),
@@ -494,7 +453,7 @@ ANCHORS_SCHEMA = T.StructType(
 def anchor_stage(pages: DataFrame) -> DataFrame:
     """(url, link, anchor) outlink rows with the anchor's visible text —
     the input of anchor-text aggregation (the classic search-index signal:
-    what *other* pages call a target). Hrefs match :func:`link_stage`
+    what *other* pages call a target). Hrefs match :func:`extract_links`
     exactly; feed through :func:`resolve_links` for absolute targets."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
