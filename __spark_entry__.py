@@ -3904,6 +3904,36 @@ def _q_bitext_margin_fast(spark, sf_dir):
     ).orderBy("x_id", "y_id")
 
 
+# The xxhash64 twins of the md5-certified dedup legs, tuned as in
+# production near-dup dedup: 4-row bands -> P(candidate) ~ 1-(1-J^4)^4, a
+# steep S-curve around J~0.5. Rows-only: xxhash64 signatures have no
+# DuckDB equivalent.
+def _q_minhash_lsh_fast(spark, sf_dir):
+    d = _t(spark, sf_dir, "documents")
+    return D.minhash_lsh_pairs(d, n=5, k=16, bands=4, threshold=0.5)
+
+
+def _q_knn_join_lsh_fast(spark, sf_dir):
+    """Batch k-NN with auto-sized LSH planes (rows-only: the plane count
+    follows the corpus size)."""
+    emb = _t(spark, sf_dir, "embeddings")
+    return SIM.knn_join_lsh(emb, k=3, multiprobe=1)
+
+
+def _q_dedup_clusters_fast(spark, sf_dir):
+    d = _t(spark, sf_dir, "documents")
+    pairs = D.minhash_lsh_pairs(d, n=5, k=16, bands=4, threshold=0.5)
+    return D.dedup_clusters(pairs, docs=d)
+
+
+def _q_incremental_dedup_fast(spark, sf_dir):
+    d = _t(spark, sf_dir, "documents")
+    idx = D.minhash_index(d.filter("doc_id % 3 != 0"), n=5, k=16)
+    return D.dedup_against_index(
+        d.filter("doc_id % 3 = 0"), idx, n=5, k=16, bands=4, threshold=0.5
+    )
+
+
 def _q_ann_pq_trained(spark, sf_dir):
     """PQ ADC top-k over Lloyd's-TRAINED codebooks (per-subspace k-means,
     one fused shuffle per iteration). Oracle form (property twin): float
@@ -4050,8 +4080,7 @@ def _q_crawl_budget_epochs(spark, sf_dir):
     seeds = seeds_from_pages(spark, 240, n_per_host=6, hot_factor=5, n_epochs=2)
     root = tempfile.mkdtemp(prefix="crawl_budget_")
     engine = CrawlEngine(
-        spark, root, pages, max_depth=0, use_bloom=False,
-        max_per_host_per_epoch=10,
+        spark, root, pages, max_depth=0, max_per_host_per_epoch=10,
     )
     engine.run(seeds, n_epochs=2)
     fetched = engine.catalog.read(spark, "fetched")
@@ -13355,9 +13384,13 @@ _register(
         "ann_pq_trained_topk": (_q_ann_pq_trained, _SQL_ANN_PQ_TRAINED),
         "crawl_budget_epochs": (_q_crawl_budget_epochs, _SQL_CRAWL_BUDGET_EPOCHS),
         # rows-only: no SQL-expressible oracle (auto-sized cross-set LSH
-        # neighbor sets, xxhash64 simhash, BPE merges, the mapInPandas HTML
-        # extraction, the epoch loop)
+        # neighbor sets, xxhash64 minhash and simhash, BPE merges, the
+        # mapInPandas HTML extraction, the epoch loop)
         "ann_bitext_margin_fast": (_q_bitext_margin_fast, None),
+        "ann_knn_join_lsh_fast": (_q_knn_join_lsh_fast, None),
+        "dd_minhash_lsh_pairs_fast": (_q_minhash_lsh_fast, None),
+        "dd_dedup_clusters_fast": (_q_dedup_clusters_fast, None),
+        "dd_incremental_dedup_fast": (_q_incremental_dedup_fast, None),
         "tx_corpus_mix_bpe": (_q_corpus_mix_bpe, None),
         "dd_simhash_pairs": (_q_simhash_pairs, None),
         "crawl_extract_pipeline": (_q_extract_pipeline, None),

@@ -305,7 +305,6 @@ def crawl_throughput(spark, n_pages: int, n_seeds_per_host: int, hot: int,
 
 def main() -> None:
     import __spark_entry__ as E
-    from web_crawler_spark.operators.dedup import minhash_lsh_pairs
     from web_crawler_spark.session import get_spark
 
     # sf0.1 parquet files are a few MB — split them like a real cluster
@@ -318,47 +317,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = E.queries()
-
-    # engine-internal fast minhash (xxhash64) for the bench, tuned as in
-    # production near-dup dedup: 4-row bands → P(candidate) ≈ 1-(1-J^4)^4,
-    # steep S-curve around J≈0.5 (the oracle-checked portable variant with
-    # looser params stays in correctness runs)
-    def _mh_fast(spark, sf_dir):
-        df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        return minhash_lsh_pairs(df, n=5, k=16, bands=4, threshold=0.5)
-
-    qs["dd_minhash_lsh_pairs_fast"] = _mh_fast
-
-    def _knn_fast(spark, sf_dir):
-        from web_crawler_spark.operators.similarity import knn_join_lsh
-
-        emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-        return knn_join_lsh(emb, k=3, multiprobe=1)
-
-    qs["ann_knn_join_lsh_fast"] = _knn_fast
-
-    def _clusters_fast(spark, sf_dir):
-        from web_crawler_spark.operators.dedup import dedup_clusters
-
-        df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        pairs = minhash_lsh_pairs(df, n=5, k=16, bands=4, threshold=0.5)
-        return dedup_clusters(pairs, docs=df)
-
-    qs["dd_dedup_clusters_fast"] = _clusters_fast
-
-    def _incremental_fast(spark, sf_dir):
-        from web_crawler_spark.operators.dedup import (
-            dedup_against_index,
-            minhash_index,
-        )
-
-        df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        idx = minhash_index(df.filter("doc_id % 3 != 0"), n=5, k=16)
-        return dedup_against_index(
-            df.filter("doc_id % 3 = 0"), idx, n=5, k=16, bands=4, threshold=0.5
-        )
-
-    qs["dd_incremental_dedup_fast"] = _incremental_fast
 
     # warmup: JIT/codegen/scan caches out of the timed region
     spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet")).count()

@@ -81,20 +81,24 @@ def test_politeness_schedule_and_audit(spark):
         (f"https://g.com/{i}", "g.com", i) for i in range(3)
     ]
     df = spark.createDataFrame(seeds, "url string, host string, priority int")
-    sched = P.politeness_schedule(df, F.lit("2025-07-22 09:00:00").cast("timestamp"), 2.0)
-    rows = sched.orderBy("host", "seq").collect()
-    # seq k fetches at epoch_start + (k-1)*delay
-    for r in rows:
-        assert (r["scheduled_ts"].second + r["scheduled_ts"].minute * 60) == (r["seq"] - 1) * 2
-    # audit operator finds zero violations on its own schedule
-    fetched = sched.withColumnRenamed("scheduled_ts", "fetch_ts")
-    assert P.politeness_check(fetched, 2.0).count() == 0
-    # and detects an injected violation
-    bad = fetched.withColumn(
-        "fetch_ts",
-        F.when(F.col("seq") == 2, F.timestamp_add("SECOND", F.lit(-1), F.col("fetch_ts"))).otherwise(F.col("fetch_ts")),
-    )
-    assert P.politeness_check(bad, 2.0).count() == 2  # both hosts violated
+    start = F.lit("2025-07-22 09:00:00").cast("timestamp")
+    # a fractional delay is kept to the millisecond, not truncated
+    for delay in (2.0, 1.5):
+        sched = P.politeness_schedule(df, start, delay)
+        rows = sched.orderBy("host", "seq").collect()
+        # seq k fetches at epoch_start + (k-1)*delay
+        t0 = rows[0]["scheduled_ts"]
+        for r in rows:
+            assert (r["scheduled_ts"] - t0).total_seconds() == (r["seq"] - 1) * delay
+        # audit operator finds zero violations on its own schedule
+        fetched = sched.withColumnRenamed("scheduled_ts", "fetch_ts")
+        assert P.politeness_check(fetched, delay).count() == 0
+        # and detects an injected violation
+        bad = fetched.withColumn(
+            "fetch_ts",
+            F.when(F.col("seq") == 2, F.timestamp_add("SECOND", F.lit(-1), F.col("fetch_ts"))).otherwise(F.col("fetch_ts")),
+        )
+        assert P.politeness_check(bad, delay).count() == 2  # both hosts violated
 
 
 # -- seen-set / bloom properties ---------------------------------------------
@@ -160,16 +164,16 @@ def test_epoch_resume_exactly(spark, catalog_dir):
 
     # full run
     full_dir = catalog_dir + "/full"
-    eng1 = CrawlEngine(spark, full_dir, pages, max_depth=1, use_bloom=False)
+    eng1 = CrawlEngine(spark, full_dir, pages, max_depth=1)
     eng1.run(seeds, n_epochs=3)
 
     # killed-after-epoch-1 run, then resume
     part_dir = catalog_dir + "/part"
-    eng2 = CrawlEngine(spark, part_dir, pages, max_depth=1, use_bloom=False)
+    eng2 = CrawlEngine(spark, part_dir, pages, max_depth=1)
     eng2.run_epoch(seeds, 0)
     eng2.run_epoch(seeds, 1)
     # "crash" — new engine instance resumes from the committed manifest
-    eng3 = CrawlEngine(spark, part_dir, pages, max_depth=1, use_bloom=False)
+    eng3 = CrawlEngine(spark, part_dir, pages, max_depth=1)
     results = eng3.run(seeds, n_epochs=3)
     assert [r.get("skipped", False) for r in results] == [True, True, False]
 
@@ -221,7 +225,7 @@ def test_per_host_epoch_budget_defers(spark, catalog_dir):
     seeds = seeds_from_pages(spark, 240, n_per_host=6, hot_factor=5, n_epochs=2)
 
     eng = CrawlEngine(
-        spark, catalog_dir + "/budget", pages, max_depth=0, use_bloom=False,
+        spark, catalog_dir + "/budget", pages, max_depth=0,
         max_per_host_per_epoch=10,
     )
     eng.run(seeds, n_epochs=2)
@@ -241,18 +245,19 @@ def test_per_host_epoch_budget_defers(spark, catalog_dir):
     assert refetched.count() > 0
 
 
-def _uncommit_seen_and_extracted(root, epoch):
-    """Simulate a crash inside ``epoch``'s commit window: every table is
-    committed EXCEPT seen and extracted (their data dirs stay behind,
-    uncommitted, as a killed run leaves them)."""
+def _uncommit(root, epoch, tables):
+    """Simulate a crash inside ``epoch``'s commit window: ``tables`` lose
+    their commit of ``epoch`` (their data dirs stay behind, uncommitted, as
+    a killed run leaves them; a table commits its lineage with its epoch)."""
     import json
     import os
 
-    for table in ("seen", "extracted"):
+    for table in tables:
         mpath = os.path.join(root, table, "_manifest.json")
         with open(mpath) as f:
             m = json.load(f)
         m["epochs"] = [e for e in m["epochs"] if e != epoch]
+        m.get("lineage", {}).pop(str(epoch), None)
         with open(mpath, "w") as f:
             json.dump(m, f)
 
@@ -270,16 +275,16 @@ def test_resume_after_mid_epoch_crash(spark, catalog_dir):
     seeds = generate_seeds(spark, n_per_host=3, hot_factor=3, n_epochs=2).cache()
 
     full_dir = catalog_dir + "/full2"
-    eng1 = CrawlEngine(spark, full_dir, pages, max_depth=1, use_bloom=False)
+    eng1 = CrawlEngine(spark, full_dir, pages, max_depth=1)
     eng1.run(seeds, n_epochs=2)
 
     crash_dir = catalog_dir + "/crash"
-    eng2 = CrawlEngine(spark, crash_dir, pages, max_depth=1, use_bloom=False)
+    eng2 = CrawlEngine(spark, crash_dir, pages, max_depth=1)
     eng2.run_epoch(seeds, 0)
     eng2.run_epoch(seeds, 1)
-    _uncommit_seen_and_extracted(crash_dir, 1)
+    _uncommit(crash_dir, 1, ("seen", "extracted"))
 
-    eng3 = CrawlEngine(spark, crash_dir, pages, max_depth=1, use_bloom=False)
+    eng3 = CrawlEngine(spark, crash_dir, pages, max_depth=1)
     results = eng3.run(seeds, n_epochs=2)
     assert [r.get("skipped", False) for r in results] == [True, False]
 
@@ -305,8 +310,10 @@ _GATED_ROBOTS = {
 # Spark jobs each epoch of the gated crawl below may run (measured: the
 # admission pipeline is materialised once per epoch, the budgets are
 # water-filled on the driver from one collected per-host demand table,
-# and the fetched counters ride on the fetched commit's write)
+# and the epoch counters are observed on the fetched checkpoint's job)
 _GATED_JOB_BUDGET = [26, 30]
+# the catalog tables an epoch commits, `seen` last
+_TABLES = ("fetched", "extracted", "outlinks", "metrics", "deferred", "seen")
 
 
 def _gated_engine(spark, root, pages):
@@ -316,7 +323,7 @@ def _gated_engine(spark, root, pages):
         sorted(_GATED_ROBOTS.items()), "host string, body string"
     )
     return CrawlEngine(
-        spark, root, pages, max_depth=1, use_bloom=False,
+        spark, root, pages, max_depth=1,
         robots_pages=robots, agent="sparkcrawl", epoch_fetch_capacity=24,
     )
 
@@ -360,24 +367,37 @@ def test_gated_crawl_job_budget(spark, gated_crawl):
     assert all(j <= b for j, b in zip(jobs, _GATED_JOB_BUDGET)), jobs
 
 
-def test_gated_resume_after_mid_epoch_crash(spark, gated_crawl, tmp_path):
-    """Crash after epoch 1's fetched and deferred commits, before seen:
-    the resumed epoch finds fetched committed (its write, and so its
-    counter observation, is skipped), still returns the uninterrupted
-    run's counters, and every table matches it row for row."""
+@pytest.mark.parametrize(
+    "lost, job_budget",
+    [
+        pytest.param(_TABLES[1:], 29, id="after_fetched"),
+        pytest.param(("seen",), 21, id="before_seen"),
+        pytest.param(("extracted", "seen"), 22, id="before_extracted_and_seen"),
+    ],
+)
+def test_gated_resume_after_mid_epoch_crash(spark, gated_crawl, tmp_path, lost, job_budget):
+    """Crash inside epoch 1's commit window, with the ``lost`` tables not
+    yet committed: the resumed epoch commits only those, returns the
+    uninterrupted run's counters (observed on the fetched checkpoint,
+    which a resumed epoch runs too) within its job budget, and all six
+    tables match the uninterrupted run row for row."""
     pages, seeds, full, stats, _jobs = gated_crawl
     crash_dir = str(tmp_path / "crash")
     eng = _gated_engine(spark, crash_dir, pages)
     eng.run_epoch(seeds, 0)
     eng.run_epoch(seeds, 1)
-    _uncommit_seen_and_extracted(crash_dir, 1)
+    _uncommit(crash_dir, 1, lost)
 
     resumed = _gated_engine(spark, crash_dir, pages)
-    assert 1 in resumed.catalog.committed_epochs("fetched")
-    assert 1 in resumed.catalog.committed_epochs("deferred")
+    for table in _TABLES:
+        assert (1 in resumed.catalog.committed_epochs(table)) == (table not in lost), table
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.numTotalJobs()
     assert resumed.run(seeds, n_epochs=2) == [{"epoch": 0, "skipped": True}, stats[1]]
+    jobs = scheduler.numTotalJobs() - before
+    assert jobs <= job_budget, jobs
 
-    for table in ("fetched", "seen", "extracted", "outlinks", "deferred"):
+    for table in _TABLES:
         a = full.catalog.read(spark, table)
         b = resumed.catalog.read(spark, table)
         assert sorted(resumed.catalog.committed_epochs(table)) == [0, 1], table
@@ -386,16 +406,18 @@ def test_gated_resume_after_mid_epoch_crash(spark, gated_crawl, tmp_path):
         ), f"{table} differs after resume"
 
 
-def test_seen_admits_once_across_epochs(spark, catalog_dir):
+def test_seen_admits_once_across_epochs(spark, catalog_dir, monkeypatch):
     """Cross-epoch duplicate seeds (1/3 of epoch>0 URLs repeat epoch 0's)
-    must be fetched exactly once."""
+    must be fetched exactly once, with the bloom pre-filter on."""
+    from web_crawler_spark.plans import epoch as EP
     from web_crawler_spark.plans.epoch import CrawlEngine
     from web_crawler_spark.sources.pages import generate_pages
     from web_crawler_spark.sources.seeds import generate_seeds
 
+    monkeypatch.setattr(EP, "BLOOM_MIN_SEEN_ROWS", 0)
     pages = generate_pages(spark, 60, seed=42)
     seeds = generate_seeds(spark, n_per_host=3, hot_factor=2, n_epochs=2)
-    eng = CrawlEngine(spark, catalog_dir + "/c", pages, max_depth=0, use_bloom=True)
+    eng = CrawlEngine(spark, catalog_dir + "/c", pages, max_depth=0)
     eng.run(seeds, n_epochs=2)
     fetched = eng.catalog.read(spark, "fetched")
     dup = fetched.groupBy("url_hash").count().filter(F.col("count") > 1).count()
@@ -414,13 +436,13 @@ def test_empty_epoch_is_graceful(spark, catalog_dir):
     seeds = seeds_from_pages(spark, 120, n_per_host=4, hot_factor=3, n_epochs=1)
     replay = seeds.unionByName(seeds.withColumn("epoch", F.lit(1)))
 
-    eng = CrawlEngine(spark, catalog_dir + "/empty", pages, max_depth=0, use_bloom=False)
+    eng = CrawlEngine(spark, catalog_dir + "/empty", pages, max_depth=0)
     stats = eng.run(replay, n_epochs=2)
     assert stats[0]["fetched"] > 0
     assert stats[1] == {"epoch": 1, "fetched": 0, "ok": 0}
     # the empty epoch is COMMITTED (resume must not re-run it)
     assert eng.catalog.committed_epochs("seen") == [0, 1]
-    eng2 = CrawlEngine(spark, catalog_dir + "/empty", pages, max_depth=0, use_bloom=False)
+    eng2 = CrawlEngine(spark, catalog_dir + "/empty", pages, max_depth=0)
     assert eng2.run(replay, n_epochs=2) == [
         {"epoch": 0, "skipped": True}, {"epoch": 1, "skipped": True}
     ]
@@ -483,14 +505,14 @@ def test_auto_compaction_mid_crawl_preserves_resume(spark, tmp_path):
     pages = generate_pages(spark, 120)
     seeds = generate_seeds(spark, n_per_host=3, hot_factor=2, n_epochs=3)
     root = str(tmp_path / "cat")
-    eng = CrawlEngine(spark, root, pages, max_depth=0, use_bloom=False,
+    eng = CrawlEngine(spark, root, pages, max_depth=0,
                       compact_every=2)
     stats = eng.run(seeds, n_epochs=3)
     assert [s.get("skipped", False) for s in stats] == [False] * 3
     assert eng.catalog.manifest("seen").get("compaction", {}).get("upto") == 1
     total = eng.catalog.read(spark, "seen").count()
     # resume skips all three epochs and the compacted reads still resolve
-    eng2 = CrawlEngine(spark, root, pages, max_depth=0, use_bloom=False)
+    eng2 = CrawlEngine(spark, root, pages, max_depth=0)
     assert all(s["skipped"] for s in eng2.run(seeds, n_epochs=3))
     assert eng2.catalog.read(spark, "seen").count() == total
     assert eng2.catalog.committed_epochs("seen") == [0, 1, 2]
@@ -743,10 +765,11 @@ def test_opic_update_conserves_cash(spark):
             got[n]["history"] + got[n]["cash"])
 
 
-def test_seen_filter_cuckoo_engine_parity(spark, catalog_dir):
-    """The cuckoo seen-filter epoch path admits each URL exactly once and
-    fetches the identical URL set as the bloom path (both pre-filters are
-    optimization-only in front of the same exact anti-join)."""
+def test_seen_bloom_engine_parity(spark, catalog_dir, monkeypatch):
+    """The bloom pre-filter is optimization-only in front of the exact
+    anti-join: with it on from the first seen row, the crawl commits the
+    same fetched rows as the exact path."""
+    from web_crawler_spark.plans import epoch as EP
     from web_crawler_spark.plans.epoch import CrawlEngine
     from web_crawler_spark.sources.pages import generate_pages
     from web_crawler_spark.sources.seeds import generate_seeds
@@ -754,20 +777,15 @@ def test_seen_filter_cuckoo_engine_parity(spark, catalog_dir):
     pages = generate_pages(spark, 60, seed=42).cache()
     seeds = generate_seeds(spark, n_per_host=3, hot_factor=2, n_epochs=2)
 
-    ck = CrawlEngine(spark, catalog_dir + "/ck", pages, max_depth=0,
-                     seen_filter="cuckoo")
-    ck.run(seeds, n_epochs=2)
-    fetched_ck = ck.catalog.read(spark, "fetched")
-    assert fetched_ck.groupBy("url_hash").count().filter(
-        F.col("count") > 1).count() == 0
-
-    bl = CrawlEngine(spark, catalog_dir + "/bl", pages, max_depth=0,
-                     use_bloom=True)
+    exact = CrawlEngine(spark, catalog_dir + "/exact", pages, max_depth=0)
+    exact.run(seeds, n_epochs=2)
+    monkeypatch.setattr(EP, "BLOOM_MIN_SEEN_ROWS", 0)
+    bl = CrawlEngine(spark, catalog_dir + "/bl", pages, max_depth=0)
     bl.run(seeds, n_epochs=2)
-    a = {r["url_hash"] for r in fetched_ck.select("url_hash").collect()}
-    b = {r["url_hash"] for r in bl.catalog.read(spark, "fetched")
-         .select("url_hash").collect()}
-    assert a == b
+    a = exact.catalog.read(spark, "fetched")
+    b = bl.catalog.read(spark, "fetched")
+    assert a.count() > 0
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
 def test_circuit_breaker_semantics(spark):
@@ -1042,7 +1060,7 @@ def test_epoch_fetch_capacity_waterfills(spark, catalog_dir):
     seeds = seeds_from_pages(spark, 240, n_per_host=6, hot_factor=5, n_epochs=2)
 
     eng = CrawlEngine(
-        spark, catalog_dir + "/wf", pages, max_depth=0, use_bloom=False,
+        spark, catalog_dir + "/wf", pages, max_depth=0,
         epoch_fetch_capacity=40,
     )
     eng.run(seeds, n_epochs=2)
@@ -1079,7 +1097,7 @@ def test_epoch_fetch_capacity_with_per_host_cap(spark, catalog_dir):
     seeds = seeds_from_pages(spark, 240, n_per_host=6, hot_factor=5, n_epochs=2)
     capacity, cap = 26, 5
     eng = CrawlEngine(
-        spark, catalog_dir + "/wfcap", pages, max_depth=0, use_bloom=False,
+        spark, catalog_dir + "/wfcap", pages, max_depth=0,
         epoch_fetch_capacity=capacity, max_per_host_per_epoch=cap,
     )
     eng.run(seeds, n_epochs=2)

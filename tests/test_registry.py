@@ -19,7 +19,9 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # the queries with no SQL-expressible oracle; a query that loses its oracle
 # shows up here instead of passing the gate on a row count
 ROWS_ONLY = {
-    "ann_bitext_margin_fast", "tx_corpus_mix_bpe", "dd_simhash_pairs",
+    "ann_bitext_margin_fast", "ann_knn_join_lsh_fast",
+    "dd_minhash_lsh_pairs_fast", "dd_dedup_clusters_fast",
+    "dd_incremental_dedup_fast", "tx_corpus_mix_bpe", "dd_simhash_pairs",
     "crawl_extract_pipeline", "crawl_epochs_e2e",
 }
 
@@ -34,7 +36,7 @@ def test_register_rejects_a_registered_name():
 
 def test_oracles_are_a_subset_of_queries():
     qs, oracles = E.queries(), E.oracle_sql()
-    assert len(qs) == 370
+    assert len(qs) == 374
     assert len(oracles) == 365
     assert oracles.keys() <= qs.keys()
 
@@ -69,29 +71,14 @@ def test_each_name_in_exactly_one_register_entry():
 
 
 def test_bench_headline_names_resolve():
-    """Every ``HEADLINE`` leg of bench.py is a registered query or one of
-    the names ``main()`` assigns into the query table; a stale name would
-    otherwise raise ``KeyError`` only when the bench reaches it."""
-    tree = _parse("bench.py")
+    """Every ``HEADLINE`` leg of bench.py is a registered query; a stale
+    name would otherwise raise ``KeyError`` only when the bench reaches it."""
     (headline,) = [
         node.value
-        for node in tree.body
+        for node in _parse("bench.py").body
         if isinstance(node, ast.Assign) and getattr(node.targets[0], "id", None) == "HEADLINE"
     ]
-    names = [elt.value for elt in headline.elts]
-    (main,) = [
-        node for node in tree.body
-        if isinstance(node, ast.FunctionDef) and node.name == "main"
-    ]
-    assigned = {
-        target.slice.value
-        for node in ast.walk(main)
-        if isinstance(node, ast.Assign)
-        for target in node.targets
-        if isinstance(target, ast.Subscript) and getattr(target.value, "id", None) == "qs"
-    }
-    assert assigned, "bench.py main() no longer assigns into qs"
-    missing = [n for n in names if n not in E.queries() and n not in assigned]
+    missing = [elt.value for elt in headline.elts if elt.value not in E.queries()]
     assert missing == []
 
 

@@ -9,7 +9,8 @@ Column expressions (JVM-side) so they survive a 100 TB corpus scan:
 
 MinHash uses ``md5(seed || shingle)`` with lexicographic min so the exact
 same signature is computable by any ANSI-SQL engine (the DuckDB oracle).
-The engine-internal fast path uses ``xxhash64`` (see ``minhash_fast``).
+The engine-internal fast path, ``minhash_from_grams(..., portable=False)``,
+uses ``xxhash64``.
 """
 
 from __future__ import annotations
@@ -233,17 +234,6 @@ def minhash_from_hashes(ghash: Column, k: int = 16) -> Column:
         return lambda h: F.xxhash64(h, F.lit(i))
 
     return F.array(*[F.array_min(F.transform(ghash, perm(i))) for i in range(k)])
-
-
-def minhash_signature(text: Column, n: int = 3, k: int = 16) -> Column:
-    """Portable (md5) MinHash from raw text — convenience for small inputs;
-    prefer minhash_from_grams in pipelines."""
-    return minhash_from_grams(shingles(text, n), k, portable=True)
-
-
-def minhash_fast(text: Column, n: int = 3, k: int = 16) -> Column:
-    """xxhash64 MinHash from raw text — convenience; prefer minhash_from_grams."""
-    return minhash_from_grams(shingles(text, n), k, portable=False)
 
 
 def simhash64(text: Column) -> Column:

@@ -27,6 +27,14 @@ def _seconds(c: Column) -> Column:
     return c.cast("timestamp").cast("double")
 
 
+def _after(start, offset_seconds: Column) -> Column:
+    """``start + offset_seconds`` at millisecond resolution, so a
+    fractional delay (1.5 s) is not truncated to whole seconds."""
+    return F.timestamp_add(
+        "MILLISECOND", (offset_seconds * 1000).cast("bigint"), start
+    )
+
+
 def crawl_order(
     frontier: DataFrame,
     host_col: str = "host",
@@ -56,11 +64,7 @@ def politeness_schedule(
     ordered = crawl_order(frontier, host_col, priority_col, url_col)
     return ordered.withColumn(
         "scheduled_ts",
-        F.timestamp_add(
-            "SECOND",
-            ((F.col("seq") - 1) * F.lit(delay_seconds)).cast("bigint"),
-            epoch_start,
-        ),
+        _after(epoch_start, (F.col("seq") - 1) * F.lit(delay_seconds)),
     )
 
 
@@ -262,12 +266,7 @@ def politeness_schedule_lanes(
     ordered = crawl_order(frontier, host_col, priority_col, url_col)
     s0 = F.col("seq") - 1
     return ordered.withColumn("lane", (s0 % c).cast("int")).withColumn(
-        "scheduled_ts",
-        F.timestamp_add(
-            "SECOND",
-            (F.floor(s0 / c) * F.lit(delay_seconds)).cast("bigint"),
-            epoch_start,
-        ),
+        "scheduled_ts", _after(epoch_start, F.floor(s0 / c) * F.lit(delay_seconds))
     )
 
 
@@ -316,11 +315,9 @@ def politeness_schedule_by_ip(
         "host",
         "seq",
         "url",
-        F.timestamp_add(
-            "SECOND",
-            ((F.col("seq") - 1) * F.lit(delay_seconds)).cast("bigint"),
-            epoch_start,
-        ).alias("scheduled_ts"),
+        _after(epoch_start, (F.col("seq") - 1) * F.lit(delay_seconds)).alias(
+            "scheduled_ts"
+        ),
     )
 
 
@@ -373,11 +370,9 @@ def politeness_schedule_by_site(
         "host",
         "seq",
         "url",
-        F.timestamp_add(
-            "SECOND",
-            ((F.col("seq") - 1) * F.lit(delay_seconds)).cast("bigint"),
-            epoch_start,
-        ).alias("scheduled_ts"),
+        _after(epoch_start, (F.col("seq") - 1) * F.lit(delay_seconds)).alias(
+            "scheduled_ts"
+        ),
     )
 
 

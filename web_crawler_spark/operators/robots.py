@@ -334,7 +334,7 @@ def politeness_schedule_with_delays(
 ) -> DataFrame:
     """F3 generalized: per-host Crawl-delay from robots (broadcast join)
     replaces the global constant; schedule stays closed-form."""
-    from .politeness import crawl_order
+    from .politeness import _after, crawl_order
 
     ordered = crawl_order(frontier, host_col, priority_col, url_col)
     with_delay = ordered.join(F.broadcast(delays), on=host_col, how="left").withColumn(
@@ -342,11 +342,7 @@ def politeness_schedule_with_delays(
     )
     return with_delay.withColumn(
         "scheduled_ts",
-        F.timestamp_add(
-            "MILLISECOND",
-            ((F.col("seq") - 1) * F.col("delay_seconds") * 1000).cast("bigint"),
-            epoch_start,
-        ),
+        _after(epoch_start, (F.col("seq") - 1) * F.col("delay_seconds")),
     )
 
 

@@ -4,12 +4,13 @@ One epoch = one BFS wave:
 
     frontier(epoch)
       → canonicalize + hash                      (native exprs)
-      → ANTI-JOIN vs seen (+ bloom pre-filter)   [shuffle: by url_hash]
+      → ANTI-JOIN vs seen (+ bloom pre-filter    [shuffle: by url_hash]
+        from BLOOM_MIN_SEEN_ROWS seen rows)
       → robots decision                          (broadcast rules)
       → repartition by salted host               [shuffle: by host-salt]
       → per-host crawl order + politeness window (row_number / closed form)
       → per-host budget (water-fill on the driver / cap), overflow deferred
-      → repartition by url_hash                  [shuffle: by url_hash]
+      → repartition by url_hash (4× cores)       [shuffle: by url_hash]
       → "fetch" = equi-join against the pages corpus on canonical_url
         (the offline corpus replaces live HTTP — SURVEY §2.1 S1)
       → extract (mapInPandas: tables / links / text)
@@ -35,7 +36,8 @@ the four frames that have more than one consumer, each once:
 * ``combined`` (the one-pass extraction) — read by ``extracted`` and
   ``outlinks``.
 
-The epoch counters are observed on the fetched commit's own write job.
+The epoch counters are observed on the ``fetched`` checkpoint's own job,
+which every run of an epoch performs, resumed or not.
 
 A killed run resumes exactly: every table commit is manifest-gated and
 keyed by epoch, so re-running epoch K is idempotent (the catalog skips
@@ -62,6 +64,11 @@ from . import extract as X
 
 EPOCH_CLOCK0 = datetime(2025, 7, 22, 9, 0, 0, tzinfo=timezone.utc)
 
+# the bloom pre-filter costs a build pass + broadcast per epoch, which
+# only pays once `seen` is big enough that skipping the anti-join shuffle
+# for ~99% of rows beats that cost; below it the exact anti-join runs alone
+BLOOM_MIN_SEEN_ROWS = 500_000
+
 
 def _counters():
     """The epoch counters over ``fetched``: rows and status=ok rows."""
@@ -82,13 +89,10 @@ class CrawlEngine:
         delay_seconds: float = 2.0,
         n_salts: int = 16,
         max_depth: int = 2,
-        use_bloom: bool | str = "auto",
-        seen_filter: str = "bloom",
         robots_pages: DataFrame | None = None,
         agent: str = "sparkcrawl",
         max_per_host_per_epoch: int | None = None,
         epoch_fetch_capacity: int | None = None,
-        target_rows_per_task: int = 500,
         compact_every: int | None = None,
     ):
         self.spark = spark
@@ -96,15 +100,6 @@ class CrawlEngine:
         self.delay_seconds = delay_seconds
         self.n_salts = n_salts
         self.max_depth = max_depth
-        self.use_bloom = use_bloom
-        # seen-set pre-filter family (north rule: "bloom/cuckoo-filter
-        # URL-seen set"): "bloom" (OR-mergeable bitmap, use_bloom gating
-        # applies) or "cuckoo" (sharded partial-key tables — deletion-
-        # capable, always on when selected). Either way the exact
-        # anti-join on url_hash stays the source of truth.
-        if seen_filter not in ("bloom", "cuckoo"):
-            raise ValueError(f"seen_filter must be 'bloom' or 'cuckoo', got {seen_filter!r}")
-        self.seen_filter = seen_filter
         self.agent = agent
         # per-host crawl budget: a hot host's frontier slice beyond this is
         # DEFERRED to the next epoch, not dropped. This is what bounds the
@@ -119,8 +114,6 @@ class CrawlEngine:
         # capacity exactly. Composes with max_per_host_per_epoch (the
         # effective budget is the lesser).
         self.epoch_fetch_capacity = epoch_fetch_capacity
-        # sizing target for the url_hash rebalance (see _rebalance_width)
-        self.target_rows_per_task = target_rows_per_task
         # auto-maintenance: compact+vacuum every N committed epochs (the
         # long-crawl small-file control; None = manual / CLI --compact)
         self.compact_every = compact_every
@@ -145,42 +138,6 @@ class CrawlEngine:
             .dropDuplicates(["url_hash"])
             .localCheckpoint()
         )
-
-    # ------------------------------------------------------------------
-    def _seen_rows_from_lineage(self) -> int:
-        """Seen-set cardinality from the commit lineage in the manifest —
-        no Spark job."""
-        lineage = self.catalog.manifest("seen").get("lineage", {})
-        return sum(e.get("fetched", 0) for e in lineage.values())
-
-    def _rebalance_width(self) -> int:
-        """Partition width for the url_hash rebalance, sized from the
-        PREVIOUS epoch's fetched count in the manifest lineage (no Spark
-        job): ~target_rows_per_task rows per task, clamped to [par, 4·par].
-
-        The fixed 4·par width is right at cluster scale (short Arrow tasks
-        absorb stragglers) but at small epoch sizes it splinters the work
-        into tasks of a few hundred rows where per-task scheduling
-        dominates the wall clock. Cold start (epoch 0, no lineage) keeps
-        the conservative 4·par.
-        """
-        par = self.spark.sparkContext.defaultParallelism
-        lineage = self.catalog.manifest("fetched").get("lineage", {})
-        if not lineage:
-            return par * 4
-        last_epoch = max(int(k) for k in lineage)
-        last_rows = lineage[str(last_epoch)].get("fetched", 0)
-        if not last_rows:
-            return par * 4
-        return max(par, min(par * 4, -(-last_rows // self.target_rows_per_task)))
-
-    def _bloom_decision(self) -> bool:
-        """use_bloom="auto": the bloom pre-filter costs a build pass +
-        broadcast per epoch, which only pays once `seen` is big enough that
-        skipping the anti-join shuffle for ~99% of rows beats that cost."""
-        if self.use_bloom != "auto":
-            return bool(self.use_bloom)
-        return self._seen_rows_from_lineage() >= 500_000
 
     # ------------------------------------------------------------------
     def _epoch_start(self, epoch: int):
@@ -240,26 +197,17 @@ class CrawlEngine:
         # dedup vs seen  [shuffle: url_hash]
         seen = self.catalog.read(self.spark, "seen", upto_epoch=epoch - 1)
         if seen is not None:
-            # expected_keys from the manifest lineage: the bloom bitmap is
-            # sized to the seen-set without a count() job (dedup.py::
-            # bloom_size_bits — no more fixed-capacity saturation)
-            if self.seen_filter == "cuckoo":
-                from ..operators import cuckoo as CK
-
-                # url_hash IS the engine's URL identity (xxhash64 of the
-                # canonical), so the filter keys on it directly and the
-                # exact anti-join on the same column stays the truth
-                frontier = CK.anti_join_seen_cuckoo(
-                    frontier, seen.select("url_hash"),
-                    key="url_hash", hash_key="url_hash",
-                    expected_keys=self._seen_rows_from_lineage() or None,
-                )
-            else:
-                frontier = D.anti_join_seen(
-                    frontier, seen,
-                    use_bloom=self._bloom_decision(),
-                    expected_keys=self._seen_rows_from_lineage(),
-                )
+            # the seen-set size from the commit lineage in the manifest (no
+            # Spark job) decides the bloom and sizes its bitmap
+            # (dedup.py::bloom_size_bits); the exact anti-join on url_hash
+            # stays the source of truth either way
+            lineage = self.catalog.manifest("seen").get("lineage", {})
+            seen_rows = sum(e.get("fetched", 0) for e in lineage.values())
+            frontier = D.anti_join_seen(
+                frontier, seen,
+                use_bloom=seen_rows >= BLOOM_MIN_SEEN_ROWS,
+                expected_keys=seen_rows,
+            )
 
         # robots gate (north_rule): denied URLs are still committed to
         # `seen` via a fetched row with status=robots_denied — admitted
@@ -326,11 +274,11 @@ class CrawlEngine:
         # fetch join, extraction, and every commit across all cores. The
         # rows are still slim here (no html) so this shuffle is cheap; at
         # 100 TB it is the same url_hash bucketing the corpus join needs.
-        # Width is lineage-informed (_rebalance_width): ~target rows/task,
-        # capped at 4× parallelism — overpartitioning keeps each python
-        # extraction task short at scale, while small epochs stop paying
-        # per-task scheduling for few-hundred-row tasks
-        scheduled = scheduled.repartition(self._rebalance_width(), F.col("url_hash"))
+        # 4× parallelism: overpartitioning keeps each python extraction
+        # task short, so a straggler holds back little of the epoch
+        scheduled = scheduled.repartition(
+            self.spark.sparkContext.defaultParallelism * 4, F.col("url_hash")
+        )
 
         # fetch = join against the offline corpus (broadcast-averse: both big)
         fetched = scheduled.join(
@@ -359,8 +307,11 @@ class CrawlEngine:
                 )
             )
         # materialised: extraction, outlinks' depth join, metrics, the
-        # fetched commit and the seen commit all read it
-        fetched = fetched.localCheckpoint()
+        # fetched commit and the seen commit all read it. The epoch
+        # counters ride on this checkpoint's job, which a resumed epoch
+        # runs too (its commits of already-committed tables run no job)
+        counted = Observation()
+        fetched = fetched.observe(counted, *_counters()).localCheckpoint()
 
         ok = fetched.filter(F.col("status") == "ok")
 
@@ -386,23 +337,13 @@ class CrawlEngine:
             "url", "name", "price", "change"
         ).withColumn("epoch", F.lit(epoch))
 
-        # the epoch counters ride on the fetched commit's own write job.
-        # A resumed epoch whose fetched table is already committed skips
-        # that write (commit_epoch runs no action then), so the
-        # observation would never fire: count with an agg on that path
-        fetched_rows = fetched.drop("html")
-        counted = None
-        if epoch not in self.catalog.committed_epochs("fetched"):
-            counted = Observation()
-            fetched_rows = fetched_rows.observe(counted, *_counters())
-
         # commit epoch snapshots (order matters: data first, seen last so a
         # crash can never mark a URL seen without its fetched row committed).
         # The data commits touch independent table dirs/manifests and all
         # derive from materialised frames — submit them as concurrent
         # Spark jobs, one lane each; only `seen` waits behind the barrier.
         commits = [
-            ("fetched", fetched_rows),
+            ("fetched", fetched.drop("html")),
             ("extracted", extracted),
             ("outlinks", outlinks.drop("epoch")),
             ("metrics", P.epoch_metrics(fetched)),
@@ -416,10 +357,7 @@ class CrawlEngine:
             ]
             for fut in futures:
                 fut.result()  # barrier: all data tables committed before seen
-        if counted is not None:
-            counts = counted.get
-        else:
-            counts = fetched.agg(*_counters()).collect()[0]
+        counts = counted.get
         n_fetched, n_ok = counts["n"], int(counts["ok"] or 0)
         self.catalog.commit_epoch(
             "seen", epoch,
