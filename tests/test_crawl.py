@@ -308,10 +308,13 @@ _GATED_ROBOTS = {
     "example-commodities.net": "User-agent: sparkcrawl\nDisallow: /simple_table/1\n",
 }
 # Spark jobs each epoch of the gated crawl below may run (measured: the
-# admission pipeline is materialised once per epoch, the budgets are
-# water-filled on the driver from one collected per-host demand table,
-# and the epoch counters are observed on the fetched checkpoint's job)
-_GATED_JOB_BUDGET = [26, 30]
+# admission pipeline is materialised once per epoch against robots rules
+# compiled once per engine, the schedule is shuffled once by (host, salt),
+# the budgets are water-filled on the driver from a per-host demand
+# observed on the schedule checkpoint, the epoch counters are observed on
+# the fetched checkpoint's job, and outlinks carry their depth out of
+# extraction)
+_GATED_JOB_BUDGET = [18, 22]
 # the catalog tables an epoch commits, `seen` last
 _TABLES = ("fetched", "extracted", "outlinks", "metrics", "deferred", "seen")
 
@@ -355,7 +358,8 @@ def gated_crawl(spark):
 def test_gated_crawl_job_budget(spark, gated_crawl):
     """Every frame with more than one consumer in an epoch (robots
     decision, budgeted schedule, fetched, extraction) is computed once,
-    and the counters cost no job of their own."""
+    and neither the counters nor the per-host demand cost a job of their
+    own."""
     _pages, _seeds, eng, stats, jobs = gated_crawl
     fetched = eng.catalog.read(spark, "fetched")
     # both the robots gate and the water-fill deferral ran in epoch 0
@@ -370,9 +374,9 @@ def test_gated_crawl_job_budget(spark, gated_crawl):
 @pytest.mark.parametrize(
     "lost, job_budget",
     [
-        pytest.param(_TABLES[1:], 29, id="after_fetched"),
-        pytest.param(("seen",), 21, id="before_seen"),
-        pytest.param(("extracted", "seen"), 22, id="before_extracted_and_seen"),
+        pytest.param(_TABLES[1:], 21, id="after_fetched"),
+        pytest.param(("seen",), 16, id="before_seen"),
+        pytest.param(("extracted", "seen"), 17, id="before_extracted_and_seen"),
     ],
 )
 def test_gated_resume_after_mid_epoch_crash(spark, gated_crawl, tmp_path, lost, job_budget):
@@ -406,6 +410,44 @@ def test_gated_resume_after_mid_epoch_crash(spark, gated_crawl, tmp_path, lost, 
         ), f"{table} differs after resume"
 
 
+def test_decide_robots_over_compiled_rules_matches_robots_decisions(spark):
+    """The engine's split robots path (rules compiled once, decided per
+    epoch) gives ``robots_decisions``' rows, matched rule and prefix
+    included, for the gated crawl's robots plus a host with both a ``*``
+    and an agent group, a ``*`` wildcard, a ``$`` anchor and an
+    allow/disallow tie."""
+    from web_crawler_spark.functions import urltools as U
+    from web_crawler_spark.operators import robots as RB
+
+    bodies = dict(_GATED_ROBOTS)
+    bodies["mixed.example"] = (
+        "User-agent: *\nDisallow: /\n\n"
+        "User-agent: sparkcrawl\nDisallow: /a/*/b\nAllow: /a/x/b\n"
+        "Disallow: /*.pdf$\nDisallow: /tie\nAllow: /tie\n"
+    )
+    rules = RB.parse_robots(
+        spark.createDataFrame(sorted(bodies.items()), "host string, body string")
+    )
+    paths = ["/", "/nasty/1", "/links/13", "/links/13/x", "/simple_table/1",
+             "/simple_table/10", "/a/y/b", "/a/x/b", "/a/b", "/doc.pdf",
+             "/doc.pdf?x=1", "/tie", "/other"]
+    urls = [f"https://{h}{p}" for h in [*bodies, "norules.example"] for p in paths]
+    frontier = U.with_url_columns(
+        spark.createDataFrame([(u,) for u in urls], "url string")
+    )
+    matched = set()
+    for agent in ("sparkcrawl", "otherbot"):
+        want = RB.robots_decisions(frontier, rules, agent)
+        got = RB.decide_robots(frontier, RB.compile_rules(rules, agent).localCheckpoint())
+        assert got.columns == want.columns
+        a, b = sorted(want.collect(), key=repr), sorted(got.collect(), key=repr)
+        assert a == b, agent
+        assert len(a) == len(urls)
+        assert {r["robots_allowed"] for r in a} == {True, False}
+        matched |= {r["matched_rule"] for r in a}
+    assert matched == {None, "allow", "disallow"}
+
+
 def test_seen_admits_once_across_epochs(spark, catalog_dir, monkeypatch):
     """Cross-epoch duplicate seeds (1/3 of epoch>0 URLs repeat epoch 0's)
     must be fetched exactly once, with the bloom pre-filter on."""
@@ -427,7 +469,8 @@ def test_seen_admits_once_across_epochs(spark, catalog_dir, monkeypatch):
 def test_empty_epoch_is_graceful(spark, catalog_dir):
     """An epoch whose entire frontier is already seen (fully-duplicate
     seeds) must commit empty snapshots and keep the loop running — empty
-    partitions are a classic distributed-engine crash site."""
+    partitions are a classic distributed-engine crash site. With a fetch
+    capacity, the per-host demand is observed over an empty schedule."""
     from web_crawler_spark.plans.epoch import CrawlEngine
     from web_crawler_spark.sources.pages import generate_pages
     from web_crawler_spark.sources.seeds import seeds_from_pages
@@ -436,16 +479,18 @@ def test_empty_epoch_is_graceful(spark, catalog_dir):
     seeds = seeds_from_pages(spark, 120, n_per_host=4, hot_factor=3, n_epochs=1)
     replay = seeds.unionByName(seeds.withColumn("epoch", F.lit(1)))
 
-    eng = CrawlEngine(spark, catalog_dir + "/empty", pages, max_depth=0)
-    stats = eng.run(replay, n_epochs=2)
-    assert stats[0]["fetched"] > 0
-    assert stats[1] == {"epoch": 1, "fetched": 0, "ok": 0}
-    # the empty epoch is COMMITTED (resume must not re-run it)
-    assert eng.catalog.committed_epochs("seen") == [0, 1]
-    eng2 = CrawlEngine(spark, catalog_dir + "/empty", pages, max_depth=0)
-    assert eng2.run(replay, n_epochs=2) == [
-        {"epoch": 0, "skipped": True}, {"epoch": 1, "skipped": True}
-    ]
+    for capacity in (None, 1000):
+        root = f"{catalog_dir}/empty_{capacity}"
+        eng = CrawlEngine(spark, root, pages, max_depth=0, epoch_fetch_capacity=capacity)
+        stats = eng.run(replay, n_epochs=2)
+        assert stats[0]["fetched"] > 0
+        assert stats[1] == {"epoch": 1, "fetched": 0, "ok": 0}
+        # the empty epoch is COMMITTED (resume must not re-run it)
+        assert eng.catalog.committed_epochs("seen") == [0, 1]
+        eng2 = CrawlEngine(spark, root, pages, max_depth=0, epoch_fetch_capacity=capacity)
+        assert eng2.run(replay, n_epochs=2) == [
+            {"epoch": 0, "skipped": True}, {"epoch": 1, "skipped": True}
+        ]
 
 
 def test_catalog_compaction_and_vacuum(spark, tmp_path):
@@ -810,6 +855,11 @@ def test_circuit_breaker_semantics(spark):
     assert got["ok.com"]["breaker_open"] is False
     assert got["ok.com"]["resume_ts"] is None
     assert got["new.com"]["breaker_open"] is False  # insufficient evidence
+    # a fractional cooldown is kept to the millisecond, not truncated
+    short = {r["host"]: r for r in
+             P.host_circuit_breaker(log, cooldown_seconds=1.5).collect()}
+    assert str(short["down.com"]["resume_ts"]) == "2025-01-01 00:00:12.500000"
+    assert short["ok.com"]["resume_ts"] is None
 
 
 def test_revalidation_headers(spark):

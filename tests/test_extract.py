@@ -214,3 +214,46 @@ def test_extract_links_rel_nofollow():
         ("/a", False), ("/b", True), ("/c", True), ("/d", False)]
     # the legacy surface is untouched
     assert extract_links(html) == ["/a", "/b", "/c", "/d"]
+
+
+def _combined_reference(pages):
+    """(url, name, price, change, link) rows of ``combined_extract_stage``
+    from the pure-Python extractors: a page's commodity rows, then one row
+    per href."""
+    out = []
+    for r in pages.select("url", "html").collect():
+        html = bytes(r["html"]).decode("utf-8", errors="replace")
+        out += [(r["url"], c["name"], c["price"], c["change"], None)
+                for c in extract_commodity_rows(html)]
+        out += [(r["url"], None, None, None, link) for link in extract_links(html)]
+    return out
+
+
+def test_combined_extract_stage_carries_extra_columns(spark):
+    """A ``(url, html)`` input gives the five extraction columns; any other
+    input column rides through unchanged onto each of its page's rows."""
+    from web_crawler_spark.plans.extract import COMBINED_SCHEMA, combined_extract_stage
+    from web_crawler_spark.sources.pages import generate_pages
+
+    pages = generate_pages(spark, 60, seed=11).select("url", "html").localCheckpoint()
+    want = _combined_reference(pages)
+    assert any(r[1] is not None for r in want) and any(r[4] is not None for r in want)
+
+    plain = combined_extract_stage(pages)
+    assert plain.schema == COMBINED_SCHEMA
+    assert sorted(plain.collect(), key=repr) == sorted(want, key=repr)
+
+    depth_of = {r["url"]: i % 3 for i, r in enumerate(pages.collect())}
+    with_depth = pages.join(
+        spark.createDataFrame(list(depth_of.items()), "url string, depth int"), "url"
+    )
+    got = combined_extract_stage(with_depth)
+    assert got.columns == [*COMBINED_SCHEMA.names, "depth"]
+    assert got.schema["depth"].dataType == with_depth.schema["depth"].dataType
+    rows = got.collect()
+    assert all(r["depth"] == depth_of[r["url"]] for r in rows)
+    assert sorted((tuple(r)[:5] for r in rows), key=repr) == sorted(want, key=repr)
+
+    empty = combined_extract_stage(with_depth.limit(0))
+    assert empty.schema == got.schema
+    assert empty.count() == 0

@@ -55,9 +55,10 @@ def test_waterfill_budgets_match_reference(demands, capacity):
 
 
 def test_over_budget_predicate_row_for_row(spark):
-    """The literal deferral predicate equals ``seq > budget[host]`` on
-    every row, with the per-host cap applied and a null host (no budget:
-    every row deferred) taking its share of the water-fill."""
+    """The literal deferral predicate, built on the driver from a
+    {host: demand} dict, equals ``seq > budget[host]`` on every row, with
+    the per-host cap applied and a null host (no budget: every row
+    deferred) taking its share of the water-fill."""
     from pyspark.sql import functions as F
 
     from web_crawler_spark.plans.epoch import over_budget
@@ -68,7 +69,7 @@ def test_over_budget_predicate_row_for_row(spark):
     for capacity, cap in ((14, None), (14, 3), (0, None), (100, 4)):
         budget = {h: b for h, (b, _s) in waterfill_budgets(demand, capacity).items()}
         got = sched.select(
-            "host", "seq", over_budget(sched, capacity, cap).alias("over")
+            "host", "seq", over_budget(demand, capacity, cap).alias("over")
         ).collect()
         assert len(got) == len(rows)
         for r in got:

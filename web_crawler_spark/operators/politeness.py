@@ -40,10 +40,17 @@ def crawl_order(
     host_col: str = "host",
     priority_col: str = "priority",
     url_col: str = "url",
+    salt_col: str | None = None,
 ) -> DataFrame:
     """F2: per-host fetch sequence = seed-list priority order, URL tiebreak.
-    Matches the reference's sequential `for` loop order within each host."""
-    w = Window.partitionBy(host_col).orderBy(F.col(priority_col).asc(), F.col(url_col).asc())
+    Matches the reference's sequential `for` loop order within each host.
+
+    ``salt_col`` names a column that is a function of the host (the
+    per-epoch ``urltools.host_salt`` bucket): the window then partitions by
+    (host, salt), which groups the same rows, so a frontier already
+    repartitioned by (host, salt) is not shuffled again by host."""
+    keys = [host_col] if salt_col is None else [host_col, salt_col]
+    w = Window.partitionBy(*keys).orderBy(F.col(priority_col).asc(), F.col(url_col).asc())
     return frontier.withColumn("seq", F.row_number().over(w))
 
 
@@ -54,14 +61,16 @@ def politeness_schedule(
     host_col: str = "host",
     priority_col: str = "priority",
     url_col: str = "url",
+    salt_col: str | None = None,
 ) -> DataFrame:
     """F3: assign each URL its earliest polite fetch timestamp.
 
     scheduled_ts(host, seq) = epoch_start + (seq-1) * delay
     (the reference sleeps *before* every source after the first —
     base_scraper.py:117-119 — so seq 1 fetches at epoch_start).
+    ``salt_col`` as in :func:`crawl_order`.
     """
-    ordered = crawl_order(frontier, host_col, priority_col, url_col)
+    ordered = crawl_order(frontier, host_col, priority_col, url_col, salt_col)
     return ordered.withColumn(
         "scheduled_ts",
         _after(epoch_start, (F.col("seq") - 1) * F.lit(delay_seconds)),
@@ -177,8 +186,7 @@ def host_circuit_breaker(
         open_.alias("breaker_open"),
         F.when(
             open_,
-            F.timestamp_add("SECOND", F.lit(int(cooldown_seconds)),
-                            F.col(ts_col)),
+            _after(F.col(ts_col), F.lit(cooldown_seconds)),
         ).alias("resume_ts"),
     )
 

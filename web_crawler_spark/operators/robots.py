@@ -10,7 +10,9 @@ Implements the RFC 9309 core as relational algebra:
 * ``apply_robots`` — frontier ⟕ rules on host; per-URL longest-matching
   rule wins (Allow beats Disallow on equal length, empty Disallow = allow
   all); URLs with no rules or no matching group pass. One broadcast join
-  (the rules table is ~KB/host) + one window.
+  (the rules table is ~KB/host) + one window. The rules side is
+  ``compile_rules`` (agent-group pick, pattern → regex), the match is
+  ``decide_robots``; a crawl compiles once and decides every epoch.
 * ``crawl_delays`` — per-host Crawl-delay overrides for the politeness
   scheduler.
 
@@ -112,26 +114,14 @@ def parse_robots(robots_pages: DataFrame, host_col: str = "host",
     return robots_pages.select(host_col, body_col).mapInPandas(gen, ROBOTS_SCHEMA)
 
 
-def robots_decisions(
-    frontier: DataFrame,
-    rules: DataFrame,
-    agent: str = "*",
-    host_col: str = "host",
-    url_col: str = "canonical_url",
-) -> DataFrame:
-    """Per-URL robots decision WITHOUT filtering — the frontier plus
-    ``robots_allowed`` and, when a rule matched, ``matched_rule``
-    (allow/disallow) and ``matched_prefix`` (the winning pattern).
-    :func:`apply_robots` is this plus a filter; audits
-    (:func:`sitemap_robots_conflicts`) read the decision bit directly.
-
-    Longest-match-wins over allow/disallow prefixes for the given agent
-    (falling back to the ``*`` group when no agent-specific group exists);
-    ties go to allow; URLs from hosts with no rules pass.
-    """
-    path = F.coalesce(
-        F.try_parse_url(F.col(url_col), F.lit("PATH")), F.lit("/")
-    )
+def compile_rules(rules: DataFrame, agent: str = "*") -> DataFrame:
+    """The allow/disallow rules that apply to ``agent``, compiled for
+    :func:`decide_robots`: (r_host, rule, path_prefix, is_plain,
+    path_regex, prefix_len), one row per rule of each host's most specific
+    agent group (the ``agent`` group when the host has one, else ``*`` —
+    RFC 9309 §2.2.1). The table depends only on the rules and the agent, so
+    a crawl compiles it once and decides every epoch's frontier against
+    it."""
     # RFC 9309 §2.2.3 special characters: '*' matches any run, a TRAILING
     # '$' anchors the end; everything else is literal. Patterns are
     # compiled to regexes here (rule tables are broadcast-small);
@@ -152,7 +142,7 @@ def robots_decisions(
         & F.col("agent").isin(agent.lower(), "*")
     ).select(
         F.col("host").alias("r_host"),
-        "agent", "rule", "path_prefix",
+        "rule", "path_prefix",
         (~raw.contains("*") & ~anchored).alias("is_plain"),
         as_regex.alias("path_regex"),
         F.length("path_prefix").alias("prefix_len"),
@@ -162,15 +152,28 @@ def robots_decisions(
     best_agent = prefix_rules.groupBy("r_host").agg(
         F.max("agent_specificity").alias("best_spec")
     )
-    prefix_rules = prefix_rules.join(F.broadcast(best_agent), "r_host").filter(
+    return prefix_rules.join(F.broadcast(best_agent), "r_host").filter(
         F.col("agent_specificity") == F.col("best_spec")
-    )
+    ).drop("agent_specificity", "best_spec")
 
+
+def decide_robots(
+    frontier: DataFrame,
+    compiled: DataFrame,
+    host_col: str = "host",
+    url_col: str = "canonical_url",
+) -> DataFrame:
+    """The per-URL decision of :func:`robots_decisions` against rules
+    already compiled by :func:`compile_rules`: one broadcast match of the
+    URL path against its host's rules, then longest-match-wins per URL."""
+    path = F.coalesce(
+        F.try_parse_url(F.col(url_col), F.lit("PATH")), F.lit("/")
+    )
     matched = F.when(
         F.col("is_plain"), F.col("__path").startswith(F.col("path_prefix"))
     ).otherwise(F.rlike(F.col("__path"), F.col("path_regex")))
     joined = frontier.withColumn("__path", path).join(
-        F.broadcast(prefix_rules),
+        F.broadcast(compiled),
         (F.col(host_col) == F.col("r_host")) & matched,
         "left",
     )
@@ -190,11 +193,34 @@ def robots_decisions(
         decided.withColumn("matched_rule", F.col("rule"))
         .withColumn("matched_prefix", F.col("path_prefix"))
         .drop(
-            "__path", "__rn", "r_host", "agent", "rule", "path_prefix",
-            "is_plain", "path_regex",
-            "prefix_len", "agent_specificity", "best_spec",
+            "__path", "__rn", "r_host", "rule", "path_prefix",
+            "is_plain", "path_regex", "prefix_len",
         )
     )
+
+
+def robots_decisions(
+    frontier: DataFrame,
+    rules: DataFrame,
+    agent: str = "*",
+    host_col: str = "host",
+    url_col: str = "canonical_url",
+) -> DataFrame:
+    """Per-URL robots decision WITHOUT filtering — the frontier plus
+    ``robots_allowed`` and, when a rule matched, ``matched_rule``
+    (allow/disallow) and ``matched_prefix`` (the winning pattern).
+    :func:`apply_robots` is this plus a filter; audits
+    (:func:`sitemap_robots_conflicts`) read the decision bit directly.
+
+    Longest-match-wins over allow/disallow prefixes for the given agent
+    (falling back to the ``*`` group when no agent-specific group exists);
+    ties go to allow; URLs from hosts with no rules pass.
+
+    This is :func:`decide_robots` over :func:`compile_rules`; a caller
+    that decides many frontiers against the same rules (the crawl engine,
+    once per epoch) compiles once and calls :func:`decide_robots`.
+    """
+    return decide_robots(frontier, compile_rules(rules, agent), host_col, url_col)
 
 
 def apply_robots(
@@ -331,12 +357,14 @@ def politeness_schedule_with_delays(
     host_col: str = "host",
     priority_col: str = "priority",
     url_col: str = "url",
+    salt_col: str | None = None,
 ) -> DataFrame:
     """F3 generalized: per-host Crawl-delay from robots (broadcast join)
-    replaces the global constant; schedule stays closed-form."""
+    replaces the global constant; schedule stays closed-form. ``salt_col``
+    as in :func:`politeness.crawl_order`."""
     from .politeness import _after, crawl_order
 
-    ordered = crawl_order(frontier, host_col, priority_col, url_col)
+    ordered = crawl_order(frontier, host_col, priority_col, url_col, salt_col)
     with_delay = ordered.join(F.broadcast(delays), on=host_col, how="left").withColumn(
         "delay_seconds", F.coalesce(F.col("delay_seconds"), F.lit(default_delay))
     )

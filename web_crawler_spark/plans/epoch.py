@@ -6,9 +6,10 @@ One epoch = one BFS wave:
       → canonicalize + hash                      (native exprs)
       → ANTI-JOIN vs seen (+ bloom pre-filter    [shuffle: by url_hash]
         from BLOOM_MIN_SEEN_ROWS seen rows)
-      → robots decision                          (broadcast rules)
+      → robots decision                          (broadcast compiled rules)
       → repartition by salted host               [shuffle: by host-salt]
-      → per-host crawl order + politeness window (row_number / closed form)
+      → per-host crawl order + politeness window (row_number / closed form,
+        partitioned by (host, salt): no second shuffle)
       → per-host budget (water-fill on the driver / cap), overflow deferred
       → repartition by url_hash (4× cores)       [shuffle: by url_hash]
       → "fetch" = equi-join against the pages corpus on canonical_url
@@ -24,20 +25,26 @@ join and extraction need the rows spread back over every core.
 
 At crawl sizes an epoch is bound by its Spark job barriers, not by its
 data, and a lazy frame with several consumers re-runs its whole plan
-(every upstream shuffle) once per consumer. So an epoch materialises
-the four frames that have more than one consumer, each once:
+(every upstream shuffle) once per consumer. So the engine materialises,
+once per engine, the compiled robots rules (``robots.compile_rules``:
+the agent-group pick and the pattern regexes do not change between
+epochs) and the per-host crawl delays; and an epoch materialises the
+four frames that have more than one consumer, each once:
 
 * the robots decision — ``allowed`` and ``denied`` are two filters on it;
-* the politeness schedule — the per-host demand collect, the fetch side
-  and ``deferred`` read it; the last two are complementary filters on it,
-  so they always come from one evaluation of the plan;
-* ``fetched`` — read by extraction, the outlinks depth join, metrics and
-  the fetched and seen commits;
-* ``combined`` (the one-pass extraction) — read by ``extracted`` and
+* the politeness schedule — the fetch side and ``deferred`` are
+  complementary filters on it, so they always come from one evaluation
+  of the plan;
+* ``fetched`` — read by extraction, metrics and the fetched and seen
+  commits;
+* ``combined`` (the one-pass extraction, which carries each page's
+  ``depth`` onto its outlink rows) — read by ``extracted`` and
   ``outlinks``.
 
-The epoch counters are observed on the ``fetched`` checkpoint's own job,
-which every run of an epoch performs, resumed or not.
+Two driver-side figures are observed, not collected: the per-host demand
+the water-fill needs rides on the schedule checkpoint's job, and the
+epoch counters on the ``fetched`` checkpoint's job, which every run of an
+epoch performs, resumed or not.
 
 A killed run resumes exactly: every table commit is manifest-gated and
 keyed by epoch, so re-running epoch K is idempotent (the catalog skips
@@ -51,7 +58,7 @@ from collections import defaultdict
 from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import urltools as U
@@ -120,13 +127,19 @@ class CrawlEngine:
         if robots_pages is not None:
             # rules + per-host crawl delays: tiny tables, parsed once,
             # broadcast into every epoch (a real deployment refreshes them
-            # on a TTL — the `robots` table of SURVEY §1.3)
+            # on a TTL — the `robots` table of SURVEY §1.3). The rules are
+            # also compiled once for this agent: every epoch's decision
+            # reads the compiled table, not the raw one
             self.robots_rules = RB.parse_robots(robots_pages).localCheckpoint()
+            self.compiled_rules = RB.compile_rules(
+                self.robots_rules, agent
+            ).localCheckpoint()
             self.delays = RB.crawl_delays(
                 self.robots_rules, agent, delay_seconds
             ).localCheckpoint()
         else:
             self.robots_rules = None
+            self.compiled_rules = None
             self.delays = None
         # corpus keyed by canonical URL (what the frontier joins against);
         # localCheckpoint = "the keyed corpus table already exists" — on a
@@ -214,24 +227,27 @@ class CrawlEngine:
         # exactly once, never fetched. One decision pass, materialised:
         # allowed and denied are two filters on it
         denied = None
-        if self.robots_rules is not None:
-            decided = RB.robots_decisions(
-                frontier, self.robots_rules, self.agent
+        if self.compiled_rules is not None:
+            decided = RB.decide_robots(
+                frontier, self.compiled_rules
             ).drop("matched_rule", "matched_prefix").localCheckpoint()
             denied = decided.filter(~F.col("robots_allowed")).drop("robots_allowed")
             frontier = decided.filter(F.col("robots_allowed")).drop("robots_allowed")
 
-        # schedule  [shuffle: salted host]
+        # schedule  [shuffle: salted host]; the per-host windows partition
+        # by (host, salt) too, so this is the only shuffle of the schedule
         frontier = frontier.withColumn(
             "salt", U.host_salt(F.col("host"), F.lit(epoch), self.n_salts)
         ).repartition(F.col("host"), F.col("salt"))
         if self.delays is not None:
             scheduled = RB.politeness_schedule_with_delays(
-                frontier, self._epoch_start(epoch), self.delays, self.delay_seconds
+                frontier, self._epoch_start(epoch), self.delays,
+                self.delay_seconds, salt_col="salt",
             )
         else:
             scheduled = P.politeness_schedule(
-                frontier, self._epoch_start(epoch), self.delay_seconds
+                frontier, self._epoch_start(epoch), self.delay_seconds,
+                salt_col="salt",
             )
 
         # per-host epoch budget: overflow (seq > budget) is deferred to the
@@ -239,14 +255,29 @@ class CrawlEngine:
         # per host per epoch, nothing lost
         if self.epoch_fetch_capacity is None and self.max_per_host_per_epoch is None:
             return scheduled, denied, None
-        # one schedule, materialised: the demand collect, the fetch side
-        # and the deferred table all read the same rows
-        scheduled = scheduled.localCheckpoint()
+        # one schedule, materialised: the fetch side and the deferred
+        # table read the same rows
         if self.epoch_fetch_capacity is None:
+            scheduled = scheduled.localCheckpoint()
             over = F.col("seq") > self.max_per_host_per_epoch
         else:
+            # the per-host demand the water-fill needs, observed on the
+            # checkpoint's own job: a count over the schedule window's
+            # partitions (no new exchange), one (host, demand) per host
+            observed = Observation()
+            scheduled = scheduled.withColumn(
+                "demand",
+                F.count(F.lit(1)).over(Window.partitionBy("host", "salt")),
+            ).observe(
+                observed,
+                F.collect_list(
+                    F.when(F.col("seq") == 1, F.struct("host", "demand"))
+                ).alias("demand"),
+            ).localCheckpoint()
+            # the list arrives in task-completion order: key it by host
+            demand = {r["host"]: r["demand"] for r in observed.get["demand"]}
             over = over_budget(
-                scheduled, self.epoch_fetch_capacity, self.max_per_host_per_epoch
+                demand, self.epoch_fetch_capacity, self.max_per_host_per_epoch
             )
         deferred_out = scheduled.filter(over).select(
             "url", "priority", "host", "canonical_url", "url_hash", "depth"
@@ -306,8 +337,8 @@ class CrawlEngine:
                     F.lit(epoch).alias("epoch"),
                 )
             )
-        # materialised: extraction, outlinks' depth join, metrics, the
-        # fetched commit and the seen commit all read it. The epoch
+        # materialised: extraction, metrics, the fetched commit and the
+        # seen commit all read it. The epoch
         # counters ride on this checkpoint's job, which a resumed epoch
         # runs too (its commits of already-committed tables run no job)
         counted = Observation()
@@ -316,22 +347,17 @@ class CrawlEngine:
         ok = fetched.filter(F.col("status") == "ok")
 
         # extract + expand: ONE python parse per page yields both table
-        # rows and outlinks (combined_extract_stage); materialized before
-        # the split so neither branch re-runs the Arrow stage. The
-        # materialized rows are slim (no html).
+        # rows and outlinks (combined_extract_stage), each carrying its
+        # page's depth; materialized before the split so neither branch
+        # re-runs the Arrow stage. The materialized rows are slim (no html).
         combined = X.combined_extract_stage(
-            ok.select(F.col("canonical_url").alias("url"), "html")
+            ok.select(F.col("canonical_url").alias("url"), "html", "depth")
         ).localCheckpoint()
 
-        links = combined.filter(F.col("link").isNotNull()).select("url", "link")
+        links = combined.filter(F.col("link").isNotNull()).select("url", "link", "depth")
         outlinks = X.resolve_links(links).select(
-            F.col("url").alias("from_url"), "resolved_url",
-            F.lit(epoch).alias("epoch"),
+            F.col("url").alias("from_url"), "resolved_url", "depth",
         )
-        outlinks = outlinks.join(
-            fetched.select(F.col("canonical_url").alias("from_url"), "depth"),
-            "from_url",
-        ).select("from_url", "resolved_url", "depth", "epoch")
 
         extracted = combined.filter(F.col("name").isNotNull()).select(
             "url", "name", "price", "change"
@@ -345,7 +371,7 @@ class CrawlEngine:
         commits = [
             ("fetched", fetched.drop("html")),
             ("extracted", extracted),
-            ("outlinks", outlinks.drop("epoch")),
+            ("outlinks", outlinks),
             ("metrics", P.epoch_metrics(fetched)),
         ]
         if deferred_out is not None:
@@ -387,20 +413,16 @@ class CrawlEngine:
 
 
 def over_budget(
-    scheduled: DataFrame, capacity: int, max_per_host: int | None
+    demand: dict, capacity: int, max_per_host: int | None
 ) -> Column:
     """The predicate "this row is past its host's budget" over a
-    politeness schedule (``host``, ``seq``), for an epoch fetch capacity:
-    per-host demand is collected (one row per host), the budgets are
+    politeness schedule (``host``, ``seq``), for an epoch fetch capacity
+    and the schedule's per-host ``demand`` ({host: rows}): the budgets are
     water-filled on the driver (``aggregate.waterfill_budgets``, capped
     by ``max_per_host``), and only hosts whose budget is below their
     demand appear in it, grouped by budget as literal host sets — no
-    budgets join or broadcast. A null host has no budget, so all its rows
-    are over."""
-    demand = {
-        r["host"]: r["count"]
-        for r in scheduled.groupBy("host").count().collect()
-    }
+    budgets join or broadcast, and no Spark job. A null host has no
+    budget, so all its rows are over."""
     hosts_at = defaultdict(list)
     for host, (budget, _satisfied) in A.waterfill_budgets(demand, capacity).items():
         if max_per_host is not None:

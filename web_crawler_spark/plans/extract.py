@@ -423,22 +423,34 @@ def combined_extract_stage(pages: DataFrame) -> DataFrame:
     result by null-ness of `link`; materialize it (localCheckpoint) before
     splitting or each branch re-runs the stage. Rows are byte-identical to
     :func:`commodity_table_stage` plus one row per :func:`extract_links`
-    href."""
+    href.
+
+    Every input column other than ``url`` and ``html`` passes through
+    unchanged onto each of its page's output rows, after the
+    :data:`COMBINED_SCHEMA` columns: a key the caller needs downstream (the
+    crawl's ``depth``) rides through the Arrow stage instead of being
+    joined back on ``url``. A ``(url, html)`` input gives exactly
+    :data:`COMBINED_SCHEMA`."""
+    carried = [c for c in pages.columns if c not in ("url", "html")]
+    schema = T.StructType(
+        COMBINED_SCHEMA.fields + [pages.schema[c] for c in carried]
+    )
+    columns = [f.name for f in schema.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
+            for url, html, *rest in zip(
+                pdf["url"], pdf["html"], *(pdf[c] for c in carried)
+            ):
                 parsed = parse_html(_decode(html))
                 for r in _commodity_rows_from_parser(parsed):
-                    rows.append((url, r["name"], r["price"], r["change"], None))
+                    rows.append((url, r["name"], r["price"], r["change"], None, *rest))
                 for link in parsed.links:
-                    rows.append((url, None, None, None, link))
-            yield pd.DataFrame(
-                rows, columns=["url", "name", "price", "change", "link"]
-            )
+                    rows.append((url, None, None, None, link, *rest))
+            yield pd.DataFrame(rows, columns=columns)
 
-    return pages.select("url", "html").mapInPandas(gen, COMBINED_SCHEMA)
+    return pages.select("url", "html", *carried).mapInPandas(gen, schema)
 
 
 ANCHORS_SCHEMA = T.StructType(
