@@ -1,22 +1,18 @@
-"""Anchor-text extraction (plans/extract.extract_anchors / anchor_stage)
+"""Anchor-text extraction (the ``anchors`` of plans/extract.parse_html)
 and per-target aggregation (operators/graph.anchor_text_summary).
 
 Reference parity note: the reference crawler extracts hrefs only
 (pacong/scrapers/generic_scraper.py link walk); anchor text is the
 north-rule generalization — the in-link description signal a search/crawl
-prioritizer needs. Hrefs must stay byte-identical to extract_links.
+prioritizer needs. Hrefs must stay byte-identical to the parser's links.
 """
 
-from web_crawler_spark.plans.extract import (
-    anchor_stage,
-    extract_anchors,
-    extract_links,
-)
+from web_crawler_spark.plans.extract import parse_html
 
 
 def test_extract_anchors_basic():
     html = '<p><a href="/x">Gold <b>price</b></a> and <a href="#f">F</a></p>'
-    assert extract_anchors(html) == [("/x", "Gold price"), ("#f", "F")]
+    assert parse_html(html).anchors == [("/x", "Gold price"), ("#f", "F")]
 
 
 def test_anchor_hrefs_match_extract_links_exactly():
@@ -24,14 +20,14 @@ def test_anchor_hrefs_match_extract_links_exactly():
         '<a href="/a">one</a><a>no href</a><a href="">empty</a>'
         '<a href="/b"><img src="i.png"></a><a href="/c">tail'
     )
-    assert [h for h, _ in extract_anchors(html)] == extract_links(html)
+    assert [h for h, _ in parse_html(html).anchors] == parse_html(html).links
 
 
 def test_nested_anchor_auto_closes_and_eof_flush():
     # a new <a> closes the open one (illegal nesting, browser behavior);
     # an unclosed trailing <a> keeps its accumulated text
     html = '<a href="/a">first <a href="/b">second</a> tail <a href="/c">end'
-    assert extract_anchors(html) == [
+    assert parse_html(html).anchors == [
         ("/a", "first"),
         ("/b", "second"),
         ("/c", "end"),
@@ -40,25 +36,7 @@ def test_nested_anchor_auto_closes_and_eof_flush():
 
 def test_anchor_text_skips_script_and_collapses_chunks():
     html = '<a href="/x"> A <script>var x;</script> B \n C </a>'
-    assert extract_anchors(html) == [("/x", "A B C")]
-
-
-def test_anchor_stage_distributed(spark):
-    rows = [
-        ("http://h1.com/p", b'<a href="/x">Gold</a><a href="/y">Oil</a>'),
-        ("http://h2.com/q", b'<a href="http://h1.com/x">Gold price</a>'),
-        ("http://h3.com/r", b"no links here"),
-    ]
-    df = spark.createDataFrame(rows, "url string, html binary")
-    got = {
-        (r["url"], r["link"]): r["anchor"]
-        for r in anchor_stage(df).collect()
-    }
-    assert got == {
-        ("http://h1.com/p", "/x"): "Gold",
-        ("http://h1.com/p", "/y"): "Oil",
-        ("http://h2.com/q", "http://h1.com/x"): "Gold price",
-    }
+    assert parse_html(html).anchors == [("/x", "A B C")]
 
 
 def test_anchor_text_summary_semantics(spark):

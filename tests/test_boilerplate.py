@@ -1,59 +1,9 @@
-"""Boilerplate removal: HTML block segmentation, jusText-style
-classification with context smoothing, main-content reassembly."""
+"""Boilerplate removal: jusText-style block classification with context
+smoothing, main-content reassembly."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from web_crawler_spark.operators import boilerplate as B
-
-_PAGE = """
-<html><head><title>t</title><style>.x{color:red}</style>
-<script>var nav = "menu";</script></head>
-<body>
-<nav><a href="/">Home</a> <a href="/about">About</a> <a href="/contact">Contact</a></nav>
-<h1>The story of a crawler</h1>
-<p>The crawler is a program that walks the web and it is written for the
-purpose of fetching pages. It is the backbone of a search engine and of
-the training corpora that feed language models.</p>
-<p>It is polite to hosts and it is careful with the robots file, and that
-discipline is the reason operators tolerate it at all.</p>
-<div><a href="/p1">Related one</a> <a href="/p2">Related two</a></div>
-<p>Short tail.</p>
-<footer><a href="/tos">Terms</a> <a href="/privacy">Privacy</a></footer>
-</body></html>
-"""
-
-
-class TestSegmentation:
-    def test_blocks_and_link_density(self):
-        blocks = B._segment_html(_PAGE)
-        texts = [t for t, _ in blocks]
-        assert any(t.startswith("The crawler is a program") for t in texts)
-        # nav block is pure links -> link density 1.0
-        nav = next((ld for t, ld in blocks if "Home" in t), None)
-        assert nav == 1.0
-        prose = next(ld for t, ld in blocks if t.startswith("The crawler"))
-        assert prose == 0.0
-        # script/style text never leaks into blocks
-        assert not any("color:red" in t or "var nav" in t for t in texts)
-
-    def test_malformed_html_no_raise(self):
-        for bad in ["<p>unclosed <div><a href=", "<<<>>>", "", None,
-                    "<p>&bogus; &amp; ok</p>"]:
-            B._segment_html(bad)  # must not raise
-
-    def test_distributed_stage(self, spark):
-        pages = spark.createDataFrame(
-            [("u1", _PAGE), ("u2", "<p>plain</p>"), ("u3", None)],
-            "url string, html string",
-        )
-        out = B.html_blocks(pages).toPandas()
-        assert set(out[out["url"] == "u1"]["block_idx"]) == set(
-            range((out["url"] == "u1").sum())
-        )
-        assert (out[out["url"] == "u2"]["text"] == "plain").all()
-        assert (out["url"] == "u3").sum() == 0  # null html -> no blocks
 
 
 class TestClassification:
@@ -97,9 +47,30 @@ class TestClassification:
 
 
 class TestMainContent:
+    def _blocks(self, spark, rows):
+        return spark.createDataFrame(
+            [("u1", i, t, ld) for i, (t, ld) in enumerate(rows)],
+            "url string, block_idx int, text string, link_density double",
+        )
+
     def test_end_to_end(self, spark):
-        pages = spark.createDataFrame([("u1", _PAGE)], "url string, html string")
-        out = B.extract_main_content(pages).collect()[0]
+        # a page's blocks in document order with their link densities: nav,
+        # h1, two prose paragraphs, a related-links div, a short tail, footer
+        blocks = self._blocks(spark, [
+            ("Home About Contact", 1.0),
+            ("The story of a crawler", 0.0),
+            ("The crawler is a program that walks the web and it is written "
+             "for the purpose of fetching pages. It is the backbone of a "
+             "search engine and of the training corpora that feed language "
+             "models.", 0.0),
+            ("It is polite to hosts and it is careful with the robots file, "
+             "and that discipline is the reason operators tolerate it at "
+             "all.", 0.0),
+            ("Related one Related two", 1.0),
+            ("Short tail.", 0.0),
+            ("Terms Privacy", 1.0),
+        ])
+        out = B.main_content(B.classify_blocks(blocks)).collect()[0]
         assert out["n_blocks"] > out["n_good_blocks"] > 0
         assert out["main_text"].startswith("The story of a crawler")
         assert "Home" not in out["main_text"]          # nav dropped
@@ -111,9 +82,6 @@ class TestMainContent:
         assert "Short tail." not in out["main_text"]
 
     def test_all_boilerplate_doc_survives_empty(self, spark):
-        pages = spark.createDataFrame(
-            [("u", "<nav><a href='/'>Home</a><a href='/x'>X</a></nav>")],
-            "url string, html string",
-        )
-        out = B.extract_main_content(pages).collect()[0]
+        blocks = self._blocks(spark, [("Home X", 1.0)])
+        out = B.main_content(B.classify_blocks(blocks)).collect()[0]
         assert out["main_text"] == "" and out["n_good_blocks"] == 0

@@ -1,14 +1,8 @@
-"""CDX(J) index: SURT urlkey semantics, global sort across shards,
-roundtrip, and cluster.idx shard pruning (the lookup must NOT read
-shards outside the prefix's key range)."""
+"""CDX(J) index: SURT urlkey semantics."""
 
-import os
-
-import pytest
 from pyspark.sql import functions as F
 
 from web_crawler_spark.functions.urltools import surt_key
-from web_crawler_spark.sources import cdx
 
 
 def _keys(spark, urls):
@@ -42,61 +36,3 @@ def test_surt_key_scheme_agnostic_and_total(spark):
     # junk URLs stay distinct (no NULL collapse), lowercased raw fallback
     j1, j2 = _keys(spark, ["not a url", "also not!"])
     assert j1 != j2 and j1 == "not a url"
-
-
-@pytest.fixture(scope="module")
-def captures(spark):
-    return spark.range(60).select(
-        F.concat(
-            F.lit("http://h"),
-            (F.col("id") % 6).cast("string"),
-            F.lit(".example.com/p/"),
-            F.col("id").cast("string"),
-        ).alias("url"),
-        F.timestamp_seconds(F.lit(1700000000) + F.col("id")).alias("warc_ts"),
-        F.concat(F.lit("<html>"), F.col("id").cast("string"), F.lit("</html>"))
-        .cast("binary")
-        .alias("html"),
-    )
-
-
-def test_cdx_roundtrip_and_global_sort(spark, captures, tmp_path):
-    rec = cdx.cdx_records(captures)
-    entries = cdx.write_cdx(rec, str(tmp_path), n_shards=4)
-    assert len(entries) >= 2  # range partitioner actually split the keys
-    # cluster.idx first-keys are themselves sorted => shards are in global order
-    firsts = [e["urlkey"] for e in entries]
-    assert firsts == sorted(firsts)
-    back = cdx.cdx_scan(spark, str(tmp_path))
-    assert sorted(map(tuple, back.collect())) == sorted(
-        map(tuple, rec.collect())
-    )
-    # within every shard the lines are sorted (binary-searchable)
-    shard_dir = os.path.join(str(tmp_path), "shards")
-    for f in os.listdir(shard_dir):
-        if not f.startswith("part-"):
-            continue
-        with open(os.path.join(shard_dir, f), encoding="utf-8") as fh:
-            lines = fh.read().splitlines()
-        assert lines == sorted(lines)
-
-
-def test_cdx_lookup_prunes_shards(spark, captures, tmp_path):
-    rec = cdx.cdx_records(captures)
-    entries = cdx.write_cdx(rec, str(tmp_path), n_shards=4)
-    got = cdx.cdx_lookup(spark, str(tmp_path), "com,example,h3)")
-    rows = got.collect()
-    assert len(rows) == 10 and all(
-        r["url"].startswith("http://h3.") for r in rows
-    )
-    # pruning: the scanned file list must exclude shards whose range cannot
-    # contain the prefix — with >=2 shards over h0..h5 at least one is pruned
-    files = {os.path.basename(f) for f in got.inputFiles()}
-    all_shards = {e["file"] for e in entries}
-    assert files and files < all_shards
-
-
-def test_cdx_lookup_miss_is_empty(spark, captures, tmp_path):
-    rec = cdx.cdx_records(captures)
-    cdx.write_cdx(rec, str(tmp_path), n_shards=3)
-    assert cdx.cdx_lookup(spark, str(tmp_path), "zz,nope)").count() == 0

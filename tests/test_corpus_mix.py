@@ -1,9 +1,6 @@
-"""corpus_mix / corpus_mix_sampled (operators/corpus.py): token-budget
-source mixing. Exact variant: greedy cut in deterministic md5 order,
-overshoot bounded by one document per source. Sampled variant: window-free
-md5-percentile admission, deterministic across runs."""
-
-from pyspark.sql import functions as F
+"""corpus_mix (operators/corpus.py): token-budget source mixing — greedy
+cut in deterministic md5 order, overshoot bounded by one document per
+source."""
 
 from web_crawler_spark.operators import corpus as C
 
@@ -66,40 +63,3 @@ def test_adaptive_plan_prefixsum_engages_on_skewed_fixture(spark):
 def test_zero_budget_admits_nothing(spark):
     mix = C.corpus_mix(_corpus(spark), _budgets(spark, 0, 0))
     assert mix.count() == 0
-
-
-def test_sampled_mix_deterministic_and_rate_capped(spark):
-    corpus = _corpus(spark)
-    m1 = sorted(r.doc_id for r in C.corpus_mix_sampled(corpus, _budgets(spark, 50, 1000)).collect())
-    m2 = sorted(r.doc_id for r in C.corpus_mix_sampled(corpus, _budgets(spark, 50, 1000)).collect())
-    assert m1 == m2  # no RNG state: md5-percentile membership
-    # rate caps at 1.0: budget >= total admits the whole source
-    full = C.corpus_mix_sampled(corpus, _budgets(spark, 1000, 1000))
-    assert full.count() == 15
-    # sampled set is a subset of the corpus with source-consistent rows
-    ids = {r.doc_id for r in corpus.collect()}
-    assert set(m1) <= ids
-
-
-def test_sampled_mix_high_source_cardinality(spark):
-    # per-domain weighting regime: 10k sources must not explode the plan
-    # (rates are a broadcast-joined DataFrame, not a create_map literal)
-    n = 10_000
-    corpus = spark.range(n).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("dom"), (F.col("id") % n).cast("string")).alias("source"),
-        F.lit("one two three four").alias("text"),
-    )
-    budgets = spark.range(n).select(
-        F.concat(F.lit("dom"), F.col("id").cast("string")).alias("source"),
-        # even ids: full budget; odd ids: zero budget
-        F.when(F.col("id") % 2 == 0, F.lit(100)).otherwise(F.lit(0)).alias("token_budget"),
-    )
-    mix = C.corpus_mix_sampled(corpus, budgets)
-    rows = mix.collect()
-    assert len(rows) == n // 2
-    assert all(int(r.source[3:]) % 2 == 0 for r in rows)
-    # sources absent from the budgets table admit nothing
-    half = budgets.filter(F.col("source").isin(["dom0", "dom2"]))
-    small = C.corpus_mix_sampled(corpus, half).collect()
-    assert sorted(r.source for r in small) == ["dom0", "dom2"]

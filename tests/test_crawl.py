@@ -541,7 +541,9 @@ def test_catalog_compaction_and_vacuum(spark, tmp_path):
 
 
 def test_auto_compaction_mid_crawl_preserves_resume(spark, tmp_path):
-    """compact_every folds maintenance into the epoch loop; a later resume
+    """Compaction + vacuum between two ``run`` calls, as ``cli.py
+    --compact`` runs them: the second run skips the committed epochs and
+    crawls the next one against the compacted history, and a later resume
     still skips committed epochs and reads the full history."""
     from web_crawler_spark.plans.epoch import CrawlEngine
     from web_crawler_spark.sources.pages import generate_pages
@@ -550,9 +552,15 @@ def test_auto_compaction_mid_crawl_preserves_resume(spark, tmp_path):
     pages = generate_pages(spark, 120)
     seeds = generate_seeds(spark, n_per_host=3, hot_factor=2, n_epochs=3)
     root = str(tmp_path / "cat")
-    eng = CrawlEngine(spark, root, pages, max_depth=0,
-                      compact_every=2)
-    stats = eng.run(seeds, n_epochs=3)
+    eng = CrawlEngine(spark, root, pages, max_depth=0)
+    stats = eng.run(seeds, n_epochs=2)
+    for table in ("fetched", "extracted", "outlinks", "metrics", "seen", "deferred"):
+        if eng.catalog.committed_epochs(table):
+            eng.catalog.compact(spark, table)
+            eng.catalog.vacuum(table)
+    resumed = eng.run(seeds, n_epochs=3)
+    assert resumed[:2] == [{"epoch": 0, "skipped": True}, {"epoch": 1, "skipped": True}]
+    stats += resumed[2:]
     assert [s.get("skipped", False) for s in stats] == [False] * 3
     assert eng.catalog.manifest("seen").get("compaction", {}).get("upto") == 1
     total = eng.catalog.read(spark, "seen").count()
@@ -561,6 +569,87 @@ def test_auto_compaction_mid_crawl_preserves_resume(spark, tmp_path):
     assert all(s["skipped"] for s in eng2.run(seeds, n_epochs=3))
     assert eng2.catalog.read(spark, "seen").count() == total
     assert eng2.catalog.committed_epochs("seen") == [0, 1, 2]
+
+
+class _Killed(Exception):
+    """Stands in for the process dying at a chosen point."""
+
+
+def _three_epoch_catalog(spark, root):
+    from web_crawler_spark.sources.catalog import EpochCatalog
+
+    cat = EpochCatalog(root)
+    for e in range(3):
+        df = spark.range(e * 100, (e + 1) * 100, 1, 4).select(
+            F.col("id"), F.lit(f"v{e}").alias("val")
+        )
+        cat.commit_epoch("t", e, df, lineage={"fetched": 100})
+    return cat
+
+
+def test_compaction_killed_before_manifest_replace(spark, tmp_path, monkeypatch):
+    """A compaction killed after its ``_compact_g1`` rewrite and before the
+    manifest replace leaves the committed reads as they were (the manifest
+    still points at the live epoch dirs); the next compact overwrites the
+    orphaned rewrite and commits it."""
+    import os
+
+    from web_crawler_spark.sources import catalog as C
+
+    cat = _three_epoch_catalog(spark, str(tmp_path / "cat"))
+    before = cat.read(spark, "t").orderBy("id").collect()
+    manifest_before = cat.manifest("t")
+
+    def killed(src, dst):
+        raise _Killed(dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(C.os, "replace", killed)
+        with pytest.raises(_Killed):
+            cat.compact(spark, "t")
+    assert os.path.isdir(tmp_path / "cat/t/_compact_g1")  # the rewrite landed
+    assert cat.manifest("t") == manifest_before  # ...but is not committed
+    assert cat.read(spark, "t").orderBy("id").collect() == before
+    assert cat.vacuum("t") == []  # no committed compaction: nothing to reclaim
+
+    assert cat.compact(spark, "t") == {"table": "t", "compacted_epochs": 3, "gen": 1}
+    assert cat.manifest("t")["compaction"] == {
+        "gen": 1, "upto": 2, "dir": "_compact_g1"
+    }
+    assert cat.read(spark, "t").orderBy("id").collect() == before
+    assert len(cat.vacuum("t")) == 3
+
+
+def test_vacuum_killed_mid_delete(spark, tmp_path, monkeypatch):
+    """A vacuum killed after deleting one of the epoch dirs the compaction
+    covers leaves reads as they were (they resolve through the committed
+    rewrite); a second vacuum removes the rest."""
+    import shutil
+
+    from web_crawler_spark.sources import catalog as C
+
+    cat = _three_epoch_catalog(spark, str(tmp_path / "cat"))
+    before = cat.read(spark, "t").orderBy("id").collect()
+    cat.compact(spark, "t")
+    rmtree, deleted = shutil.rmtree, []
+
+    def rmtree_then_die(path, *args, **kwargs):
+        if deleted:
+            raise _Killed(path)
+        rmtree(path, *args, **kwargs)
+        deleted.append(path)
+
+    with monkeypatch.context() as m:
+        m.setattr(C.shutil, "rmtree", rmtree_then_die)
+        with pytest.raises(_Killed):
+            cat.vacuum("t")
+    assert len(deleted) == 1
+    assert len(list((tmp_path / "cat/t").glob("epoch=*"))) == 2
+    assert cat.read(spark, "t").orderBy("id").collect() == before
+
+    assert len(cat.vacuum("t")) == 2
+    assert list((tmp_path / "cat/t").glob("epoch=*")) == []
+    assert cat.read(spark, "t").orderBy("id").collect() == before
 
 
 def test_snapshot_asof_and_change_detection(spark):

@@ -1,7 +1,7 @@
 """DDSketch relative-error quantile sketch (operators/sketches.py,
 Masson/Rim/Lee VLDB 2019). The oracle query `a16_dds_quantiles` certifies
 buckets + rank walk + estimates; these tests pin the paper's guarantee
-(|est − true| ≤ α·true BY CONSTRUCTION), mergeability, and state bounds."""
+(|est − true| ≤ α·true BY CONSTRUCTION) and state bounds."""
 
 from __future__ import annotations
 
@@ -33,22 +33,6 @@ def test_relative_error_guarantee(spark, vals):
     for q in qs:
         true = _true_q(s, q)
         assert abs(got[q] - true) <= alpha * true * 1.000001, (q, got[q], true)
-
-
-def test_merge_equals_whole_stream_sketch(spark):
-    a = spark.createDataFrame([(v,) for v in VALUES[:1500]], ["x"])
-    b = spark.createDataFrame([(v,) for v in VALUES[1500:]], ["x"])
-    whole = spark.createDataFrame([(v,) for v in VALUES], ["x"])
-    merged = {
-        (r["bucket"], r["cnt"])
-        for r in SK.dds_merge(
-            SK.dds_sketch(a, "x", 0.02), SK.dds_sketch(b, "x", 0.02)
-        ).collect()
-    }
-    direct = {
-        (r["bucket"], r["cnt"]) for r in SK.dds_sketch(whole, "x", 0.02).collect()
-    }
-    assert merged == direct
 
 
 def test_zeros_answer_low_quantiles(spark):

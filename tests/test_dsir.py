@@ -169,8 +169,5 @@ def test_fallback_lambda_for_unseen_bucket(spark, frames):
     )
     ofeats = D.hashed_ngram_features(other, n_buckets=N_BUCKETS)
     lam = D.fit_log_ratio(tfeats, feats, n_buckets=N_BUCKETS)
-    t_total = tfeats.groupBy().sum("cnt").collect()[0][0]
-    r_total = feats.groupBy().sum("cnt").collect()[0][0]
-    fb = D.default_lam_fp(t_total=t_total, r_total=r_total, n_buckets=N_BUCKETS)
-    out = D.dsir_weights(ofeats, lam, fallback_lam_fp=fb).collect()
+    out = D.dsir_weights(ofeats, lam, fallback_lam_fp=-7).collect()
     assert len(out) == 1 and out[0]["weight_fp"] is not None

@@ -125,6 +125,7 @@ def test_console_summary_and_sinks(spark, tmp_path):
 
 def test_streaming_summary_and_dedup(spark, tmp_path):
     from web_crawler_spark.streaming import events as SE
+    from web_crawler_spark.streaming.stateful import stateful_seen_filter
 
     src = str(tmp_path / "stream_src")
     events = spark.createDataFrame(
@@ -139,11 +140,13 @@ def test_streaming_summary_and_dedup(spark, tmp_path):
     events.write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
 
-    stream = SE.read_events_stream(spark, src, schema)
+    stream = spark.readStream.schema(schema).parquet(src)
     # complete mode: append would only emit windows already past the
     # watermark, which never happens within this bounded fixture
-    SE.run_query_to_memory(
-        SE.streaming_market_summary(stream), "t_summary", output_mode="complete"
+    (
+        SE.streaming_market_summary(stream).writeStream.format("memory")
+        .queryName("t_summary").outputMode("complete")
+        .trigger(availableNow=True).start().awaitTermination()
     )
     got = {
         (str(r["window_start"]), r["event_type"]): (r["n"], r["gainers"], r["losers"])
@@ -152,9 +155,12 @@ def test_streaming_summary_and_dedup(spark, tmp_path):
     assert got[("2024-01-01 00:00:00", "click")] == (3, 2, 1)
     assert got[("2024-01-01 01:00:00", "view")] == (1, 1, 0)
 
-    stream2 = SE.read_events_stream(spark, src, schema)
-    SE.run_query_to_memory(
-        SE.streaming_dedup(stream2, ["event_id"]), "t_dedup", output_mode="append"
+    # the streaming seen-set admits each event_id once
+    stream2 = spark.readStream.schema(schema).parquet(src)
+    (
+        stateful_seen_filter(stream2, key_col="event_id").writeStream
+        .format("memory").queryName("t_dedup").outputMode("append")
+        .trigger(availableNow=True).start().awaitTermination()
     )
     assert spark.sql("select count(*) n from t_dedup").collect()[0]["n"] == 3
 
@@ -162,14 +168,17 @@ def test_streaming_summary_and_dedup(spark, tmp_path):
 def test_streaming_extract_matches_batch(spark, tmp_path):
     from web_crawler_spark.plans.extract import commodity_table_stage
     from web_crawler_spark.sources.pages import generate_pages
-    from web_crawler_spark.streaming import events as SE
 
     src = str(tmp_path / "pages_src")
     pages = generate_pages(spark, 36, seed=5)
     pages.write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).parquet(src)
-    SE.run_query_to_memory(SE.streaming_extract(stream), "t_extract")
+    (
+        commodity_table_stage(stream).writeStream.format("memory")
+        .queryName("t_extract").trigger(availableNow=True).start()
+        .awaitTermination()
+    )
     stream_rows = spark.sql("select * from t_extract")
     batch_rows = commodity_table_stage(spark.read.parquet(src))
     assert stream_rows.exceptAll(batch_rows).count() == 0
@@ -181,7 +190,6 @@ def test_streaming_css_extract_matches_batch(spark, tmp_path):
     stream (mapInPandas is streaming-capable) — stream result == batch."""
     from web_crawler_spark.plans.extract import css_config_stage
     from web_crawler_spark.sources.pages import generate_pages
-    from web_crawler_spark.streaming import events as SE
 
     config = {
         "extraction": {
@@ -197,7 +205,11 @@ def test_streaming_css_extract_matches_batch(spark, tmp_path):
     generate_pages(spark, 24, seed=7).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).parquet(src)
-    SE.run_query_to_memory(css_config_stage(stream, config), "t_css")
+    (
+        css_config_stage(stream, config).writeStream.format("memory")
+        .queryName("t_css").trigger(availableNow=True).start()
+        .awaitTermination()
+    )
     stream_rows = spark.sql("select * from t_css")
     batch_rows = css_config_stage(spark.read.parquet(src), config)
     assert batch_rows.count() > 0
@@ -276,7 +288,6 @@ def test_fetch_sessions_gap_semantics(spark):
 def test_fetch_sessions_streaming_matches_batch(spark, tmp_path):
     import pyspark.sql.functions as F
 
-    from web_crawler_spark.streaming import events as SE
     from web_crawler_spark.streaming.events import fetch_sessions
 
     src = str(tmp_path / "fetchlog")
@@ -294,9 +305,10 @@ def test_fetch_sessions_streaming_matches_batch(spark, tmp_path):
     )
     # complete mode: the bounded fixture never advances the watermark
     # past its own sessions, so append would emit nothing
-    SE.run_query_to_memory(
-        fetch_sessions(stream, gap="30 seconds"), "t_sessions",
-        output_mode="complete",
+    (
+        fetch_sessions(stream, gap="30 seconds").writeStream.format("memory")
+        .queryName("t_sessions").outputMode("complete")
+        .trigger(availableNow=True).start().awaitTermination()
     )
     streamed = {(r["host"], str(r["session_start"])): r["n_fetches"]
                 for r in spark.sql("select * from t_sessions").collect()}

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from web_crawler_spark.plans.extract import (
     extract_commodity_rows,
-    extract_links,
     extract_simple_rows,
     extract_text,
     parse_html,
@@ -85,7 +84,7 @@ def test_script_style_skipped():
 
 def test_link_extraction():
     html = '<a href="/x">a</a><a name="no-href">b</a><a href="#f">c</a>'
-    assert extract_links(html) == ["/x", "#f"]
+    assert parse_html(html).links == ["/x", "#f"]
 
 
 def test_text_stage_byte_identity(spark):
@@ -203,7 +202,7 @@ def test_markdown_tables_stage(spark):
 
 
 def test_extract_links_rel_nofollow():
-    from web_crawler_spark.plans.extract import extract_links, extract_links_rel
+    from web_crawler_spark.plans.extract import extract_links_rel
 
     html = ('<a href="/a">x</a>'
             '<a rel="nofollow" href="/b">y</a>'
@@ -212,8 +211,8 @@ def test_extract_links_rel_nofollow():
             '<a rel="nofollow">no href</a>')
     assert extract_links_rel(html) == [
         ("/a", False), ("/b", True), ("/c", True), ("/d", False)]
-    # the legacy surface is untouched
-    assert extract_links(html) == ["/a", "/b", "/c", "/d"]
+    # the plain link list is untouched
+    assert parse_html(html).links == ["/a", "/b", "/c", "/d"]
 
 
 def _combined_reference(pages):
@@ -225,7 +224,7 @@ def _combined_reference(pages):
         html = bytes(r["html"]).decode("utf-8", errors="replace")
         out += [(r["url"], c["name"], c["price"], c["change"], None)
                 for c in extract_commodity_rows(html)]
-        out += [(r["url"], None, None, None, link) for link in extract_links(html)]
+        out += [(r["url"], None, None, None, link) for link in parse_html(html).links]
     return out
 
 

@@ -1,7 +1,8 @@
 """KMV / bottom-k distinct sketch with set operations
 (operators/sketches.py, Bar-Yossef et al. 2002 / Beyer et al. SIGMOD
 2007). The oracle query `a17_kmv_epoch_overlap` certifies hashes, merge,
-and every estimate; these tests pin regimes and accuracy vs ground truth."""
+and every estimate; these tests pin regimes and accuracy vs ground truth,
+reading a single sketch's estimate as ``kmv_set_ops``' ``distinct_a``."""
 
 from __future__ import annotations
 
@@ -21,8 +22,9 @@ def test_exact_regime_holds_all_hashes(spark):
     df = spark.createDataFrame([(v,) for v in vals] * 3, ["k"]).repartition(8)
     [row] = SK.kmv_sketch(df, "k", k=256).collect()
     assert row["hashes"] == sorted(_h(v) for v in vals)
-    [est] = SK.kmv_estimate(SK.kmv_sketch(df, "k", k=256), k=256).collect()
-    assert est["distinct_est"] == 50.0
+    sk = SK.kmv_sketch(df, "k", k=256)
+    [est] = SK.kmv_set_ops(sk, sk, k=256).collect()
+    assert est["distinct_a"] == 50.0
 
 
 def test_sketch_is_k_smallest_md5_values(spark):
@@ -32,25 +34,13 @@ def test_sketch_is_k_smallest_md5_values(spark):
     assert row["hashes"] == sorted(_h(v) for v in vals)[:64]
 
 
-def test_merge_equals_whole_stream(spark):
-    vals = [f"u{i}" for i in range(3000)]
-    a = spark.createDataFrame([(v,) for v in vals[:2000]], ["k"])
-    b = spark.createDataFrame([(v,) for v in vals[1200:]], ["k"])  # overlap
-    whole = spark.createDataFrame([(v,) for v in vals], ["k"])
-    m = SK.kmv_merge(
-        SK.kmv_sketch(a, "k", k=128), SK.kmv_sketch(b, "k", k=128), k=128
-    )
-    [mr] = m.collect()
-    [wr] = SK.kmv_sketch(whole, "k", k=128).collect()
-    assert mr["hashes"] == wr["hashes"]
-
-
 def test_estimate_accuracy(spark):
     n, k = 5000, 256
     df = spark.createDataFrame([(f"url{i}",) for i in range(n)], ["k"])
-    [row] = SK.kmv_estimate(SK.kmv_sketch(df, "k", k=k), k=k).collect()
+    sk = SK.kmv_sketch(df, "k", k=k)
+    [row] = SK.kmv_set_ops(sk, sk, k=k).collect()
     # se ≈ 1/sqrt(k-2) ≈ 6.3%; allow 4 sigma
-    assert abs(row["distinct_est"] - n) / n < 0.26, row
+    assert abs(row["distinct_a"] - n) / n < 0.26, row
 
 
 def test_set_ops_estimates_overlap(spark):
@@ -81,10 +71,9 @@ def test_set_ops_exact_regime(spark):
 def test_grouped_sketches_isolated(spark):
     rows = [("a", f"u{i}") for i in range(40)] + [("b", f"v{i}") for i in range(70)]
     df = spark.createDataFrame(rows, ["g", "k"]).repartition(8)
+    sk = SK.kmv_sketch(df, "k", k=128, group_cols=("g",))
     est = {
-        r["g"]: r["distinct_est"]
-        for r in SK.kmv_estimate(
-            SK.kmv_sketch(df, "k", k=128, group_cols=("g",)), k=128, group_cols=("g",)
-        ).collect()
+        r["g"]: r["distinct_a"]
+        for r in SK.kmv_set_ops(sk, sk, k=128, group_cols=("g",)).collect()
     }
     assert est == {"a": 40.0, "b": 70.0}

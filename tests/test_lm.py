@@ -1,13 +1,12 @@
 """n-gram LM perplexity scoring (operators/lm) — Spark vs a pure-Python
 reference implementation of the same add-alpha bigram estimator, plus the
-smoothing/empty-doc/filter edges."""
+smoothing/empty-doc edges."""
 
 import math
 import re
 
 from web_crawler_spark.operators.lm import (
     LP_SCALE,
-    perplexity_filter,
     score_docs,
     train_bigram_lm,
 )
@@ -84,14 +83,6 @@ def test_empty_doc_scores_one_bigram(spark):
     scored, _ = _spark_scored(spark)
     row = scored.filter("doc_id = 4").collect()[0]
     assert row["n_bigrams"] == 1
-
-
-def test_perplexity_filter(spark):
-    scored, _ = _spark_scored(spark)
-    vals = sorted(r["perplexity"] for r in scored.collect())
-    cut = (vals[2] + vals[3]) / 2
-    kept = perplexity_filter(scored, cut)
-    assert kept.count() == 3
 
 
 # --------------------------------------------------------------------------

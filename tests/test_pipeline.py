@@ -116,23 +116,24 @@ def test_rank_within_category(spark):
 
 
 def test_warc_export_roundtrip(spark, tmp_path):
-    """WARC/1.0 export: records parse back with byte-correct Content-Length
+    """WARC/1.0 export (warc_revisit_records; first captures are full
+    response records): records parse back with byte-correct Content-Length
     and payload identity; record IDs deterministic across re-export."""
     import glob
     import re
 
-    from web_crawler_spark.plans.report import warc_records, write_warc
+    from web_crawler_spark.plans.report import warc_revisit_records
 
     pages = spark.createDataFrame(
         [
             ("https://a.com/x", "2025-07-22 10:00:00", "<p>héllo wörld</p>"),
             ("https://b.com/y", "2025-07-22 10:00:02", "<table><tr><td>1</td></tr></table>"),
         ],
-        "canonical_url string, fetch_ts string, html string",
-    ).withColumn("fetch_ts", F.col("fetch_ts").cast("timestamp"))
+        "url string, warc_ts string, text string",
+    ).withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
 
     out = str(tmp_path / "warc")
-    write_warc(pages, out)
+    warc_revisit_records(pages).select("record").write.mode("overwrite").text(out)
     text = ""
     for f in sorted(glob.glob(out + "/part-*")):
         with open(f, "rb") as fh:
@@ -152,66 +153,6 @@ def test_warc_export_roundtrip(spark, tmp_path):
 
     # determinism: same input → same record ids
     ids1 = sorted(re.findall(r"WARC-Record-ID: (\S+)", text))
-    r2 = warc_records(pages).orderBy("url").collect()
+    r2 = warc_revisit_records(pages).orderBy("url").collect()
     ids2 = sorted(re.findall(r"WARC-Record-ID: (\S+)", "".join(x["record"] for x in r2)))
     assert ids1 == ids2
-
-
-def test_jsonl_shard_sink_roundtrip(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from web_crawler_spark.plans.report import write_jsonl_shards
-
-    df = spark.createDataFrame(
-        [(1, "hello \"quoted\" text", "en", ["a", "b"]),
-         (2, "unicode: bücher ✓", "de", []),
-         (3, None, None, None)],
-        "doc_id long, text string, lang string, tags array<string>",
-    ).repartition(2)
-    out = str(tmp_path / "shards")
-    write_jsonl_shards(df, out)
-    import glob
-    import gzip
-    import json as J
-
-    parts = glob.glob(out + "/part-*.gz")
-    assert len(parts) == 2  # shard count = partitioning
-    rows = []
-    for p in parts:
-        with gzip.open(p, "rt") as f:
-            rows += [J.loads(line) for line in f if line.strip()]
-    by_id = {r["doc_id"]: r for r in rows}
-    assert by_id[1]["text"] == 'hello "quoted" text'
-    assert by_id[1]["tags"] == ["a", "b"]
-    assert by_id[2]["text"] == "unicode: bücher ✓"
-    assert "text" not in by_id[3]  # JSON omits nulls (to_json contract)
-    # spark.read.json round-trips it too
-    back = spark.read.json(out)
-    assert back.count() == 3
-    assert back.filter(F.col("doc_id") == 2).collect()[0]["lang"] == "de"
-
-
-def test_bucketed_tables_join_without_exchange(spark, tmp_path):
-    import pyspark.sql.functions as F
-
-    from web_crawler_spark.plans.report import write_bucketed_table
-
-    left = spark.range(2000).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 7).alias("a")
-    )
-    right = spark.range(1500).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 5).alias("b")
-    )
-    write_bucketed_table(left, "t_bleft", "doc_id", n_buckets=8)
-    write_bucketed_table(right, "t_bright", "doc_id", n_buckets=8)
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("t_bleft").join(spark.table("t_bright"), "doc_id")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        # the whole point: bucket-aligned tables join with no shuffle
-        assert "Exchange hashpartitioning" not in plan, plan
-        assert joined.count() == 1500
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS t_bleft")
-        spark.sql("DROP TABLE IF EXISTS t_bright")

@@ -1,9 +1,8 @@
-"""Product quantization (Jégou et al. 2011): codebooks, encode, ADC top-k."""
+"""Product quantization (Jégou et al. 2011): codebooks and ADC top-k."""
 import pytest
 
 from web_crawler_spark.operators.similarity import (
     pq_codebooks,
-    pq_encode,
     pq_topk,
 )
 
@@ -24,17 +23,6 @@ def test_codebooks_shape_and_determinism(emb):
     b2 = pq_codebooks(emb, m=4, n_codes=8)
     assert b1 == b2
     assert len(b1) == 4 and len(b1[0]) == 8 and len(b1[0][0]) == 4
-
-
-def test_encode_is_shuffle_free_projection(emb):
-    books = pq_codebooks(emb, m=4, n_codes=8)
-    enc = pq_encode(emb, books)
-    plan = enc._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    rows = enc.collect()
-    assert len(rows) == 200
-    assert all(len(r["codes"]) == 4 for r in rows)
-    assert all(0 <= c < 8 for r in rows for c in r["codes"])
 
 
 def test_adc_ranks_identical_vector_first(spark):

@@ -103,7 +103,10 @@ def test_registrable_domain_of_distinct_hosts(spark):
         [("www.example.com",), ("www.example.com",), ("a.b.co.uk",)],
         "host string",
     )
-    rows = {r.host: r.registrable_domain for r in psl.registrable_domain_of(df).collect()}
+    rows = {
+        r.host: r.registrable_domain
+        for r in psl.with_registrable_domain(df.distinct()).collect()
+    }
     assert rows == {"www.example.com": "example.com", "a.b.co.uk": "b.co.uk"}
 
 

@@ -1,11 +1,9 @@
 """Redirect-chain resolution (operators/redirects): pointer-doubling
-semantics — chains, cycles, hop caps, latest-observation dedup, and the
-broadcast corpus rewrite."""
+semantics — chains, cycles, hop caps and latest-observation dedup."""
 
 from pyspark.sql import functions as F
 
 from web_crawler_spark.operators.redirects import (
-    apply_redirects,
     redirect_edges,
     resolve_redirects,
 )
@@ -61,20 +59,6 @@ def test_redirect_edges_filters_and_dedup(spark):
     assert {
         (r["src"], r["dst"]) for r in redirect_edges(f).collect()
     } == {("a", "b")}
-
-
-def test_apply_redirects_broadcast_rewrite(spark):
-    edges = _edges(spark, [("old", "mid"), ("mid", "new"), ("x", "y"), ("y", "x")])
-    resolved = resolve_redirects(edges)
-    corpus = spark.createDataFrame(
-        [("old", 1), ("keep", 2), ("x", 3)], "url string, v int"
-    )
-    got = {r["url"]: r["v"] for r in apply_redirects(corpus, resolved).collect()}
-    # old -> new (resolved), keep untouched, x untouched (unresolved cycle)
-    assert got == {"new": 1, "keep": 2, "x": 3}
-    # the mapping side must be broadcast: no shuffle of the corpus
-    plan = apply_redirects(corpus, resolved)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
 
 
 def test_no_vector_of_full_log_joins(spark):

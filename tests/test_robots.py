@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 from web_crawler_spark.functions import urltools as U
 from web_crawler_spark.operators import robots as RB
 from web_crawler_spark.operators.robots import parse_robots_text
-from web_crawler_spark.sources.robots import ROBOTS_BODIES, generate_robots
+from web_crawler_spark.sources.robots import ROBOTS_BODIES
 
 
 def test_parse_groups_and_delays():
@@ -26,13 +26,20 @@ def test_parse_empty_disallow_and_comments():
     assert [r for r in rows if r[2] in ("allow", "disallow")] == []
 
 
+@pytest.fixture(scope="module")
+def robots_pages(spark):
+    return spark.createDataFrame(
+        sorted(ROBOTS_BODIES.items()), "host string, body string"
+    )
+
+
 def _frontier(spark, urls):
     df = spark.createDataFrame([(u,) for u in urls], "url string")
     return U.with_url_columns(df)
 
 
-def test_apply_robots_longest_match(spark):
-    rules = RB.parse_robots(generate_robots(spark))
+def test_apply_robots_longest_match(spark, robots_pages):
+    rules = RB.parse_robots(robots_pages)
     urls = [
         "https://markets.businessinsider.com/ok/page",
         "https://markets.businessinsider.com/private/secret",
@@ -51,8 +58,8 @@ def test_apply_robots_longest_match(spark):
     }
 
 
-def test_agent_specific_group_wins(spark):
-    rules = RB.parse_robots(generate_robots(spark))
+def test_agent_specific_group_wins(spark, robots_pages):
+    rules = RB.parse_robots(robots_pages)
     urls = [
         "https://finance.sina.com.cn/quotes/x",      # * blocked, sparkcrawl ok
         "https://finance.sina.com.cn/internal/y",    # sparkcrawl blocked
@@ -63,15 +70,15 @@ def test_agent_specific_group_wins(spark):
     assert generic == set()  # '*' group: Disallow: /
 
 
-def test_crawl_delays(spark):
-    rules = RB.parse_robots(generate_robots(spark))
+def test_crawl_delays(spark, robots_pages):
+    rules = RB.parse_robots(robots_pages)
     d = {r["host"]: r["delay_seconds"] for r in RB.crawl_delays(rules, "sparkcrawl", 2.0).collect()}
     assert d["finance.sina.com.cn"] == 0.5   # agent-specific beats default
     assert d["markets.businessinsider.com"] == 1.0
 
 
-def test_schedule_with_delays(spark):
-    rules = RB.parse_robots(generate_robots(spark))
+def test_schedule_with_delays(spark, robots_pages):
+    rules = RB.parse_robots(robots_pages)
     delays = RB.crawl_delays(rules, "sparkcrawl", 2.0)
     frontier = spark.createDataFrame(
         [(f"https://markets.businessinsider.com/p{i}",
@@ -91,7 +98,7 @@ def test_schedule_with_delays(spark):
     assert (rows[(ec, 2)] - rows[(ec, 1)]).total_seconds() == 2.0
 
 
-def test_engine_with_robots(spark, tmp_path):
+def test_engine_with_robots(spark, robots_pages, tmp_path):
     from web_crawler_spark.plans.epoch import CrawlEngine
     from web_crawler_spark.sources.pages import generate_pages
     from web_crawler_spark.sources.seeds import generate_seeds
@@ -100,7 +107,7 @@ def test_engine_with_robots(spark, tmp_path):
     seeds = generate_seeds(spark, n_per_host=4, hot_factor=2, n_epochs=1)
     eng = CrawlEngine(
         spark, str(tmp_path / "cat"), pages, max_depth=0,
-        robots_pages=generate_robots(spark), agent="sparkcrawl",
+        robots_pages=robots_pages, agent="sparkcrawl",
     )
     eng.run(seeds, n_epochs=1)
     fetched = eng.catalog.read(spark, "fetched")
@@ -119,7 +126,7 @@ def test_engine_with_robots(spark, tmp_path):
 
 def test_sitemap_directive_and_locations(spark):
     """Sitemap: lines are group-independent (RFC 9309 'other records') and
-    surface through sitemap_locations regardless of surrounding groups."""
+    surface as agent-'*' sitemap rules regardless of surrounding groups."""
     from web_crawler_spark.operators import robots as RB
 
     body = (
@@ -130,10 +137,12 @@ def test_sitemap_directive_and_locations(spark):
     pages = spark.createDataFrame([("h1", body), ("h2", "Disallow: /x")], ["host", "body"])
     rules = RB.parse_robots(pages)
     locs = {
-        (r["host"], r["sitemap_url"])
-        for r in RB.sitemap_locations(rules).collect()
+        (r["host"], r["agent"], r["path_prefix"])
+        for r in rules.collect() if r["rule"] == "sitemap"
     }
-    assert locs == {("h1", "https://h1/sm.xml"), ("h1", "https://h1/sm2.xml.gz")}
+    assert locs == {
+        ("h1", "*", "https://h1/sm.xml"), ("h1", "*", "https://h1/sm2.xml.gz")
+    }
     # pre-existing rule kinds unaffected
     kinds = {r["rule"] for r in rules.collect()}
     assert {"disallow", "allow", "sitemap"} <= kinds

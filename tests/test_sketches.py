@@ -125,25 +125,6 @@ def test_cms_sketch_is_capacity_bounded(spark, items):
     assert set(per_row.values()) == {len(STREAM)}
 
 
-def test_cms_merge_equals_whole_stream_sketch(spark):
-    """Cell-wise-sum merge of two disjoint-slice sketches must be IDENTICAL
-    to sketching the concatenated stream — the mergeability contract."""
-    a = spark.createDataFrame([(x,) for x in STREAM[: len(STREAM) // 2]], ["item"])
-    b = spark.createDataFrame([(x,) for x in STREAM[len(STREAM) // 2 :]], ["item"])
-    whole = spark.createDataFrame([(x,) for x in STREAM], ["item"])
-    merged = {
-        (r["row"], r["col"]): r["cnt"]
-        for r in SK.cms_merge(
-            SK.cms_sketch(a, "item", 4, 128), SK.cms_sketch(b, "item", 4, 128)
-        ).collect()
-    }
-    direct = {
-        (r["row"], r["col"]): r["cnt"]
-        for r in SK.cms_sketch(whole, "item", 4, 128).collect()
-    }
-    assert merged == direct
-
-
 def test_cms_unseen_item_estimates_from_zero_cells(spark, items):
     """An item never inserted may collide, but with a roomy sketch its
     estimate is 0 — the left-join coalesce path."""
@@ -186,25 +167,6 @@ def test_hll_registers_match_python_reference(spark):
         rho = 33 if w == 0 else 33 - len(bin(w)[2:])
         ref[bucket] = max(ref.get(bucket, 0), rho)
     assert got == ref
-
-
-def test_hll_merge_equals_whole_stream_sketch(spark):
-    """Register-wise max merge of OVERLAPPING slices == whole-stream sketch
-    (max is idempotent — stronger than the CMS disjointness requirement)."""
-    vals = [f"u{i}" for i in range(600)]
-    a = spark.createDataFrame([(v,) for v in vals[:400]], ["k"])
-    b = spark.createDataFrame([(v,) for v in vals[250:]], ["k"])  # overlaps a
-    whole = spark.createDataFrame([(v,) for v in vals], ["k"])
-    merged = {
-        (r["bucket"], r["rho"])
-        for r in SK.hll_merge(
-            SK.hll_sketch(a, "k", p=7), SK.hll_sketch(b, "k", p=7)
-        ).collect()
-    }
-    direct = {
-        (r["bucket"], r["rho"]) for r in SK.hll_sketch(whole, "k", p=7).collect()
-    }
-    assert merged == direct
 
 
 def test_hll_estimate_accuracy_bias_corrected_regime(spark):

@@ -87,27 +87,3 @@ class TestCharset:
         got = [r[0] for r in
                df.select(S.detect_charset(F.col("body"), F.col("html"))).collect()]
         assert got == ["utf-8", "iso-8859-1", "utf-8"]
-
-
-class TestDecodeStage:
-    def test_charset_cascade_decode(self, spark):
-        from web_crawler_spark.functions.sniff import decode_stage
-
-        sjis = "<html><head><meta charset=shift_jis></head><body>日本語</body></html>"
-        rows = [
-            (1, "﻿utf8 bom café".encode("utf-8")),          # BOM wins
-            (2, "utf16 text".encode("utf-16")),                   # BOM-carrying utf-16
-            (3, sjis.encode("shift_jis")),                        # meta-declared
-            (4, '<meta charset="no-such-charset">x'.encode()),    # bogus -> default
-            (5, b"\xff\xfa plain broken \xfe bytes"),             # replace, no crash
-            (6, None),
-        ]
-        df = spark.createDataFrame(rows, "id long, html binary")
-        got = {r["id"]: r for r in decode_stage(df).collect()}
-        assert got[1]["charset"] == "utf-8" and got[1]["html_text"] == "utf8 bom café"
-        assert got[2]["charset"].startswith("utf-16") and got[2]["html_text"] == "utf16 text"
-        assert got[3]["charset"] == "shift_jis" and "日本語" in got[3]["html_text"]
-        assert got[4]["charset"] == "no-such-charset"   # sniffed as declared...
-        assert got[4]["html_text"].endswith("x")         # ...decoded via fallback
-        assert "�" in got[5]["html_text"]           # replacement chars
-        assert got[6]["html_text"] is None

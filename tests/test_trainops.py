@@ -317,23 +317,6 @@ def test_fingerprint_normalization(spark):
     assert fps[0] == fps[1]
 
 
-def test_multimodal_plumbing(spark):
-    from web_crawler_spark.multimodal.binaryops import (
-        decode_image_stage,
-        fake_feature_stage,
-    )
-
-    pages = spark.createDataFrame(
-        [(f"u{i}", bytearray(b"\x89PNG" + bytes([i]) * 8)) for i in range(10)],
-        "url string, payload binary",
-    )
-    feats = fake_feature_stage(pages).collect()
-    assert len(feats) == 10
-    assert all(len(r["features"]) == 8 for r in feats)
-    with pytest.raises(Exception):
-        decode_image_stage(pages).collect()  # stub raises NotImplementedError
-
-
 def test_dataset_split_deterministic_and_leak_free(spark):
     from pyspark.sql import functions as F
 
@@ -349,19 +332,6 @@ def test_dataset_split_deterministic_and_leak_free(spark):
     # hash-percentile fractions are approximate at finite n, exact over buckets
     assert abs(counts["train"] / 5000 - 0.8) < 0.03
     assert abs(counts["val"] / 5000 - 0.1) < 0.02
-
-    samp = SP.stratified_sample(
-        d.withColumn("lang", (F.col("doc_id") % 3).cast("string")),
-        "lang", 0.2, "doc_id",
-    )
-    again = SP.stratified_sample(
-        d.withColumn("lang", (F.col("doc_id") % 3).cast("string")),
-        "lang", 0.2, "doc_id",
-    )
-    assert samp.exceptAll(again).count() == 0  # same keys survive every run
-    per = {r["lang"]: r["n"] for r in samp.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    for lang, n in per.items():
-        assert abs(n / (5000 / 3) - 0.2) < 0.05, (lang, n)
 
 
 def test_pii_scrub_and_contamination(spark):

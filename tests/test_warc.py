@@ -1,6 +1,7 @@
 """WARC/WET read path (sources/warc.py): Content-Length framing, HTTP
 header split on response records, gzip-member transport, per-file error
-isolation, and the export→ingest roundtrip against plans/report.write_warc."""
+isolation, and the export→ingest roundtrip against the plans/report.py
+WARC/WET/WAT record writers."""
 
 import gzip
 
@@ -93,43 +94,45 @@ def test_warc_scan_error_isolation(spark, tmp_path):
 
 
 def test_export_ingest_roundtrip(spark, tmp_path):
-    """write_warc (column-side export) → warc_scan reads back the same
-    (url, body) set — the Common-Crawl interop loop closes."""
-    from web_crawler_spark.plans.report import write_warc
+    """warc_revisit_records (column-side export; first captures are full
+    response records) → warc_scan reads back the same (url, body) set —
+    the Common-Crawl interop loop closes."""
+    from web_crawler_spark.plans.report import warc_revisit_records
 
-    pages = spark.createDataFrame(
+    hist = spark.createDataFrame(
         [
             ("https://a.com/x", "2025-07-22 10:00:00", "<p>héllo wörld</p>"),
             ("https://b.com/y", "2025-07-22 10:00:02", "<table><tr><td>1</td></tr></table>"),
         ],
-        "canonical_url string, fetch_ts string, html string",
-    ).withColumn("fetch_ts", F.col("fetch_ts").cast("timestamp"))
+        "url string, warc_ts string, text string",
+    ).withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
     out = str(tmp_path / "warc_out")
-    write_warc(pages, out)
+    warc_revisit_records(hist).select("record").write.mode("overwrite").text(out)
 
-    back = W.warc_pages(spark, out).orderBy("url").collect()
-    assert [(r.url, bytes(r.html).decode("utf-8")) for r in back] == [
+    back = W.warc_scan(spark, out).orderBy("url").collect()
+    assert [r.warc_type for r in back] == ["response", "response"]
+    assert [(r.url, bytes(r.payload).decode("utf-8")) for r in back] == [
         ("https://a.com/x", "<p>héllo wörld</p>"),
         ("https://b.com/y", "<table><tr><td>1</td></tr></table>"),
     ]
-    assert str(back[0].warc_ts) == "2025-07-22 10:00:00"
+    assert back[0].warc_date == "2025-07-22T10:00:00Z"
 
 
 def test_wet_export_ingest_roundtrip(spark, tmp_path):
-    """write_wet → wet_text: the extracted-text interop loop closes too."""
-    from web_crawler_spark.plans.report import write_wet
+    """wet_records → warc_scan: the extracted-text interop loop closes too."""
+    from web_crawler_spark.plans.report import wet_records
 
     docs = spark.createDataFrame(
         [("https://a.com/x", "2025-07-22 10:00:00", "extracted tëxt\nline two")],
         "canonical_url string, fetch_ts string, text string",
     ).withColumn("fetch_ts", F.col("fetch_ts").cast("timestamp"))
     out = str(tmp_path / "wet_out")
-    write_wet(docs, out)
-    back = W.wet_text(spark, out).collect()
-    assert len(back) == 1
-    assert back[0].text == "extracted tëxt\nline two"
+    wet_records(docs).select("record").write.mode("overwrite").text(out)
+    back = W.warc_scan(spark, out).collect()
+    assert len(back) == 1 and back[0].warc_type == "conversion"
+    assert bytes(back[0].payload).decode("utf-8") == "extracted tëxt\nline two"
     assert back[0].url == "https://a.com/x"
-    assert str(back[0].warc_ts) == "2025-07-22 10:00:00"
+    assert back[0].warc_date == "2025-07-22T10:00:00Z"
 
 
 def test_wet_text(spark, tmp_path):
@@ -141,14 +144,17 @@ def test_wet_text(spark, tmp_path):
             )
         ])
     )
-    rows = W.wet_text(spark, str(tmp_path)).collect()
-    assert len(rows) == 1 and rows[0].text == "extracted tëxt"
+    rows = W.warc_scan(spark, str(tmp_path)).collect()
+    assert len(rows) == 1 and rows[0].warc_type == "conversion"
+    assert bytes(rows[0].payload).decode("utf-8") == "extracted tëxt"
 
 
 def test_wat_export_ingest_roundtrip(spark, tmp_path):
-    """write_wat → wat_metadata: the metadata leg of the WARC/WET/WAT
+    """wat_records → warc_scan: the metadata leg of the WARC/WET/WAT
     triple closes — title, sorted links, empty-links and no-title pages."""
-    from web_crawler_spark.plans.report import write_wat
+    import json
+
+    from web_crawler_spark.plans.report import wat_records
 
     pages = spark.createDataFrame(
         [
@@ -165,29 +171,40 @@ def test_wat_export_ingest_roundtrip(spark, tmp_path):
         "canonical_url string, target string",
     )
     out = str(tmp_path / "wat_out")
-    write_wat(pages, links, out)
-    back = {r.url: r for r in W.wat_metadata(spark, out).collect()}
+    wat_records(pages, links).select("record").write.mode("overwrite").text(out)
+    back = {}
+    for r in W.warc_scan(spark, out).collect():
+        assert r.warc_type == "metadata"
+        env = json.loads(bytes(r.payload).decode("utf-8"))["Envelope"]
+        html_meta = env["Payload-Metadata"]["HTTP-Response-Metadata"]["HTML-Metadata"]
+        back[r.url] = (
+            r.warc_date, html_meta.get("Head", {}).get("Title"),
+            [link["url"] for link in html_meta["Links"]],
+        )
     assert set(back) == {"https://a.com/x", "https://a.com/y"}
-    x = back["https://a.com/x"]
-    assert x.title == "Página uno"           # whitespace-trimmed
-    assert x.links == ["https://b.com/10", "https://b.com/2"]  # string-sorted
-    assert str(x.warc_ts) == "2025-07-22 10:00:00"
-    y = back["https://a.com/y"]
-    assert y.title is None and y.links == []
+    # whitespace-trimmed title, string-sorted links
+    assert back["https://a.com/x"] == (
+        "2025-07-22T10:00:00Z", "Página uno", ["https://b.com/10", "https://b.com/2"]
+    )
+    assert back["https://a.com/y"][1:] == (None, [])
 
 
 def test_wat_refers_to_matches_warc_record_id(spark):
-    """The WAT record's WARC-Refers-To equals the urn:uuid warc_records
-    assigns the same (url, ts) response record — shard cross-referencing
-    without a read-time join."""
-    from web_crawler_spark.plans.report import warc_records, wat_records
+    """The WAT record's WARC-Refers-To equals the urn:uuid the WARC export
+    (warc_revisit_records) assigns the same (url, ts) response record —
+    shard cross-referencing without a read-time join."""
+    from web_crawler_spark.plans.report import warc_revisit_records, wat_records
 
     pages = spark.createDataFrame(
         [("https://a.com/x", "2025-07-22 10:00:00", "<html><body>b</body></html>")],
         "canonical_url string, fetch_ts string, html string",
     ).withColumn("fetch_ts", F.col("fetch_ts").cast("timestamp"))
     links = pages.select("canonical_url").withColumn("target", F.lit("https://b.com/"))
-    warc = warc_records(pages).collect()[0].record
+    hist = pages.select(
+        F.col("canonical_url").alias("url"), F.col("fetch_ts").alias("warc_ts"),
+        F.col("html").alias("text"),
+    )
+    warc = warc_revisit_records(hist).collect()[0].record
     wat = wat_records(pages, links).collect()[0].record
     import re
     rid = re.search(r"WARC-Record-ID: (<urn:uuid:[0-9a-f-]+>)", warc).group(1)

@@ -1,16 +1,13 @@
-"""Z-order layout tests (functions/zorder.py).
+"""Z-order key tests (functions/zorder.py).
 
 The key math is certified by the tx_zorder_key oracle; these tests pin
-the interleave against an independent Python Morton encoder and prove the
-PAYOFF: a z-ordered parquet layout prunes row groups on BOTH filter
-columns, where a single-column sort prunes only its own.
+the interleave against an independent Python Morton encoder, the bit
+budget, and the grid normalization.
 """
 
 from __future__ import annotations
 
 import pytest
-
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from web_crawler_spark.functions import zorder as Z
@@ -53,63 +50,3 @@ def test_grid_cell_bounds_and_clamp(spark):
     assert got[0] == 0 and got[-1] <= 255  # grid stays in [0, 2^bits)
     # clamped: -7 → cell of 0, 150 → cell of 100
     assert len(set(got)) <= 4
-
-
-def _rowgroups_overlapping(path: str, col: str, lo: int, hi: int) -> tuple[int, int]:
-    """(#row groups whose [min,max] intersects [lo,hi], total #row groups)
-    across every parquet part file — what zone-map pruning would scan."""
-    import glob
-
-    hit = total = 0
-    for f in glob.glob(f"{path}/*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}[col]
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(idx).statistics
-            total += 1
-            if st is None or (st.min <= hi and st.max >= lo):
-                hit += 1
-    return hit, total
-
-
-def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
-    # two independent uniform keys (deterministic hash mixes, no RNG)
-    n = 40_000
-    df = (
-        spark.range(n)
-        .select(
-            F.col("id"),
-            ((F.col("id") * 2654435761) % 1000).alias("a"),
-            ((F.col("id") * 40503 + 17) % 1000).alias("b"),
-        )
-        .repartition(4)
-    )
-    a_sorted = str(tmp_path / "a_sorted")
-    zordered = str(tmp_path / "zordered")
-    rg = {"parquet.block.size": str(64 * 1024)}  # small row groups
-    df.repartitionByRange(4, "a").sortWithinPartitions("a").write.options(
-        **rg
-    ).parquet(a_sorted)
-    Z.zorder_layout(df, ["a", "b"], bits=10, partitions=4).write.options(
-        **rg
-    ).parquet(zordered)
-
-    # filter on b (the column the a-sort ignores): z-order must prune,
-    # the single-column layout must scan nearly everything
-    hit_a, tot_a = _rowgroups_overlapping(a_sorted, "b", 100, 149)
-    hit_z, tot_z = _rowgroups_overlapping(zordered, "b", 100, 149)
-    assert tot_a > 8 and tot_z > 8  # enough row groups to mean anything
-    frac_a, frac_z = hit_a / tot_a, hit_z / tot_z
-    assert frac_a > 0.75  # sorted-by-a layout: b is scattered everywhere
-    assert frac_z < 0.6  # z-order: a 5% b-slice skips most row groups
-    assert frac_z < frac_a / 1.5  # and beats the single-column layout
-
-    # and the z-layout still prunes on a as well (no worse than 60%)
-    hit_za, tot_za = _rowgroups_overlapping(zordered, "a", 100, 149)
-    assert hit_za / tot_za < 0.6
-
-    # layout is a re-ordering, never a re-write of values
-    assert (
-        spark.read.parquet(zordered).agg(F.sum("id")).collect()[0][0]
-        == (n - 1) * n // 2
-    )

@@ -318,12 +318,3 @@ def with_registrable_domain(
     for k in ks:
         drop += [f"__psl_key{k}", f"__psl_n{k}", f"__psl_w{k}", f"__psl_e{k}"]
     return out.drop(*drop)
-
-
-def registrable_domain_of(
-    hosts: DataFrame, host_col: str = "host", **kw
-) -> DataFrame:
-    """Convenience: distinct hosts → (host, public_suffix, registrable_domain)."""
-    return with_registrable_domain(
-        hosts.select(host_col).distinct(), host_col=host_col, **kw
-    )

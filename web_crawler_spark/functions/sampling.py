@@ -44,27 +44,6 @@ def dataset_split(
     return df.withColumn(out_col, label)
 
 
-def stratified_sample(
-    df: DataFrame,
-    strata_col: str,
-    fraction: float,
-    key_col: str,
-    salt: str = "sample",
-) -> DataFrame:
-    """Deterministic per-stratum sample: keep a hash-percentile slice of
-    each stratum (same keys survive on every run — unlike ``sampleBy``).
-
-    The \\x1f unit separator between stratum and key prevents boundary
-    aliasing: without it (strata='ab', key='c') and (strata='a', key='bc')
-    hash identically, correlating keep/drop decisions across strata."""
-    b = hash_bucket(
-        F.concat(F.col(strata_col), F.lit("\x1f"), F.col(key_col).cast("string")),
-        100,
-        salt,
-    )
-    return df.filter(b < int(round(fraction * 100)))
-
-
 def weighted_sample(
     df: DataFrame,
     k: int,

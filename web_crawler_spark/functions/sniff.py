@@ -99,69 +99,3 @@ def detect_charset(data: Column, html: Column, default: str = "utf-8") -> Column
     """The sniffing cascade: BOM beats the meta declaration beats the
     transport default (the precedence the WHATWG encoding sniff uses)."""
     return F.coalesce(bom_charset(data), meta_charset(html), F.lit(default))
-
-
-def sniff_charset_bytes(data: Column, default: str = "utf-8") -> Column:
-    """Charset cascade straight from the raw body bytes: BOM beats the
-    meta declaration beats the default. The meta probe prescans the first
-    1024 bytes decoded as ISO-8859-1 (byte-transparent; the WHATWG
-    prescan only needs the ASCII subset) — all pure columns."""
-    head = F.decode(F.substring(data, 1, 1024), "ISO-8859-1")
-    return F.coalesce(bom_charset(data), meta_charset(head), F.lit(default))
-
-
-# sniffed name → python codec that also consumes the BOM when present
-_PY_CODEC = {
-    "utf-8": "utf-8-sig",
-    "utf-16-le": "utf-16",   # BOM-aware; LE/BE resolved by the BOM itself
-    "utf-16-be": "utf-16",
-    "utf-32-le": "utf-32",
-    "utf-32-be": "utf-32",
-}
-
-
-def decode_stage(
-    df,
-    data_col: str = "html",
-    out_col: str = "html_text",
-    charset_col: str = "charset",
-    default: str = "utf-8",
-):
-    """Decode fetched bodies to strings with the sniffed charset — the
-    step between WARC ingest (binary payloads) and every text operator.
-
-    JVM side picks the charset (``sniff_charset_bytes``, appended as
-    ``charset_col``); one Arrow ``mapInPandas`` stage then decodes with
-    Python's codec registry: unknown/unsupported declared charsets fall
-    back to ``default`` (servers lie), malformed bytes are replaced (a
-    crawl never crashes on a bad body — F5 discipline), and a leading
-    U+FEFF surviving a codec without BOM handling is stripped. NULL
-    bodies decode to NULL.
-    """
-    import codecs
-
-    import pandas as pd  # noqa: F401  (mapInPandas contract)
-
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    with_cs = df.withColumn(charset_col, sniff_charset_bytes(F.col(data_col), default))
-    schema = StructType(list(with_cs.schema.fields) + [StructField(out_col, StringType())])
-
-    def dec(it):
-        for pdf in it:
-            out = []
-            for raw, cs in zip(pdf[data_col], pdf[charset_col]):
-                if raw is None:
-                    out.append(None)
-                    continue
-                name = _PY_CODEC.get(cs, cs)
-                try:
-                    codecs.lookup(name)
-                except LookupError:
-                    name = _PY_CODEC.get(default, default)
-                s = bytes(raw).decode(name, errors="replace")
-                out.append(s.lstrip("﻿"))
-            pdf[out_col] = out
-            yield pdf
-
-    return with_cs.mapInPandas(dec, schema)

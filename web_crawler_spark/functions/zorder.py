@@ -10,8 +10,9 @@ row-group/file statistics prune on all of them at once.
 
 At 100 TB this is the difference between scanning a whole table and
 scanning a few files for a ``host = X AND fetch_ts BETWEEN …`` probe:
-the layout pass is one range-repartition + in-partition sort (exactly the
-shuffle a single-column sort would cost), paid once at write time.
+laying a table out by the key is one range-repartition + in-partition
+sort on it (exactly the shuffle a single-column sort would cost), paid
+once at write time.
 
 Everything is integer arithmetic — grid normalization is integer
 multiply/divide on driver-fetched min/max bounds (two scalars per column,
@@ -21,7 +22,7 @@ z-value is exact, deterministic, and oracle-checkable on any engine.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -29,7 +30,7 @@ def z_value(cols: list[Column], bits: int = 16) -> Column:
     """Interleave the low ``bits`` bits of each (non-negative integer)
     column into one Morton key: output bit (i·n + d) = bit i of column d.
     n·bits must fit in int64 (≤ 62). Callers normalize to [0, 2^bits)
-    first — :func:`grid_cell` or :func:`zorder_layout` do it for you."""
+    first — :func:`grid_cell` does it."""
     n = len(cols)
     if n * bits > 62:
         raise ValueError(f"{n} cols × {bits} bits exceeds int64")
@@ -57,36 +58,6 @@ def grid_cell(col: Column, lo: int, hi: int, bits: int = 16) -> Column:
     # (valid while span·2^bits < 2^53 — spans to ~2^37 at bits=16)
     m = a - F.pmod(a, F.lit(span))
     return (m / F.lit(span)).cast("bigint")
-
-
-def zorder_layout(
-    df: DataFrame,
-    cols: list[str],
-    bits: int = 16,
-    partitions: int | None = None,
-    z_col: str = "__z",
-) -> DataFrame:
-    """Re-layout ``df`` for multi-column pruning: normalize each key to
-    the grid (bounds = one global min/max agg, fetched as scalars and
-    folded to literals), range-partition by the Morton key, sort within
-    partitions by it, drop the key. Writing the result to parquet gives
-    row-group zone maps that prune on ALL of ``cols``.
-    """
-    bounds = df.agg(
-        *[F.min(c).cast("bigint").alias(f"lo_{c}") for c in cols],
-        *[F.max(c).cast("bigint").alias(f"hi_{c}") for c in cols],
-    ).collect()[0]
-    cells = [
-        grid_cell(F.col(c), int(bounds[f"lo_{c}"]), int(bounds[f"hi_{c}"]), bits)
-        for c in cols
-    ]
-    out = df.withColumn(z_col, z_value(cells, bits))
-    n = partitions or out.rdd.getNumPartitions()
-    return (
-        out.repartitionByRange(n, F.col(z_col))
-        .sortWithinPartitions(z_col)
-        .drop(z_col)
-    )
 
 
 def duckdb_z_value_sql(col_exprs: list[str], bits: int = 16) -> str:

@@ -1,10 +1,10 @@
 """Multimodal (image/audio/video) column plumbing.
 
-Media are opaque ``binary`` columns + typed metadata structs; decode /
-feature-extract / resize / frame-sample run as Arrow-batched mapInPandas
-stages. This container has no media libraries, so the decode kernels are
-STUBS (clearly-marked NotImplementedError or a deterministic fake) — the
-Spark-side contract (schemas, batching, partitioning) is real and tested.
+Media are opaque ``binary`` columns + typed metadata structs; header
+parsing and feature extraction run as Arrow-batched mapInPandas stages.
+This container has no media libraries, so everything here reads container
+headers and raw samples with the stdlib; full pixel decode is out of
+scope.
 
 At 100 TB: payloads dominate row size, so these stages must (a) never
 shuffle payload bytes — key by content hash first, join features back by
@@ -20,32 +20,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("media_type", T.StringType()),   # image/audio/video
-        T.StructField("content_hash", T.LongType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("magic", T.StringType()),        # sniffed container type
-    ]
-)
-
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("features", T.ArrayType(T.FloatType())),
-    ]
-)
-
-DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("pixels", T.BinaryType()),
-    ]
-)
 
 _MAGIC = {b"\x89PNG": "png", b"\xff\xd8\xff": "jpeg", b"RIFF": "riff",
           b"GIF8": "gif", b"\x00\x00\x00": "mp4ish"}
@@ -68,63 +42,12 @@ def sniff_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     )
 
 
-def decode_image_stage(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """REAL decode requires an image library absent from this container —
-    the stage is a stub with the production signature. Swap `_decode` for
-    PIL/libvips in a real deployment; nothing else changes."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            raise NotImplementedError(
-                "image decode requires PIL/libvips — not available in this "
-                "container; plumbing (schema/batching) is the tested contract"
-            )
-            yield pdf  # pragma: no cover
-
-    return df.select("url", payload_col).mapInPandas(gen, DECODED_SCHEMA)
-
-
-def fake_feature_stage(
-    df: DataFrame, payload_col: str = "payload", dim: int = 8
-) -> DataFrame:
-    """Deterministic fake feature extractor: 'embedding' = normalized bytes
-    of a rolling checksum. Stands in for a CLIP-style encoder; exercises the
-    exact Arrow batch shape a real model UDF would use."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            feats = []
-            for payload in pdf[payload_col]:
-                b = bytes(payload or b"")
-                acc = np.zeros(dim, dtype=np.float64)
-                for i, byte in enumerate(b):
-                    acc[i % dim] += byte
-                norm = float(np.linalg.norm(acc)) or 1.0
-                feats.append((acc / norm).astype(np.float32).tolist())
-            yield pd.DataFrame({"url": pdf["url"], "features": feats})
-
-    return df.select("url", payload_col).mapInPandas(gen, FEATURE_SCHEMA)
-
-
-def frame_sample_plan(df: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame-sampling *plan*: explode frame indices natively, decode
-    only sampled frames downstream (decode stub applies). Shows the
-    shuffle-free explode-then-process shape."""
-    return df.select(
-        "url",
-        F.explode(F.sequence(F.lit(0), F.lit(every_n * 4), F.lit(every_n))).alias("frame_idx"),
-    )
-
-
 # --- REAL header decode (stdlib-only) --------------------------------------
-# Full pixel decode still needs PIL/libvips (decode_image_stage stays the
-# documented stub), but container DIMENSIONS live in the first bytes of the
-# file and need no media library: PNG IHDR, GIF logical-screen descriptor,
-# JPEG SOF frame header, BMP info header. That is the metadata a 100 TB
-# multimodal pipeline actually scans for (aspect/size filters, thumbnail
-# routing) before any pixel ever decodes.
+# Full pixel decode still needs PIL/libvips, but container DIMENSIONS live
+# in the first bytes of the file and need no media library: PNG IHDR, GIF
+# logical-screen descriptor, JPEG SOF frame header, BMP info header. That
+# is the metadata a 100 TB multimodal pipeline actually scans for
+# (aspect/size filters, thumbnail routing) before any pixel ever decodes.
 
 IMAGE_DIMS_SCHEMA = T.StructType(
     [

@@ -5,13 +5,10 @@ that turns crawled HTML into training text).
 Reference parity: the reference extracts *table* text and link anchors
 (pacong/scrapers/generic_scraper.py get_text flow); a corpus engine also
 needs the complementary operation — keep the running prose, drop nav
-bars, footers, link lists. Spark-first split:
+bars, footers, link lists. Spark-first split, over block rows
+(doc, block_idx, text, link_density) — link density being chars inside
+``<a>`` over chars total, the one feature that needs the markup:
 
-* ``html_blocks`` — the only Python stage: one Arrow ``mapInPandas`` pass
-  segments HTML into block-level elements (stdlib ``html.parser``, the
-  same no-deps discipline as ``plans/extract.py``) and measures the one
-  feature that needs the markup: **link density** (chars inside ``<a>``
-  over chars total). Everything downstream is JVM columns.
 * ``classify_blocks`` — pure column expressions + two windows:
   raw class (bad if link-dense; good if long + stopword-dense; undecided
   otherwise), then jusText's context smoothing — an undecided block joins
@@ -21,9 +18,8 @@ bars, footers, link lists. Spark-first split:
 * ``main_content`` — reassembly: in-agg struct sort (the chunk-rewrite
   pattern, no join-back), ``concat_ws`` of the good blocks.
 
-At 100 TB: the mapInPandas stage is embarrassingly parallel over pages
-(no shuffle); classification + reassembly shuffle each doc's slim block
-rows (text only of kept blocks) once on doc_id.
+At 100 TB: classification + reassembly shuffle each doc's slim block rows
+(text only of kept blocks) once on doc_id.
 """
 
 from __future__ import annotations
@@ -37,103 +33,6 @@ from ..functions.text import STOPWORDS
 MAX_LINK_DENSITY = 0.33
 LENGTH_LOW = 80        # chars below which a block can't be 'good' on its own
 STOPWORD_LOW = 0.30    # stopword-token fraction for 'good'
-
-_BLOCK_TAGS = frozenset(
-    "p div h1 h2 h3 h4 h5 h6 li td th blockquote pre article section "
-    "header footer nav aside ul ol table tr dd dt".split()
-)
-_SKIP_TAGS = frozenset({"script", "style", "noscript", "template"})
-
-
-def _segment_html(html: str) -> list[tuple[str, float]]:
-    """(block_text, link_density) per block, document order. Malformed
-    markup never raises — html.parser is resynchronizing by design, and
-    the outer stage wraps per-row anyway (F5 error-isolation discipline)."""
-    from html.parser import HTMLParser
-
-    blocks: list[tuple[str, float]] = []
-
-    class _Seg(HTMLParser):
-        def __init__(self):
-            super().__init__(convert_charrefs=True)
-            self.buf: list[str] = []
-            self.link_chars = 0
-            self.total_chars = 0
-            self.a_depth = 0
-            self.skip_depth = 0
-
-        def _flush(self):
-            text = " ".join("".join(self.buf).split())
-            if text:
-                ld = self.link_chars / self.total_chars if self.total_chars else 0.0
-                blocks.append((text, ld))
-            self.buf, self.link_chars, self.total_chars = [], 0, 0
-
-        def handle_starttag(self, tag, attrs):
-            if tag in _SKIP_TAGS:
-                self.skip_depth += 1
-            elif tag in _BLOCK_TAGS:
-                self._flush()
-            elif tag == "a":
-                self.a_depth += 1
-            elif tag == "br":
-                self.buf.append(" ")
-
-        def handle_endtag(self, tag):
-            if tag in _SKIP_TAGS:
-                self.skip_depth = max(0, self.skip_depth - 1)
-            elif tag in _BLOCK_TAGS:
-                self._flush()
-            elif tag == "a":
-                self.a_depth = max(0, self.a_depth - 1)
-
-        def handle_data(self, data):
-            if self.skip_depth:
-                return
-            self.buf.append(data)
-            n = len(data.strip())
-            self.total_chars += n
-            if self.a_depth:
-                self.link_chars += n
-
-    p = _Seg()
-    p.feed(html or "")
-    p.close()
-    p._flush()
-    return blocks
-
-
-def html_blocks(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
-    """Arrow-batched segmentation: pages(url, html) → one row per block
-    (url, block_idx, text, link_density). Per-row try/except emits zero
-    blocks for an unparseable page instead of failing the stage."""
-    import pandas as pd
-
-    out_schema = f"{url_col} string, block_idx int, text string, link_density double"
-
-    def seg(it):
-        for pdf in it:
-            urls, idxs, texts, lds = [], [], [], []
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                if isinstance(html, (bytes, bytearray)):
-                    html = html.decode("utf-8", errors="replace")
-                try:
-                    bs = _segment_html(html)
-                except Exception:
-                    bs = []
-                for i, (t, ld) in enumerate(bs):
-                    urls.append(url)
-                    idxs.append(i)
-                    texts.append(t)
-                    lds.append(ld)
-            yield pd.DataFrame(
-                {url_col: urls, "block_idx": idxs, "text": texts,
-                 "link_density": lds}
-            )
-
-    return pages.select(url_col, html_col).mapInPandas(seg, out_schema)
 
 
 def _stop_density(text: Column, lang: str) -> Column:
@@ -225,20 +124,6 @@ def main_content(
         F.count(F.lit(1)).alias("n_blocks"),
         F.count(kept).alias("n_good_blocks"),
     )
-
-
-def extract_main_content(
-    pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-    lang: str = "en",
-    **thresholds,
-) -> DataFrame:
-    """End-to-end: pages(url, html) → (url, main_text, n_blocks,
-    n_good_blocks). Composition of the three stages above."""
-    b = html_blocks(pages, url_col=url_col, html_col=html_col)
-    c = classify_blocks(b, doc_col=url_col, lang=lang, **thresholds)
-    return main_content(c, doc_col=url_col)
 
 
 def host_templates(

@@ -250,10 +250,7 @@ def corpus_mix(
 
     Both paths compute the identical exact integer prefix sum over the
     identical order, so admit decisions never depend on the plan chosen.
-    ``LAST_MIX_PLAN`` records the probe result and chosen path. The
-    expectation-based percentile variant ``corpus_mix_sampled`` below
-    remains for when a windowless plan is preferred; it too makes
-    identical admit decisions as the sampled rate → budget/total.
+    ``LAST_MIX_PLAN`` records the probe result and chosen path.
 
     ``token_counter``: the unit the budgets are denominated in —
     ``"ws"`` (whitespace proxy, a Column expression, stays in codegen) or
@@ -318,66 +315,6 @@ def corpus_mix(
         cum.join(dim, "source")
         .filter(F.col("cum_tokens") - F.col("n_tokens") < F.col("__budget"))
         .select("doc_id", "source", "n_tokens", "cum_tokens")
-    )
-
-
-def corpus_mix_sampled(
-    df: DataFrame,
-    budgets: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    budget_col: str = "token_budget",
-    order_seed: str = "mix",
-    token_counter: str = "ws",
-) -> DataFrame:
-    """Window-free scale path for ``corpus_mix``: pass 1 aggregates total
-    tokens per source (map-side combinable, rows = #sources, collected to
-    the driver); pass 2 keeps a document iff its deterministic md5
-    percentile < budget/total for its source. Embarrassingly parallel —
-    no hot source partition — at the cost of hitting the budget in
-    expectation rather than exactly (binomial spread ~sqrt(n) documents).
-    Admission is by-document md5-percentile (same discipline as
-    ``functions/sampling.py``), so re-runs and engine ports agree.
-
-    The per-source admission rates are a broadcast-joined DataFrame
-    (one row per source), not a ``create_map`` literal — source
-    cardinality can be 10^5+ (per-domain weighting) without the plan
-    exploding; the rates side is the output of a map-side-combinable
-    agg so its row count IS the source count, always the small side."""
-    toks = _token_frame(df, text_col, id_col, source_col, token_counter)
-    if token_counter != "ws":
-        # toks feeds both the totals agg and the admission filter; a Python
-        # count stage (bpe) should run once, not once per consumer
-        toks = toks.localCheckpoint(eager=True)
-    totals = toks.groupBy("source").agg(F.sum("n_tokens").alias("__total"))
-    bdf = budgets.select(
-        F.col(source_col).alias("source"),
-        F.col(budget_col).cast("double").alias("__b"),
-    )
-    rates = totals.join(bdf, "source", "left").select(
-        "source",
-        F.when(F.col("__total") > 0,
-               F.least(F.lit(1.0), F.coalesce(F.col("__b"), F.lit(0.0)) / F.col("__total")))
-        .otherwise(F.lit(0.0))
-        .alias("__rate"),
-    )
-    pct = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(order_seed), F.lit(":"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("double")
-        / F.lit(float(0xFFFFFFFF))
-    )
-    return (
-        toks.join(F.broadcast(rates), "source")
-        .filter(pct < F.col("__rate"))
-        .select("doc_id", "source", "n_tokens")
     )
 
 

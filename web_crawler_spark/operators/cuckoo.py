@@ -273,22 +273,6 @@ def cuckoo_filter_stage(
     return df.mapInPandas(probe, schema)
 
 
-def cuckoo_delete_keys(filt: ShardedCuckoo, keys: np.ndarray) -> np.ndarray:
-    """Retire keys from the sharded filter in place (recrawl eligibility,
-    redirect supersession, blocklist eviction). The retired set is the
-    small side — driver-sized by construction (it is the per-epoch
-    eligibility delta, not the corpus)."""
-    h = np.asarray(keys, dtype=np.int64).astype(np.uint64)
-    removed = np.zeros(len(h), dtype=bool)
-    s = _shard_of(h, filt.n_shards)
-    for sv in np.unique(s):
-        t = filt.shards.get(int(sv))
-        if t is not None:
-            sel = s == sv
-            removed[sel] = t.delete(h[sel])
-    return removed
-
-
 def anti_join_seen_cuckoo(
     frontier: DataFrame,
     seen: DataFrame,

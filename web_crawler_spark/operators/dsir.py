@@ -33,8 +33,6 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -118,7 +116,7 @@ def fit_log_ratio(
     ≤ n_buckets rows — broadcast material. Buckets absent from BOTH sides
     (never observed, hence never joined by a scoring row built from the
     same raw corpus) contribute the constant default; callers scoring
-    out-of-corpus text should coalesce with :func:`default_lam_fp`.
+    out-of-corpus text pass it as ``dsir_weights(fallback_lam_fp=)``.
     """
     t = target_feats.groupBy("bucket").agg(F.sum("cnt").alias("t_cnt"))
     r = raw_feats.groupBy("bucket").agg(F.sum("cnt").alias("r_cnt"))
@@ -137,14 +135,6 @@ def fit_log_ratio(
             _fp_log_prob(F.col("t_cnt"), int(t_total), n_buckets)
             - _fp_log_prob(F.col("r_cnt"), int(r_total), n_buckets)
         ).alias("lam_fp"),
-    )
-
-
-def default_lam_fp(t_total: int, r_total: int, n_buckets: int) -> int:
-    """lam_fp of a bucket with zero observations on both sides."""
-    return int(
-        math.floor(math.log(1.0 / (t_total + n_buckets)) * FP)
-        - math.floor(math.log(1.0 / (r_total + n_buckets)) * FP)
     )
 
 

@@ -298,8 +298,9 @@ def anchor_text_summary(
     a better document title than the document's own ``<title>``, and the
     in-link host fan-in is a spam/authority feature).
 
-    Input is the resolved outlink table with anchor text
-    (``plans/extract.anchor_stage`` → ``resolve_links``). Anchor text is
+    Input is the resolved outlink table with anchor text (the
+    ``(href, anchor)`` pairs ``plans/extract.parse_html`` collects, through
+    ``resolve_links``). Anchor text is
     normalized (lowercase, whitespace collapsed); rows with empty anchors
     (image links, icon links) are dropped before aggregation.
 

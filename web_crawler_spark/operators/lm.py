@@ -135,15 +135,6 @@ def score_docs(
     )
 
 
-def perplexity_filter(
-    scored: DataFrame, max_perplexity: float
-) -> DataFrame:
-    """The CCNet head/middle/tail-style quality gate reduced to a
-    threshold: keep documents the model finds predictable. Pure filter —
-    composes with the Gopher flags and dedup gates in corpus pipelines."""
-    return scored.filter(F.col("perplexity") <= F.lit(max_perplexity))
-
-
 # --------------------------------------------------------------------------
 # Stupid Backoff trigram LM + the full CCNet bucket assignment
 # --------------------------------------------------------------------------

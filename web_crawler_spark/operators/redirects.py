@@ -163,23 +163,3 @@ def resolve_aliases(
             ).alias("effective_url"),
         )
     )
-
-
-def apply_redirects(
-    df: DataFrame,
-    resolved: DataFrame,
-    url_col: str = "url",
-) -> DataFrame:
-    """Rewrite ``url_col`` to the final destination wherever a resolved
-    mapping exists (unresolved cycles keep the original URL). The mapping
-    is redirect-log-sized — tiny next to the corpus — so it broadcasts;
-    the corpus side never shuffles."""
-    mapping = F.broadcast(
-        resolved.filter("resolved").select(
-            F.col("url").alias("_from"), F.col("final_url").alias("_to")
-        )
-    )
-    out = df.join(mapping, df[url_col] == mapping["_from"], "left")
-    return out.withColumn(
-        url_col, F.coalesce(F.col("_to"), F.col(url_col))
-    ).drop("_from", "_to")

@@ -85,17 +85,6 @@ def parse_robots_text(host: str, text: str, agent: str = "*") -> list[tuple]:
     return rows
 
 
-def sitemap_locations(rules: DataFrame) -> DataFrame:
-    """(host, sitemap_url) from parsed robots rules — feed the locations to
-    ``sources.sitemap.sitemap_scan`` (or the fetch join) to seed the
-    frontier from robots-advertised sitemaps."""
-    return (
-        rules.filter(F.col("rule") == "sitemap")
-        .select("host", F.col("path_prefix").alias("sitemap_url"))
-        .distinct()
-    )
-
-
 def parse_robots(robots_pages: DataFrame, host_col: str = "host",
                  body_col: str = "body") -> DataFrame:
     """(host, body) → rules table."""

@@ -703,21 +703,6 @@ def _pq_codes(vec: Column, codebooks: list[list[list[float]]]) -> Column:
     ])
 
 
-def pq_encode(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """(vec_id, codes array<int>) — the m-byte-per-vector index payload.
-    Pure projection: m × n_codes subspace distances per row inside one
-    select, no joins, no shuffles."""
-    return df.select(
-        F.col(id_col).alias("vec_id"),
-        _pq_codes(F.col(vec_col), codebooks).alias("codes"),
-    )
-
-
 def pq_topk(
     df: DataFrame,
     query_vec: list[float],
@@ -816,7 +801,7 @@ def pq_train(
 ) -> list[list[list[float]]]:
     """Per-subspace Lloyd's refinement of :func:`pq_codebooks` — real PQ
     training, all m subspaces fused into ONE job per iteration: the
-    assignment is pq_encode's ``_pq_codes`` (computed once per row for
+    assignment is ``_pq_codes`` (computed once per row for
     every subspace), and the update shuffles
     (s, code, pos, val) quadruples with map-side partial aggregation —
     ≈ corpus × dim × 16 B, never whole vectors, skew-free because pos

@@ -154,8 +154,8 @@ def cms_sketch(
     task emits into the exchange at depth·width rows, so shuffle volume is
     O(depth · width · partitions) — independent of N and of key
     cardinality, which is the reason to sketch instead of groupBy(key) at
-    100 TB. Sketches over disjoint slices merge by cell-wise sum
-    (:func:`cms_merge`) with NO re-scan of the data.
+    100 TB. Sketches over disjoint slices merge by cell-wise sum (a
+    groupBy(row, col) sum over their union) with NO re-scan of the data.
     """
     item = F.col(col).cast("string")
     cells = F.explode(
@@ -175,15 +175,6 @@ def cms_sketch(
         .groupBy(F.col("c.row").alias("row"), F.col("c.col").alias("col"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-
-
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge same-shape CMS sketches by cell-wise sum (exact: the merged
-    sketch is identical to sketching the concatenated streams)."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("row", "col").agg(F.sum("cnt").alias("cnt"))
 
 
 def cms_estimate(
@@ -301,18 +292,6 @@ def hll_sketch(
     )
 
 
-def hll_merge(
-    *sketches: DataFrame, group_cols: tuple[str, ...] = ()
-) -> DataFrame:
-    """Merge same-``p`` sketches by register-wise max (exact: identical to
-    sketching the concatenated streams — max is idempotent/commutative, so
-    re-merges and overlapping slices are harmless)."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy(*group_cols, "bucket").agg(F.max("rho").alias("rho"))
-
-
 def hll_estimate(
     sketch: DataFrame, p: int = 8, group_cols: tuple[str, ...] = ()
 ) -> DataFrame:
@@ -386,17 +365,6 @@ def dds_sketch(
         .groupBy(*group_cols, "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-
-
-def dds_merge(
-    *sketches: DataFrame, group_cols: tuple[str, ...] = ()
-) -> DataFrame:
-    """Merge same-α sketches by bucket-wise sum — exact (identical to
-    sketching the concatenated streams), the mergeability contract."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy(*group_cols, "bucket").agg(F.sum("cnt").alias("cnt"))
 
 
 def dds_quantiles(
@@ -532,38 +500,12 @@ def kmv_sketch(
     return merged
 
 
-def kmv_merge(a: DataFrame, b: DataFrame, k: int = 256,
-              group_cols: tuple[str, ...] = ()) -> DataFrame:
-    """Union-merge two sketches: k smallest of the combined hash sets —
-    exactly the sketch of A ∪ B (idempotent; overlapping inputs fine)."""
-    gcols = list(group_cols)
-    u = a.unionByName(b)
-    return (
-        u.select(*gcols, F.explode("hashes").alias("h"))
-        .groupBy(*gcols)
-        .agg(
-            F.slice(
-                F.array_sort(F.array_distinct(F.collect_list("h"))), 1, k
-            ).alias("hashes")
-        )
-    )
-
-
 def _kmv_est(hashes, k: int):
     """(k−1)·2^48/h_(k) in the full regime; exact size below k."""
     return F.when(
         F.size(hashes) < k, F.size(hashes).cast("double")
     ).otherwise(
         F.lit(float(k - 1) * _KMV_SPACE) / F.element_at(hashes, k).cast("double")
-    )
-
-
-def kmv_estimate(
-    sketch: DataFrame, k: int = 256, group_cols: tuple[str, ...] = ()
-) -> DataFrame:
-    """Distinct-count estimate per group (standard error ≈ 1/√(k−2))."""
-    return sketch.select(
-        *group_cols, F.round(_kmv_est(F.col("hashes"), k), 6).alias("distinct_est")
     )
 
 

@@ -27,14 +27,12 @@ registry suffix in practice.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import urltools as U
 
-__all__ = ["domain_blocklist_filter", "url_pattern_filter"]
+__all__ = ["domain_blocklist_filter"]
 
 
 def _suffix_cols(host, max_labels: int):
@@ -100,27 +98,6 @@ def domain_blocklist_filter(
     pred = ~blocked if keep == "allowed" else blocked
     drop = ["__host"] + [f"__hit{i}" for i in range(len(hit_flags))]
     return out.filter(pred).drop(*drop)
-
-
-def url_pattern_filter(
-    df: DataFrame,
-    url_col: str = "url",
-    deny_patterns: list[str] | None = None,
-    deny_extensions: list[str] | None = None,
-) -> DataFrame:
-    """Drop URLs matching any deny regex or ending in a denied extension
-    (case-insensitive, query/fragment ignored for the extension test).
-    Pure column predicates — stays inside whole-stage codegen."""
-    url = F.col(url_col)
-    pred = F.lit(True)
-    if deny_extensions:
-        path = F.lower(F.regexp_replace(url, r"[?#].*$", ""))
-        alts = "|".join(re.escape(e.lstrip(".")) for e in deny_extensions)
-        pred = pred & ~path.rlike(rf"\.({alts})$")
-    if deny_patterns:
-        for p in deny_patterns:
-            pred = pred & ~url.rlike(p)
-    return df.filter(pred)
 
 
 def url_family(url: Column | str) -> Column:
@@ -223,7 +200,7 @@ def detect_crawl_traps(
     One hash aggregation keyed on the family — the family key is computed
     in codegen, distinct counts partial-aggregate map-side, and the output
     is family-cardinality-sized (tiny next to the frontier), so the trap
-    table broadcast-joins back in :func:`filter_trapped_urls`.
+    table can broadcast-join back against any frontier.
     """
     fam = pages.select(
         url_family(url_col).alias("family"),
@@ -247,21 +224,6 @@ def detect_crawl_traps(
             <= F.col("n_urls") * F.lit(max_content_ratio)
         )
     return out.withColumn("is_trap", trap)
-
-
-def filter_trapped_urls(
-    frontier: DataFrame, traps: DataFrame, url_col: str = "url"
-) -> DataFrame:
-    """Drop frontier URLs whose family is a detected trap. The trap table
-    is family-cardinality-sized → broadcast anti-join; the frontier never
-    shuffles."""
-    t = F.broadcast(
-        traps.filter("is_trap").select(F.col("family").alias("_trap_fam"))
-    )
-    out = frontier.join(
-        t, url_family(url_col) == F.col("_trap_fam"), "left_anti"
-    )
-    return out
 
 
 def insignificant_params(

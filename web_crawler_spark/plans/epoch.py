@@ -76,6 +76,10 @@ EPOCH_CLOCK0 = datetime(2025, 7, 22, 9, 0, 0, tzinfo=timezone.utc)
 # for ~99% of rows beats that cost; below it the exact anti-join runs alone
 BLOOM_MIN_SEEN_ROWS = 500_000
 
+# host salts per epoch: the schedule partitions by (host, salt), so a hot
+# host's frontier spreads over this many tasks
+N_SALTS = 16
+
 
 def _counters():
     """The epoch counters over ``fetched``: rows and status=ok rows."""
@@ -94,18 +98,16 @@ class CrawlEngine:
         catalog_root: str,
         pages: DataFrame,
         delay_seconds: float = 2.0,
-        n_salts: int = 16,
         max_depth: int = 2,
         robots_pages: DataFrame | None = None,
         agent: str = "sparkcrawl",
         max_per_host_per_epoch: int | None = None,
         epoch_fetch_capacity: int | None = None,
-        compact_every: int | None = None,
     ):
         self.spark = spark
         self.catalog = EpochCatalog(catalog_root)
         self.delay_seconds = delay_seconds
-        self.n_salts = n_salts
+        self.n_salts = N_SALTS
         self.max_depth = max_depth
         self.agent = agent
         # per-host crawl budget: a hot host's frontier slice beyond this is
@@ -121,9 +123,6 @@ class CrawlEngine:
         # capacity exactly. Composes with max_per_host_per_epoch (the
         # effective budget is the lesser).
         self.epoch_fetch_capacity = epoch_fetch_capacity
-        # auto-maintenance: compact+vacuum every N committed epochs (the
-        # long-crawl small-file control; None = manual / CLI --compact)
-        self.compact_every = compact_every
         if robots_pages is not None:
             # rules + per-host crawl delays: tiny tables, parsed once,
             # broadcast into every epoch (a real deployment refreshes them
@@ -403,12 +402,6 @@ class CrawlEngine:
                 results.append({"epoch": epoch, "skipped": True})
                 continue
             results.append(self.run_epoch(seeds, epoch))
-            if self.compact_every and (epoch + 1) % self.compact_every == 0:
-                for table in ("fetched", "extracted", "outlinks",
-                              "metrics", "seen", "deferred"):
-                    if self.catalog.committed_epochs(table):
-                        self.catalog.compact(self.spark, table)
-                        self.catalog.vacuum(table)
         return results
 
 

@@ -235,25 +235,12 @@ def extract_simple_rows(html: str) -> list[dict]:
     return out
 
 
-def extract_links(html: str) -> list[str]:
-    return parse_html(html).links
-
-
 def extract_links_rel(html: str) -> list[tuple[str, bool]]:
     """(href, nofollow) in document order — rel="nofollow" (or any
     space-separated rel token list containing it) marks edges the link
     graph must not credit (the link-spam opt-out PageRank/TrustRank/
     anchor aggregation honor)."""
     return parse_html(html).link_rels
-
-
-def extract_anchors(html: str) -> list[tuple[str, str]]:
-    """(href, anchor text) pairs in document order. Hrefs match
-    :func:`extract_links` exactly (same attribute walk); anchor text is the
-    whitespace-normalized visible text between ``<a>`` and its (possibly
-    implied) close — nested ``<a>`` auto-closes the open one, an unclosed
-    trailing ``<a>`` keeps what it accumulated."""
-    return parse_html(html).anchors
 
 
 def extract_text(html: str) -> str:
@@ -422,7 +409,7 @@ def combined_extract_stage(pages: DataFrame) -> DataFrame:
     commodity-table stages would pay the parse twice. Callers split the
     result by null-ness of `link`; materialize it (localCheckpoint) before
     splitting or each branch re-runs the stage. Rows are byte-identical to
-    :func:`commodity_table_stage` plus one row per :func:`extract_links`
+    :func:`commodity_table_stage` plus one row per ``parse_html(html).links``
     href.
 
     Every input column other than ``url`` and ``html`` passes through
@@ -451,32 +438,6 @@ def combined_extract_stage(pages: DataFrame) -> DataFrame:
             yield pd.DataFrame(rows, columns=columns)
 
     return pages.select("url", "html", *carried).mapInPandas(gen, schema)
-
-
-ANCHORS_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("link", T.StringType()),
-        T.StructField("anchor", T.StringType()),
-    ]
-)
-
-
-def anchor_stage(pages: DataFrame) -> DataFrame:
-    """(url, link, anchor) outlink rows with the anchor's visible text —
-    the input of anchor-text aggregation (the classic search-index signal:
-    what *other* pages call a target). Hrefs match :func:`extract_links`
-    exactly; feed through :func:`resolve_links` for absolute targets."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                for href, anchor in extract_anchors(_decode(html)):
-                    rows.append((url, href, anchor))
-            yield pd.DataFrame(rows, columns=["url", "link", "anchor"])
-
-    return pages.select("url", "html").mapInPandas(gen, ANCHORS_SCHEMA)
 
 
 def text_stage(pages: DataFrame) -> DataFrame:

@@ -114,65 +114,10 @@ def forex_report(df: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# WARC export (Common-Crawl interop sink — engine addition; the input_hint
-# pages are Common-Crawl-style, so the natural EXPORT format is WARC/1.0
-# response records)
+# WARC/WET/WAT export (Common-Crawl interop sinks — engine addition; the
+# input_hint pages are Common-Crawl-style, so the natural EXPORT format is
+# WARC/1.0 records)
 # ---------------------------------------------------------------------------
-
-
-def warc_records(
-    fetched: DataFrame,
-    url_col: str = "canonical_url",
-    ts_col: str = "fetch_ts",
-    html_col: str = "html",
-) -> DataFrame:
-    """WARC/1.0 response records as one string column ``record`` — pure
-    Column concat, no UDF; a scan-shaped export at any corpus size.
-
-    Caveat (documented contract): the payload rides through a string
-    column, so this export is faithful for UTF-8 page bodies (the
-    synthetic corpus and the byte-identity fixtures are UTF-8).
-    ``Content-Length`` is the payload's OCTET length (UTF-8 bytes), per
-    the WARC spec, not the char count. WARC-Record-ID is a deterministic
-    urn:uuid derived from md5(url, ts) — re-exports are stable.
-    """
-    url = F.col(url_col)
-    body = F.col(html_col).cast("string")
-    h = F.md5(F.concat_ws("|", url, F.col(ts_col).cast("string")))
-    record_id = F.concat(
-        F.lit("<urn:uuid:"),
-        F.substring(h, 1, 8), F.lit("-"), F.substring(h, 9, 4), F.lit("-"),
-        F.substring(h, 13, 4), F.lit("-"), F.substring(h, 17, 4), F.lit("-"),
-        F.substring(h, 21, 12), F.lit(">"),
-    )
-    crlf = F.lit("\r\n")
-    record = F.concat(
-        F.lit("WARC/1.0"), crlf,
-        F.lit("WARC-Type: response"), crlf,
-        F.lit("WARC-Target-URI: "), url, crlf,
-        F.lit("WARC-Date: "),
-        F.date_format(F.col(ts_col), "yyyy-MM-dd'T'HH:mm:ss'Z'"), crlf,
-        F.lit("WARC-Record-ID: "), record_id, crlf,
-        F.lit("Content-Type: text/html"), crlf,
-        F.lit("Content-Length: "), F.octet_length(body).cast("string"), crlf,
-        crlf, body, crlf, crlf,
-    )
-    return fetched.filter(body.isNotNull()).select(
-        url.alias("url"), record.alias("record")
-    )
-
-
-def write_warc(
-    fetched: DataFrame, path: str,
-    url_col: str = "canonical_url", ts_col: str = "fetch_ts",
-    html_col: str = "html",
-) -> None:
-    """Write WARC records as text part-files (one record per row; WARC
-    readers treat a file as a record stream, so partitioned text output IS
-    a sharded WARC set — the standard Common Crawl layout)."""
-    warc_records(fetched, url_col, ts_col, html_col).select("record").write.mode(
-        "overwrite"
-    ).text(path)
 
 
 def wet_records(
@@ -182,17 +127,14 @@ def wet_records(
     text_col: str = "text",
 ) -> DataFrame:
     """WET ``conversion`` records (the Common Crawl extracted-text sidecar
-    format) as one string column ``record`` — same pure-Column shape and
-    UTF-8/octet-length contract as ``warc_records``; the export twin of
-    ``sources/warc.py::wet_text``."""
+    format) as one string column ``record`` — pure Column concat, no UDF.
+    The payload rides through a string column, so the export is faithful
+    for UTF-8 text; ``Content-Length`` is the payload's OCTET length, per
+    the WARC spec. ``sources/warc.py::warc_scan`` reads it back."""
     url = F.col(url_col)
     body = F.col(text_col).cast("string")
-    h = F.md5(F.concat_ws("|", F.lit("wet"), url, F.col(ts_col).cast("string")))
-    record_id = F.concat(
-        F.lit("<urn:uuid:"),
-        F.substring(h, 1, 8), F.lit("-"), F.substring(h, 9, 4), F.lit("-"),
-        F.substring(h, 13, 4), F.lit("-"), F.substring(h, 17, 4), F.lit("-"),
-        F.substring(h, 21, 12), F.lit(">"),
+    record_id = _urn_uuid(
+        F.md5(F.concat_ws("|", F.lit("wet"), url, F.col(ts_col).cast("string")))
     )
     crlf = F.lit("\r\n")
     record = F.concat(
@@ -209,16 +151,6 @@ def wet_records(
     return extracted.filter(body.isNotNull()).select(
         url.alias("url"), record.alias("record")
     )
-
-
-def write_wet(
-    extracted: DataFrame, path: str,
-    url_col: str = "canonical_url", ts_col: str = "fetch_ts",
-    text_col: str = "text",
-) -> None:
-    wet_records(extracted, url_col, ts_col, text_col).select("record").write.mode(
-        "overwrite"
-    ).text(path)
 
 
 def wat_records(
@@ -243,9 +175,10 @@ def wat_records(
     target URL (document order is not retained through the keyed agg;
     sorting is the deterministic, re-export-stable choice).
 
-    ``WARC-Refers-To`` carries the same deterministic urn:uuid the
-    ``warc_records`` export assigns the response record, so a WAT shard
-    cross-references its WARC shard without any join at read time.
+    ``WARC-Refers-To`` carries the same deterministic urn:uuid
+    (md5 of url|ts) that ``warc_revisit_records`` assigns the response
+    record, so a WAT shard cross-references its WARC shard without any join
+    at read time.
     """
     url = F.col(url_col)
     body = F.col(html_col).cast("string")
@@ -282,37 +215,19 @@ def wat_records(
     resp_h = F.md5(F.concat_ws("|", url, F.col(ts_col).cast("string")))
     wat_h = F.md5(F.concat_ws("|", F.lit("wat"), url, F.col(ts_col).cast("string")))
 
-    def _uuid(h):
-        return F.concat(
-            F.lit("<urn:uuid:"),
-            F.substring(h, 1, 8), F.lit("-"), F.substring(h, 9, 4), F.lit("-"),
-            F.substring(h, 13, 4), F.lit("-"), F.substring(h, 17, 4), F.lit("-"),
-            F.substring(h, 21, 12), F.lit(">"),
-        )
-
     crlf = F.lit("\r\n")
     record = F.concat(
         F.lit("WARC/1.0"), crlf,
         F.lit("WARC-Type: metadata"), crlf,
         F.lit("WARC-Target-URI: "), url, crlf,
         F.lit("WARC-Date: "), wdate, crlf,
-        F.lit("WARC-Record-ID: "), _uuid(wat_h), crlf,
-        F.lit("WARC-Refers-To: "), _uuid(resp_h), crlf,
+        F.lit("WARC-Record-ID: "), _urn_uuid(wat_h), crlf,
+        F.lit("WARC-Refers-To: "), _urn_uuid(resp_h), crlf,
         F.lit("Content-Type: application/json"), crlf,
         F.lit("Content-Length: "), F.octet_length(payload).cast("string"), crlf,
         crlf, payload, crlf, crlf,
     )
     return j.select(url.alias("url"), record.alias("record"))
-
-
-def write_wat(
-    fetched: DataFrame, links: DataFrame, path: str,
-    url_col: str = "canonical_url", ts_col: str = "fetch_ts",
-    html_col: str = "html", target_col: str = "target",
-) -> None:
-    wat_records(fetched, links, url_col, ts_col, html_col, target_col).select(
-        "record"
-    ).write.mode("overwrite").text(path)
 
 
 def write_commodity_workbook(df: DataFrame, path: str, k_summary: int = 5) -> None:
@@ -365,8 +280,8 @@ def write_commodity_workbook(df: DataFrame, path: str, k_summary: int = 5) -> No
 
 
 def _urn_uuid(h):
-    """Deterministic <urn:uuid:...> from an md5 hex column (the
-    warc_records/wet_records id derivation, factored for revisit refs)."""
+    """Deterministic <urn:uuid:...> from an md5 hex column — the record id
+    derivation every WARC/WET/WAT writer here shares."""
     return F.concat(
         F.lit("<urn:uuid:"),
         F.substring(h, 1, 8), F.lit("-"), F.substring(h, 9, 4), F.lit("-"),
@@ -447,44 +362,3 @@ def warc_revisit_records(
             F.when(is_revisit, revisit).otherwise(response).alias("record"),
         )
     )
-
-
-def write_jsonl_shards(
-    df: DataFrame, path: str, compress: bool = True
-) -> None:
-    """LLM-corpus interchange sink (the Dolma/OLMo convention: gzipped
-    JSONL shards, one document object per line): every row serializes
-    JVM-side via ``to_json(struct(*))`` — no Python in the path — and the
-    partitioned text write IS the shard layout (one .json.gz part-file
-    per partition, so shard count = partitioning, controlled upstream
-    with repartition). Readable back by any JSONL consumer or
-    ``spark.read.json``."""
-    out = df.select(F.to_json(F.struct(*df.columns)).alias("value"))
-    writer = out.write.mode("overwrite")
-    if compress:
-        writer = writer.option("compression", "gzip")
-    writer.text(path)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 64,
-    sort: bool = True,
-    mode: str = "overwrite",
-) -> None:
-    """Hash-bucketed (and bucket-sorted) parquet table sink — the
-    co-located-join layout: two tables bucketed the same way on their
-    join key join with ZERO exchanges, because every bucket i of one
-    table meets only bucket i of the other. At 100 TB this is the
-    difference between re-shuffling the corpus on every (url/doc_id)
-    join and never shuffling it again after ingest — the seen-set,
-    snapshot, and postings joins all key the same way. ``sortBy`` makes
-    each bucket file sort-merge-ready (no per-task sort at read).
-    Requires ``saveAsTable`` (bucket metadata lives in the catalog, not
-    the files)."""
-    w = df.write.mode(mode).format("parquet").bucketBy(int(n_buckets), bucket_col)
-    if sort:
-        w = w.sortBy(bucket_col)
-    w.saveAsTable(table)

@@ -113,11 +113,9 @@ class EpochCatalog:
         return df.withColumn("epoch", F.col("epoch").cast("int"))
 
     # -- maintenance (Iceberg rewrite-data-files / expire-snapshots) --------
-    def compact(
-        self, spark: SparkSession, table: str, files_per_epoch: int = 1
-    ) -> dict:
+    def compact(self, spark: SparkSession, table: str) -> dict:
         """Small-file compaction: rewrite every committed epoch's data into
-        ``files_per_epoch`` files per epoch under a new generation dir,
+        one file per epoch under a new generation dir,
         then commit the rewrite in the manifest (atomic replace — readers
         see either the old file set or the new one, never a mix). Epoch
         boundaries and lineage are untouched, so resume semantics are
@@ -142,7 +140,7 @@ class EpochCatalog:
         if os.path.exists(cdir):  # leftovers from a killed compaction
             shutil.rmtree(cdir)
         (
-            df.repartition(max(1, len(epochs) * files_per_epoch), "epoch")
+            df.repartition(len(epochs), "epoch")
             .write.partitionBy("epoch")
             .mode("overwrite")
             .parquet(cdir)

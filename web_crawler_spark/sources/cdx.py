@@ -18,48 +18,23 @@ Spark-first re-expression:
 
 - :func:`cdx_records` — urlkey via :func:`~web_crawler_spark.functions.
   urltools.surt_key` (pure Column, whole-stage codegen), 14-digit
-  timestamp via ``date_format``, JSON block via ``to_json``. No UDFs.
-- :func:`write_cdx` — ``repartitionByRange(n_shards, urlkey, ts)`` →
-  ``sortWithinPartitions`` → one text shard per range partition. Range
-  partitioning (Spark samples the key distribution) gives the GLOBAL sort
-  across shard files; each shard is internally sorted, so lookup is
-  cluster.idx → shard → in-shard scan of a key-contiguous slice.
-- ``cluster.idx`` holds one row per shard (first urlkey + filename) —
-  driver-sized by construction (40k shards for a 100 TB crawl ≈ a few MB),
-  the same way Common Crawl's cluster.idx is a single small file next to
-  300 cdx-*.gz shards.
-- :func:`cdx_lookup` prunes shard files through cluster.idx BEFORE Spark
-  reads anything — the file list handed to ``spark.read`` already excludes
-  every shard whose [first_key, next_first_key) range cannot contain the
-  prefix. At 10^10 captures a single-host query reads one or two shards.
+  timestamp via ``date_format``. No UDFs.
+- :func:`cdx_shard_plan` — the publishing layout: equal-count contiguous
+  (urlkey, ts) ranges with their boundary keys, i.e. the rows of a
+  ``cluster.idx`` — driver-sized by construction (40k shards for a
+  100 TB crawl ≈ a few MB), the same way Common Crawl's cluster.idx is a
+  single small file next to 300 cdx-*.gz shards.
 
 Deviation from the archival format, declared: ``digest`` is md5-hex (both
-Spark and the DuckDB oracle compute it natively) rather than sha1-base32,
-and shards are plain text rather than gzip members (``.gz`` per-member
-framing is an HTTP-range-serving concern, not a query-engine one).
+Spark and the DuckDB oracle compute it natively) rather than sha1-base32.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.urltools import surt_key
-
-CDX_SCHEMA = T.StructType(
-    [
-        T.StructField("urlkey", T.StringType(), False),
-        T.StructField("ts", T.StringType(), False),
-        T.StructField("url", T.StringType(), False),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("status", T.IntegerType(), True),
-        T.StructField("digest", T.StringType(), True),
-        T.StructField("length", T.LongType(), True),
-    ]
-)
 
 
 def cdx_records(
@@ -90,121 +65,6 @@ def cdx_records(
         status.alias("status"),
         F.md5(body.cast("binary")).alias("digest"),
         F.octet_length(body).cast("long").alias("length"),
-    )
-
-
-def cdx_lines(records: DataFrame) -> DataFrame:
-    """CDX rows → one CDXJ text line per capture (column ``value``)."""
-    block = F.to_json(
-        F.struct("url", "mime", "status", "digest", "length")
-    )
-    return records.select(
-        F.concat_ws(" ", F.col("urlkey"), F.col("ts"), block).alias("value")
-    )
-
-
-def write_cdx(records: DataFrame, path: str, n_shards: int = 4) -> list[dict]:
-    """Write a globally-sorted sharded CDXJ index + ``cluster.idx``.
-
-    ``repartitionByRange`` samples (urlkey, ts) and assigns contiguous key
-    ranges to partitions; ``sortWithinPartitions`` orders within each.
-    Text part files inherit the partition index, so the shard files are in
-    global key order. ``cluster.idx`` (first key of every shard → shard
-    file) is one row per shard — collected to the driver by construction,
-    exactly like Common Crawl's own cluster.idx.
-
-    Returns the cluster.idx entries ``[{"urlkey", "ts", "file"}, ...]``.
-    """
-    shard_dir = os.path.join(path, "shards")
-    out = records.repartitionByRange(
-        n_shards, F.col("urlkey"), F.col("ts")
-    ).sortWithinPartitions("urlkey", "ts")
-    cdx_lines(out).write.mode("overwrite").text(shard_dir)
-
-    spark = records.sparkSession
-    # first line per shard file: min() is the first line because each shard
-    # is sorted — one tiny agg over the just-written index, no driver scan
-    firsts = (
-        spark.read.text(shard_dir)
-        .select(
-            F.input_file_name().alias("file"),
-            F.col("value").alias("line"),
-        )
-        .groupBy("file")
-        .agg(F.min("line").alias("first_line"))
-        .orderBy("file")
-        .collect()
-    )
-    entries = []
-    for r in firsts:
-        urlkey, ts, _ = r["first_line"].split(" ", 2)
-        fname = os.path.basename(r["file"])
-        entries.append({"urlkey": urlkey, "ts": ts, "file": fname})
-    with open(os.path.join(path, "cluster.idx"), "w", encoding="utf-8") as f:
-        for e in entries:
-            f.write(f"{e['urlkey']} {e['ts']}\t{e['file']}\n")
-    return entries
-
-
-def read_cluster_idx(path: str) -> list[dict]:
-    entries = []
-    with open(os.path.join(path, "cluster.idx"), encoding="utf-8") as f:
-        for line in f:
-            key_part, fname = line.rstrip("\n").split("\t")
-            urlkey, ts = key_part.rsplit(" ", 1)
-            entries.append({"urlkey": urlkey, "ts": ts, "file": fname})
-    return entries
-
-
-def _parse_lines(df: DataFrame) -> DataFrame:
-    """CDXJ text lines → typed CDX rows (split + from_json, no UDF)."""
-    urlkey = F.substring_index(F.col("value"), " ", 1)
-    rest = F.expr("substring(value, length(substring_index(value, ' ', 1)) + 2)")
-    ts = F.substring_index(rest, " ", 1)
-    block = F.expr(
-        "substring(value, length(substring_index(value, ' ', 2)) + 2)"
-    )
-    json_schema = T.StructType(
-        [f for f in CDX_SCHEMA.fields if f.name not in ("urlkey", "ts")]
-    )
-    parsed = F.from_json(block, json_schema)
-    return df.select(
-        urlkey.alias("urlkey"),
-        ts.alias("ts"),
-        parsed["url"].alias("url"),
-        parsed["mime"].alias("mime"),
-        parsed["status"].alias("status"),
-        parsed["digest"].alias("digest"),
-        parsed["length"].alias("length"),
-    )
-
-
-def cdx_scan(spark: SparkSession, path: str) -> DataFrame:
-    """Read the whole index back as typed rows."""
-    return _parse_lines(spark.read.text(os.path.join(path, "shards")))
-
-
-def cdx_lookup(spark: SparkSession, path: str, prefix: str) -> DataFrame:
-    """Prefix lookup (exact URL / host / domain query) that reads ONLY the
-    shards whose key range can contain ``prefix`` — shard pruning happens
-    on the driver via cluster.idx before any Spark scan is planned.
-
-    Shard i covers [first_i, first_{i+1}); it can contain keys starting
-    with ``prefix`` iff first_i < prefix+SENTINEL and (i is last or
-    first_{i+1} > prefix). Within the surviving shard(s) the startswith
-    filter runs as a codegen substring compare.
-    """
-    entries = read_cluster_idx(path)
-    hi = prefix + "￿"
-    keep = []
-    for i, e in enumerate(entries):
-        nxt = entries[i + 1]["urlkey"] if i + 1 < len(entries) else None
-        if e["urlkey"] <= hi and (nxt is None or nxt >= prefix):
-            keep.append(os.path.join(path, "shards", e["file"]))
-    if not keep:
-        return spark.createDataFrame([], CDX_SCHEMA)
-    return _parse_lines(spark.read.text(keep)).filter(
-        F.col("urlkey").startswith(prefix)
     )
 
 

@@ -37,11 +37,6 @@ ROBOTS_BODIES: dict[str, str] = {
 }
 
 
-def generate_robots(spark: SparkSession) -> DataFrame:
-    rows = [(host, body) for host, body in sorted(ROBOTS_BODIES.items())]
-    return spark.createDataFrame(rows, "host string, body string")
-
-
 def robots_scan(spark: SparkSession, path: str) -> DataFrame:
     """Real-bytes distributed robots.txt ingest — the binaryFile →
     mapInPandas discipline every other source follows (sitemap / xlsx /

@@ -1,6 +1,6 @@
 """WARC / WET read path (ISO 28500, the Common Crawl container) on the
 stdlib — the ingest half of the engine's Common-Crawl interop (the export
-half is ``plans/report.py::warc_records`` / ``write_warc``).
+half is ``plans/report.py``'s WARC/WET/WAT record writers).
 
 The reference crawler fetches live HTTP (pacong/core/engine.py:60-96); a
 100 TB-corpus engine ingests the same pages from WARC archives instead, so
@@ -165,7 +165,7 @@ def warc_record_bytes(
     http_status: int = 200,
 ) -> bytes:
     """One WARC/1.0 record as bytes — fixture/export helper mirroring the
-    column-side ``plans/report.py::warc_records``. response records wrap
+    column-side writers in ``plans/report.py``. response records wrap
     the body in a minimal HTTP/1.1 message (the Common Crawl shape);
     other types carry the body raw."""
     if warc_type == "response" and content_type.lower().startswith("application/http"):
@@ -237,70 +237,6 @@ def warc_rows_stage(df):
 def warc_scan(spark, path: str):
     return warc_rows_stage(
         spark.read.format("binaryFile").load(path).select("path", "content")
-    )
-
-
-def warc_pages(spark, path: str):
-    """WARC response records → the engine's pages shape (input_hint):
-    (url, warc_ts timestamp, html binary). WET ``conversion`` records from
-    the same path land as (url, warc_ts, text) via ``wet_text`` instead."""
-    from pyspark.sql import functions as F
-
-    return (
-        warc_scan(spark, path)
-        .filter(F.col("warc_type") == "response")
-        .select(
-            "url",
-            F.to_timestamp("warc_date", "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("warc_ts"),
-            F.col("payload").alias("html"),
-        )
-    )
-
-
-def wat_metadata(spark, path: str):
-    """WAT ``metadata`` records → (url, warc_ts, title, links
-    array<string>): the JSON envelope is decoded JVM-side with
-    ``from_json`` against the declared envelope subset — no Python in the
-    payload path (the record framing already went through the shared
-    ``warc_rows_stage``). Records whose payload is not valid envelope
-    JSON yield NULL title/links (from_json's permissive contract), not a
-    failed stage."""
-    from pyspark.sql import functions as F
-
-    env_schema = (
-        "struct<Envelope: struct<"
-        "`WARC-Header-Metadata`: struct<`WARC-Target-URI`: string, "
-        "`WARC-Date`: string, `WARC-Type`: string>, "
-        "`Payload-Metadata`: struct<`HTTP-Response-Metadata`: struct<"
-        "`HTML-Metadata`: struct<Head: struct<Title: string>, "
-        "Links: array<struct<path: string, url: string>>>>>>>"
-    )
-    parsed = (
-        warc_scan(spark, path)
-        .filter(F.col("warc_type") == "metadata")
-        .withColumn("env", F.from_json(F.col("payload").cast("string"), env_schema))
-    )
-    html_meta = F.col("env.Envelope.Payload-Metadata.HTTP-Response-Metadata.HTML-Metadata")
-    return parsed.select(
-        "url",
-        F.to_timestamp("warc_date", "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("warc_ts"),
-        html_meta.getField("Head").getField("Title").alias("title"),
-        F.transform(html_meta.getField("Links"), lambda l: l["url"]).alias("links"),
-    )
-
-
-def wet_text(spark, path: str):
-    """WET extracted-text records → (url, warc_ts, text string)."""
-    from pyspark.sql import functions as F
-
-    return (
-        warc_scan(spark, path)
-        .filter(F.col("warc_type") == "conversion")
-        .select(
-            "url",
-            F.to_timestamp("warc_date", "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("warc_ts"),
-            F.col("payload").cast("string").alias("text"),
-        )
     )
 
 

@@ -8,14 +8,13 @@ with watermarked state.
 
 * ``streaming_market_summary``  — windowed A1/A2 aggregates with late-data
   watermark; update-mode sink.
-* ``streaming_dedup``           — F8 as ``dropDuplicatesWithinWatermark``
-  (state-bounded seen-set, the streaming twin of the anti-join).
-* ``streaming_extract``         — the mapInPandas extraction stage applied
-  on a stream (1→N stateless, identical code path as batch — the function
-  is reused, not rewritten).
-* ``run_epoch_as_stream``       — foreachBatch wrapper that drives the
-  batch epoch pipeline from a stream (micro-batch = epoch), exactly the
-  optional hook SURVEY §2.11 names.
+* ``fetch_sessions``            — gap-based sessionization of a fetch log,
+  the same plan on a batch log and a watermarked stream.
+* ``fetch_outlink_join``        — watermarked stream-stream join of each
+  outlink to the fetch that produced it.
+
+The batch extraction stages (``plans/extract.py``) run unchanged on a
+stream: ``mapInPandas`` is streaming-capable, so no streaming copy exists.
 
 Tested with file-source + ``trigger(availableNow=True)`` so the whole
 thing runs deterministically in CI.
@@ -25,14 +24,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def read_events_stream(spark, path: str, schema) -> DataFrame:
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(path)
-    )
 
 
 def streaming_market_summary(
@@ -59,58 +50,6 @@ def streaming_market_summary(
             F.col("w.start").alias("window_start"),
             "event_type", "n", "avg_change", "gainers", "losers",
         )
-    )
-
-
-def streaming_dedup(
-    events: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "ts",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """F8 streaming twin: exactly-once per key within the watermark horizon.
-    The crawl seen-set equivalent for a continuously-fed frontier — state
-    size bounded by (keys arriving within the horizon), not total history;
-    the batch anti-join vs the persistent `seen` table remains the
-    cross-horizon source of truth."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        key_cols
-    )
-
-
-def streaming_extract(pages_stream: DataFrame) -> DataFrame:
-    """The byte-identical extraction stage on a stream — same mapInPandas
-    function as batch (stateless 1→N keeps the exact extraction contract)."""
-    from ..plans.extract import commodity_table_stage
-
-    return commodity_table_stage(pages_stream)
-
-
-def run_query_to_memory(df: DataFrame, name: str, output_mode: str = "append"):
-    """Deterministic test driver: availableNow → drain → stop."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-def run_epoch_as_stream(spark, seeds_stream: DataFrame, engine, n_epochs: int):
-    """foreachBatch: each micro-batch of seed URLs becomes one crawl epoch —
-    the streaming driver for plans/epoch.CrawlEngine (epoch id = batch id)."""
-
-    def handle(batch_df: DataFrame, batch_id: int):
-        if batch_id < n_epochs:
-            engine.run_epoch(batch_df, int(batch_id))
-
-    return (
-        seeds_stream.writeStream.foreachBatch(handle)
-        .trigger(availableNow=True)
-        .start()
     )
 
 
