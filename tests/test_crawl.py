@@ -308,13 +308,14 @@ _GATED_ROBOTS = {
     "example-commodities.net": "User-agent: sparkcrawl\nDisallow: /simple_table/1\n",
 }
 # Spark jobs each epoch of the gated crawl below may run (measured: the
-# admission pipeline is materialised once per epoch against robots rules
-# compiled once per engine, the schedule is shuffled once by (host, salt),
-# the budgets are water-filled on the driver from a per-host demand
-# observed on the schedule checkpoint, the epoch counters are observed on
-# the fetched checkpoint's job, and outlinks carry their depth out of
-# extraction)
-_GATED_JOB_BUDGET = [18, 22]
+# admission — robots decision, schedule and per-host demand — is one
+# checkpoint over one (host, salt) exchange and one broadcast of the
+# per-host robots table compiled once per engine, the budgets are
+# water-filled on the driver from the demand observed on that checkpoint,
+# the epoch counters are observed on the fetched checkpoint's job,
+# outlinks carry their depth out of extraction, and catalog reads pass
+# the committed schema instead of inferring it)
+_GATED_JOB_BUDGET = [15, 16]
 # the catalog tables an epoch commits, `seen` last
 _TABLES = ("fetched", "extracted", "outlinks", "metrics", "deferred", "seen")
 
@@ -371,12 +372,51 @@ def test_gated_crawl_job_budget(spark, gated_crawl):
     assert all(j <= b for j, b in zip(jobs, _GATED_JOB_BUDGET)), jobs
 
 
+def test_gated_commits_are_sized_by_rows(spark, gated_crawl):
+    """Each table of each epoch is committed as ceil(rows / ROWS_PER_FILE)
+    files (at least one), not one file per shuffle partition."""
+    import glob
+    import os
+
+    from web_crawler_spark.plans.epoch import ROWS_PER_FILE
+
+    _pages, _seeds, eng, _stats, _jobs = gated_crawl
+    for table in _TABLES:
+        rows = {
+            r["epoch"]: r["count"]
+            for r in eng.catalog.read(spark, table).groupBy("epoch").count().collect()
+        }
+        for epoch in eng.catalog.committed_epochs(table):
+            files = glob.glob(
+                os.path.join(eng.catalog.root, table, f"epoch={epoch}", "*.parquet")
+            )
+            want = max(1, -(-rows.get(epoch, 0) // ROWS_PER_FILE))
+            assert len(files) == want, (table, epoch, len(files), rows)
+
+
+def test_admission_is_one_exchange_and_one_broadcast(spark, gated_crawl):
+    """Over a deduplicated frontier, the admission frame (robots decision,
+    schedule, per-host demand) shuffles once, by (host, salt), and
+    broadcasts once, the per-host robots table: the robots window and the
+    schedule windows partition by (host, salt, …) and need no exchange."""
+    import re
+
+    _pages, seeds, eng, _stats, _jobs = gated_crawl
+    admitted = eng._admission(eng._frontier_for(seeds, 0).localCheckpoint(), 0)
+    admitted.collect()
+    plan = admitted._jdf.queryExecution().executedPlan().executedPlan().toString()
+    shuffles = re.findall(r"(?<!Broadcast)Exchange (.*)", plan)
+    assert len(shuffles) == 1, plan
+    assert re.match(r"hashpartitioning\(host#\d+, salt#\d+L?, \d+\)", shuffles[0]), plan
+    assert plan.count("BroadcastExchange ") == 1, plan
+
+
 @pytest.mark.parametrize(
     "lost, job_budget",
     [
-        pytest.param(_TABLES[1:], 21, id="after_fetched"),
-        pytest.param(("seen",), 16, id="before_seen"),
-        pytest.param(("extracted", "seen"), 17, id="before_extracted_and_seen"),
+        pytest.param(_TABLES[1:], 15, id="after_fetched"),
+        pytest.param(("seen",), 10, id="before_seen"),
+        pytest.param(("extracted", "seen"), 11, id="before_extracted_and_seen"),
     ],
 )
 def test_gated_resume_after_mid_epoch_crash(spark, gated_crawl, tmp_path, lost, job_budget):
@@ -446,6 +486,60 @@ def test_decide_robots_over_compiled_rules_matches_robots_decisions(spark):
         assert {r["robots_allowed"] for r in a} == {True, False}
         matched |= {r["matched_rule"] for r in a}
     assert matched == {None, "allow", "disallow"}
+
+
+def test_host_rules_table_matches_decisions_and_delays(spark):
+    """The engine's one per-host robots table (compiled rules, a sentinel
+    per host, each row carrying the host's delay) gives, through
+    ``decide_robots``, ``robots_decisions``' rows plus the ``crawl_delays``
+    delay (the default for a host that sets none) — for the gated crawl's
+    robots plus a host with a delay and no rules and a host with rules and
+    no delay — and the engine's ``delays`` lists each such host's delay."""
+    from web_crawler_spark.functions import urltools as U
+    from web_crawler_spark.operators import robots as RB
+
+    bodies = dict(_GATED_ROBOTS)
+    bodies["slow.example"] = "User-agent: sparkcrawl\nCrawl-delay: 5\n"
+    bodies["private.example"] = "User-agent: *\nDisallow: /private\nAllow: /private/ok\n"
+    rules = RB.parse_robots(
+        spark.createDataFrame(sorted(bodies.items()), "host string, body string")
+    )
+    paths = ["/", "/nasty/1", "/links/13", "/links/13/x", "/simple_table/1",
+             "/simple_table/10", "/private", "/private/ok", "/other"]
+    urls = [f"https://{h}{p}" for h in [*bodies, "norules.example"] for p in paths]
+    frontier = U.with_url_columns(
+        spark.createDataFrame([(u,) for u in urls], "url string")
+    )
+    agent, default = "sparkcrawl", 2.0
+    table = RB.compile_host_rules(rules, agent, default).localCheckpoint()
+    delays = RB.crawl_delays(rules, agent, default)
+    want = RB.robots_decisions(frontier, rules, agent).join(
+        delays, "host", "left"
+    ).withColumn(
+        "delay_seconds",
+        F.when(F.col("host").isin(list(bodies)), F.coalesce("delay_seconds", F.lit(default))),
+    )
+    got = RB.decide_robots(frontier, table)
+    cols = sorted(want.columns)
+    assert cols == sorted(got.columns)
+    a = sorted(want.select(cols).collect(), key=repr)
+    b = sorted(got.select(cols).collect(), key=repr)
+    assert a == b
+    assert len(a) == len(urls)
+    assert {r["robots_allowed"] for r in a} == {True, False}
+    got_delays = {
+        r["host"]: r["delay_seconds"] for r in b if r["host"] != "norules.example"
+    }
+    assert got_delays == {
+        **dict.fromkeys(bodies, default),
+        "markets.businessinsider.com": 1.0,
+        "slow.example": 5.0,
+    }
+    # one sentinel per host with rules or a delay: the engine's delays
+    sentinels = table.filter(F.col("rule").isNull())
+    assert sorted(
+        (r["r_host"], r["delay_seconds"]) for r in sentinels.collect()
+    ) == sorted(got_delays.items())
 
 
 def test_seen_admits_once_across_epochs(spark, catalog_dir, monkeypatch):
@@ -538,6 +632,85 @@ def test_catalog_compaction_and_vacuum(spark, tmp_path):
     removed2 = cat.vacuum("t")
     assert any("_compact_g1" in p for p in removed2)
     assert cat.read(spark, "t").count() == 350
+
+
+def _read_inferred(spark, cat, table, monkeypatch):
+    """``cat.read`` as if the manifest recorded no schema: inference."""
+    from web_crawler_spark.sources.catalog import EpochCatalog
+
+    manifest = EpochCatalog.manifest
+
+    def no_schema(self, t):
+        m = manifest(self, t)
+        m.pop("schema", None)
+        return m
+
+    with monkeypatch.context() as m:
+        m.setattr(EpochCatalog, "manifest", no_schema)
+        return cat.read(spark, table)
+
+
+def _read_jobs(spark, cat, table):
+    """(frame, Spark jobs ``cat.read`` ran)."""
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.numTotalJobs()
+    df = cat.read(spark, table)
+    return df, scheduler.numTotalJobs() - before
+
+
+def test_catalog_read_uses_the_committed_schema(spark, gated_crawl, tmp_path, monkeypatch):
+    """``read`` passes the schema recorded at commit to the reader, so it
+    runs no Spark job, and returns inference's column names, order and
+    types: for the crawl's six tables, for a table whose ``epoch`` column
+    is not last, after compaction, with a zero-row epoch, and for a
+    manifest written without a schema."""
+    import json
+
+    from web_crawler_spark.sources.catalog import EpochCatalog
+
+    def same(cat, table):
+        got, jobs = _read_jobs(spark, cat, table)
+        want = _read_inferred(spark, cat, table, monkeypatch)
+        assert jobs == 0, (table, jobs)
+        assert got.schema == want.schema, (table, got.schema, want.schema)
+        assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr), table
+
+    _pages, _seeds, eng, _stats, _jobs = gated_crawl
+    for table in _TABLES:
+        same(eng.catalog, table)
+
+    cat = EpochCatalog(str(tmp_path / "cat"))
+    for e in range(3):
+        n = 0 if e == 1 else 10  # epoch 1 commits no rows
+        df = spark.range(e * 10, e * 10 + n, 1, 3).select(
+            F.lit(e).alias("epoch"), "id",
+            F.lit("2025-07-22 09:00:00").cast("timestamp").alias("ts"),
+            F.lit(None).cast("double").alias("d"),
+        )
+        cat.commit_epoch("with_epoch", e, df)
+        cat.commit_epoch("without_epoch", e, df.drop("epoch"))
+    for table in ("with_epoch", "without_epoch"):
+        same(cat, table)
+        assert cat.read(spark, table).count() == 20
+        cat.compact(spark, table)
+        same(cat, table)
+        cat.commit_epoch(table, 3, spark.range(1).select(
+            F.lit(3).alias("epoch"), "id",
+            F.lit(None).cast("timestamp").alias("ts"), F.lit(1.5).alias("d"),
+        ).drop(*(["epoch"] if table == "without_epoch" else [])))
+        same(cat, table)  # compacted epochs unioned with a live one
+
+    # a manifest from before schemas were recorded still reads, by inference
+    path = cat._manifest_path("with_epoch")
+    with open(path) as f:
+        m = json.load(f)
+    want = cat.read(spark, "with_epoch")
+    del m["schema"]
+    with open(path, "w") as f:
+        json.dump(m, f)
+    got = cat.read(spark, "with_epoch")
+    assert got.schema == want.schema
+    assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
 
 
 def test_auto_compaction_mid_crawl_preserves_resume(spark, tmp_path):

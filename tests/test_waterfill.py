@@ -58,10 +58,11 @@ def test_over_budget_predicate_row_for_row(spark):
     """The literal deferral predicate, built on the driver from a
     {host: demand} dict, equals ``seq > budget[host]`` on every row, with
     the per-host cap applied and a null host (no budget: every row
-    deferred) taking its share of the water-fill."""
+    deferred) taking its share of the water-fill; ``rows_over_budget``
+    counts the rows it marks."""
     from pyspark.sql import functions as F
 
-    from web_crawler_spark.plans.epoch import over_budget
+    from web_crawler_spark.plans.epoch import over_budget, rows_over_budget
 
     demand = {"a": 7, "b": 2, "c": 5, "d": 5, None: 3}
     rows = [(h, s) for h, n in demand.items() for s in range(1, n + 1)]
@@ -76,6 +77,8 @@ def test_over_budget_predicate_row_for_row(spark):
             b = 0 if r["host"] is None else budget[r["host"]]
             b = b if cap is None else min(b, cap)
             assert r["over"] is (r["seq"] > b), (capacity, cap, r)
+        # the deferred row count the commit sizing reads off the same dict
+        assert rows_over_budget(demand, capacity, cap) == sum(r["over"] for r in got)
 
 
 def test_matches_python_reference(spark):

@@ -14,7 +14,8 @@ Implements the RFC 9309 core as relational algebra:
   ``compile_rules`` (agent-group pick, pattern → regex), the match is
   ``decide_robots``; a crawl compiles once and decides every epoch.
 * ``crawl_delays`` — per-host Crawl-delay overrides for the politeness
-  scheduler.
+  scheduler. ``compile_host_rules`` carries them on the compiled rules, so
+  a crawl broadcasts one per-host table for the gate and the schedule.
 
 Scale: rules are per-HOST, so the join key equals the scheduling partition
 key — applying robots after the host repartition adds zero shuffles, and
@@ -151,14 +152,24 @@ def decide_robots(
     compiled: DataFrame,
     host_col: str = "host",
     url_col: str = "canonical_url",
+    salt_col: str | None = None,
 ) -> DataFrame:
     """The per-URL decision of :func:`robots_decisions` against rules
-    already compiled by :func:`compile_rules`: one broadcast match of the
-    URL path against its host's rules, then longest-match-wins per URL."""
+    already compiled by :func:`compile_rules` or :func:`compile_host_rules`:
+    one broadcast match of the URL path against its host's rules, then
+    longest-match-wins per URL. A rule row with a NULL ``rule`` (the
+    per-host sentinel of :func:`compile_host_rules`) matches every URL of
+    its host and loses to any rule that really matches; columns of the
+    compiled table beyond the rule ones (``delay_seconds``) ride along.
+
+    ``salt_col`` names a column that is a function of the host (as in
+    :func:`politeness.crawl_order`): the longest-match window then
+    partitions by (host, salt, url), which groups the same rows, so a
+    frontier already repartitioned by (host, salt) is not shuffled again."""
     path = F.coalesce(
         F.try_parse_url(F.col(url_col), F.lit("PATH")), F.lit("/")
     )
-    matched = F.when(
+    matched = F.col("rule").isNull() | F.when(
         F.col("is_plain"), F.col("__path").startswith(F.col("path_prefix"))
     ).otherwise(F.rlike(F.col("__path"), F.col("path_regex")))
     joined = frontier.withColumn("__path", path).join(
@@ -166,7 +177,8 @@ def decide_robots(
         (F.col(host_col) == F.col("r_host")) & matched,
         "left",
     )
-    w = Window.partitionBy(host_col, url_col).orderBy(
+    keys = [host_col] if salt_col is None else [host_col, salt_col]
+    w = Window.partitionBy(*keys, url_col).orderBy(
         F.desc("prefix_len"),
         F.when(F.col("rule") == "allow", 0).otherwise(1),  # allow wins ties
     )
@@ -185,6 +197,39 @@ def decide_robots(
             "__path", "__rn", "r_host", "rule", "path_prefix",
             "is_plain", "path_regex", "prefix_len",
         )
+    )
+
+
+def compile_host_rules(
+    rules: DataFrame, agent: str = "*", default_delay: float = 2.0
+) -> DataFrame:
+    """The crawl's one per-host robots table: :func:`compile_rules`' rows
+    plus one sentinel row per host that has rules or a Crawl-delay (rule,
+    pattern and regex NULL, ``prefix_len`` -1), every row carrying the
+    host's :func:`crawl_delays` ``delay_seconds`` (``default_delay`` when
+    it sets none). :func:`decide_robots` against it gives
+    :func:`robots_decisions`' rows, and every URL of a host in the table
+    also picks up its delay, so one broadcast serves both the robots gate
+    and the politeness schedule."""
+    compiled = compile_rules(rules, agent)
+    delays = crawl_delays(rules, agent, default_delay).withColumnRenamed(
+        "host", "r_host"
+    )
+    sentinels = (
+        compiled.select("r_host").unionByName(delays.select("r_host")).distinct()
+        .select(
+            "r_host",
+            F.lit(None).cast("string").alias("rule"),
+            F.lit(None).cast("string").alias("path_prefix"),
+            F.lit(None).cast("boolean").alias("is_plain"),
+            F.lit(None).cast("string").alias("path_regex"),
+            F.lit(-1).alias("prefix_len"),
+        )
+    )
+    return compiled.unionByName(sentinels).join(
+        F.broadcast(delays), "r_host", "left"
+    ).withColumn(
+        "delay_seconds", F.coalesce("delay_seconds", F.lit(default_delay))
     )
 
 

@@ -6,10 +6,11 @@ One epoch = one BFS wave:
       → canonicalize + hash                      (native exprs)
       → ANTI-JOIN vs seen (+ bloom pre-filter    [shuffle: by url_hash]
         from BLOOM_MIN_SEEN_ROWS seen rows)
-      → robots decision                          (broadcast compiled rules)
       → repartition by salted host               [shuffle: by host-salt]
-      → per-host crawl order + politeness window (row_number / closed form,
-        partitioned by (host, salt): no second shuffle)
+      → robots decision (broadcast per-host table of compiled rules and
+        crawl delays), per-host crawl order + politeness window over the
+        allowed rows (row_number / closed form), per-host demand — every
+        window partitioned by (host, salt, …): no second shuffle
       → per-host budget (water-fill on the driver / cap), overflow deferred
       → repartition by url_hash (4× cores)       [shuffle: by url_hash]
       → "fetch" = equi-join against the pages corpus on canonical_url
@@ -26,25 +27,31 @@ join and extraction need the rows spread back over every core.
 At crawl sizes an epoch is bound by its Spark job barriers, not by its
 data, and a lazy frame with several consumers re-runs its whole plan
 (every upstream shuffle) once per consumer. So the engine materialises,
-once per engine, the compiled robots rules (``robots.compile_rules``:
-the agent-group pick and the pattern regexes do not change between
-epochs) and the per-host crawl delays; and an epoch materialises the
-four frames that have more than one consumer, each once:
+once per engine, one per-host robots table (``robots.compile_host_rules``:
+the agent-group pick, the pattern regexes and the crawl delays do not
+change between epochs); and an epoch materialises the three frames that
+have more than one consumer, each once:
 
-* the robots decision — ``allowed`` and ``denied`` are two filters on it;
-* the politeness schedule — the fetch side and ``deferred`` are
-  complementary filters on it, so they always come from one evaluation
-  of the plan;
+* the admission frame — robots decision, schedule and per-host demand
+  over one (host, salt) exchange; ``denied``, the fetch side and
+  ``deferred`` are filters on it, so they always come from one
+  evaluation of the plan;
 * ``fetched`` — read by extraction, metrics and the fetched and seen
   commits;
 * ``combined`` (the one-pass extraction, which carries each page's
   ``depth`` onto its outlink rows) — read by ``extracted`` and
   ``outlinks``.
 
-Two driver-side figures are observed, not collected: the per-host demand
-the water-fill needs rides on the schedule checkpoint's job, and the
-epoch counters on the ``fetched`` checkpoint's job, which every run of an
-epoch performs, resumed or not.
+Driver-side figures are observed, not collected: the per-host demand the
+water-fill needs rides on the admission checkpoint's job, the epoch
+counters on the ``fetched`` checkpoint's job (which every run of an
+epoch performs, resumed or not), and the extraction's row and link
+counts on the ``combined`` checkpoint's job.
+
+Commits are sized by rows: each table's commit is coalesced to
+ceil(rows / ``ROWS_PER_FILE``) files, its rows bounded by those observed
+figures and the water-fill's deferred count, instead of writing one
+small file per shuffle partition.
 
 A killed run resumes exactly: every table commit is manifest-gated and
 keyed by epoch, so re-running epoch K is idempotent (the catalog skips
@@ -79,6 +86,16 @@ BLOOM_MIN_SEEN_ROWS = 500_000
 # host salts per epoch: the schedule partitions by (host, salt), so a hot
 # host's frontier spreads over this many tasks
 N_SALTS = 16
+
+# rows per committed file: an epoch commit writes ceil(rows / this) files,
+# not one per shuffle partition
+ROWS_PER_FILE = 1_000_000
+
+
+def _sized(df: DataFrame, rows: int) -> DataFrame:
+    """``df`` coalesced to ceil(rows / ROWS_PER_FILE) partitions (at least
+    one), so a commit of ``rows`` rows writes that many files."""
+    return df.coalesce(max(1, -(-rows // ROWS_PER_FILE)))
 
 
 def _counters():
@@ -127,18 +144,20 @@ class CrawlEngine:
             # rules + per-host crawl delays: tiny tables, parsed once,
             # broadcast into every epoch (a real deployment refreshes them
             # on a TTL — the `robots` table of SURVEY §1.3). The rules are
-            # also compiled once for this agent: every epoch's decision
-            # reads the compiled table, not the raw one
+            # compiled once for this agent into one per-host table that
+            # also carries each host's crawl delay: every epoch's robots
+            # decision and schedule read it through one broadcast
             self.robots_rules = RB.parse_robots(robots_pages).localCheckpoint()
-            self.compiled_rules = RB.compile_rules(
-                self.robots_rules, agent
-            ).localCheckpoint()
-            self.delays = RB.crawl_delays(
+            self.host_rules = RB.compile_host_rules(
                 self.robots_rules, agent, delay_seconds
             ).localCheckpoint()
+            # (host, delay_seconds) of every host with rules or a delay
+            self.delays = self.host_rules.filter(F.col("rule").isNull()).select(
+                F.col("r_host").alias("host"), "delay_seconds"
+            )
         else:
             self.robots_rules = None
-            self.compiled_rules = None
+            self.host_rules = None
             self.delays = None
         # corpus keyed by canonical URL (what the frontier joins against);
         # localCheckpoint = "the keyed corpus table already exists" — on a
@@ -198,12 +217,53 @@ class CrawlEngine:
         ).drop("__neg_pri")
 
     # ------------------------------------------------------------------
+    def _admission(self, frontier: DataFrame, epoch: int) -> DataFrame:
+        """The admission frame over a deduplicated, unseen frontier, as a
+        lazy plan with one exchange: the frontier repartitioned by salted
+        host, the robots decision (``robots_allowed``), and the politeness
+        schedule (``seq``, ``scheduled_ts``) counted over allowed rows only,
+        so denied rows hold no schedule slot. When a budget applies, each
+        row also carries ``demand``, its (host, salt, robots_allowed)
+        group's size. Every window partitions by (host, salt, …) and the
+        salt is a function of the host, so the groups are the host's and
+        none of them shuffles again."""
+        f = frontier.withColumn(
+            "salt", U.host_salt(F.col("host"), F.lit(epoch), self.n_salts)
+        ).repartition(F.col("host"), F.col("salt"))
+        if self.host_rules is not None:
+            f = RB.decide_robots(f, self.host_rules, salt_col="salt").drop(
+                "matched_rule", "matched_prefix"
+            )
+            delay = F.coalesce(F.col("delay_seconds"), F.lit(self.delay_seconds))
+        else:
+            f = f.withColumn("robots_allowed", F.lit(True))
+            delay = F.lit(self.delay_seconds)
+        # F2/F3 per (host, decision): politeness.crawl_order's sequence
+        # (priority, then URL) and politeness_schedule's closed form
+        slots = Window.partitionBy("host", "salt", "robots_allowed")
+        f = f.withColumn(
+            "seq", F.row_number().over(slots.orderBy(F.col("priority"), F.col("url")))
+        ).withColumn(
+            "scheduled_ts",
+            P._after(self._epoch_start(epoch), (F.col("seq") - 1) * delay),
+        )
+        if self._budgeted():
+            f = f.withColumn("demand", F.count(F.lit(1)).over(slots))
+        return f
+
+    def _budgeted(self) -> bool:
+        return (
+            self.epoch_fetch_capacity is not None
+            or self.max_per_host_per_epoch is not None
+        )
+
     def _admit(self, seeds: DataFrame, epoch: int):
         """Admission: frontier → seen anti-join → robots gate → politeness
         schedule → per-host budget. Returns ``(scheduled, denied,
-        deferred_out)``; the last two are None when no robots rules or no
-        budget apply. Materialises the robots decision and, when a budget
-        applies, the politeness schedule (see the module docstring)."""
+        deferred_out, n_deferred)``; ``denied`` is None without robots
+        rules and ``deferred_out`` None without a budget. The admission
+        frame is materialised when it has more than one consumer (see the
+        module docstring)."""
         frontier = self._frontier_for(seeds, epoch)
 
         # dedup vs seen  [shuffle: url_hash]
@@ -221,67 +281,41 @@ class CrawlEngine:
                 expected_keys=seen_rows,
             )
 
-        # robots gate (north_rule): denied URLs are still committed to
-        # `seen` via a fetched row with status=robots_denied — admitted
-        # exactly once, never fetched. One decision pass, materialised:
-        # allowed and denied are two filters on it
-        denied = None
-        if self.compiled_rules is not None:
-            decided = RB.decide_robots(
-                frontier, self.compiled_rules
-            ).drop("matched_rule", "matched_prefix").localCheckpoint()
-            denied = decided.filter(~F.col("robots_allowed")).drop("robots_allowed")
-            frontier = decided.filter(F.col("robots_allowed")).drop("robots_allowed")
-
-        # schedule  [shuffle: salted host]; the per-host windows partition
-        # by (host, salt) too, so this is the only shuffle of the schedule
-        frontier = frontier.withColumn(
-            "salt", U.host_salt(F.col("host"), F.lit(epoch), self.n_salts)
-        ).repartition(F.col("host"), F.col("salt"))
-        if self.delays is not None:
-            scheduled = RB.politeness_schedule_with_delays(
-                frontier, self._epoch_start(epoch), self.delays,
-                self.delay_seconds, salt_col="salt",
-            )
-        else:
-            scheduled = P.politeness_schedule(
-                frontier, self._epoch_start(epoch), self.delay_seconds,
-                salt_col="salt",
-            )
-
-        # per-host epoch budget: overflow (seq > budget) is deferred to the
-        # next epoch's frontier with its priority intact — bounded state
-        # per host per epoch, nothing lost
-        if self.epoch_fetch_capacity is None and self.max_per_host_per_epoch is None:
-            return scheduled, denied, None
-        # one schedule, materialised: the fetch side and the deferred
-        # table read the same rows
-        if self.epoch_fetch_capacity is None:
-            scheduled = scheduled.localCheckpoint()
-            over = F.col("seq") > self.max_per_host_per_epoch
-        else:
-            # the per-host demand the water-fill needs, observed on the
-            # checkpoint's own job: a count over the schedule window's
-            # partitions (no new exchange), one (host, demand) per host
+        # robots gate (north_rule) + schedule  [shuffle: salted host].
+        # Denied URLs are still committed to `seen` via a fetched row with
+        # status=robots_denied — admitted exactly once, never fetched
+        admitted = self._admission(frontier, epoch)
+        allowed = F.col("robots_allowed")
+        over, n_over, deferred_out = F.lit(False), 0, None
+        if self._budgeted():
+            # per-host epoch budget: overflow (seq > budget) is deferred to
+            # the next epoch's frontier with its priority intact — bounded
+            # state per host per epoch, nothing lost. The per-host demand
+            # the budgets need is observed on the checkpoint's own job, one
+            # (host, demand) per allowed (host, salt) group
             observed = Observation()
-            scheduled = scheduled.withColumn(
-                "demand",
-                F.count(F.lit(1)).over(Window.partitionBy("host", "salt")),
-            ).observe(
+            admitted = admitted.observe(
                 observed,
                 F.collect_list(
-                    F.when(F.col("seq") == 1, F.struct("host", "demand"))
+                    F.when((F.col("seq") == 1) & allowed, F.struct("host", "demand"))
                 ).alias("demand"),
             ).localCheckpoint()
             # the list arrives in task-completion order: key it by host
             demand = {r["host"]: r["demand"] for r in observed.get["demand"]}
-            over = over_budget(
-                demand, self.epoch_fetch_capacity, self.max_per_host_per_epoch
+            cap = self.max_per_host_per_epoch
+            if self.epoch_fetch_capacity is None:
+                over = F.col("seq") > cap
+                n_over = sum(max(0, d - cap) for d in demand.values())
+            else:
+                over = over_budget(demand, self.epoch_fetch_capacity, cap)
+                n_over = rows_over_budget(demand, self.epoch_fetch_capacity, cap)
+            deferred_out = admitted.filter(allowed & over).select(
+                "url", "priority", "host", "canonical_url", "url_hash", "depth"
             )
-        deferred_out = scheduled.filter(over).select(
-            "url", "priority", "host", "canonical_url", "url_hash", "depth"
-        )
-        return scheduled.filter(~over), denied, deferred_out
+        elif self.host_rules is not None:
+            admitted = admitted.localCheckpoint()
+        denied = None if self.host_rules is None else admitted.filter(~allowed)
+        return admitted.filter(allowed & ~over), denied, deferred_out, n_over
 
     # ------------------------------------------------------------------
     def run_epoch(self, seeds: DataFrame, epoch: int) -> dict:
@@ -295,7 +329,7 @@ class CrawlEngine:
         if epoch in self.catalog.committed_epochs("seen"):
             return {"epoch": epoch, "skipped": True}
 
-        scheduled, denied, deferred_out = self._admit(seeds, epoch)
+        scheduled, denied, deferred_out, n_deferred = self._admit(seeds, epoch)
 
         # rebalance BEFORE the fetch join: politeness legitimately skews
         # partitioning by (host, salt) — a hot host is one partition — but
@@ -342,6 +376,8 @@ class CrawlEngine:
         # runs too (its commits of already-committed tables run no job)
         counted = Observation()
         fetched = fetched.observe(counted, *_counters()).localCheckpoint()
+        counts = counted.get
+        n_fetched, n_ok = counts["n"], int(counts["ok"] or 0)
 
         ok = fetched.filter(F.col("status") == "ok")
 
@@ -349,9 +385,14 @@ class CrawlEngine:
         # rows and outlinks (combined_extract_stage), each carrying its
         # page's depth; materialized before the split so neither branch
         # re-runs the Arrow stage. The materialized rows are slim (no html).
+        # The row and link counts size the extracted and outlinks commits
+        extract_counts = Observation()
         combined = X.combined_extract_stage(
             ok.select(F.col("canonical_url").alias("url"), "html", "depth")
+        ).observe(
+            extract_counts, F.count("name").alias("rows"), F.count("link").alias("links")
         ).localCheckpoint()
+        n_rows, n_links = extract_counts.get["rows"], extract_counts.get["links"]
 
         links = combined.filter(F.col("link").isNotNull()).select("url", "link", "depth")
         outlinks = X.resolve_links(links).select(
@@ -367,27 +408,32 @@ class CrawlEngine:
         # The data commits touch independent table dirs/manifests and all
         # derive from materialised frames — submit them as concurrent
         # Spark jobs, one lane each; only `seen` waits behind the barrier.
+        # Each commit writes ceil(rows / ROWS_PER_FILE) files, its rows
+        # bounded by figures observed above (outlinks: at most one per
+        # link; metrics: at most one per fetched partition)
+        n_metrics = min(n_fetched, fetched.rdd.getNumPartitions())
         commits = [
-            ("fetched", fetched.drop("html")),
-            ("extracted", extracted),
-            ("outlinks", outlinks),
-            ("metrics", P.epoch_metrics(fetched)),
+            ("fetched", fetched.drop("html"), n_fetched),
+            ("extracted", extracted, n_rows),
+            ("outlinks", outlinks, n_links),
+            ("metrics", P.epoch_metrics(fetched), n_metrics),
         ]
         if deferred_out is not None:
-            commits.append(("deferred", deferred_out))
+            commits.append(("deferred", deferred_out, n_deferred))
         with ThreadPoolExecutor(max_workers=len(commits)) as ex:
             futures = [
-                ex.submit(self.catalog.commit_epoch, table, epoch, df)
-                for table, df in commits
+                ex.submit(self.catalog.commit_epoch, table, epoch, _sized(df, rows))
+                for table, df, rows in commits
             ]
             for fut in futures:
                 fut.result()  # barrier: all data tables committed before seen
-        counts = counted.get
-        n_fetched, n_ok = counts["n"], int(counts["ok"] or 0)
         self.catalog.commit_epoch(
             "seen", epoch,
-            fetched.select("url_hash", "canonical_url").withColumn(
-                "first_seen_epoch", F.lit(epoch)
+            _sized(
+                fetched.select("url_hash", "canonical_url").withColumn(
+                    "first_seen_epoch", F.lit(epoch)
+                ),
+                n_fetched,
             ),
             lineage={"fetched": n_fetched, "ok": n_ok},
         )
@@ -405,6 +451,16 @@ class CrawlEngine:
         return results
 
 
+def _over_hosts(demand: dict, capacity: int, max_per_host: int | None):
+    """(host, budget) for every non-null host whose water-filled budget
+    (capped by ``max_per_host``) is below its demand."""
+    for host, (budget, _satisfied) in A.waterfill_budgets(demand, capacity).items():
+        if max_per_host is not None:
+            budget = min(budget, max_per_host)
+        if host is not None and budget < demand[host]:
+            yield host, budget
+
+
 def over_budget(
     demand: dict, capacity: int, max_per_host: int | None
 ) -> Column:
@@ -417,15 +473,23 @@ def over_budget(
     budgets join or broadcast, and no Spark job. A null host has no
     budget, so all its rows are over."""
     hosts_at = defaultdict(list)
-    for host, (budget, _satisfied) in A.waterfill_budgets(demand, capacity).items():
-        if max_per_host is not None:
-            budget = min(budget, max_per_host)
-        if host is not None and budget < demand[host]:
-            hosts_at[budget].append(host)
+    for host, budget in _over_hosts(demand, capacity, max_per_host):
+        hosts_at[budget].append(host)
     over = F.col("host").isNull()
     for budget, hosts in sorted(hosts_at.items()):
         over = over | (F.col("host").isin(sorted(hosts)) & (F.col("seq") > budget))
     return over
+
+
+def rows_over_budget(
+    demand: dict, capacity: int, max_per_host: int | None
+) -> int:
+    """How many schedule rows :func:`over_budget` marks, from the same
+    ``demand`` dict: a null host's rows and each host's rows past its
+    budget."""
+    return demand.get(None, 0) + sum(
+        demand[host] - budget for host, budget in _over_hosts(demand, capacity, max_per_host)
+    )
 
 
 def frontier_select(

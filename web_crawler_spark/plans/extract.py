@@ -58,8 +58,6 @@ class _TableParser(HTMLParser):
         self._scope: list[str] = []                # open table/tr/td nesting
         self.links: list[str] = []
         self.link_rels: list[tuple[str, bool]] = []  # (href, nofollow)
-        self.anchors: list[tuple[str, str]] = []   # (href, anchor text)
-        self._open_anchor: tuple[str, list[str]] | None = None
         self._text_chunks: list[str] = []
         self._suppress = 0
 
@@ -108,9 +106,6 @@ class _TableParser(HTMLParser):
                 self._open_cells.append(chunks)
                 self._scope.append(tag)
         elif tag == "a":
-            # A new <a> implies the end of any open one (browsers auto-close
-            # nested anchors; nesting is illegal HTML).
-            self._close_anchor()
             href, rel = None, ""
             for k, v in attrs:
                 if k == "href" and v and href is None:
@@ -122,21 +117,10 @@ class _TableParser(HTMLParser):
                 # rel is a space-separated token list (HTML spec); nofollow
                 # anywhere in it excludes the edge from link-graph credit
                 self.link_rels.append((href, "nofollow" in rel.lower().split()))
-                self._open_anchor = (href, [])
-
-    def _close_anchor(self) -> None:
-        if self._open_anchor is not None:
-            href, chunks = self._open_anchor
-            text = " ".join(" ".join(c.split()) for c in chunks if c.strip())
-            self.anchors.append((href, text))
-            self._open_anchor = None
 
     def handle_endtag(self, tag: str) -> None:
         if tag in self._SKIP_TEXT_IN:
             self._suppress = max(0, self._suppress - 1)
-            return
-        if tag == "a":
-            self._close_anchor()
             return
         if tag == "table" and self._open_tables:
             self._imply_end(("td", "th", "tr"))
@@ -156,8 +140,6 @@ class _TableParser(HTMLParser):
             return
         for chunks in self._open_cells:
             chunks.append(data)
-        if self._open_anchor is not None:
-            self._open_anchor[1].append(data)
         if data.strip():
             self._text_chunks.append(data.strip())
 
@@ -170,7 +152,6 @@ def parse_html(html: str) -> _TableParser:
     p = _TableParser()
     p.feed(html)
     p.close()
-    p._close_anchor()  # unclosed <a> at EOF keeps its accumulated text
     return p
 
 

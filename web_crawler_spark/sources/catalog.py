@@ -6,12 +6,17 @@ O(1) resume from the last committed snapshot). This sandbox has no Iceberg
 runtime JAR, so the same contract is implemented over parquet directories:
 
     <root>/<table>/epoch=K/part-*.parquet     (hive-partitioned data)
-    <root>/<table>/_manifest.json             (committed epochs + lineage)
+    <root>/<table>/_manifest.json             (committed epochs, lineage,
+                                               schema)
 
 Commit protocol: write epoch dir → fsync manifest with the epoch appended.
 A killed run leaves either no dir or an uncommitted dir that the next run
 overwrites — reads go through the manifest, so uncommitted data is
 invisible (same reader-isolation guarantee an Iceberg snapshot gives).
+
+The manifest also records the schema of the last committed frame, so a
+read passes it to the parquet reader instead of inferring it (schema
+inference reads file footers in a Spark job per read).
 """
 
 from __future__ import annotations
@@ -22,6 +27,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 class EpochCatalog:
@@ -61,6 +67,7 @@ class EpochCatalog:
         df.write.mode("overwrite").parquet(edir)
         m = self.manifest(table)
         m["epochs"] = sorted(set(m["epochs"]) | {epoch})
+        m["schema"] = df.schema.json()
         if lineage:
             m["lineage"][str(epoch)] = lineage
         tmp = self._manifest_path(table) + ".tmp"
@@ -84,6 +91,8 @@ class EpochCatalog:
             return None
         comp = m.get("compaction")
         tdir = os.path.join(self.root, table)
+        schema = m.get("schema")
+        schema = T.StructType.fromJson(json.loads(schema)) if schema else None
         frames = []
         if comp:
             cdir = os.path.join(tdir, comp["dir"])
@@ -96,14 +105,13 @@ class EpochCatalog:
             ]
             live = [e for e in epochs if e > comp["upto"]]
             if cpaths:
-                frames.append(spark.read.option("basePath", cdir).parquet(*cpaths))
+                # the rewrite's files hold no epoch column: it comes last
+                frames.append(_scan(spark, cdir, cpaths, schema, epoch_in_files=False))
         else:
             live = epochs
         if live:
             frames.append(
-                spark.read.option("basePath", tdir).parquet(
-                    *[os.path.join(tdir, f"epoch={e}") for e in live]
-                )
+                _scan(spark, tdir, [os.path.join(tdir, f"epoch={e}") for e in live], schema)
             )
         if not frames:
             return None  # every committed epoch was empty and compacted away
@@ -175,3 +183,24 @@ class EpochCatalog:
                 shutil.rmtree(path)
                 removed.append(path)
         return removed
+
+
+def _scan(
+    spark: SparkSession,
+    base: str,
+    paths: list[str],
+    schema: T.StructType | None,
+    epoch_in_files: bool = True,
+) -> DataFrame:
+    """Read hive-partitioned epoch dirs under ``base``, in the column order
+    schema inference gives: the files' columns in their written order, an
+    ``epoch`` among them keeping its place, else ``epoch`` last. With the
+    committed ``schema`` the read runs no Spark job, but Spark puts the
+    partition column last, so the inferred order is restored by name."""
+    reader = spark.read.option("basePath", base)
+    if schema is None:
+        return reader.parquet(*paths)
+    names = [n for n in schema.fieldNames() if epoch_in_files or n != "epoch"]
+    if "epoch" not in names:
+        names.append("epoch")
+    return reader.schema(schema).parquet(*paths).select(*names)
