@@ -243,6 +243,9 @@ def test_per_host_epoch_budget_defers(spark, catalog_dir):
         d0.select("url_hash"), "url_hash"
     )
     assert refetched.count() > 0
+    # the deferred count observed on the admission checkpoint is exact
+    _scheduled, _denied, put_off, n_put_off = eng._admit(seeds, 0)
+    assert put_off.count() == n_put_off == d0.count()
 
 
 def _uncommit(root, epoch, tables):
@@ -372,26 +375,69 @@ def test_gated_crawl_job_budget(spark, gated_crawl):
     assert all(j <= b for j, b in zip(jobs, _GATED_JOB_BUDGET)), jobs
 
 
-def test_gated_commits_are_sized_by_rows(spark, gated_crawl):
-    """Each table of each epoch is committed as ceil(rows / ROWS_PER_FILE)
-    files (at least one), not one file per shuffle partition."""
+def test_gated_commits_are_sized_by_rows(spark, gated_crawl, tmp_path, monkeypatch):
+    """Each commit is sized from the epoch's observed figures: the rows of
+    fetched, extracted, deferred and seen exactly, outlinks (links before
+    resolution) and metrics (fetched partitions) as bounds. At the real
+    ROWS_PER_FILE every table of the gated crawl is one file per epoch; at
+    10 rows per file, none writes more than ceil(sized rows / 10) files
+    and fetched and seen, spread by url_hash, write exactly
+    ceil(rows / 10)."""
     import glob
     import os
 
-    from web_crawler_spark.plans.epoch import ROWS_PER_FILE
+    from web_crawler_spark.plans import epoch as EP
+    from web_crawler_spark.sources.catalog import EpochCatalog
 
-    _pages, _seeds, eng, _stats, _jobs = gated_crawl
-    for table in _TABLES:
-        rows = {
+    def files(cat, table, epoch):
+        return len(glob.glob(os.path.join(cat.root, table, f"epoch={epoch}", "*.parquet")))
+
+    def epoch_rows(cat, table):
+        return {
             r["epoch"]: r["count"]
-            for r in eng.catalog.read(spark, table).groupBy("epoch").count().collect()
+            for r in cat.read(spark, table).groupBy("epoch").count().collect()
         }
-        for epoch in eng.catalog.committed_epochs(table):
-            files = glob.glob(
-                os.path.join(eng.catalog.root, table, f"epoch={epoch}", "*.parquet")
-            )
-            want = max(1, -(-rows.get(epoch, 0) // ROWS_PER_FILE))
-            assert len(files) == want, (table, epoch, len(files), rows)
+
+    pages, seeds, full, _stats, _jobs = gated_crawl
+    for table in _TABLES:
+        for epoch in (0, 1):
+            assert files(full.catalog, table, epoch) == 1, (table, epoch)
+
+    # the row count each commit was sized with, keyed by (table, epoch)
+    sized, by_frame = {}, {}
+    real_sized, real_commit = EP._sized, EpochCatalog.commit_epoch
+
+    def record_sized(df, rows):
+        out = real_sized(df, rows)
+        by_frame[id(out)] = rows
+        return out
+
+    def record_commit(self, table, epoch, df, **kw):
+        sized[table, epoch] = by_frame.pop(id(df))
+        return real_commit(self, table, epoch, df, **kw)
+
+    monkeypatch.setattr(EP, "ROWS_PER_FILE", 10)
+    monkeypatch.setattr(EP, "_sized", record_sized)
+    monkeypatch.setattr(EpochCatalog, "commit_epoch", record_commit)
+    eng = _gated_engine(spark, str(tmp_path / "small"), pages)
+    for epoch in (0, 1):
+        eng.run_epoch(seeds, epoch)
+    assert sorted(sized) == sorted((t, e) for t in _TABLES for e in (0, 1))
+    for table in _TABLES:
+        rows = epoch_rows(eng.catalog, table)
+        assert rows == epoch_rows(full.catalog, table), table
+        for epoch in (0, 1):
+            n, got = rows.get(epoch, 0), sized[table, epoch]
+            if table in ("outlinks", "metrics"):
+                assert n <= got, (table, epoch, n, got)
+            else:
+                assert n == got, (table, epoch, n, got)
+            if table == "metrics":
+                assert got <= sized["fetched", epoch], (epoch, got)
+            assert 1 <= files(eng.catalog, table, epoch) <= -(-got // 10), (table, epoch)
+            if table in ("fetched", "seen"):
+                # rows spread by url_hash: the coalesce target is met
+                assert files(eng.catalog, table, epoch) == -(-n // 10) > 1, (table, epoch)
 
 
 def test_admission_is_one_exchange_and_one_broadcast(spark, gated_crawl):

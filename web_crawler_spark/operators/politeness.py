@@ -40,17 +40,19 @@ def crawl_order(
     host_col: str = "host",
     priority_col: str = "priority",
     url_col: str = "url",
-    salt_col: str | None = None,
+    salt_col: str | list[str] | None = None,
 ) -> DataFrame:
     """F2: per-host fetch sequence = seed-list priority order, URL tiebreak.
     Matches the reference's sequential `for` loop order within each host.
 
-    ``salt_col`` names a column that is a function of the host (the
-    per-epoch ``urltools.host_salt`` bucket): the window then partitions by
-    (host, salt), which groups the same rows, so a frontier already
-    repartitioned by (host, salt) is not shuffled again by host."""
-    keys = [host_col] if salt_col is None else [host_col, salt_col]
-    w = Window.partitionBy(*keys).orderBy(F.col(priority_col).asc(), F.col(url_col).asc())
+    ``salt_col`` names one or more columns the window partitions by after
+    the host. A column that is a function of the host (the per-epoch
+    ``urltools.host_salt`` bucket) groups the same rows, so a frontier
+    already repartitioned by (host, salt) is not shuffled again by host;
+    any further column (the robots decision) numbers each of its values'
+    rows apart within the host."""
+    extra = [] if salt_col is None else [salt_col] if isinstance(salt_col, str) else salt_col
+    w = Window.partitionBy(host_col, *extra).orderBy(F.col(priority_col).asc(), F.col(url_col).asc())
     return frontier.withColumn("seq", F.row_number().over(w))
 
 
@@ -61,7 +63,7 @@ def politeness_schedule(
     host_col: str = "host",
     priority_col: str = "priority",
     url_col: str = "url",
-    salt_col: str | None = None,
+    salt_col: str | list[str] | None = None,
 ) -> DataFrame:
     """F3: assign each URL its earliest polite fetch timestamp.
 

@@ -391,7 +391,7 @@ def politeness_schedule_with_delays(
     host_col: str = "host",
     priority_col: str = "priority",
     url_col: str = "url",
-    salt_col: str | None = None,
+    salt_col: str | list[str] | None = None,
 ) -> DataFrame:
     """F3 generalized: per-host Crawl-delay from robots (broadcast join)
     replaces the global constant; schedule stays closed-form. ``salt_col``

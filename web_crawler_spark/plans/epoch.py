@@ -48,10 +48,10 @@ counters on the ``fetched`` checkpoint's job (which every run of an
 epoch performs, resumed or not), and the extraction's row and link
 counts on the ``combined`` checkpoint's job.
 
-Commits are sized by rows: each table's commit is coalesced to
-ceil(rows / ``ROWS_PER_FILE``) files, its rows bounded by those observed
-figures and the water-fill's deferred count, instead of writing one
-small file per shuffle partition.
+Commits are sized by rows: each table's commit is coalesced to at most
+ceil(rows / ``ROWS_PER_FILE``) files, its rows counted or bounded by
+those observed figures and the water-fill's deferred count, instead of
+writing one small file per shuffle partition.
 
 A killed run resumes exactly: every table commit is manifest-gated and
 keyed by epoch, so re-running epoch K is idempotent (the catalog skips
@@ -94,7 +94,10 @@ ROWS_PER_FILE = 1_000_000
 
 def _sized(df: DataFrame, rows: int) -> DataFrame:
     """``df`` coalesced to ceil(rows / ROWS_PER_FILE) partitions (at least
-    one), so a commit of ``rows`` rows writes that many files."""
+    one), so a commit of ``rows`` rows writes at most that many files.
+    Coalescing merges partitions without a shuffle: it never adds one, and
+    a frame whose rows sit in few partitions can put more than
+    ROWS_PER_FILE rows in one file."""
     return df.coalesce(max(1, -(-rows // ROWS_PER_FILE)))
 
 
@@ -222,11 +225,11 @@ class CrawlEngine:
         lazy plan with one exchange: the frontier repartitioned by salted
         host, the robots decision (``robots_allowed``), and the politeness
         schedule (``seq``, ``scheduled_ts``) counted over allowed rows only,
-        so denied rows hold no schedule slot. When a budget applies, each
-        row also carries ``demand``, its (host, salt, robots_allowed)
-        group's size. Every window partitions by (host, salt, …) and the
-        salt is a function of the host, so the groups are the host's and
-        none of them shuffles again."""
+        so denied rows hold no schedule slot. When an epoch fetch capacity
+        applies, each row also carries ``demand``, its (host, salt,
+        robots_allowed) group's size. Every window partitions by (host,
+        salt, …) and the salt is a function of the host, so the groups are
+        the host's and none of them shuffles again."""
         f = frontier.withColumn(
             "salt", U.host_salt(F.col("host"), F.lit(epoch), self.n_salts)
         ).repartition(F.col("host"), F.col("salt"))
@@ -238,24 +241,19 @@ class CrawlEngine:
         else:
             f = f.withColumn("robots_allowed", F.lit(True))
             delay = F.lit(self.delay_seconds)
-        # F2/F3 per (host, decision): politeness.crawl_order's sequence
-        # (priority, then URL) and politeness_schedule's closed form
-        slots = Window.partitionBy("host", "salt", "robots_allowed")
-        f = f.withColumn(
-            "seq", F.row_number().over(slots.orderBy(F.col("priority"), F.col("url")))
-        ).withColumn(
+        # F2/F3 per (host, decision): the crawl order numbers allowed and
+        # denied rows apart, then politeness_schedule's closed form with
+        # the host's delay
+        keys = ["salt", "robots_allowed"]
+        f = P.crawl_order(f, salt_col=keys).withColumn(
             "scheduled_ts",
             P._after(self._epoch_start(epoch), (F.col("seq") - 1) * delay),
         )
-        if self._budgeted():
-            f = f.withColumn("demand", F.count(F.lit(1)).over(slots))
+        if self.epoch_fetch_capacity is not None:
+            f = f.withColumn(
+                "demand", F.count(F.lit(1)).over(Window.partitionBy("host", *keys))
+            )
         return f
-
-    def _budgeted(self) -> bool:
-        return (
-            self.epoch_fetch_capacity is not None
-            or self.max_per_host_per_epoch is not None
-        )
 
     def _admit(self, seeds: DataFrame, epoch: int):
         """Admission: frontier → seen anti-join → robots gate → politeness
@@ -287,26 +285,31 @@ class CrawlEngine:
         admitted = self._admission(frontier, epoch)
         allowed = F.col("robots_allowed")
         over, n_over, deferred_out = F.lit(False), 0, None
-        if self._budgeted():
+        cap = self.max_per_host_per_epoch
+        if cap is not None or self.epoch_fetch_capacity is not None:
             # per-host epoch budget: overflow (seq > budget) is deferred to
             # the next epoch's frontier with its priority intact — bounded
-            # state per host per epoch, nothing lost. The per-host demand
-            # the budgets need is observed on the checkpoint's own job, one
-            # (host, demand) per allowed (host, salt) group
+            # state per host per epoch, nothing lost. What the budget needs
+            # is observed on the checkpoint's own job: with a per-host cap
+            # alone, the count of rows past it; with an epoch capacity, the
+            # per-host demand the water-fill needs, one (host, demand) per
+            # allowed (host, salt) group
             observed = Observation()
-            admitted = admitted.observe(
-                observed,
-                F.collect_list(
-                    F.when((F.col("seq") == 1) & allowed, F.struct("host", "demand"))
-                ).alias("demand"),
-            ).localCheckpoint()
-            # the list arrives in task-completion order: key it by host
-            demand = {r["host"]: r["demand"] for r in observed.get["demand"]}
-            cap = self.max_per_host_per_epoch
             if self.epoch_fetch_capacity is None:
                 over = F.col("seq") > cap
-                n_over = sum(max(0, d - cap) for d in demand.values())
+                admitted = admitted.observe(
+                    observed, F.count(F.when(allowed & over, 1)).alias("over")
+                ).localCheckpoint()
+                n_over = observed.get["over"]
             else:
+                admitted = admitted.observe(
+                    observed,
+                    F.collect_list(
+                        F.when((F.col("seq") == 1) & allowed, F.struct("host", "demand"))
+                    ).alias("demand"),
+                ).localCheckpoint()
+                # the list arrives in task-completion order: key it by host
+                demand = {r["host"]: r["demand"] for r in observed.get["demand"]}
                 over = over_budget(demand, self.epoch_fetch_capacity, cap)
                 n_over = rows_over_budget(demand, self.epoch_fetch_capacity, cap)
             deferred_out = admitted.filter(allowed & over).select(
@@ -486,7 +489,9 @@ def rows_over_budget(
 ) -> int:
     """How many schedule rows :func:`over_budget` marks, from the same
     ``demand`` dict: a null host's rows and each host's rows past its
-    budget."""
+    budget. The deferred commit is sized from this count, so it is exact,
+    not a bound: the total demand, say, would split a commit of a few
+    deferred rows from a large frontier into many near-empty files."""
     return demand.get(None, 0) + sum(
         demand[host] - budget for host, budget in _over_hosts(demand, capacity, max_per_host)
     )
