@@ -3776,9 +3776,9 @@ def _q_knn_join_lsh_md5(spark, sf_dir):
     its own bucket + rank-1 bit flips; the exact candidate and top-k sets
     are oracle-reproduced."""
     emb = _t(spark, sf_dir, "embeddings")
-    return SIM.knn_join_lsh(
-        emb, k=3, n_planes=_ANN_N_PLANES, multiprobe=1
-    ).orderBy("vec_id", F.desc("cosine"), "nb_id")
+    return SIM.knn_join_lsh(emb, k=3, n_planes=_ANN_N_PLANES).orderBy(
+        "vec_id", F.desc("cosine"), "nb_id"
+    )
 
 
 def _sql_knn_join_lsh_md5(k: int = 3) -> str:
@@ -3917,7 +3917,7 @@ def _q_knn_join_lsh_fast(spark, sf_dir):
     """Batch k-NN with auto-sized LSH planes (rows-only: the plane count
     follows the corpus size)."""
     emb = _t(spark, sf_dir, "embeddings")
-    return SIM.knn_join_lsh(emb, k=3, multiprobe=1)
+    return SIM.knn_join_lsh(emb, k=3)
 
 
 def _q_dedup_clusters_fast(spark, sf_dir):
@@ -13893,9 +13893,7 @@ def _q_lpa_modularity(spark, sf_dir):
     )
     edges = e.select(src.alias("src_host"), dst.alias("dst_host"))
     labels = G.label_propagation(edges, rounds=4, weight_col=None)
-    return G.community_modularity(edges, labels, weight_col=None).orderBy(
-        "label"
-    )
+    return G.community_modularity(edges, labels).orderBy("label")
 
 
 _SQL_LPA_MODULARITY_TAIL = """,
@@ -14432,9 +14430,7 @@ def _q_lpa_conductance(spark, sf_dir):
     )
     edges = e.select(src.alias("src_host"), dst.alias("dst_host"))
     labels = G.label_propagation(edges, rounds=4, weight_col=None)
-    return G.community_conductance(edges, labels, weight_col=None).orderBy(
-        "label"
-    )
+    return G.community_conductance(edges, labels).orderBy("label")
 
 
 _SQL_LPA_CONDUCTANCE_TAIL = """,

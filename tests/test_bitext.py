@@ -141,8 +141,8 @@ def test_cross_set_lsh_exhaustive_equals_exact(spark):
     xs = _vecs(10, 6, salt=4)
     ys = {i + 1: v for i, v in _vecs(10, 6, salt=17).items()}
     exact, (xdf, ydf) = _mine_spark(spark, xs, ys, 3, 1.0)
-    nxy = knn_join_lsh(ydf, k=3, queries=xdf, n_planes=1, multiprobe=1)
-    nyx = knn_join_lsh(xdf, k=3, queries=ydf, n_planes=1, multiprobe=1)
+    nxy = knn_join_lsh(ydf, k=3, queries=xdf, n_planes=1)
+    nyx = knn_join_lsh(xdf, k=3, queries=ydf, n_planes=1)
     rows = bitext_margin_pairs(
         xdf, ydf, k=3, threshold=1.0, neighbors_xy=nxy, neighbors_yx=nyx
     ).collect()
@@ -164,5 +164,5 @@ def test_cross_set_lsh_no_self_exclusion(spark):
     )
     got = {(r["vec_id"], r["nb_id"])
            for r in knn_join_lsh(c, k=2, queries=q,
-                                 n_planes=1, multiprobe=1).collect()}
+                                 n_planes=1).collect()}
     assert (1, 1) in got  # the collision pair is a real neighbor

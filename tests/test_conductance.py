@@ -1,5 +1,6 @@
 """community_conductance (graph.py): closed-form cut/volume values —
-two triangles + bridge, whole-graph NULL, isolated community, weights."""
+two triangles + bridge, whole-graph NULL, isolated community, a leaky
+label."""
 
 import pytest
 
@@ -54,7 +55,7 @@ def test_isolated_node_community(spark):
     assert out["Z"]["vol_w"] == 0 and out["Z"]["conductance"] is None
 
 
-def test_weighted_and_leaky_label(spark):
+def test_leaky_label(spark):
     # node c labelled with A but only linked to B's node: pure leakage
     edges = [("a", "b"), ("c", "d")]
     labels = {"a": "A", "b": "A", "c": "A", "d": "D"}

@@ -105,24 +105,32 @@ def test_politeness_schedule_and_audit(spark):
 
 
 def test_anti_join_seen_property(spark):
-    """Every key admitted exactly once across epochs; bloom path ==
-    exact path (no false negatives can drop URLs)."""
+    """The seen-set bloom (``build_bloom`` + ``bloom_filter_stage``) has no
+    false negatives: every seen key probes ``might_be_seen``, for an
+    auto-sized bitmap and for one pinned to ``m_bits`` (the probe reads
+    the size off the bitmap), and few unseen keys do."""
     import random
 
     rng = random.Random(1234)
     all_keys = [rng.randrange(10**12) for _ in range(5000)]
     seen_keys = set(rng.sample(all_keys, 2000))
+    unseen_keys = set(all_keys) - seen_keys
     frontier = spark.createDataFrame(
         [(k,) for k in all_keys], "url_hash long"
     ).dropDuplicates(["url_hash"])
     seen = spark.createDataFrame([(k,) for k in seen_keys], "url_hash long")
 
-    exact = D.anti_join_seen(frontier, seen, use_bloom=False)
-    bloomed = D.anti_join_seen(frontier, seen, use_bloom=True)
-    exact_set = {r["url_hash"] for r in exact.collect()}
-    bloom_set = {r["url_hash"] for r in bloomed.collect()}
-    assert exact_set == set(all_keys) - seen_keys
-    assert bloom_set == exact_set
+    # auto-sized: 2^23 bits for 2,000 keys; pinned: 2^14 bits, ~2% fpp
+    for m_bits, max_fp in ((None, 0.001), (1 << 14, 0.05)):
+        bloom = D.build_bloom(seen, "url_hash", m_bits=m_bits)
+        assert len(bloom) * 8 == (m_bits or D.bloom_size_bits(len(seen_keys)))
+        probed = {
+            r["url_hash"]: r["might_be_seen"]
+            for r in D.bloom_filter_stage(frontier, bloom, "url_hash").collect()
+        }
+        assert probed.keys() == set(all_keys)
+        assert all(probed[k] for k in seen_keys)
+        assert sum(probed[k] for k in unseen_keys) <= max_fp * len(unseen_keys)
 
 
 def test_keep_latest_dedup(spark):
@@ -588,15 +596,13 @@ def test_host_rules_table_matches_decisions_and_delays(spark):
     ) == sorted(got_delays.items())
 
 
-def test_seen_admits_once_across_epochs(spark, catalog_dir, monkeypatch):
+def test_seen_admits_once_across_epochs(spark, catalog_dir):
     """Cross-epoch duplicate seeds (1/3 of epoch>0 URLs repeat epoch 0's)
-    must be fetched exactly once, with the bloom pre-filter on."""
-    from web_crawler_spark.plans import epoch as EP
+    must be fetched exactly once."""
     from web_crawler_spark.plans.epoch import CrawlEngine
     from web_crawler_spark.sources.pages import generate_pages
     from web_crawler_spark.sources.seeds import generate_seeds
 
-    monkeypatch.setattr(EP, "BLOOM_MIN_SEEN_ROWS", 0)
     pages = generate_pages(spark, 60, seed=42)
     seeds = generate_seeds(spark, n_per_host=3, hot_factor=2, n_epochs=2)
     eng = CrawlEngine(spark, catalog_dir + "/c", pages, max_depth=0)
@@ -1116,29 +1122,6 @@ def test_opic_update_conserves_cash(spark):
     for n in got2:
         assert got2[n]["history"] == pytest.approx(
             got[n]["history"] + got[n]["cash"])
-
-
-def test_seen_bloom_engine_parity(spark, catalog_dir, monkeypatch):
-    """The bloom pre-filter is optimization-only in front of the exact
-    anti-join: with it on from the first seen row, the crawl commits the
-    same fetched rows as the exact path."""
-    from web_crawler_spark.plans import epoch as EP
-    from web_crawler_spark.plans.epoch import CrawlEngine
-    from web_crawler_spark.sources.pages import generate_pages
-    from web_crawler_spark.sources.seeds import generate_seeds
-
-    pages = generate_pages(spark, 60, seed=42).cache()
-    seeds = generate_seeds(spark, n_per_host=3, hot_factor=2, n_epochs=2)
-
-    exact = CrawlEngine(spark, catalog_dir + "/exact", pages, max_depth=0)
-    exact.run(seeds, n_epochs=2)
-    monkeypatch.setattr(EP, "BLOOM_MIN_SEEN_ROWS", 0)
-    bl = CrawlEngine(spark, catalog_dir + "/bl", pages, max_depth=0)
-    bl.run(seeds, n_epochs=2)
-    a = exact.catalog.read(spark, "fetched")
-    b = bl.catalog.read(spark, "fetched")
-    assert a.count() > 0
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
 def test_circuit_breaker_semantics(spark):

@@ -158,7 +158,7 @@ def test_arrow_cosine_rounds_half_away_from_zero(spark):
     )
     got = {
         (r["vec_id"], r["nb_id"]): r["cosine"]
-        for r in SIM.knn_join_lsh(df, k=2, n_planes=1, multiprobe=1).collect()
+        for r in SIM.knn_join_lsh(df, k=2, n_planes=1).collect()
     }
     assert got[(0, 1)] == got[(1, 0)] == 0.007813
     assert got[(2, 1)] == got[(1, 2)] == -0.007813
@@ -205,7 +205,7 @@ def test_knn_join_lsh_recall_vs_exact(spark):
     }
     approx = {
         (r["vec_id"], r["nb_id"])
-        for r in SIM.knn_join_lsh(df, k=3, n_planes=4, multiprobe=1).collect()
+        for r in SIM.knn_join_lsh(df, k=3, n_planes=4).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.6, recall  # bucketed candidates, rank-1 multiprobe

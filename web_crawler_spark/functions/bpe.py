@@ -155,24 +155,22 @@ def bpe_count_stage(
     df,
     text_col: str = "text",
     out_col: str = "n_tokens",
-    merges: list[tuple] | None = None,
 ):
     """Append an exact BPE token-count column via Arrow-batched
     mapInPandas (schema-preserving: output = input columns + out_col).
-    The merges list (defaults to the committed vocab) serializes into the
+    The committed merges list (``DEFAULT_MERGES``) serializes into the
     task closure — a few KB broadcast once per executor."""
     import pandas as pd
 
     from pyspark.sql import types as ST
 
-    use_merges = DEFAULT_MERGES if merges is None else merges
     # fresh StructType — .add() on df.schema mutates the cached object
     fields = list(df.schema.fields) + [ST.StructField(out_col, ST.LongType())]
     schema = ST.StructType(fields)
     pat = re.compile(BPE_ISH_PATTERN)
 
     def gen(batches):
-        enc = _encoder(use_merges)  # one cache per task, built lazily
+        enc = _encoder(DEFAULT_MERGES)  # one cache per task, built lazily
         for pdf in batches:
             counts = []
             for t in pdf[text_col]:

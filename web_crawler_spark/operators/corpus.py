@@ -608,7 +608,6 @@ def bm25_batch_topk(
     k1: float = 1.2,
     b: float = 0.75,
     max_df: int | None = None,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Batch BM25 retrieval JOIN: top-k documents for EVERY query in a
     query table at once — the sparse-retrieval workload of RAG corpus
@@ -627,11 +626,9 @@ def bm25_batch_topk(
        rows, one per (term, doc)); idf = ln(1+(N−df+0.5)/(df+0.5))
        computed JVM-side as a column;
     3. query terms ``(query_id, term, qtf)`` BROADCAST to the postings
-       join on ``term`` (the query table is dwarfed by the corpus;
-       ``broadcast_queries=False`` falls back to a term-keyed shuffle
-       join for query sets too big to broadcast — both sides are then
-       bucket-able on term hash at 100 TB), then one agg keyed on
-       (query_id, doc_id) sums the per-term contributions.
+       join on ``term`` (the query table is dwarfed by the corpus), then
+       one agg keyed on (query_id, doc_id) sums the per-term
+       contributions.
 
     Scoring: score(q,d) = Σ_t qtf·idf_t·tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl))
     — query term frequency enters linearly (the k3→∞ limit of the full
@@ -691,12 +688,11 @@ def bm25_batch_topk(
     )
     if max_df is not None:
         scored_post = scored_post.filter(F.col("df") <= int(max_df))
-    q = F.broadcast(qterms) if broadcast_queries else qterms
     tf = F.col("tf").cast("double")
     norm = F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
     contrib = F.col("qtf") * F.col("idf") * tf * F.lit(k1 + 1.0) / (tf + norm)
     pairs = (
-        scored_post.join(q, "term")
+        scored_post.join(F.broadcast(qterms), "term")
         .groupBy("query_id", "doc_id")
         .agg(F.sum(contrib).alias("raw"))
         .filter(F.col("raw") > 0)

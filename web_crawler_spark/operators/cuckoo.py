@@ -281,7 +281,8 @@ def anti_join_seen_cuckoo(
     n_shards: int = 16,
     expected_keys: int | None = None,
 ) -> DataFrame:
-    """``dedup.anti_join_seen`` with the cuckoo filter as the pre-filter.
+    """New-URL discovery: ``frontier`` rows whose ``key`` is not in
+    ``seen``, with the cuckoo filter as a pre-filter before the anti-join.
 
     ``key`` is the exact-join column (any type — e.g. the md5 string hash
     the oracle uses); ``hash_key`` names an int64 column to feed the

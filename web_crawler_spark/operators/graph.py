@@ -472,10 +472,8 @@ def opic_update(
     edges: DataFrame,
     node_col: str = "node",
     cash_col: str = "cash",
-    history_col: str = "history",
     src_col: str = "src_host",
     dst_col: str = "dst_host",
-    weight_col: str | None = "n_links",
 ) -> DataFrame:
     """One OPIC round (Abiteboul, Preda & Cobena 2003, "Adaptive On-Line
     Page Importance Computation", public paper): every node distributes
@@ -485,21 +483,24 @@ def opic_update(
     importance signal: no convergence wait, each crawl epoch runs exactly
     one update and prioritizes by ``history + cash``.
 
+    Edges are weighted by their ``n_links`` column; ``cash`` carries the
+    banked ``history`` from the previous round when it has that column
+    (a first round starts from 0).
+
     Returns (node, cash, history, priority). Σcash is conserved every
     round (the OPIC invariant). Plan: one broadcast-size out-weight agg,
     one slim join + keyed agg per round — the same shuffle shape as one
     pagerank iteration, but run once per epoch rather than to a fixed
     point.
     """
-    w = F.col(weight_col) if weight_col else F.lit(1.0)
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst"),
-        w.cast("double").alias("w"),
+        F.col("n_links").cast("double").alias("w"),
     )
     c = cash.select(
         F.col(node_col).alias("node"),
         F.col(cash_col).cast("double").alias("cash"),
-        (F.col(history_col).cast("double") if history_col in cash.columns
+        (F.col("history").cast("double") if "history" in cash.columns
          else F.lit(0.0)).alias("history"),
     ).localCheckpoint()
     n_nodes = c.count()
@@ -838,7 +839,6 @@ def label_propagation(
 
 def domain_graph(
     edges: DataFrame,
-    rules: DataFrame | None = None,
     src_col: str = "src_host",
     dst_col: str = "dst_host",
     weight_col: str = "n_links",
@@ -859,9 +859,8 @@ def domain_graph(
     """
     from ..functions import psl as _psl
 
-    if rules is None:
-        # one materialization feeds both endpoints' 6 broadcast probes
-        rules = _psl.psl_rules_df(edges.sparkSession).localCheckpoint(eager=True)
+    # one materialization feeds both endpoints' 6 broadcast probes
+    rules = _psl.psl_rules_df(edges.sparkSession).localCheckpoint(eager=True)
     sited = _psl.with_registrable_domain(
         edges, host_col=src_col, rules=rules, out_col="__src_site", suffix_col=None
     )
@@ -1652,7 +1651,6 @@ def community_modularity(
     labels: DataFrame,
     src_col: str = "src_host",
     dst_col: str = "dst_host",
-    weight_col: str | None = None,
     node_col: str = "node",
     label_col: str = "label",
 ) -> DataFrame:
@@ -1665,21 +1663,21 @@ def community_modularity(
 
     Q = Σ_c [ e_c/m − (d_c/2m)² ]; this returns one row per community c
     with the exact integer sufficient statistics (``intra2_w`` = 2·e_c,
-    ``deg_w`` = d_c, both over the symmetrized multigraph so unit-weight
-    sums are exact longs) and ``q_contrib`` computed in ONE fixed-order
-    double expression intra2/2m − (d/2m)² from those integers — the
-    repo's float discipline: no cross-row double accumulation, so the
-    value is a pure function of the data on any engine. Global Q is the
-    caller's exact-integer sum Σ intra2 / 2m − Σ d² /(2m)² if wanted.
+    ``deg_w`` = d_c, both over the symmetrized multigraph with every edge
+    counted once, so both are exact longs) and ``q_contrib`` computed in
+    ONE fixed-order double expression intra2/2m − (d/2m)² from those
+    integers — the repo's float discipline: no cross-row double
+    accumulation, so the value is a pure function of the data on any
+    engine. Global Q is the caller's exact-integer sum
+    Σ intra2 / 2m − Σ d² /(2m)² if wanted.
 
     Scale shape: symmetrize (2 slim columns + weight), one scalar 2m agg,
     one degree agg keyed by label, one intra agg after two slim label
     joins — nothing wider than (node, label) crosses a shuffle; the
     labels side is the community table (≤ nodes), never document data.
     """
-    w = (F.col(weight_col) if weight_col else F.lit(1)).cast("double")
     und = edges.select(
-        F.col(src_col).alias("u"), F.col(dst_col).alias("v"), w.alias("w")
+        F.col(src_col).alias("u"), F.col(dst_col).alias("v"), F.lit(1.0).alias("w")
     ).filter(
         F.col("u").isNotNull() & F.col("v").isNotNull()
         & (F.col("u") != F.col("v"))
@@ -1691,7 +1689,6 @@ def community_modularity(
         F.col(node_col).alias("node"), F.col(label_col).alias("label")
     ).localCheckpoint()
     two_m = sym.agg(F.sum("w").alias("tm")).collect()[0]["tm"] or 0.0
-    as_long = weight_col is None
     deg = (
         sym.join(lab.withColumnRenamed("node", "u"), "u")
         .groupBy("label")
@@ -1709,15 +1706,14 @@ def community_modularity(
         .agg(F.sum("w").alias("i2"))
     )
     nn = lab.groupBy("label").agg(F.count(F.lit(1)).alias("n_nodes"))
-    typ = "long" if as_long else "double"
     out = (
         nn.join(deg, "label", "left")
         .join(intra, "label", "left")
         .select(
             "label",
             F.col("n_nodes").cast("long").alias("n_nodes"),
-            F.coalesce("i2", F.lit(0.0)).cast(typ).alias("intra2_w"),
-            F.coalesce("deg", F.lit(0.0)).cast(typ).alias("deg_w"),
+            F.coalesce("i2", F.lit(0.0)).cast("long").alias("intra2_w"),
+            F.coalesce("deg", F.lit(0.0)).cast("long").alias("deg_w"),
         )
     )
     if two_m == 0:
@@ -2033,7 +2029,6 @@ def community_conductance(
     labels: DataFrame,
     src_col: str = "src_host",
     dst_col: str = "dst_host",
-    weight_col: str | None = None,
     node_col: str = "node",
     label_col: str = "label",
 ) -> DataFrame:
@@ -2049,8 +2044,8 @@ def community_conductance(
     On the symmetrized multigraph every undirected cut edge has exactly
     one orientation whose source lies in c, so cut(c) is one conditional
     sum over label-joined rows and vol(c) is the unconditional sum (d_c,
-    the same quantity modularity uses). All sufficient statistics are
-    exact integer sums for unit weights; φ is ONE double division rounded
+    the same quantity modularity uses). Every edge counts once, so all
+    sufficient statistics are exact integer sums; φ is ONE double division rounded
     to 6dp — the repo's no-cross-row-float discipline. Returns (label,
     n_nodes, cut_w, vol_w, conductance), NULL φ for volume-0 (isolated)
     or whole-graph communities.
@@ -2059,9 +2054,9 @@ def community_conductance(
     joins, one scalar 2m agg, two label-keyed combiner aggs; nothing
     wider than (node, label) crosses a shuffle.
     """
-    w = (F.col(weight_col) if weight_col else F.lit(1)).cast("long")
     und = edges.select(
-        F.col(src_col).alias("u"), F.col(dst_col).alias("v"), w.alias("w")
+        F.col(src_col).alias("u"), F.col(dst_col).alias("v"),
+        F.lit(1).cast("long").alias("w"),
     ).filter(
         F.col("u").isNotNull() & F.col("v").isNotNull()
         & (F.col("u") != F.col("v"))

@@ -28,9 +28,8 @@ operates on the bits in both engines. The derived ``perplexity`` double is
 At 100 TB: the bigram table is vocabulary²-bounded (far below corpus
 size); its join key (w1, w2) is exactly the exploded stream's natural
 key, and skew (stop-word bigrams) is bounded because the count side is
-one row per distinct pair. Context totals are vocabulary-sized and
-usually broadcastable; pass ``broadcast_contexts=True`` when the model's
-vocabulary fits an executor.
+one row per distinct pair. Context totals are vocabulary-sized, so the
+planner broadcasts them on its own when they fit its broadcast threshold.
 """
 
 from __future__ import annotations
@@ -97,7 +96,6 @@ def score_docs(
     alpha: float = 1.0,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_contexts: bool = False,
 ) -> DataFrame:
     """Per-document log-probability and perplexity under the trained model.
 
@@ -109,10 +107,7 @@ def score_docs(
     ``perplexity = exp(-avg_logprob)``.
     """
     bg = _bigrams(docs, text_col, [id_col])
-    ctx = contexts
-    if broadcast_contexts:
-        ctx = F.broadcast(ctx)
-    joined = bg.join(bigrams, ["w1", "w2"], "left").join(ctx, ["w1"], "left")
+    joined = bg.join(bigrams, ["w1", "w2"], "left").join(contexts, ["w1"], "left")
     p = (F.coalesce(F.col("c"), F.lit(0)) + F.lit(alpha)) / (
         F.coalesce(F.col("ctx_c"), F.lit(0)) + F.lit(alpha * vocab_size)
     )
@@ -430,7 +425,6 @@ def kn_score_docs(
     discount: float = KN_D,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_contexts: bool = False,
 ) -> DataFrame:
     """Per-document log-probability / perplexity under interpolated KN:
 
@@ -452,15 +446,10 @@ def kn_score_docs(
     vocabulary-bounded join on w2 for the continuation counts.
     """
     bg = _bigrams(docs, text_col, [id_col])
-    ctx = contexts
-    cont = continuations
-    if broadcast_contexts:
-        ctx = F.broadcast(ctx)
-        cont = F.broadcast(cont)
     joined = (
         bg.join(bigrams, ["w1", "w2"], "left")
-        .join(ctx, ["w1"], "left")
-        .join(cont, ["w2"], "left")
+        .join(contexts, ["w1"], "left")
+        .join(continuations, ["w2"], "left")
     )
     pc = (F.coalesce(F.col("n_prec"), F.lit(0)) + F.lit(1)).cast(
         "double"

@@ -5,7 +5,7 @@
   scan but embarrassingly parallel (no shuffle until the final top-k heap
   merge on the driver-side reduce).
 - ``lsh_topk``         sign-random-projection buckets: probe only vectors in
-  the query's bucket (+ optional multiprobe neighbors). Cuts the scan by
+  the query's bucket and its rank-1 multiprobe neighbors. Cuts the scan by
   ~2^n_planes at a small recall cost — the scale path.
 - ``ivf_topk``         IVF-style coarse quantizer built from a sampled set of
   centroid rows: assign each vector to its nearest centroid via an argmin
@@ -15,8 +15,8 @@
 Bucket counts scale with the corpus: when ``n_planes`` is not given it is
 derived as ``max(6, ceil(log2(n)) - 8)`` — ~2^8 vectors per bucket — so the
 within-bucket candidate join stays linear-ish as the corpus grows instead
-of quadratic-in-(n/2^6). Callers at scale pass ``corpus_size`` (a known
-manifest count) to avoid the extra count job.
+of quadratic-in-(n/2^6). The corpus size comes from one count job; callers
+that know the size pass ``n_planes`` instead.
 
 One execution path per operator, and it is the oracle-certified one:
 
@@ -84,21 +84,20 @@ def lsh_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     n_planes: int | None = None,
-    multiprobe: int = 1,
-    corpus_size: int | None = None,
 ) -> DataFrame:
-    """Probe the query's LSH bucket plus all buckets within ``multiprobe``
-    bit flips (rank-1 multiprobe = n_planes+1 buckets). The corpus is
-    bucketed by the Arrow md5-parity sign projection; the single query
-    bucket is the same projection computed driver-side (no job), so a SQL
-    oracle reproduces the exact probe set."""
+    """Probe the query's LSH bucket plus every bucket one bit flip away
+    (rank-1 multiprobe: n_planes+1 buckets). ``n_planes`` defaults to
+    ``auto_n_planes`` of the corpus count. The corpus is bucketed by the
+    Arrow md5-parity sign projection; the single query bucket is the same
+    projection computed driver-side (no job), so a SQL oracle reproduces
+    the exact probe set."""
     if n_planes is None:
-        n_planes = auto_n_planes(corpus_size if corpus_size is not None else df.count())
+        n_planes = auto_n_planes(df.count())
     bucketed = _arrow_bucket_stage(df, n_planes, id_col, vec_col).select(
         F.col("id").alias(id_col), F.col("vec").alias(vec_col), "bucket"
     )
     qb = _py_lsh_bucket(query_vec, n_planes)
-    probes = {qb} | ({qb ^ (1 << p) for p in range(n_planes)} if multiprobe else set())
+    probes = {qb} | {qb ^ (1 << p) for p in range(n_planes)}
     return (
         bucketed.filter(F.col("bucket").isin(*probes))
         .select(
@@ -250,21 +249,21 @@ def pairwise_cosine_dedup(
     id_col: str = "vec_id",
     threshold: float = 0.95,
     n_planes: int | None = None,
-    corpus_size: int | None = None,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs: LSH-bucket candidates then exact cosine —
     same verify-after-blocking discipline as MinHash-LSH text dedup.
 
-    ``n_planes`` defaults to ``auto_n_planes(n)`` so bucket population stays
-    ~2^8 as the corpus grows. ``max_bucket`` (per-bucket candidate cap, the
-    df-cap trick) drops overfull buckets from candidate generation — at
-    100 TB a degenerate bucket (e.g. near-zero vectors all hashing
-    together) would otherwise be a quadratic hot key; dropped buckets trade
-    recall for a bounded join, and the drop is explicit, not silent.
+    ``n_planes`` defaults to ``auto_n_planes`` of the corpus count so
+    bucket population stays ~2^8 as the corpus grows. ``max_bucket``
+    (per-bucket candidate cap, the df-cap trick) drops overfull buckets
+    from candidate generation — at 100 TB a degenerate bucket (e.g.
+    near-zero vectors all hashing together) would otherwise be a quadratic
+    hot key; dropped buckets trade recall for a bounded join, and the drop
+    is explicit, not silent.
     """
     if n_planes is None:
-        n_planes = auto_n_planes(corpus_size if corpus_size is not None else df.count())
+        n_planes = auto_n_planes(df.count())
     bucketed = _arrow_bucket_stage(df, n_planes, id_col, vec_col)
     if max_bucket is not None:
         sizes = bucketed.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_bucket"))
@@ -342,17 +341,15 @@ def knn_join_lsh(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     n_planes: int | None = None,
-    multiprobe: int = 1,
-    corpus_size: int | None = None,
     probe_carry: str = "auto",
     queries: DataFrame | None = None,
 ) -> DataFrame:
     """LSH-bucketed batch k-NN — the 100 TB path for :func:`knn_join`.
 
     Every corpus vector is bucketed ONCE (its own sign signature); the
-    QUERY side probes its own bucket plus rank-``multiprobe`` bit-flip
-    neighbors (n_planes+1 probe buckets per query at rank 1). An equi-join
-    on the bucket id generates candidates; a per-query top-k ranks them.
+    QUERY side probes its own bucket plus its rank-1 bit-flip neighbors
+    (n_planes+1 probe buckets per query). An equi-join on the bucket id
+    generates candidates; a per-query top-k ranks them.
     Pass ``queries`` for CROSS-SET k-NN (same id/vec column names): the
     query frame is bucketed with the SAME md5-parity planes and probes the
     ``df`` corpus — the LSH path for bitext mining and dense retrieval;
@@ -387,14 +384,15 @@ def knn_join_lsh(
 
     Either plan feeds a per-batch partial top-k (`_partial_topk_stage`) so
     the final per-query window shuffles ≤ k rows per (query, Arrow batch)
-    instead of all p·d candidates. Recall is tunable with ``multiprobe``;
-    the exact :func:`knn_join` over a sample is the recall oracle.
+    instead of all p·d candidates. Recall is tunable with ``n_planes``
+    (fewer planes, denser buckets); the exact :func:`knn_join` over a
+    sample is the recall oracle.
     """
     from pyspark.sql import Window
 
     n_rows = None
     if n_planes is None:
-        n_rows = corpus_size if corpus_size is not None else df.count()
+        n_rows = df.count()
         n_planes = auto_n_planes(n_rows)
     base = _arrow_bucket_stage(
         df, n_planes, id_col, vec_col
@@ -405,14 +403,11 @@ def knn_join_lsh(
     self_knn = queries is None
     if probe_carry == "auto":
         if n_rows is None:
-            n_rows = corpus_size if corpus_size is not None else df.count()
+            n_rows = df.count()
         probe_carry = "rejoin" if n_rows / (1 << n_planes) < 1.0 else "vector"
     flips = F.array(
         F.col("bucket"),
-        *([
-            F.col("bucket").bitwiseXOR(F.lit(1 << p))
-            for p in range(n_planes)
-        ] if multiprobe else []),
+        *(F.col("bucket").bitwiseXOR(F.lit(1 << p)) for p in range(n_planes)),
     )
     if probe_carry == "rejoin":
         probes = qbase.select(

@@ -208,7 +208,6 @@ def revalidation_headers(
     url_col: str = "url",
     ts_col: str = "warc_ts",
     text_col: str = "text",
-    etag_col: str | None = None,
 ) -> DataFrame:
     """HTTP revalidation plan for the next recrawl wave (RFC 9110
     conditional requests — the mechanism that lets a refresh crawl spend
@@ -217,10 +216,9 @@ def revalidation_headers(
     entity tag and ``If-Modified-Since`` from the capture time in
     IMF-fixdate form.
 
-    ``etag_col`` names a stored server ETag when the ingest kept one; the
-    default derives a deterministic strong validator from the content
-    fingerprint (what this engine can recompute; a real deployment stores
-    the server's own ETag at fetch time and this column is it).
+    The entity tag is a deterministic strong validator derived from the
+    content fingerprint (what this engine can recompute; a real deployment
+    stores the server's own ETag at fetch time and would send that).
 
     One keep-latest window on url — the same shuffle as snapshot_asof.
     """
@@ -232,10 +230,7 @@ def revalidation_headers(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-    etag = (
-        F.col(etag_col) if etag_col
-        else content_fingerprint(F.col(text_col))
-    )
+    etag = content_fingerprint(F.col(text_col))
     return latest.select(
         F.col(url_col).alias("url"),
         F.concat(F.lit('"'), etag, F.lit('"')).alias("if_none_match"),

@@ -4,8 +4,7 @@ One epoch = one BFS wave:
 
     frontier(epoch)
       → canonicalize + hash                      (native exprs)
-      → ANTI-JOIN vs seen (+ bloom pre-filter    [shuffle: by url_hash]
-        from BLOOM_MIN_SEEN_ROWS seen rows)
+      → exact ANTI-JOIN vs seen                  [shuffle: by url_hash]
       → repartition by salted host               [shuffle: by host-salt]
       → robots decision (broadcast per-host table of compiled rules and
         crawl delays), per-host crawl order + politeness window over the
@@ -77,11 +76,6 @@ from ..sources.catalog import EpochCatalog
 from . import extract as X
 
 EPOCH_CLOCK0 = datetime(2025, 7, 22, 9, 0, 0, tzinfo=timezone.utc)
-
-# the bloom pre-filter costs a build pass + broadcast per epoch, which
-# only pays once `seen` is big enough that skipping the anti-join shuffle
-# for ~99% of rows beats that cost; below it the exact anti-join runs alone
-BLOOM_MIN_SEEN_ROWS = 500_000
 
 # host salts per epoch: the schedule partitions by (host, salt), so a hot
 # host's frontier spreads over this many tasks
@@ -264,20 +258,10 @@ class CrawlEngine:
         module docstring)."""
         frontier = self._frontier_for(seeds, epoch)
 
-        # dedup vs seen  [shuffle: url_hash]
+        # dedup vs seen: the exact anti-join on url_hash  [shuffle: url_hash]
         seen = self.catalog.read(self.spark, "seen", upto_epoch=epoch - 1)
         if seen is not None:
-            # the seen-set size from the commit lineage in the manifest (no
-            # Spark job) decides the bloom and sizes its bitmap
-            # (dedup.py::bloom_size_bits); the exact anti-join on url_hash
-            # stays the source of truth either way
-            lineage = self.catalog.manifest("seen").get("lineage", {})
-            seen_rows = sum(e.get("fetched", 0) for e in lineage.values())
-            frontier = D.anti_join_seen(
-                frontier, seen,
-                use_bloom=seen_rows >= BLOOM_MIN_SEEN_ROWS,
-                expected_keys=seen_rows,
-            )
+            frontier = frontier.join(seen.select("url_hash"), "url_hash", "left_anti")
 
         # robots gate (north_rule) + schedule  [shuffle: salted host].
         # Denied URLs are still committed to `seen` via a fetched row with
@@ -347,7 +331,12 @@ class CrawlEngine:
             self.spark.sparkContext.defaultParallelism * 4, F.col("url_hash")
         )
 
-        # fetch = join against the offline corpus (broadcast-averse: both big)
+        # fetch = left join against the offline corpus on canonical_url.
+        # While the `pages` checkpoint is under the session's 64 MB
+        # autoBroadcastJoinThreshold (as on the crawl_frontier benchmark),
+        # the planner broadcasts the whole corpus and exchanges only the
+        # scheduled side; past it, this is a shuffle join that exchanges
+        # both sides, the corpus included, every epoch
         fetched = scheduled.join(
             self.pages.withColumnRenamed("url_hash", "p_hash"),
             scheduled["canonical_url"] == self.pages["canonical_url"],

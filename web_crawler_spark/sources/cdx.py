@@ -43,26 +43,23 @@ def cdx_records(
     ts_col: str = "warc_ts",
     payload_col: str = "html",
     mime: str = "text/html",
-    status_col: str | None = None,
 ) -> DataFrame:
     """Capture rows → CDX index rows ``(urlkey, ts, url, mime, status,
     digest, length)``. Pure Column expressions end to end.
 
     ``urlkey`` is the SURT key of the capture URL, ``ts`` the 14-digit
     UTC timestamp, ``digest`` md5 of the payload bytes, ``length`` the
-    payload octet length.
+    payload octet length. Every capture row is a fetched page, so
+    ``status`` is 200.
     """
     url = F.col(url_col).cast("string")
     body = F.col(payload_col).cast("string")
-    status = (
-        F.col(status_col).cast("int") if status_col else F.lit(200)
-    )
     return fetched.select(
         surt_key(url).alias("urlkey"),
         F.date_format(F.col(ts_col), "yyyyMMddHHmmss").alias("ts"),
         url.alias("url"),
         F.lit(mime).alias("mime"),
-        status.alias("status"),
+        F.lit(200).alias("status"),
         F.md5(body.cast("binary")).alias("digest"),
         F.octet_length(body).cast("long").alias("length"),
     )

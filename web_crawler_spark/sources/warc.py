@@ -309,18 +309,14 @@ def arc_record_bytes(
     body: bytes,
     mime: str = "text/html",
     http_status: int = 200,
-    http_wrap: bool = True,
 ) -> bytes:
     """One ARC v1 record as bytes — fixture/export helper mirroring
-    ``warc_record_bytes``. ``http_wrap`` wraps the body in a minimal
-    HTTP/1.1 message (how real ARC http captures are stored)."""
-    if http_wrap:
-        payload = (
-            f"HTTP/1.1 {http_status} OK\r\nContent-Type: {mime}\r\n"
-            f"Content-Length: {len(body)}\r\n\r\n"
-        ).encode() + body
-    else:
-        payload = body
+    ``warc_record_bytes``. The body is wrapped in a minimal HTTP/1.1
+    message (how real ARC http captures are stored)."""
+    payload = (
+        f"HTTP/1.1 {http_status} OK\r\nContent-Type: {mime}\r\n"
+        f"Content-Length: {len(body)}\r\n\r\n"
+    ).encode() + body
     head = f"{url} {ip} {ts14} {mime} {len(payload)}\n".encode()
     return head + payload + b"\n"
 
