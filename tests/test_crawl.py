@@ -323,10 +323,11 @@ _GATED_ROBOTS = {
 # checkpoint over one (host, salt) exchange and one broadcast of the
 # per-host robots table compiled once per engine, the budgets are
 # water-filled on the driver from the demand observed on that checkpoint,
-# the epoch counters are observed on the fetched checkpoint's job,
-# outlinks carry their depth out of extraction, and catalog reads pass
+# the epoch tallies are observed on the one checkpoint after admission,
+# whose Arrow pass also extracts every ok page (outlinks carrying their
+# depth) and emits each partition's metrics row, and catalog reads pass
 # the committed schema instead of inferring it)
-_GATED_JOB_BUDGET = [15, 16]
+_GATED_JOB_BUDGET = [13, 14]
 # the catalog tables an epoch commits, `seen` last
 _TABLES = ("fetched", "extracted", "outlinks", "metrics", "deferred", "seen")
 
@@ -369,9 +370,9 @@ def gated_crawl(spark):
 
 def test_gated_crawl_job_budget(spark, gated_crawl):
     """Every frame with more than one consumer in an epoch (robots
-    decision, budgeted schedule, fetched, extraction) is computed once,
-    and neither the counters nor the per-host demand cost a job of their
-    own."""
+    decision and budgeted schedule; fetched with its extraction and
+    metrics) is computed once, and neither the tallies nor the per-host
+    demand cost a job of their own."""
     _pages, _seeds, eng, stats, jobs = gated_crawl
     fetched = eng.catalog.read(spark, "fetched")
     # both the robots gate and the water-fill deferral ran in epoch 0
@@ -385,8 +386,8 @@ def test_gated_crawl_job_budget(spark, gated_crawl):
 
 def test_gated_commits_are_sized_by_rows(spark, gated_crawl, tmp_path, monkeypatch):
     """Each commit is sized from the epoch's observed figures: the rows of
-    fetched, extracted, deferred and seen exactly, outlinks (links before
-    resolution) and metrics (fetched partitions) as bounds. At the real
+    fetched, extracted, metrics, deferred and seen exactly, outlinks
+    (links before resolution) as a bound. At the real
     ROWS_PER_FILE every table of the gated crawl is one file per epoch; at
     10 rows per file, none writes more than ceil(sized rows / 10) files
     and fetched and seen, spread by url_hash, write exactly
@@ -436,12 +437,10 @@ def test_gated_commits_are_sized_by_rows(spark, gated_crawl, tmp_path, monkeypat
         assert rows == epoch_rows(full.catalog, table), table
         for epoch in (0, 1):
             n, got = rows.get(epoch, 0), sized[table, epoch]
-            if table in ("outlinks", "metrics"):
+            if table == "outlinks":
                 assert n <= got, (table, epoch, n, got)
             else:
                 assert n == got, (table, epoch, n, got)
-            if table == "metrics":
-                assert got <= sized["fetched", epoch], (epoch, got)
             assert 1 <= files(eng.catalog, table, epoch) <= -(-got // 10), (table, epoch)
             if table in ("fetched", "seen"):
                 # rows spread by url_hash: the coalesce target is met
@@ -465,12 +464,41 @@ def test_admission_is_one_exchange_and_one_broadcast(spark, gated_crawl):
     assert plan.count("BroadcastExchange ") == 1, plan
 
 
+def test_epoch_materialises_one_frame_without_html(spark, gated_crawl, tmp_path, monkeypatch):
+    """After admission, an epoch materialises exactly one frame, the
+    fetched rows with their extraction and metrics rows, and the page
+    bodies (``html``) are not in it: every commit is a filter on it."""
+    pages, seeds, _full, _stats, _jobs = gated_crawl
+    eng = _gated_engine(spark, str(tmp_path / "one"), pages)
+    admit, materialised = eng._admit, []
+    DataFrame = type(spark.range(1))
+
+    def record(name):
+        real = getattr(DataFrame, name)
+
+        def wrapped(self, *args, **kwargs):
+            materialised.append((name, self.columns))
+            return real(self, *args, **kwargs)
+        return wrapped
+
+    def admit_then_record(*args):
+        out = admit(*args)
+        for name in ("localCheckpoint", "checkpoint", "persist", "cache"):
+            monkeypatch.setattr(DataFrame, name, record(name))
+        return out
+
+    monkeypatch.setattr(eng, "_admit", admit_then_record)
+    eng.run_epoch(seeds, 0)
+    assert len(materialised) == 1, materialised
+    assert "html" not in materialised[0][1], materialised
+
+
 @pytest.mark.parametrize(
     "lost, job_budget",
     [
-        pytest.param(_TABLES[1:], 15, id="after_fetched"),
-        pytest.param(("seen",), 10, id="before_seen"),
-        pytest.param(("extracted", "seen"), 11, id="before_extracted_and_seen"),
+        pytest.param(_TABLES[1:], 13, id="after_fetched"),
+        pytest.param(("seen",), 9, id="before_seen"),
+        pytest.param(("extracted", "seen"), 10, id="before_extracted_and_seen"),
     ],
 )
 def test_gated_resume_after_mid_epoch_crash(spark, gated_crawl, tmp_path, lost, job_budget):

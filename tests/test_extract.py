@@ -3,6 +3,8 @@ the mapInPandas stages over the synthetic corpus."""
 
 import json
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from web_crawler_spark.plans.extract import (
@@ -256,3 +258,131 @@ def test_combined_extract_stage_carries_extra_columns(spark):
     empty = combined_extract_stage(with_depth.limit(0))
     assert empty.schema == got.schema
     assert empty.count() == 0
+
+
+# -- the crawl epoch's Arrow pass over its fetched plan --------------------------
+
+
+@pytest.fixture(scope="module")
+def fetched_parts(spark):
+    """A frame shaped like the crawl epoch's ``fetched`` plan, in four
+    partitions of 12 pages: partition 1 holds only robots-denied rows (no
+    html, no fetch_ts), partition 2 is empty, and partitions 0 and 3 mix
+    ok and error rows, some without a fetch_ts."""
+    from web_crawler_spark.functions import urltools as U
+    from web_crawler_spark.sources.pages import generate_pages
+
+    part = F.spark_partition_id()
+    h = F.col("url_hash")
+    pages = U.with_url_columns(generate_pages(spark, 48, seed=11, partitions=4))
+    status = (
+        F.when(part == 1, "robots_denied").when(h % 4 == 0, "error").otherwise("ok")
+    )
+    return (
+        pages.select(
+            "url", "canonical_url", "url_hash", "host",
+            F.lit(1).alias("priority"),
+            F.pmod(h, 3).cast("int").alias("depth"),
+            F.lit(None).cast("int").alias("seq"),
+            F.when((part != 1) & (h % 7 != 0), F.timestamp_seconds(
+                1_750_000_000 + F.pmod(h, 1000))).alias("fetch_ts"),
+            F.when(status == "ok", F.col("html")).alias("html"),
+            "text", "lang", status.alias("status"),
+        )
+        .filter(part != 2)
+        .localCheckpoint()
+    )
+
+
+@pytest.fixture
+def small_arrow_batches(spark):
+    """Arrow batches of at most 3 rows, so a partition spans several."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    yield
+    spark.conf.set(key, before)
+
+
+def _reference_metrics(fetched, epoch):
+    """The per-partition metrics rows as a native ``groupBy(epoch,
+    spark_partition_id())`` makes them, with one exchange."""
+    return (
+        fetched.withColumn("epoch", F.lit(epoch))
+        .withColumn("partition_id", F.spark_partition_id())
+        .groupBy("epoch", "partition_id")
+        .agg(
+            F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).cast("bigint").alias("scraped_count"),
+            F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)).cast("bigint").alias("error_count"),
+            F.min("fetch_ts").alias("start_ts"),
+            F.max("fetch_ts").alias("end_ts"),
+        )
+    )
+
+
+def test_fetched_pass_metrics_match_the_native_groupby(spark, fetched_parts, small_arrow_batches):
+    """One metrics row per non-empty partition, equal to the native
+    per-partition aggregate over the same frame: a robots-denied-only
+    partition has null start and end, an empty partition has no row, and
+    a partition of several Arrow batches counts and spans all of them."""
+    from web_crawler_spark.plans.extract import METRICS, fetched_pass
+
+    want = sorted(_reference_metrics(fetched_parts, 5).collect())
+    got = sorted(
+        fetched_pass(fetched_parts)
+        .filter(F.col("kind") == METRICS)
+        .select(F.lit(5).alias("epoch"), "partition_id", "scraped_count",
+                "error_count", "start_ts", "end_ts")
+        .collect()
+    )
+    assert got == want
+    by_part = {r["partition_id"]: r for r in want}
+    assert sorted(by_part) == [0, 1, 3]
+    denied = by_part[1]
+    assert denied["scraped_count"] == 0 and denied["error_count"] == 12
+    assert denied["start_ts"] is None and denied["end_ts"] is None
+    for p in (0, 3):
+        r = by_part[p]
+        assert r["scraped_count"] + r["error_count"] == 12 > 3, r
+        assert r["scraped_count"] > 0 and r["error_count"] > 0, r
+        assert r["start_ts"] < r["end_ts"], r
+
+
+def test_fetched_pass_extracts_as_combined_stage_and_passes_rows_through(
+    spark, fetched_parts, small_arrow_batches
+):
+    """The pass's extraction rows are the rows ``combined_extract_stage``
+    makes of the ok pages, and its fetched rows are the input rows without
+    ``html``, their ``status`` read off ``kind``."""
+    from web_crawler_spark.plans.extract import (
+        LINK,
+        METRICS,
+        ROW,
+        combined_extract_stage,
+        fetched_pass,
+    )
+
+    frame = fetched_pass(fetched_parts).localCheckpoint()
+    assert "html" not in frame.columns
+    assert not frame.schema["kind"].nullable and not frame.schema["partition_id"].nullable
+    kind = F.col("kind")
+
+    want = combined_extract_stage(
+        fetched_parts.filter(F.col("status") == "ok").select(
+            F.col("canonical_url").alias("url"), "html", "depth")
+    ).collect()
+    got = frame.filter(kind.isin(ROW, LINK)).select(
+        F.col("canonical_url").alias("url"), "name", "price", "change", "link", "depth"
+    ).collect()
+    assert any(r["name"] is not None for r in want) and any(r["link"] is not None for r in want)
+    assert sorted(got, key=repr) == sorted(want, key=repr)
+    assert frame.filter((kind == ROW) & F.col("name").isNull()).count() == 0
+    assert frame.filter((kind == LINK) & F.col("link").isNull()).count() == 0
+
+    passed = frame.filter(~kind.isin(ROW, LINK, METRICS)).select(
+        *[c for c in fetched_parts.columns if c not in ("html", "status")],
+        kind.alias("status"),
+    )
+    expect = fetched_parts.drop("html")
+    assert passed.count() == expect.count() == 36
+    assert passed.exceptAll(expect).count() == 0 == expect.exceptAll(passed).count()

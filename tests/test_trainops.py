@@ -255,7 +255,7 @@ def test_bloom_sizing_from_lineage(spark):
     assert bloom_size_bits(100) == 1 << 23          # floor
     assert bloom_size_bits(10**10) == 1 << 30       # cap = per-bucket handoff
     seen = spark.range(200_000).select(F.xxhash64("id").alias("url_hash"))
-    bloom = build_bloom(seen, expected_keys=200_000)
+    bloom = build_bloom(seen)
     fresh = (
         spark.range(300_000, 350_000)
         .select(F.xxhash64("id").alias("url_hash"))

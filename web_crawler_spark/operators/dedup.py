@@ -110,25 +110,22 @@ def bloom_size_bits(expected_keys: int) -> int:
 
 
 def build_bloom(seen: DataFrame, key: str = "url_hash",
-                m_bits: int | None = None, n_hashes: int = 4,
-                expected_keys: int | None = None) -> bytes:
+                m_bits: int | None = None, n_hashes: int = 4) -> bytes:
     """Distributed bloom build: each partition sets bits into a local numpy
     bitmap (Arrow-batched), partial bitmaps are OR-merged treeward. Keys are
     already 64-bit hashes (xxhash64), so the j-th probe is a cheap mix:
     ``h_j = h * C_j  (odd constants), bit = (h_j >> 8) mod m``.
 
-    ``m_bits`` defaults to ``bloom_size_bits(n)`` with *n* from
-    ``expected_keys`` (a seen-row count the caller already holds) or a
-    ``count()`` of the seen side, so the filter does not saturate when the
-    seen set outgrows a fixed bitmap. Callers that need portability of the
+    ``m_bits`` defaults to ``bloom_size_bits(n)`` with *n* a ``count()``
+    of the seen side, so the filter does not saturate when the seen set
+    outgrows a fixed bitmap. Callers that need portability of the
     bit layout pin m_bits explicitly; ``bloom_filter_stage`` reads the size
     off the bitmap either way.
     """
     import numpy as np
 
     if m_bits is None:
-        n_keys = expected_keys if expected_keys is not None else seen.count()
-        m_bits = bloom_size_bits(n_keys)
+        m_bits = bloom_size_bits(seen.count())
 
     mixers = [0x9E3779B97F4A7C15, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
               0x27D4EB2F165667C5][:n_hashes]

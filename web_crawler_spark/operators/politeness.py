@@ -124,23 +124,6 @@ def retry_eligible(
     return frontier.withColumn("eligible", eligible)
 
 
-def epoch_metrics(
-    fetched: DataFrame, epoch_col: str = "epoch", status_col: str = "status"
-) -> DataFrame:
-    """F7: per-(epoch, partition) counters → the metrics/lineage table
-    (reference ScrapingResult, pacong/data/models.py:225-246)."""
-    return (
-        fetched.withColumn("partition_id", F.spark_partition_id())
-        .groupBy(epoch_col, "partition_id")
-        .agg(
-            F.sum(F.when(F.col(status_col) == "ok", 1).otherwise(0)).cast("bigint").alias("scraped_count"),
-            F.sum(F.when(F.col(status_col) != "ok", 1).otherwise(0)).cast("bigint").alias("error_count"),
-            F.min("fetch_ts").alias("start_ts"),
-            F.max("fetch_ts").alias("end_ts"),
-        )
-    )
-
-
 def host_circuit_breaker(
     fetch_log: DataFrame,
     window_size: int = 10,

@@ -14,7 +14,9 @@ One epoch = one BFS wave:
       → repartition by url_hash (4× cores)       [shuffle: by url_hash]
       → "fetch" = equi-join against the pages corpus on canonical_url
         (the offline corpus replaces live HTTP — SURVEY §2.1 S1)
-      → extract (mapInPandas: tables / links / text)
+      → one Arrow pass (mapInArrow) over the fetched rows: each passes
+        through without html, each ok page is parsed once into table rows
+        and outlinks, and each partition ends with its metrics row
       → expand: resolved outlinks become epoch+1 frontier candidates
       → commit fetched/seen/metrics snapshots    (EpochCatalog — resumable)
 
@@ -28,24 +30,24 @@ data, and a lazy frame with several consumers re-runs its whole plan
 (every upstream shuffle) once per consumer. So the engine materialises,
 once per engine, one per-host robots table (``robots.compile_host_rules``:
 the agent-group pick, the pattern regexes and the crawl delays do not
-change between epochs); and an epoch materialises the three frames that
+change between epochs); and an epoch materialises the two frames that
 have more than one consumer, each once:
 
 * the admission frame — robots decision, schedule and per-host demand
   over one (host, salt) exchange; ``denied``, the fetch side and
   ``deferred`` are filters on it, so they always come from one
   evaluation of the plan;
-* ``fetched`` — read by extraction, metrics and the fetched and seen
-  commits;
-* ``combined`` (the one-pass extraction, which carries each page's
-  ``depth`` onto its outlink rows) — read by ``extracted`` and
-  ``outlinks``.
+* the Arrow pass's frame (``extract.fetched_pass``) — the fetched rows
+  without html, their extraction rows (each carrying its page's
+  ``depth``) and one metrics row per partition, each row tagged with its
+  ``kind``; the fetched, extracted, outlinks, metrics and seen commits
+  are filters on it.
 
 Driver-side figures are observed, not collected: the per-host demand the
-water-fill needs rides on the admission checkpoint's job, the epoch
-counters on the ``fetched`` checkpoint's job (which every run of an
-epoch performs, resumed or not), and the extraction's row and link
-counts on the ``combined`` checkpoint's job.
+water-fill needs rides on the admission checkpoint's job, and the epoch
+tallies (fetched and ok rows, extracted rows, links, metrics rows) on
+the Arrow pass's checkpoint job, which every run of an epoch performs,
+resumed or not.
 
 Commits are sized by rows: each table's commit is coalesced to at most
 ceil(rows / ``ROWS_PER_FILE``) files, its rows counted or bounded by
@@ -95,12 +97,18 @@ def _sized(df: DataFrame, rows: int) -> DataFrame:
     return df.coalesce(max(1, -(-rows // ROWS_PER_FILE)))
 
 
-def _counters():
-    """The epoch counters over ``fetched``: rows and status=ok rows."""
-    return (
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok"),
-    )
+def _parts(kind: Column) -> dict[str, Column]:
+    """The parts of :func:`extract.fetched_pass`'s frame, as predicates on
+    its ``kind``: fetched rows, ok rows, extracted table rows, links and
+    metrics rows. The epoch counts each on the pass's checkpoint and
+    commits each as a filter on it."""
+    return {
+        "fetched": ~kind.isin(X.ROW, X.LINK, X.METRICS),
+        "ok": kind == "ok",
+        "rows": kind == X.ROW,
+        "links": kind == X.LINK,
+        "metrics": kind == X.METRICS,
+    }
 
 
 class CrawlEngine:
@@ -347,7 +355,6 @@ class CrawlEngine:
             scheduled["seq"], scheduled["scheduled_ts"].alias("fetch_ts"),
             self.pages["html"], self.pages["text"], self.pages["lang"],
             F.when(self.pages["html"].isNotNull(), "ok").otherwise("error").alias("status"),
-            F.lit(epoch).alias("epoch"),
         )
         if denied is not None:
             fetched = fetched.unionByName(
@@ -359,41 +366,30 @@ class CrawlEngine:
                     F.lit(None).cast("string").alias("text"),
                     F.lit(None).cast("string").alias("lang"),
                     F.lit("robots_denied").alias("status"),
-                    F.lit(epoch).alias("epoch"),
                 )
             )
-        # materialised: extraction, metrics, the fetched commit and the
-        # seen commit all read it. The epoch
-        # counters ride on this checkpoint's job, which a resumed epoch
-        # runs too (its commits of already-committed tables run no job)
-        counted = Observation()
-        fetched = fetched.observe(counted, *_counters()).localCheckpoint()
-        counts = counted.get
-        n_fetched, n_ok = counts["n"], int(counts["ok"] or 0)
-
-        ok = fetched.filter(F.col("status") == "ok")
-
-        # extract + expand: ONE python parse per page yields both table
-        # rows and outlinks (combined_extract_stage), each carrying its
-        # page's depth; materialized before the split so neither branch
-        # re-runs the Arrow stage. The materialized rows are slim (no html).
-        # The row and link counts size the extracted and outlinks commits
-        extract_counts = Observation()
-        combined = X.combined_extract_stage(
-            ok.select(F.col("canonical_url").alias("url"), "html", "depth")
-        ).observe(
-            extract_counts, F.count("name").alias("rows"), F.count("link").alias("links")
+        # extract + expand + metrics in the Arrow pass that already holds
+        # each fetched batch (extract.fetched_pass): ONE python parse per ok
+        # page yields its table rows and its outlinks, each carrying the
+        # page's depth, and each partition ends with its metrics row. The
+        # pass's frame is the epoch's one materialisation after admission,
+        # without html; every commit is a filter on it. The epoch
+        # tallies ride on its checkpoint's job, which a resumed epoch runs
+        # too (its commits of already-committed tables run no job)
+        kind = F.col("kind")
+        parts, tallied = _parts(kind), Observation()
+        frame = X.fetched_pass(fetched).observe(
+            tallied, *(F.count(F.when(p, 1)).alias(k) for k, p in parts.items())
         ).localCheckpoint()
-        n_rows, n_links = extract_counts.get["rows"], extract_counts.get["links"]
-
-        links = combined.filter(F.col("link").isNotNull()).select("url", "link", "depth")
-        outlinks = X.resolve_links(links).select(
-            F.col("url").alias("from_url"), "resolved_url", "depth",
+        n = tallied.get
+        fetched = frame.filter(parts["fetched"])
+        page_url = F.col("canonical_url").alias("url")
+        outlinks = X.resolve_links(
+            frame.filter(parts["links"]).select(page_url, "link", "depth")
+        ).select(F.col("url").alias("from_url"), "resolved_url", "depth")
+        extracted = frame.filter(parts["rows"]).select(
+            page_url, "name", "price", "change", F.lit(epoch).alias("epoch")
         )
-
-        extracted = combined.filter(F.col("name").isNotNull()).select(
-            "url", "name", "price", "change"
-        ).withColumn("epoch", F.lit(epoch))
 
         # commit epoch snapshots (order matters: data first, seen last so a
         # crash can never mark a URL seen without its fetched row committed).
@@ -401,14 +397,18 @@ class CrawlEngine:
         # derive from materialised frames — submit them as concurrent
         # Spark jobs, one lane each; only `seen` waits behind the barrier.
         # Each commit writes ceil(rows / ROWS_PER_FILE) files, its rows
-        # bounded by figures observed above (outlinks: at most one per
-        # link; metrics: at most one per fetched partition)
-        n_metrics = min(n_fetched, fetched.rdd.getNumPartitions())
+        # counted on the checkpoint (outlinks: at most one per link)
         commits = [
-            ("fetched", fetched.drop("html"), n_fetched),
-            ("extracted", extracted, n_rows),
-            ("outlinks", outlinks, n_links),
-            ("metrics", P.epoch_metrics(fetched), n_metrics),
+            ("fetched", fetched.select(
+                "url", "canonical_url", "url_hash", "host", "priority", "depth", "seq",
+                "fetch_ts", "text", "lang", kind.alias("status"), F.lit(epoch).alias("epoch"),
+            ), n["fetched"]),
+            ("extracted", extracted, n["rows"]),
+            ("outlinks", outlinks, n["links"]),
+            ("metrics", frame.filter(parts["metrics"]).select(
+                F.lit(epoch).alias("epoch"), "partition_id", "scraped_count",
+                "error_count", "start_ts", "end_ts",
+            ), n["metrics"]),
         ]
         if deferred_out is not None:
             commits.append(("deferred", deferred_out, n_deferred))
@@ -425,11 +425,11 @@ class CrawlEngine:
                 fetched.select("url_hash", "canonical_url").withColumn(
                     "first_seen_epoch", F.lit(epoch)
                 ),
-                n_fetched,
+                n["fetched"],
             ),
-            lineage={"fetched": n_fetched, "ok": n_ok},
+            lineage={"fetched": n["fetched"], "ok": n["ok"]},
         )
-        return {"epoch": epoch, "fetched": n_fetched, "ok": n_ok}
+        return {"epoch": epoch, "fetched": n["fetched"], "ok": n["ok"]}
 
     def run(self, seeds: DataFrame, n_epochs: int = 3) -> list[dict]:
         start = self.catalog.last_epoch("seen")

@@ -13,10 +13,12 @@ contract on stdlib ``html.parser``:
 * fixtures are well-formed (explicitly closed tags), which is the subset
   where html.parser and BS agree byte-for-byte.
 
-Everything runs inside ``mapInPandas`` — Arrow batches in, Arrow batches
-out, 1→N rows per page. Python is unavoidable here (real HTML parsing);
-batching keeps it off the per-row slow path. At 100 TB this stage is
-embarrassingly parallel: no shuffle, scans ``html`` only (column-pruned).
+Everything runs inside ``mapInPandas`` or ``mapInArrow`` — Arrow batches
+in, Arrow batches out, 1→N rows per page. Python is unavoidable here (real
+HTML parsing); batching keeps it off the per-row slow path. At 100 TB this
+stage is embarrassingly parallel: no shuffle. The crawl epoch runs its
+extraction inside :func:`fetched_pass`, the Arrow pass that already holds
+each fetched batch, instead of as a stage of its own.
 """
 
 from __future__ import annotations
@@ -26,6 +28,8 @@ from collections.abc import Iterator
 from html.parser import HTMLParser
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -411,14 +415,135 @@ def combined_extract_stage(pages: DataFrame) -> DataFrame:
             for url, html, *rest in zip(
                 pdf["url"], pdf["html"], *(pdf[c] for c in carried)
             ):
-                parsed = parse_html(_decode(html))
-                for r in _commodity_rows_from_parser(parsed):
-                    rows.append((url, r["name"], r["price"], r["change"], None, *rest))
-                for link in parsed.links:
-                    rows.append((url, None, None, None, link, *rest))
+                rows.extend((url, *r, *rest) for r in page_rows(html))
             yield pd.DataFrame(rows, columns=columns)
 
     return pages.select("url", "html", *carried).mapInPandas(gen, schema)
+
+
+def page_rows(html) -> Iterator[tuple]:
+    """The ``(name, price, change, link)`` rows of one page, from one
+    parse: its commodity-table rows (link None), then one row per href
+    (name, price and change None). Both :func:`combined_extract_stage` and
+    :func:`fetched_pass` extract a page through this."""
+    parsed = parse_html(_decode(html))
+    for r in _commodity_rows_from_parser(parsed):
+        yield r["name"], r["price"], r["change"], None
+    for link in parsed.links:
+        yield None, None, None, link
+
+
+# the ``kind`` of a :func:`fetched_pass` row that is not a fetched row (a
+# fetched row's kind is its fetch status: ok, error or robots_denied)
+ROW, LINK, METRICS = "row", "link", "metrics"
+
+METRICS_FIELDS = [
+    T.StructField("scraped_count", T.LongType()),
+    T.StructField("error_count", T.LongType()),
+    T.StructField("start_ts", T.TimestampType()),
+    T.StructField("end_ts", T.TimestampType()),
+]
+
+
+def fetched_pass(fetched: DataFrame) -> DataFrame:
+    """The crawl epoch's one Arrow pass over its ``fetched`` plan: per
+    partition, the fetched rows without ``html``, the extraction of their
+    ``ok`` pages, and one per-partition metrics row, in one frame.
+
+    ``fetched`` carries ``status``, ``html``, ``canonical_url``, ``depth``
+    and ``fetch_ts``. Every row of the result has a ``kind`` and the
+    ``partition_id`` of the task that made it, and the columns of its kind
+    (the others are null):
+
+    * a fetched row, whose kind is its ``status``: every input column but
+      ``status`` and ``html``, passed through as the Arrow arrays the
+      batch arrived in;
+    * an extraction row of an ``ok`` page, kind :data:`ROW` or
+      :data:`LINK`: the page's ``canonical_url`` and ``depth`` and one
+      :func:`page_rows` row (``name``, ``price``, ``change``, ``link``),
+      the rows :func:`combined_extract_stage` makes of the page;
+    * the last row of a non-empty partition, kind :data:`METRICS`: its
+      ok and other row counts (``scraped_count``, ``error_count``) and the
+      least and greatest ``fetch_ts`` (``start_ts``, ``end_ts``; null when
+      every ``fetch_ts`` is) — the rows of a ``groupBy`` on
+      ``spark_partition_id()`` over the same plan, without its exchange.
+
+    ``kind`` and ``partition_id`` are never null."""
+    carried = [c for c in fetched.columns if c not in ("status", "html")]
+    schema = T.StructType(
+        [
+            T.StructField("kind", T.StringType(), False),
+            T.StructField("partition_id", T.IntegerType(), False),
+        ]
+        + [T.StructField(c, fetched.schema[c].dataType) for c in carried]
+        + COMBINED_SCHEMA.fields[1:]
+        + METRICS_FIELDS
+    )
+
+    def arrow_schema(batch: pa.RecordBatch) -> pa.Schema:
+        # strings and timestamps take the types the batch arrived in
+        string, ts = batch.schema.field("status").type, batch.schema.field("fetch_ts").type
+        types = {c: batch.schema.field(c).type for c in carried}
+        types.update(kind=string, partition_id=pa.int32(), name=string, price=pa.float64(),
+                     change=string, link=string, scraped_count=pa.int64(),
+                     error_count=pa.int64(), start_ts=ts, end_ts=ts)
+        return pa.schema([(f.name, types[f.name]) for f in schema.fields])
+
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from pyspark import TaskContext
+
+        pid = pa.scalar(TaskContext.get().partitionId(), pa.int32())
+        out, n, n_ok, stamps = None, 0, 0, []
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            if out is None:
+                out = arrow_schema(batch)
+            ok = pc.equal(batch.column("status"), "ok")
+            n += batch.num_rows
+            n_ok += pc.sum(ok).as_py()
+            stamps.append(batch.column("fetch_ts"))
+            yield _arrow_rows(out, batch.num_rows, pid, kind=batch.column("status"),
+                              **{c: batch.column(c) for c in carried})
+            found = [
+                (url, depth, *r)
+                for url, html, depth in zip(*(
+                    pc.filter(batch.column(c), ok).to_pylist()
+                    for c in ("canonical_url", "html", "depth")
+                ))
+                for r in page_rows(html)
+            ]
+            if found:
+                url, depth, name, price, change, link = zip(*found)
+                yield _arrow_rows(
+                    out, len(found), pid, kind=[ROW if h is None else LINK for h in link],
+                    canonical_url=url, depth=depth, name=name, price=price,
+                    change=change, link=link,
+                )
+        if n:
+            span = pc.min_max(pa.chunked_array(stamps)).as_py()
+            yield _arrow_rows(
+                out, 1, pid, kind=[METRICS], scraped_count=[n_ok], error_count=[n - n_ok],
+                start_ts=[span["min"]], end_ts=[span["max"]],
+            )
+
+    return fetched.mapInArrow(gen, schema)
+
+
+def _arrow_rows(schema: pa.Schema, n: int, pid: pa.Scalar, **cols) -> pa.RecordBatch:
+    """``n`` rows of ``schema``: ``partition_id`` ``pid``, the given
+    columns (Arrow arrays as they are, sequences converted) and nulls in
+    every other column."""
+    cols["partition_id"] = pa.repeat(pid, n)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.nulls(n, f.type) if f.name not in cols
+            else cols[f.name] if isinstance(cols[f.name], pa.Array)
+            else pa.array(cols[f.name], f.type)
+            for f in schema
+        ],
+        schema=schema,
+    )
 
 
 def text_stage(pages: DataFrame) -> DataFrame:
