@@ -325,9 +325,10 @@ _GATED_ROBOTS = {
 # water-filled on the driver from the demand observed on that checkpoint,
 # the epoch tallies are observed on the one checkpoint after admission,
 # whose Arrow pass also extracts every ok page (outlinks carrying their
-# depth) and emits each partition's metrics row, and catalog reads pass
-# the committed schema instead of inferring it)
-_GATED_JOB_BUDGET = [13, 14]
+# depth) and emits each partition's metrics row, catalog reads pass the
+# committed schema instead of inferring it, and the six tables commit
+# through one staged write)
+_GATED_JOB_BUDGET = [8, 9]
 # the catalog tables an epoch commits, `seen` last
 _TABLES = ("fetched", "extracted", "outlinks", "metrics", "deferred", "seen")
 
@@ -414,20 +415,21 @@ def test_gated_commits_are_sized_by_rows(spark, gated_crawl, tmp_path, monkeypat
 
     # the row count each commit was sized with, keyed by (table, epoch)
     sized, by_frame = {}, {}
-    real_sized, real_commit = EP._sized, EpochCatalog.commit_epoch
+    real_sized, real_commit = EP._sized, EpochCatalog.commit_epochs
 
     def record_sized(df, rows):
         out = real_sized(df, rows)
         by_frame[id(out)] = rows
         return out
 
-    def record_commit(self, table, epoch, df, **kw):
-        sized[table, epoch] = by_frame.pop(id(df))
-        return real_commit(self, table, epoch, df, **kw)
+    def record_commit(self, epoch, frames, *args, **kw):
+        for table, df in frames:
+            sized[table, epoch] = by_frame.pop(id(df))
+        return real_commit(self, epoch, frames, *args, **kw)
 
     monkeypatch.setattr(EP, "ROWS_PER_FILE", 10)
     monkeypatch.setattr(EP, "_sized", record_sized)
-    monkeypatch.setattr(EpochCatalog, "commit_epoch", record_commit)
+    monkeypatch.setattr(EpochCatalog, "commit_epochs", record_commit)
     eng = _gated_engine(spark, str(tmp_path / "small"), pages)
     for epoch in (0, 1):
         eng.run_epoch(seeds, epoch)
@@ -493,12 +495,38 @@ def test_epoch_materialises_one_frame_without_html(spark, gated_crawl, tmp_path,
     assert "html" not in materialised[0][1], materialised
 
 
+def test_epoch_commits_in_one_write(spark, gated_crawl, tmp_path, monkeypatch):
+    """After admission, an epoch writes parquet once: the six tables commit
+    through one staged write, partitioned by table."""
+    import os
+
+    pages, seeds, _full, _stats, _jobs = gated_crawl
+    eng = _gated_engine(spark, str(tmp_path / "one"), pages)
+    admit, writes = eng._admit, []
+    Writer = type(spark.range(1).write)
+    real = Writer.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        writes.append(path)
+        return real(self, path, *args, **kwargs)
+
+    def admit_then_record(*args):
+        out = admit(*args)
+        monkeypatch.setattr(Writer, "parquet", parquet)
+        return out
+
+    monkeypatch.setattr(eng, "_admit", admit_then_record)
+    eng.run_epoch(seeds, 0)
+    assert writes == [os.path.join(eng.catalog.root, "_stage", "epoch=0")], writes
+    assert all(eng.catalog.committed_epochs(t) == [0] for t in _TABLES)
+
+
 @pytest.mark.parametrize(
     "lost, job_budget",
     [
-        pytest.param(_TABLES[1:], 13, id="after_fetched"),
+        pytest.param(_TABLES[1:], 9, id="after_fetched"),
         pytest.param(("seen",), 9, id="before_seen"),
-        pytest.param(("extracted", "seen"), 10, id="before_extracted_and_seen"),
+        pytest.param(("extracted", "seen"), 9, id="before_extracted_and_seen"),
     ],
 )
 def test_gated_resume_after_mid_epoch_crash(spark, gated_crawl, tmp_path, lost, job_budget):
@@ -522,7 +550,12 @@ def test_gated_resume_after_mid_epoch_crash(spark, gated_crawl, tmp_path, lost, 
     assert resumed.run(seeds, n_epochs=2) == [{"epoch": 0, "skipped": True}, stats[1]]
     jobs = scheduler.numTotalJobs() - before
     assert jobs <= job_budget, jobs
+    _assert_same_tables(spark, full, resumed)
 
+
+def _assert_same_tables(spark, full, resumed):
+    """Both epochs of all six tables are committed in ``resumed`` and match
+    the uninterrupted run ``full`` row for row."""
     for table in _TABLES:
         a = full.catalog.read(spark, table)
         b = resumed.catalog.read(spark, table)
@@ -530,6 +563,59 @@ def test_gated_resume_after_mid_epoch_crash(spark, gated_crawl, tmp_path, lost, 
         assert (
             a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
         ), f"{table} differs after resume"
+
+
+# where epoch 1 dies inside its one commit: (os call, calls that complete)
+_COMMIT_KILLS = {
+    "after_staged_write": ("rename", 0),
+    "after_first_rename": ("replace", 0),
+    "after_third_manifest": ("replace", 3),
+}
+
+
+@pytest.mark.parametrize("kill", list(_COMMIT_KILLS))
+def test_gated_resume_after_crash_inside_the_commit(
+    spark, gated_crawl, tmp_path, monkeypatch, kill
+):
+    """Epoch 1 dies inside its one staged commit: after the staged write
+    and before any rename, after the first table's rename and before its
+    manifest replace, or after the third manifest replace. A fresh engine
+    resumes the epoch within the epoch's job budget, deletes the leftover
+    stage, and all six tables match the uninterrupted run row for row."""
+    import os
+
+    from web_crawler_spark.sources import catalog as C
+
+    pages, seeds, full, stats, _jobs = gated_crawl
+    crash_dir = str(tmp_path / "crash")
+    eng = _gated_engine(spark, crash_dir, pages)
+    eng.run_epoch(seeds, 0)
+    name, done = _COMMIT_KILLS[kill]
+    real, calls = getattr(C.os, name), []
+
+    def killed(src, dst, *args, **kwargs):
+        if str(dst).startswith(crash_dir):
+            if len(calls) == done:
+                raise _Killed(dst)
+            calls.append(dst)
+        return real(src, dst, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(C.os, name, killed)
+        with pytest.raises(_Killed):
+            eng.run_epoch(seeds, 1)
+    committed = [t for t in _TABLES if 1 in eng.catalog.committed_epochs(t)]
+    assert committed == list(_TABLES[:done]), committed
+    assert os.path.isdir(os.path.join(crash_dir, "_stage", "epoch=1"))
+
+    resumed = _gated_engine(spark, crash_dir, pages)
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.numTotalJobs()
+    assert resumed.run(seeds, n_epochs=2) == [{"epoch": 0, "skipped": True}, stats[1]]
+    jobs = scheduler.numTotalJobs() - before
+    assert jobs <= _GATED_JOB_BUDGET[1], jobs
+    assert not os.path.exists(os.path.join(crash_dir, "_stage"))
+    _assert_same_tables(spark, full, resumed)
 
 
 def test_decide_robots_over_compiled_rules_matches_robots_decisions(spark):
@@ -741,23 +827,35 @@ def _read_jobs(spark, cat, table):
 def test_catalog_read_uses_the_committed_schema(spark, gated_crawl, tmp_path, monkeypatch):
     """``read`` passes the schema recorded at commit to the reader, so it
     runs no Spark job, and returns inference's column names, order and
-    types: for the crawl's six tables, for a table whose ``epoch`` column
-    is not last, after compaction, with a zero-row epoch, and for a
-    manifest written without a schema."""
+    types: for a table whose ``epoch`` column is not last, after
+    compaction, with a zero-row epoch, and for a manifest written without
+    a schema. The crawl's six tables commit together, so their files also
+    hold the other tables' columns, all null: a read returns the table's
+    own columns, in its committed frame's order, with inference's types
+    and rows."""
     import json
+
+    from pyspark.sql import types as T
 
     from web_crawler_spark.sources.catalog import EpochCatalog
 
-    def same(cat, table):
+    def same(cat, table, padded=False):
         got, jobs = _read_jobs(spark, cat, table)
         want = _read_inferred(spark, cat, table, monkeypatch)
         assert jobs == 0, (table, jobs)
+        if padded:
+            own = T.StructType.fromJson(json.loads(cat.manifest(table)["schema"]))
+            names = own.fieldNames() + ["epoch"] * ("epoch" not in own.fieldNames())
+            assert got.columns == names, (table, got.columns)
+            padding = [c for c in want.columns if c not in names]
+            assert want.select(padding).dropna(how="all").count() == 0, table
+            want = want.select(names)
         assert got.schema == want.schema, (table, got.schema, want.schema)
         assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr), table
 
     _pages, _seeds, eng, _stats, _jobs = gated_crawl
     for table in _TABLES:
-        same(eng.catalog, table)
+        same(eng.catalog, table, padded=True)
 
     cat = EpochCatalog(str(tmp_path / "cat"))
     for e in range(3):
@@ -791,6 +889,68 @@ def test_catalog_read_uses_the_committed_schema(spark, gated_crawl, tmp_path, mo
     got = cat.read(spark, "with_epoch")
     assert got.schema == want.schema
     assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+
+
+def test_commit_epochs_zero_rows_and_narrow_reads(spark, tmp_path):
+    """One staged commit of a table with no rows and a table with rows that
+    share no column: each reads back exactly its own columns plus
+    ``epoch``, the empty one as a 0-row frame with the schema a commit of
+    an empty frame on its own (one Spark write into its epoch dir) read
+    back with; compaction rewrites files that hold the table's own
+    columns only; tables that give one column two types are refused
+    before anything is written; and the empty epoch's schema-only file
+    reads beside a later epoch that Spark wrote."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from web_crawler_spark.sources.catalog import EpochCatalog
+
+    root = str(tmp_path / "cat")
+    cat = EpochCatalog(root)
+    ts = F.lit("2025-07-22 09:00:00").cast("timestamp")
+    frames = {
+        "empty": spark.range(0).select(
+            F.col("id").alias("a"), ts.alias("seen_ts"), F.lit("x").alias("s")
+        ),
+        "full": spark.range(5).select(
+            F.col("id").cast("int").alias("b"), ts.alias("fetch_ts"),
+            F.lit(None).cast("string").alias("name"),
+        ),
+    }
+    cat.commit_epochs(0, list(frames.items()))
+    assert not os.path.exists(os.path.join(root, "_stage"))
+    for table, df in frames.items():
+        got = cat.read(spark, table, upto_epoch=0)
+        assert got.columns == [*df.columns, "epoch"], (table, got.columns)
+        assert sorted(got.drop("epoch").collect()) == sorted(df.collect()), table
+    assert cat.read(spark, "empty", upto_epoch=0).schema == T.StructType([
+        T.StructField("a", T.LongType()),
+        T.StructField("seen_ts", T.TimestampType()),
+        T.StructField("s", T.StringType()),
+        T.StructField("epoch", T.IntegerType()),
+    ])
+
+    before = sorted(cat.read(spark, "full").collect())
+    cat.compact(spark, "full")
+    assert sorted(cat.read(spark, "full").collect()) == before
+    files = glob.glob(os.path.join(root, "full", "_compact_g1", "epoch=0", "*.parquet"))
+    assert files and all(pq.read_schema(f).names == frames["full"].columns for f in files)
+
+    clash = frames["full"].withColumn("a", F.lit("x"))
+    with pytest.raises(TypeError):
+        cat.commit_epochs(1, [("empty", frames["empty"]), ("full", clash)])
+    assert cat.committed_epochs("empty") == cat.committed_epochs("full") == [0]
+
+    # the schema-only file reads beside an epoch that Spark wrote
+    schema = cat.read(spark, "empty", upto_epoch=0).schema
+    rows = spark.range(3).select(F.col("id").alias("a"), ts.alias("seen_ts"), F.lit("y").alias("s"))
+    cat.commit_epoch("empty", 1, rows)
+    got = cat.read(spark, "empty")
+    assert got.schema == schema
+    assert sorted(got.drop("epoch").collect()) == sorted(rows.collect())
 
 
 def test_auto_compaction_mid_crawl_preserves_resume(spark, tmp_path):

@@ -18,7 +18,9 @@ One epoch = one BFS wave:
         through without html, each ok page is parsed once into table rows
         and outlinks, and each partition ends with its metrics row
       → expand: resolved outlinks become epoch+1 frontier candidates
-      → commit fetched/seen/metrics snapshots    (EpochCatalog — resumable)
+      → commit all six table snapshots in ONE staged write, then each
+        table's manifest, `seen` last    (EpochCatalog.commit_epochs —
+        resumable)
 
 Explicit repartitioning between expand and dedup is mandated by the
 north_rule — expand explodes by fan-out (skewed by page), dedup needs
@@ -40,7 +42,7 @@ have more than one consumer, each once:
 * the Arrow pass's frame (``extract.fetched_pass``) — the fetched rows
   without html, their extraction rows (each carrying its page's
   ``depth``) and one metrics row per partition, each row tagged with its
-  ``kind``; the fetched, extracted, outlinks, metrics and seen commits
+  ``kind``; the fetched, extracted, outlinks, metrics and seen tables
   are filters on it.
 
 Driver-side figures are observed, not collected: the per-host demand the
@@ -49,21 +51,24 @@ tallies (fetched and ok rows, extracted rows, links, metrics rows) on
 the Arrow pass's checkpoint job, which every run of an epoch performs,
 resumed or not.
 
-Commits are sized by rows: each table's commit is coalesced to at most
-ceil(rows / ``ROWS_PER_FILE``) files, its rows counted or bounded by
-those observed figures and the water-fill's deferred count, instead of
-writing one small file per shuffle partition.
+The epoch's tables commit together: one Spark job writes every table's
+rows, partitioned by table, into a stage dir, and the driver then moves
+each table's files into its epoch dir and replaces its manifest. Each
+table is coalesced to at most ceil(rows / ``ROWS_PER_FILE``) partitions,
+its rows counted or bounded by those observed figures and the
+water-fill's deferred count, and each task of the write holds one
+table's rows, so a table writes at most that many files instead of one
+small file per shuffle partition.
 
-A killed run resumes exactly: every table commit is manifest-gated and
+A killed run resumes exactly: every table's commit is manifest-gated and
 keyed by epoch, so re-running epoch K is idempotent (the catalog skips
-already-committed epochs) and epoch K+1 rebuilds its frontier from the
-committed epoch-K outlinks table.
+the tables already committed and rewrites the rest) and epoch K+1
+rebuilds its frontier from the committed epoch-K outlinks table.
 """
 
 from __future__ import annotations
 
 from collections import defaultdict
-from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
@@ -391,13 +396,12 @@ class CrawlEngine:
             page_url, "name", "price", "change", F.lit(epoch).alias("epoch")
         )
 
-        # commit epoch snapshots (order matters: data first, seen last so a
-        # crash can never mark a URL seen without its fetched row committed).
-        # The data commits touch independent table dirs/manifests and all
-        # derive from materialised frames — submit them as concurrent
-        # Spark jobs, one lane each; only `seen` waits behind the barrier.
-        # Each commit writes ceil(rows / ROWS_PER_FILE) files, its rows
-        # counted on the checkpoint (outlinks: at most one per link)
+        # commit epoch snapshots in one staged write (EpochCatalog.commit_epochs):
+        # every table's rows in one Spark job, then each table's rename and
+        # manifest in list order, `seen` last, so a crash can never mark a
+        # URL seen without its fetched row committed. Each table writes
+        # ceil(rows / ROWS_PER_FILE) files, its rows counted on the
+        # checkpoint (outlinks: at most one per link)
         commits = [
             ("fetched", fetched.select(
                 "url", "canonical_url", "url_hash", "host", "priority", "depth", "seq",
@@ -412,21 +416,12 @@ class CrawlEngine:
         ]
         if deferred_out is not None:
             commits.append(("deferred", deferred_out, n_deferred))
-        with ThreadPoolExecutor(max_workers=len(commits)) as ex:
-            futures = [
-                ex.submit(self.catalog.commit_epoch, table, epoch, _sized(df, rows))
-                for table, df, rows in commits
-            ]
-            for fut in futures:
-                fut.result()  # barrier: all data tables committed before seen
-        self.catalog.commit_epoch(
-            "seen", epoch,
-            _sized(
-                fetched.select("url_hash", "canonical_url").withColumn(
-                    "first_seen_epoch", F.lit(epoch)
-                ),
-                n["fetched"],
-            ),
+        commits.append(("seen", fetched.select(
+            "url_hash", "canonical_url", F.lit(epoch).alias("first_seen_epoch"),
+        ), n["fetched"]))
+        self.catalog.commit_epochs(
+            epoch,
+            [(table, _sized(df, rows)) for table, df, rows in commits],
             lineage={"fetched": n["fetched"], "ok": n["ok"]},
         )
         return {"epoch": epoch, "fetched": n["fetched"], "ok": n["ok"]}

@@ -9,14 +9,29 @@ runtime JAR, so the same contract is implemented over parquet directories:
     <root>/<table>/_manifest.json             (committed epochs, lineage,
                                                schema)
 
-Commit protocol: write epoch dir → fsync manifest with the epoch appended.
-A killed run leaves either no dir or an uncommitted dir that the next run
-overwrites — reads go through the manifest, so uncommitted data is
-invisible (same reader-isolation guarantee an Iceberg snapshot gives).
+Commit protocol (``commit_epochs``, one call for every table an epoch
+commits): stage → rename → manifest.
 
-The manifest also records the schema of the last committed frame, so a
-read passes it to the parquet reader instead of inferring it (schema
-inference reads file footers in a Spark job per read).
+1. stage: the tables' frames, unioned by name and tagged with their table,
+   are written in ONE Spark job, partitioned by table, under
+   ``<root>/_stage/epoch=K/__table=<table>/``;
+2. rename: per table, in list order, its staged dir becomes
+   ``<root>/<table>/epoch=K`` (a driver-side ``os.rename``);
+3. manifest: then that table's manifest is replaced (write tmp →
+   ``os.replace``) with the epoch appended.
+
+A killed run leaves a stage dir, uncommitted epoch dirs, or both; the next
+commit of the epoch deletes the stage, skips the tables whose manifest
+already holds the epoch and overwrites the other tables' epoch dirs —
+reads go through the manifest, so uncommitted data is invisible (same
+reader-isolation guarantee an Iceberg snapshot gives).
+
+Every staged file carries the union's columns: a table's own, plus the
+other tables' columns as nulls. The manifest records the schema of the
+table's own frame, and a read passes it to the parquet reader (instead of
+inferring it, which reads file footers in a Spark job per read), so a read
+returns the table's columns only and never reads the padding. A table
+with no rows gets a schema-only file in its epoch dir.
 """
 
 from __future__ import annotations
@@ -25,9 +40,11 @@ import json
 import os
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 class EpochCatalog:
@@ -57,21 +74,61 @@ class EpochCatalog:
     def commit_epoch(
         self, table: str, epoch: int, df: DataFrame, lineage: dict | None = None
     ) -> None:
-        """Write epoch data, then commit it into the manifest (atomic rename)."""
-        tdir = os.path.join(self.root, table)
-        edir = os.path.join(tdir, f"epoch={epoch}")
-        if os.path.exists(edir):  # uncommitted leftovers from a killed run
-            if epoch in self.manifest(table)["epochs"]:
-                return  # already committed — idempotent resume
-            shutil.rmtree(edir)
-        df.write.mode("overwrite").parquet(edir)
-        m = self.manifest(table)
-        m["epochs"] = sorted(set(m["epochs"]) | {epoch})
-        m["schema"] = df.schema.json()
-        if lineage:
-            m["lineage"][str(epoch)] = lineage
+        """Commit one table's epoch: :meth:`commit_epochs` of one frame."""
+        self.commit_epochs(epoch, [(table, df)], lineage)
+
+    def commit_epochs(
+        self, epoch: int, frames: list[tuple[str, DataFrame]], lineage: dict | None = None
+    ) -> None:
+        """Commit ``epoch`` of each ``(table, df)`` in ``frames``: one staged
+        write of them all, then each table's rename and manifest replace in
+        list order, ``lineage`` recorded with the last table. A table whose
+        manifest already holds ``epoch`` is skipped (idempotent resume).
+        Tables that share a column name must give it one type: the staged
+        files hold one column per name."""
+        frames = [(t, df) for t, df in frames if epoch not in self.manifest(t)["epochs"]]
+        if not frames:
+            return
+        types = {}
+        for table, df in frames:
+            for f in df.schema.fields:
+                t = f.dataType.simpleString()
+                if types.setdefault(f.name, t) != t:
+                    raise TypeError(f"{table}.{f.name} is {t}, not {types[f.name]}")
+        stage = os.path.join(self.root, "_stage", f"epoch={epoch}")
+        if os.path.exists(stage):  # leftovers from a killed commit
+            shutil.rmtree(stage)
+        staged = None
+        for table, df in frames:
+            df = df.withColumn("__table", F.lit(table))
+            staged = df if staged is None else staged.unionByName(df, allowMissingColumns=True)
+        staged.write.partitionBy("__table").parquet(stage)
+        for table, df in frames:
+            tdir = os.path.join(self.root, table)
+            edir = os.path.join(tdir, f"epoch={epoch}")
+            if os.path.exists(edir):  # uncommitted leftovers from a killed run
+                shutil.rmtree(edir)
+            os.makedirs(tdir, exist_ok=True)
+            src = os.path.join(stage, f"__table={table}")
+            if os.path.isdir(src):
+                os.rename(src, edir)
+            else:  # no rows: a schema-only file keeps the epoch readable
+                os.makedirs(edir)
+                pq.write_table(
+                    to_arrow_schema(df.schema).empty_table(),
+                    os.path.join(edir, "part-00000.parquet"),
+                )
+            m = self.manifest(table)
+            m["epochs"] = sorted(set(m["epochs"]) | {epoch})
+            m["schema"] = df.schema.json()
+            if lineage and table == frames[-1][0]:
+                m["lineage"][str(epoch)] = lineage
+            self._replace_manifest(table, m)
+        # one commit runs at a time on a root: any other stage is garbage
+        shutil.rmtree(os.path.dirname(stage))
+
+    def _replace_manifest(self, table: str, m: dict) -> None:
         tmp = self._manifest_path(table) + ".tmp"
-        os.makedirs(tdir, exist_ok=True)
         with open(tmp, "w") as f:
             json.dump(m, f, indent=1)
         os.replace(tmp, self._manifest_path(table))
@@ -155,10 +212,7 @@ class EpochCatalog:
         )
         m = self.manifest(table)  # re-read: commits may have landed meanwhile
         m["compaction"] = {"gen": gen, "upto": max(epochs), "dir": cdir_name}
-        tmp = self._manifest_path(table) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f, indent=1)
-        os.replace(tmp, self._manifest_path(table))
+        self._replace_manifest(table, m)
         return {"table": table, "compacted_epochs": len(epochs), "gen": gen}
 
     def vacuum(self, table: str) -> list[str]:
